@@ -2,8 +2,6 @@ package graft.core
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.hash.{BitUtil, Fnv}
 
 class CuckooFilterFullException(msg: String) extends ProbablesBaseException(msg)
@@ -28,7 +26,7 @@ final class SplitMix64(seed: Long) extends Serializable {
   def nextBoolean(): Boolean = (nextLong() & 1L) == 1L
 }
 
-/** Cuckoo filter (/root/reference/probables/cuckoo/cuckoo.py).
+/** Cuckoo filter (pyprobables `probables/cuckoo/cuckoo.py`).
   *
   * Layout notes (replicated):
   *   - fingerprint = **low** `fingerprintSizeBits` bits of fnv-1a-64(key)
@@ -41,6 +39,12 @@ final class SplitMix64(seed: Long) extends Serializable {
   *   - export: each bin zero-padded to `bucketSize` u32-LE slots, footer
   *     `II` = (bucket_size, max_swaps); capacity is inferred from the file
   *     size on load (cuckoo.py:406-431).
+  *
+  * Storage is one flat primitive slot array: bucket `i` holds its
+  * fingerprints, in insertion order, at `slots[i*bucketSize, i*bucketSize +
+  * fill(i))`, and every slot past `fill(i)` is 0 — which is the zero-padded
+  * export. Probe expressions ship the deserialized filter inside each task
+  * binary, so its Java-serialized form must stay close to the export size.
   *
   * The reference has no merge; [[mergeFrom]] is the documented extension that
   * re-inserts every fingerprint of `second` (the same mechanism the
@@ -58,68 +62,80 @@ final class CuckooFilter(
     throw new InitializationError(
       "CuckooFilter: capacity, bucket_size, and max_swaps must be an integer greater than 0")
 
-  var buckets: Array[ArrayBuffer[Int]] = Array.fill(capacity)(new ArrayBuffer[Int](bucketSize))
+  private var slots: Array[Int] = new Array[Int](capacity * bucketSize)
+  private var fill: Array[Int] = new Array[Int](capacity)
   var insertedElements: Int = 0
   private val rng = new SplitMix64(0x5ca1ab1e5eedL)
 
+  /** Read-only copy of the bins, one array per bucket in insertion order. */
+  def buckets: Array[Array[Int]] =
+    Array.tabulate(capacity)(i => java.util.Arrays.copyOfRange(slots, i * bucketSize, i * bucketSize + fill(i)))
+
   def elementsAdded: Int = insertedElements
   def loadFactor: Double = insertedElements.toDouble / (capacity.toDouble * bucketSize)
+
+  /** The reference's 2b/2^f, kept for parity. It does not bound this filter:
+    * both bucket indices derive from the fingerprint, so any key whose
+    * fingerprint equals a stored one is found, and the realized false
+    * positive rate is about n/2^f for n stored fingerprints. */
   def errorRate: Double =
     1.0 / math.pow(2.0, fingerprintSizeBits - (math.log(bucketSize.toDouble) / math.log(2.0) + 1))
 
   protected def hash64(key: String): Long = Fnv.fnv1a64(key, 0)
 
-  def fingerprintInfo(key: String): (Int, Int, Int) = {
-    val h = hash64(key)
-    val fp = BitUtil.getXBits(h, 64, fingerprintSizeBits, rightBits = true)
-    val (i1, i2) = indicesFromFingerprint(fp.toInt)
-    (i1, i2, fp.toInt)
-  }
+  def fingerprint(key: String): Int =
+    BitUtil.getXBits(hash64(key), 64, fingerprintSizeBits, rightBits = true).toInt
 
-  def indicesFromFingerprint(fp: Int): (Int, Int) = {
-    val fpU = fp & 0xffffffffL
-    val i1 = (fpU % capacity).toInt
-    val i2 = java.lang.Long.remainderUnsigned(
-      Fnv.fnv1a64(java.lang.Long.toString(fpU), 0), capacity.toLong).toInt
-    (i1, i2)
-  }
+  def indicesFromFingerprint(fp: Int): (Int, Int) = (index1(fp), index2(fp))
 
-  def add(key: String): Unit = {
-    val (i1, i2, fp) = fingerprintInfo(key)
-    if (checkIfPresent(i1, i2, fp) >= 0) return // dedup (cuckoo.py:300-302)
-    val homeless = insertFingerprint(fp, i1, i2)
-    dealWithInsertion(homeless)
-  }
+  private def index1(fp: Int): Int = ((fp & 0xffffffffL) % capacity).toInt
+  private def index2(fp: Int): Int = CuckooFilter.altIndex(fp, capacity)
+
+  def add(key: String): Unit = addFingerprint(fingerprint(key))
 
   /** Add a bare fingerprint if absent — the merge/expansion primitive. */
   def addFingerprint(fp: Int): Unit = {
-    val (i1, i2) = indicesFromFingerprint(fp)
-    if (checkIfPresent(i1, i2, fp) >= 0) return
-    val homeless = insertFingerprint(fp, i1, i2)
-    dealWithInsertion(homeless)
+    val i1 = index1(fp)
+    val i2 = index2(fp)
+    if (findSlot(i1, fp) >= 0 || findSlot(i2, fp) >= 0) return // dedup (cuckoo.py:300-302)
+    dealWithInsertion(insertFingerprint(fp, i1, i2))
   }
 
-  def check(key: String): Boolean = {
-    val (i1, i2, fp) = fingerprintInfo(key)
-    checkIfPresent(i1, i2, fp) >= 0
-  }
+  def check(key: String): Boolean = locate(fingerprint(key)) >= 0
 
   def remove(key: String): Boolean = {
-    val (i1, i2, fp) = fingerprintInfo(key)
-    val idx = checkIfPresent(i1, i2, fp)
-    if (idx < 0) return false
-    buckets(idx).remove(buckets(idx).indexOf(fp))
+    val s = locate(fingerprint(key))
+    if (s < 0) return false
+    // shift the bucket's later fingerprints down one slot
+    val idx = s / bucketSize
+    val last = idx * bucketSize + fill(idx) - 1
+    System.arraycopy(slots, s + 1, slots, s, last - s)
+    slots(last) = 0
+    fill(idx) -= 1
     insertedElements -= 1
     true
   }
 
-  private def checkIfPresent(i1: Int, i2: Int, fp: Int): Int =
-    if (buckets(i1).contains(fp)) i1
-    else if (buckets(i2).contains(fp)) i2
-    else -1
+  /** Slot of `fp` in bucket `idx`, or -1. */
+  private def findSlot(idx: Int, fp: Int): Int = {
+    var s = idx * bucketSize
+    val end = s + fill(idx)
+    while (s < end) {
+      if (slots(s) == fp) return s
+      s += 1
+    }
+    -1
+  }
+
+  /** Slot of `fp` in its first bucket, else its second, or -1. */
+  private def locate(fp: Int): Int = {
+    val s = findSlot(index1(fp), fp)
+    if (s >= 0) s else findSlot(index2(fp), fp)
+  }
 
   private def insertElement(fp: Int, idx: Int): Boolean = {
-    if (buckets(idx).size < bucketSize) { buckets(idx) += fp; true } else false
+    val f = fill(idx)
+    if (f < bucketSize) { slots(idx * bucketSize + f) = fp; fill(idx) = f + 1; true } else false
   }
 
   /** Kick loop (cuckoo.py:361-392); returns Int.MinValue on success or the
@@ -131,12 +147,12 @@ final class CuckooFilter(
     var idx = if (rng.nextBoolean()) i1 else i2
     var swaps = 0
     while (swaps < maxSwaps) {
-      val swapElm = rng.nextInt(bucketSize)
-      val swb = buckets(idx)(swapElm)
-      buckets(idx)(swapElm) = fp
+      val s = idx * bucketSize + rng.nextInt(bucketSize)
+      val swb = slots(s)
+      slots(s) = fp
       fp = swb
-      val (n1, n2) = indicesFromFingerprint(fp)
-      idx = if (idx == n1) n2 else n1
+      val n1 = index1(fp)
+      idx = if (idx == n1) index2(fp) else n1
       if (insertElement(fp, idx)) { insertedElements += 1; return Int.MinValue }
       swaps += 1
     }
@@ -152,17 +168,22 @@ final class CuckooFilter(
   def expand(): Unit = expandLogic(Int.MinValue)
 
   private def expandLogic(extra: Int): Unit = {
-    val fps = new ArrayBuffer[Int]()
-    if (extra != Int.MinValue) fps += extra
-    var i = 0
-    while (i < capacity) { fps ++= buckets(i); i += 1 }
+    val oldSlots = slots
+    val oldFill = fill
+    val oldCapacity = capacity
     capacity = capacity * expansionRate
-    buckets = Array.fill(capacity)(new ArrayBuffer[Int](bucketSize))
+    slots = new Array[Int](capacity * bucketSize)
+    fill = new Array[Int](capacity)
     insertedElements = 0
-    fps.foreach { fp =>
-      val (i1, i2) = indicesFromFingerprint(fp)
-      if (insertFingerprint(fp, i1, i2) != Int.MinValue)
+    def reinsert(fp: Int): Unit =
+      if (insertFingerprint(fp, index1(fp), index2(fp)) != Int.MinValue)
         throw new CuckooFilterFullException("The CuckooFilter failed to expand")
+    if (extra != Int.MinValue) reinsert(extra)
+    var i = 0
+    while (i < oldCapacity) {
+      var j = 0
+      while (j < oldFill(i)) { reinsert(oldSlots(i * bucketSize + j)); j += 1 }
+      i += 1
     }
   }
 
@@ -170,24 +191,20 @@ final class CuckooFilter(
   def mergeFrom(second: CuckooFilter): CuckooFilter = {
     require(bucketSize == second.bucketSize && fingerprintSizeBits == second.fingerprintSizeBits,
       "CuckooFilter merge: bucket size / fingerprint bits mismatch")
-    second.buckets.foreach(_.foreach(addFingerprint))
+    val otherSlots = second.slots
+    val otherFill = second.fill
+    var i = 0
+    while (i < otherFill.length) {
+      var j = 0
+      while (j < otherFill(i)) { addFingerprint(otherSlots(i * bucketSize + j)); j += 1 }
+      i += 1
+    }
     this
   }
 
   def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(capacity * bucketSize * 4 + 8).order(ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < capacity) {
-      val b = buckets(i)
-      var j = 0
-      while (j < bucketSize) {
-        bb.putInt(if (j < b.size) b(j) else 0)
-        j += 1
-      }
-      i += 1
-    }
-    bb.putInt(bucketSize)
-    bb.putInt(maxSwaps)
+    val bb = ByteBuffer.allocate(slots.length * 4 + 8).order(ByteOrder.LITTLE_ENDIAN)
+    bb.asIntBuffer().put(slots).put(bucketSize).put(maxSwaps)
     bb.array()
   }
 }
@@ -206,6 +223,30 @@ object CuckooFilter {
   def fingerprintBitsFor(errorRate: Double, bucketSize: Int): Int =
     math.ceil(math.log(1.0 / errorRate) / math.log(2.0) +
       math.log(bucketSize.toDouble) / math.log(2.0) + 1).toInt
+
+  /** idx2 of both cuckoo filters: fnv-1a-64 (seed 0) of the unsigned
+    * fingerprint's decimal string, mod `capacity` (cuckoo.py:483-490). The
+    * digits are folded most-significant first straight from the number, so
+    * a probe builds no string. */
+  private[core] def altIndex(fp: Int, capacity: Int): Int = {
+    var v = fp & 0xffffffffL
+    // at most 10 decimal digits, one per nibble, least-significant digit highest
+    var digits = 0L
+    var n = 0
+    do {
+      digits = (digits << 4) | (v % 10)
+      v /= 10
+      n += 1
+    } while (v != 0)
+    var h = Fnv.Offset64
+    while (n > 0) {
+      h ^= '0' + (digits & 0xf)
+      h *= Fnv.Prime64
+      digits >>>= 4
+      n -= 1
+    }
+    java.lang.Long.remainderUnsigned(h, capacity.toLong).toInt
+  }
 
   def withErrorRate(errorRate: Double, capacity: Int = 10000, bucketSize: Int = 4,
                     maxSwaps: Int = 500, expansionRate: Int = 2,
@@ -226,7 +267,7 @@ object CuckooFilter {
       var j = 0
       while (j < bucketSize) {
         val fp = payload.getInt
-        if (fp != 0) { cf.buckets(i) += fp; cf.insertedElements += 1 }
+        if (fp != 0) { cf.insertElement(fp, i); cf.insertedElements += 1 }
         j += 1
       }
       i += 1
@@ -235,10 +276,11 @@ object CuckooFilter {
   }
 }
 
-/** Counting cuckoo filter (/root/reference/probables/cuckoo/countingcuckoo.py):
+/** Counting cuckoo filter (pyprobables `probables/cuckoo/countingcuckoo.py`):
   * bins are (fingerprint, count) u32 pairs; a re-add of a present fingerprint
   * increments its count. Bins are packed as a Long (fp in the high 32 bits,
-  * count in the low 32). Export: (fp,count) pairs zero-padded per bin + `II`
+  * count in the low 32) in one flat slot array laid out like
+  * [[CuckooFilter]]'s. Export: (fp,count) pairs zero-padded per bin + `II`
   * footer, matching countingcuckoo.py:216-228, 325-334. */
 final class CountingCuckooFilter(
     var capacity: Int,
@@ -249,8 +291,10 @@ final class CountingCuckooFilter(
     var fingerprintSizeBits: Int
 ) extends Serializable {
 
-  // each bin: packed (fp:u32 << 32) | count:u32
-  var buckets: Array[ArrayBuffer[Long]] = Array.fill(capacity)(new ArrayBuffer[Long](bucketSize))
+  // each bin: packed (fp:u32 << 32) | count:u32; bucket i at
+  // slots[i*bucketSize, i*bucketSize + fill(i)), 0L past fill(i)
+  private var slots: Array[Long] = new Array[Long](capacity * bucketSize)
+  private var fill: Array[Int] = new Array[Int](capacity)
   var insertedElements: Long = 0
   var uniqueElements: Int = 0
   private val rng = new SplitMix64(0xc01dc0ffeeL)
@@ -259,51 +303,56 @@ final class CountingCuckooFilter(
   @inline private def fpOf(bin: Long): Int = (bin >>> 32).toInt
   @inline private def countOf(bin: Long): Long = bin & 0xffffffffL
 
+  /** Read-only copy of the packed bins, one array per bucket in insertion order. */
+  def buckets: Array[Array[Long]] =
+    Array.tabulate(capacity)(i => java.util.Arrays.copyOfRange(slots, i * bucketSize, i * bucketSize + fill(i)))
+
   def loadFactor: Double = uniqueElements.toDouble / (capacity.toDouble * bucketSize)
 
-  def fingerprintInfo(key: String): (Int, Int, Int) = {
-    val h = Fnv.fnv1a64(key, 0)
-    val fp = BitUtil.getXBits(h, 64, fingerprintSizeBits, rightBits = true).toInt
-    val (i1, i2) = indicesFromFingerprint(fp)
-    (i1, i2, fp)
-  }
+  def fingerprint(key: String): Int =
+    BitUtil.getXBits(Fnv.fnv1a64(key, 0), 64, fingerprintSizeBits, rightBits = true).toInt
 
-  def indicesFromFingerprint(fp: Int): (Int, Int) = {
-    val fpU = fp & 0xffffffffL
-    val i1 = (fpU % capacity).toInt
-    val i2 = java.lang.Long.remainderUnsigned(
-      Fnv.fnv1a64(java.lang.Long.toString(fpU), 0), capacity.toLong).toInt
-    (i1, i2)
-  }
+  def indicesFromFingerprint(fp: Int): (Int, Int) = (index1(fp), index2(fp))
 
-  private def findBin(idx: Int, fp: Int): Int = {
-    var i = 0
-    while (i < buckets(idx).size) {
-      if (fpOf(buckets(idx)(i)) == fp) return i
-      i += 1
+  private def index1(fp: Int): Int = ((fp & 0xffffffffL) % capacity).toInt
+  private def index2(fp: Int): Int = CuckooFilter.altIndex(fp, capacity)
+
+  /** Slot of the bin for `fp` in bucket `idx`, or -1. */
+  private def findSlot(idx: Int, fp: Int): Int = {
+    var s = idx * bucketSize
+    val end = s + fill(idx)
+    while (s < end) {
+      if (fpOf(slots(s)) == fp) return s
+      s += 1
     }
     -1
   }
 
-  private def checkIfPresent(i1: Int, i2: Int, fp: Int): Int =
-    if (findBin(i1, fp) >= 0) i1
-    else if (findBin(i2, fp) >= 0) i2
-    else -1
+  private def findPresent(i1: Int, i2: Int, fp: Int): Int = {
+    val s = findSlot(i1, fp)
+    if (s >= 0) s else findSlot(i2, fp)
+  }
+
+  /** Slot of the bin for `fp` in its first bucket, else its second, or -1. */
+  private def locate(fp: Int): Int = {
+    val s = findSlot(index1(fp), fp)
+    if (s >= 0) s else findSlot(index2(fp), fp)
+  }
 
   def add(key: String): Unit = addCount(key, 1L)
 
   def addCount(key: String, n: Long): Unit = {
-    val (i1, i2, fp) = fingerprintInfo(key)
+    val fp = fingerprint(key)
+    val i1 = index1(fp)
+    val i2 = index2(fp)
     var remaining = n
     while (remaining > 0) { // reference semantics are per-single-add
-      val present = checkIfPresent(i1, i2, fp)
-      if (present >= 0) {
-        val bi = findBin(present, fp)
-        buckets(present)(bi) = packed(fp, countOf(buckets(present)(bi)) + 1)
+      val s = findPresent(i1, i2, fp)
+      if (s >= 0) {
+        slots(s) = packed(fp, countOf(slots(s)) + 1)
         insertedElements += 1
       } else {
-        val homeless = insertFingerprint(fp, i1, i2, 1L)
-        dealWithInsertion(homeless)
+        dealWithInsertion(insertFingerprint(fp, i1, i2, 1L))
       }
       remaining -= 1
     }
@@ -311,58 +360,61 @@ final class CountingCuckooFilter(
 
   /** Merge primitive: add `count` occurrences of a bare fingerprint at once. */
   def addFingerprintCount(fp: Int, count: Long): Unit = {
-    val (i1, i2) = indicesFromFingerprint(fp)
-    val present = checkIfPresent(i1, i2, fp)
-    if (present >= 0) {
-      val bi = findBin(present, fp)
-      val merged = math.min(countOf(buckets(present)(bi)) + count, 0xffffffffL)
-      buckets(present)(bi) = packed(fp, merged)
+    val i1 = index1(fp)
+    val i2 = index2(fp)
+    val s = findPresent(i1, i2, fp)
+    if (s >= 0) {
+      slots(s) = packed(fp, math.min(countOf(slots(s)) + count, 0xffffffffL))
       insertedElements += count
     } else {
-      val homeless = insertFingerprint(fp, i1, i2, count)
-      dealWithInsertion(homeless)
+      dealWithInsertion(insertFingerprint(fp, i1, i2, count))
     }
   }
 
   def check(key: String): Long = {
-    val (i1, i2, fp) = fingerprintInfo(key)
-    val present = checkIfPresent(i1, i2, fp)
-    if (present < 0) 0L else countOf(buckets(present)(findBin(present, fp)))
+    val s = locate(fingerprint(key))
+    if (s < 0) 0L else countOf(slots(s))
   }
 
   def remove(key: String): Boolean = {
-    val (i1, i2, fp) = fingerprintInfo(key)
-    val idx = checkIfPresent(i1, i2, fp)
-    if (idx < 0) return false
-    val bi = findBin(idx, fp)
-    val c = countOf(buckets(idx)(bi)) - 1
+    val fp = fingerprint(key)
+    val s = locate(fp)
+    if (s < 0) return false
+    val c = countOf(slots(s)) - 1
     insertedElements -= 1
-    if (c == 0) { buckets(idx).remove(bi); uniqueElements -= 1 }
-    else buckets(idx)(bi) = packed(fp, c)
+    if (c == 0) {
+      // shift the bucket's later bins down one slot
+      val idx = s / bucketSize
+      val last = idx * bucketSize + fill(idx) - 1
+      System.arraycopy(slots, s + 1, slots, s, last - s)
+      slots(last) = 0L
+      fill(idx) -= 1
+      uniqueElements -= 1
+    } else slots(s) = packed(fp, c)
     true
   }
 
-  private def insertElement(fp: Int, idx: Int, count: Long): Boolean = {
-    if (buckets(idx).size < bucketSize) { buckets(idx) += packed(fp, count); true } else false
+  private def insertBin(bin: Long, idx: Int): Boolean = {
+    val f = fill(idx)
+    if (f < bucketSize) { slots(idx * bucketSize + f) = bin; fill(idx) = f + 1; true } else false
   }
 
   /** Kick loop carrying (fp,count) bins (countingcuckoo.py:230-265); returns
     * -1 on success, else the homeless packed bin. */
   private def insertFingerprint(fp0: Int, i1: Int, i2: Int, count: Long): Long = {
-    if (insertElement(fp0, i1, count)) { insertedElements += count; uniqueElements += 1; return -1L }
-    if (insertElement(fp0, i2, count)) { insertedElements += count; uniqueElements += 1; return -1L }
+    if (insertBin(packed(fp0, count), i1)) { insertedElements += count; uniqueElements += 1; return -1L }
+    if (insertBin(packed(fp0, count), i2)) { insertedElements += count; uniqueElements += 1; return -1L }
     var prv = packed(fp0, count)
     var idx = if (rng.nextBoolean()) i1 else i2
     var swaps = 0
     while (swaps < maxSwaps) {
-      val swapElm = rng.nextInt(bucketSize)
-      val swapped = buckets(idx)(swapElm)
-      buckets(idx)(swapElm) = prv
+      val s = idx * bucketSize + rng.nextInt(bucketSize)
+      val swapped = slots(s)
+      slots(s) = prv
       prv = swapped
-      val (n1, n2) = indicesFromFingerprint(fpOf(prv))
-      idx = if (idx == n1) n2 else n1
-      if (buckets(idx).size < bucketSize) {
-        buckets(idx) += prv
+      val n1 = index1(fpOf(prv))
+      idx = if (idx == n1) index2(fpOf(prv)) else n1
+      if (insertBin(prv, idx)) {
         // charge the NEW element's count, not the relocated bin's — prv's
         // count was already charged when prv was first inserted; the
         // reference does `_inserted_elements += 1` here for the add call
@@ -405,42 +457,52 @@ final class CountingCuckooFilter(
     * staying the total occurrence count. Kick-path and add-path counting
     * match the reference exactly (q_export_parity / q_sketch_removes). */
   private def expandLogic(extra: Long): Unit = {
-    val bins = new ArrayBuffer[Long]()
-    if (extra != -1L) bins += extra
-    buckets.foreach(bins ++= _)
+    val oldSlots = slots
+    val oldFill = fill
+    val oldCapacity = capacity
     capacity = capacity * expansionRate
-    buckets = Array.fill(capacity)(new ArrayBuffer[Long](bucketSize))
+    slots = new Array[Long](capacity * bucketSize)
+    fill = new Array[Int](capacity)
     insertedElements = 0
     uniqueElements = 0
-    bins.foreach { bin =>
-      val (i1, i2) = indicesFromFingerprint(fpOf(bin))
-      if (insertFingerprint(fpOf(bin), i1, i2, countOf(bin)) != -1L)
+    def reinsert(bin: Long): Unit = {
+      val fp = fpOf(bin)
+      if (insertFingerprint(fp, index1(fp), index2(fp), countOf(bin)) != -1L)
         throw new CuckooFilterFullException("The CountingCuckooFilter failed to expand")
+    }
+    if (extra != -1L) reinsert(extra)
+    var i = 0
+    while (i < oldCapacity) {
+      var j = 0
+      while (j < oldFill(i)) { reinsert(oldSlots(i * bucketSize + j)); j += 1 }
+      i += 1
     }
   }
 
   def mergeFrom(second: CountingCuckooFilter): CountingCuckooFilter = {
     require(bucketSize == second.bucketSize && fingerprintSizeBits == second.fingerprintSizeBits,
       "CountingCuckooFilter merge: bucket size / fingerprint bits mismatch")
-    second.buckets.foreach(_.foreach(bin => addFingerprintCount(fpOf(bin), countOf(bin))))
-    this
-  }
-
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(capacity * bucketSize * 8 + 8).order(ByteOrder.LITTLE_ENDIAN)
+    val otherSlots = second.slots
+    val otherFill = second.fill
     var i = 0
-    while (i < capacity) {
-      val b = buckets(i)
+    while (i < otherFill.length) {
       var j = 0
-      while (j < bucketSize) {
-        if (j < b.size) { bb.putInt(fpOf(b(j))); bb.putInt(countOf(b(j)).toInt) }
-        else { bb.putInt(0); bb.putInt(0) }
+      while (j < otherFill(i)) {
+        val bin = otherSlots(i * bucketSize + j)
+        addFingerprintCount(fpOf(bin), countOf(bin))
         j += 1
       }
       i += 1
     }
-    bb.putInt(bucketSize)
-    bb.putInt(maxSwaps)
+    this
+  }
+
+  def toBytes: Array[Byte] = {
+    val bb = ByteBuffer.allocate(slots.length * 8 + 8).order(ByteOrder.LITTLE_ENDIAN)
+    val ib = bb.asIntBuffer()
+    var s = 0
+    while (s < slots.length) { ib.put(fpOf(slots(s))).put(countOf(slots(s)).toInt); s += 1 }
+    ib.put(bucketSize).put(maxSwaps)
     bb.array()
   }
 }
@@ -472,7 +534,7 @@ object CountingCuckooFilter {
         val fp = payload.getInt
         val count = payload.getInt & 0xffffffffL
         if (fp != 0) {
-          cf.buckets(i) += (((fp & 0xffffffffL) << 32) | count)
+          cf.insertBin(cf.packed(fp, count), i)
           cf.insertedElements += count
           cf.uniqueElements += 1
         }

@@ -266,7 +266,8 @@ object Dedup extends Serializable {
     * al., "Connected Components in MapReduce and Beyond", SoCC 2014).
     *
     * Input columns: (id_a, id_b). Output: (doc_id, rep) for every doc that
-    * appears in at least one pair.
+    * appears in at least one pair. A pair with a null id is no edge and is
+    * dropped before either path runs.
     *
     * `checkpointDir`: when set, per-round materialization uses RELIABLE
     * checkpoints under that directory (HDFS/S3 on a cluster) instead of
@@ -285,6 +286,10 @@ object Dedup extends Serializable {
   def connectedComponents(pairs: DataFrame, maxIters: Int = 25,
                           checkpointDir: Option[String] = None,
                           maxDriverEdges: Long = 1L << 20): DataFrame = {
+    // a pair with a null id is no edge: drop it before either path, so the
+    // driver path never unboxes a null id (Row.getLong throws on one) and
+    // both paths see one edge set
+    val edgePairs = pairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
     // round 7: SIZE-ADAPTIVE fast path, the heavySet limit-probe pattern —
     // when the edge list fits a bounded driver budget (default 2^20 edges
     // ≈ 16 MB of longs), label components with a driver-side union-find
@@ -299,7 +304,7 @@ object Dedup extends Serializable {
     // maxDriverEdges = 0 to force the distributed path (the specs do).
     if (maxDriverEdges > 0) {
       val lim = (math.min(maxDriverEdges, (Int.MaxValue - 2).toLong) + 1L).toInt
-      val probe = pairs
+      val probe = edgePairs
         .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
         .limit(lim).collect()
       if (probe.length < lim) {
@@ -331,9 +336,9 @@ object Dedup extends Serializable {
         df => df.checkpoint(eager = true)
       case None => df => df.localCheckpoint(true)
     }
-    val edges = ck(pairs
+    val edges = ck(edgePairs
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .union(pairs.select(col("id_b").cast("long").as("src"),
+      .union(edgePairs.select(col("id_b").cast("long").as("src"),
         col("id_a").cast("long").as("dst")))
       .distinct())
     var labels = ck(edges.select(col("src").as("id")).distinct()

@@ -34,12 +34,14 @@ case class Fnv1a64Expr(child: Expression, seed: Int) extends UnaryExpression {
   override def prettyName: String = "fnv1a64"
 }
 
-/** Membership probe against a FIXED Bloom filter (the deserialized filter
-  * rides the plan as a reference object — one instance per executor, shared
-  * by all codegen'd tasks). The Spark-native analogue of the reference's
-  * `check(key)` over an in-process structure, mirroring Spark's own
-  * `BloomFilterMightContain` but with the reference-compatible layout and
-  * fnv-1a hashing. */
+/** Membership probe against a FIXED Bloom filter. The deserialized filter
+  * rides the plan as a codegen reference object: `addReferenceObj` puts it
+  * into the stage's task binary, and every task deserializes its own copy,
+  * so a sketch's Java-serialized size is a per-task cost (sketch state is
+  * kept in flat primitive arrays for that reason). The Spark-native
+  * analogue of the reference's `check(key)` over an in-process structure,
+  * mirroring Spark's own `BloomFilterMightContain` but with the
+  * reference-compatible layout and fnv-1a hashing. */
 case class BloomMightContainExpr(child: Expression, filter: BloomFilter)
     extends UnaryExpression {
   override def dataType: DataType = BooleanType
@@ -60,8 +62,8 @@ case class BloomMightContainExpr(child: Expression, filter: BloomFilter)
 }
 
 /** Point-count probe against a FIXED Count-Min sketch — codegen'd like
-  * [[BloomMightContainExpr]]; the deserialized sketch is a shared plan
-  * reference object. */
+  * [[BloomMightContainExpr]]; the deserialized sketch is a plan reference
+  * object, shipped in each task binary. */
 case class CmsCountExpr(child: Expression, sketch: graft.core.CountMinSketch)
     extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -121,8 +123,9 @@ case class CcfCountExpr(child: Expression, sketch: graft.core.CountingCuckooFilt
   override def prettyName: String = "ccf_count"
 }
 
-/** Membership probe against a FIXED cuckoo filter (shared per-executor plan
-  * reference object, like [[BloomMightContainExpr]]). */
+/** Membership probe against a FIXED cuckoo filter (a plan reference object
+  * that each task deserializes from its task binary, like
+  * [[BloomMightContainExpr]]). */
 case class CuckooContainsExpr(child: Expression, filter: graft.core.CuckooFilter)
     extends UnaryExpression {
   override def dataType: DataType = BooleanType

@@ -264,8 +264,12 @@ object IncrementalCurate {
                                      freshOnly: DataFrame, watermark: Long,
                                      maxDriverEdges: Long = 1L << 20): DataFrame = {
     import spark.implicits._
+    // a pair with a null id is no edge: drop it before either path, so the
+    // driver path never unboxes a null id (Row.getLong throws on one) and
+    // both paths see one edge set
+    val edgePairs = pairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
     val lim = (math.min(maxDriverEdges, (Int.MaxValue - 2).toLong) + 1L).toInt
-    val probe = pairs.select(col("id_a"), col("id_b")).limit(lim).collect()
+    val probe = edgePairs.select(col("id_a"), col("id_b")).limit(lim).collect()
     if (probe.length < lim) {
       // driver union-find over batch-batch edges, min-id roots; anchored =
       // a batch endpoint of any batch-history pair
@@ -298,12 +302,12 @@ object IncrementalCurate {
     } else {
       val freshIds = freshOnly.select(col("doc_id")).persist()
       try {
-        val aNew = pairs.join(freshIds.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_semi")
+        val aNew = edgePairs.join(freshIds.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_semi")
         val abNew = aNew.join(freshIds.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_semi")
         // anchored = batch doc with ANY history-side neighbor
-        val anchored = pairs
+        val anchored = edgePairs
           .select(col("id_a").as("doc_id"), col("id_b").as("other"))
-          .unionByName(pairs.select(col("id_b").as("doc_id"), col("id_a").as("other")))
+          .unionByName(edgePairs.select(col("id_b").as("doc_id"), col("id_a").as("other")))
           .join(freshIds, Seq("doc_id"), "left_semi")
           .join(freshIds.withColumnRenamed("doc_id", "other"), Seq("other"), "left_anti")
           .select(col("doc_id")).distinct()

@@ -236,7 +236,7 @@ object Sampling {
       val counts = proj.filter(keyCol >= lo && keyCol <= hi)
         .groupBy(shiftright(keyCol, shift).as("b")).count()
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .sortBy(-_._1)
+        .sortBy(_._1)(Ordering[Long].reverse)
       var i = 0
       var narrowed = false
       while (i < counts.length && !narrowed) {
@@ -290,7 +290,7 @@ object Sampling {
       val counts = proj.filter(col("__kb") >= lo && col("__kb") <= hi)
         .groupBy(shiftright(col("__kb"), shift).as("b")).count()
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .sortBy(-_._1)
+        .sortBy(_._1)(Ordering[Long].reverse)
       var i = 0
       var narrowed = false
       while (i < counts.length && !narrowed) {

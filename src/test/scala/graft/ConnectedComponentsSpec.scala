@@ -61,4 +61,16 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // a bound smaller than the edge count falls through to the rounds
     assert(run(pairs, 5, maxDriverEdges = 10L) == fast)
   }
+
+  test("a pair with a null id is no edge on either path (no phantom doc 0)") {
+    import spark.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(2L), None),
+      (None, Some(3L)), (Some(4L), Some(5L)), (None, None)).toDF("id_a", "id_b")
+    def labels(maxDriverEdges: Long): Set[(Any, Any)] =
+      Dedup.connectedComponents(pairs, maxDriverEdges = maxDriverEdges)
+        .collect().map(r => (r.get(0), r.get(1))).toSet
+    val fast = labels(1L << 20)
+    assert(fast == labels(0L))
+    assert(fast == Set((1L, 1L), (2L, 1L), (4L, 4L), (5L, 4L)))
+  }
 }

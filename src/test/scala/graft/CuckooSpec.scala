@@ -68,6 +68,59 @@ class CuckooSpec extends AnyFunSuite {
     a.mergeFrom(b)
     (0 until 300).foreach { i => assert(a.check(s"a$i")); assert(a.check(s"b$i")) }
   }
+
+  // byte goldens through kicks, expansion and merge: a storage-layout change
+  // must keep insertion order, the seeded kicks and expansion byte for byte
+  test("kick-and-expansion byte golden: 1,000 buckets fed 20,000 keys expand to 8,000") {
+    val c = new CuckooFilter(1000, 4, 500, 2, true, 32)
+    (0 until 20000).foreach(i => c.add(i.toString))
+    assert(c.capacity == 8000 && c.elementsAdded == 20000)
+    assert(md5hex(c.toBytes) == "5ce04b2a180b0cb22efa56359569bd2a")
+  }
+
+  test("merge-with-expansion byte golden") {
+    val a = new CuckooFilter(1000, 4, 500, 2, true, 32)
+    val b = new CuckooFilter(1000, 4, 500, 2, true, 32)
+    (0 until 5000).foreach { i => a.add(s"a$i"); b.add(s"a${i * 3}") }
+    a.mergeFrom(b)
+    assert(a.capacity == 4000 && a.elementsAdded == 8333)
+    assert(md5hex(a.toBytes) == "54722b342eae0724531fa55244cca1ad")
+  }
+
+  test("Java-serialized 2^17 x 4, 32-bit filter stays within 1.3x of its export") {
+    val c = new CuckooFilter(1 << 17, 4, 500, 2, true, 32)
+    (0 until 300000).foreach(i => c.add(s"member-$i"))
+    assert(c.capacity == (1 << 17) && c.loadFactor > 0.55)
+    val exported = c.toBytes.length
+    val serialized = CuckooSerde.javaSerializedSize(c)
+    assert(serialized <= 1.3 * exported, s"serialized $serialized B vs export $exported B")
+  }
+
+  test("digit-fold idx2 == fnv-1a-64 of the decimal string mod capacity") {
+    val rnd = new scala.util.Random(20141202)
+    val fps = Seq(0, 1, 9, 10, 99, 100, Int.MaxValue, -1) ++ Seq.fill(10000)(rnd.nextInt())
+    for (capacity <- Seq(1, 1000, 1 << 17)) {
+      val c = new CuckooFilter(capacity, 1, 500, 2, true, 32)
+      val cc = new CountingCuckooFilter(capacity, 1, 500, 2, true, 32)
+      fps.foreach { fp =>
+        val fpU = fp & 0xffffffffL
+        val want = java.lang.Long.remainderUnsigned(
+          graft.hash.Fnv.fnv1a64(java.lang.Long.toString(fpU), 0), capacity.toLong).toInt
+        assert(c.indicesFromFingerprint(fp) == ((fpU % capacity).toInt, want), s"fp=$fp cap=$capacity")
+        assert(cc.indicesFromFingerprint(fp) == ((fpU % capacity).toInt, want), s"fp=$fp cap=$capacity")
+      }
+    }
+  }
+}
+
+private object CuckooSerde {
+  def javaSerializedSize(o: AnyRef): Int = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bos)
+    oos.writeObject(o)
+    oos.close()
+    bos.size
+  }
 }
 
 class CountingCuckooSpec extends AnyFunSuite {
@@ -142,6 +195,32 @@ class CountingCuckooSpec extends AnyFunSuite {
     val bins = c.buckets.flatten.map(bin => ((bin >>> 32).toInt, bin & 0xffffffffL))
     assert(bins.toSet == Set((fp1, 1L), (fp2, 1L), (fpX, 3L)),
       "the relocated newcomer bin must keep count 3 (the reference would hold 1)")
+  }
+
+  test("kick-and-expansion byte golden: 1,000 buckets fed 20,000 keys expand to 8,000") {
+    val c = new CountingCuckooFilter(1000, 4, 500, 2, true, 32)
+    (0 until 20000).foreach { i => c.add(i.toString); if (i % 7 == 0) c.add(i.toString) }
+    assert(c.capacity == 8000 && c.insertedElements == 22858 && c.uniqueElements == 20000)
+    assert(md5hex(c.toBytes) == "1018483adc70d4f97b4ee867311d415b")
+  }
+
+  test("merge-with-expansion byte golden") {
+    val a = new CountingCuckooFilter(1000, 4, 500, 2, true, 32)
+    val b = new CountingCuckooFilter(1000, 4, 500, 2, true, 32)
+    (0 until 5000).foreach(i => a.add(s"a$i"))
+    (0 until 5000).foreach { i => b.add(s"a${i * 3}"); b.add(s"a${i * 3}") }
+    a.mergeFrom(b)
+    assert(a.capacity == 4000 && a.insertedElements == 15000 && a.uniqueElements == 8333)
+    assert(md5hex(a.toBytes) == "a55d7777a89664f2ecf5e1d60a8eb123")
+  }
+
+  test("Java-serialized 2^17 x 4, 32-bit filter stays within 1.3x of its export") {
+    val c = new CountingCuckooFilter(1 << 17, 4, 500, 2, true, 32)
+    (0 until 300000).foreach(i => c.add(s"member-$i"))
+    assert(c.capacity == (1 << 17) && c.loadFactor > 0.55)
+    val exported = c.toBytes.length
+    val serialized = CuckooSerde.javaSerializedSize(c)
+    assert(serialized <= 1.3 * exported, s"serialized $serialized B vs export $exported B")
   }
 }
 

@@ -305,6 +305,22 @@ class DataPipelineSpec extends AnyFunSuite {
     assert(fast.nonEmpty) // the random graph must actually exercise drops
   }
 
+  test("fuzzyDropSet: a pair with a null id is no edge on either path") {
+    import spark.implicits._
+    // 1001-1002 is a batch-batch edge (1002 drops), 1005-7 anchors 1005 to
+    // history; the null-id pairs must neither anchor 1003/1004 nor add a doc 0
+    val pairs = Seq[(Option[Long], Option[Long])]((Some(1001L), Some(1002L)),
+      (Some(1003L), None), (None, Some(1004L)), (Some(1005L), Some(7L)), (None, None))
+      .toDF("id_a", "id_b")
+    val freshOnly = (1001L to 1005L).toDF("doc_id")
+    def drops(bound: Long): Set[Long] =
+      graft.spark.pipeline.IncrementalCurate
+        .fuzzyDropSet(spark, pairs, freshOnly, 1000L, maxDriverEdges = bound)
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(drops(1L << 20) == Set(1002L, 1005L))
+    assert(drops(0L) == Set(1002L, 1005L))
+  }
+
   test("shard assignment is content-addressed and covers all shards") {
     import spark.implicits._
     val df = (0L until 500L).map(i => (i, s"t$i")).toDF("doc_id", "text")

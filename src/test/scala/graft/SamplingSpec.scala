@@ -261,6 +261,18 @@ class SamplingSpec extends AnyFunSuite {
     assert(!plan.contains("TakeOrdered"), plan)
   }
 
+  test("topKFlags: the tie walk ranks a Long.MinValue ~id bucket last") {
+    import spark.implicits._
+    // id Long.MaxValue flips to ~id == Long.MinValue; the walk narrows into
+    // that top-level bucket and must rank its Long.MinValue key below
+    // Long.MinValue + 1 (negating Long.MinValue overflows, so a sort on the
+    // negated bucket ranks it first and selects every tied id)
+    val df = Seq(Long.MaxValue, Long.MaxValue - 1, 5L).map(id => (id, 1.5)).toDF("id", "key")
+    val got = Sampling.topKFlags(df, "id", col("key"), 2L, tieCollectMax = 1L)
+      .filter(col("selected")).select(col("id")).collect().map(_.getLong(0)).toSet
+    assert(got == Set(5L, Long.MaxValue - 1))
+  }
+
   test("topKFlags: NaN keys and internal-name collisions fail loudly") {
     import spark.implicits._
     val nan = Seq((1L, 1.0), (2L, Double.NaN), (3L, 2.0)).toDF("id", "key")
