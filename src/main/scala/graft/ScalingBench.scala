@@ -307,10 +307,9 @@ object ScalingBench {
   }
 
   /** The measured job: full per-lang sketch battery over the pages table —
-    * all four sketches as pure-Catalyst TypedImperativeAggregates (zero-copy
-    * UTF8String folds; same bytes as the udaf path, NativeParitySpec). */
+    * all four sketches as the Catalyst-native [[SketchUdafs]] aggregates
+    * (zero-copy UTF8String folds, no per-row boxing through Encoders). */
   private def job(spark: SparkSession, dir: String): Unit = {
-    import graft.spark.aggs.{NativeHllCountAgg, NativeSketchAggs}
     val pages = spark.read.parquet(dir)
     val domain = regexp_extract(col("url"), "https://([^/]+)/", 1)
     val out = pages
@@ -318,13 +317,13 @@ object ScalingBench {
         length(col("text")).cast("double").as("text_len"))
       .groupBy(col("lang"))
       .agg(
-        NativeHllCountAgg.hllCountNative(col("url"), 14).as("distinct_urls"),
+        SketchUdafs.hllCount(14)(col("url")).as("distinct_urls"),
         SketchFunctions.bfEstimate(
-          NativeSketchAggs.bloomNative(col("url"), 1000000, 0.01)).as("bloom_estimate"),
-        NativeSketchAggs.heavyHittersNative(col("domain"), lit(1L), 5, 4096, 5)
+          SketchUdafs.bloom(1000000, 0.01)(col("url"))).as("bloom_estimate"),
+        SketchUdafs.heavyHitters(5, 4096, 5)(col("domain"), lit(1L))
           .as("top_domains"),
         SketchFunctions.kllQuantiles(
-          NativeSketchAggs.kllNative(col("text_len"), 200),
+          SketchUdafs.kll(200)(col("text_len")),
           array(lit(0.5), lit(0.95), lit(0.99))).as("len_q"),
         count(lit(1)).as("n_pages"))
     out.collect()

@@ -50,7 +50,7 @@ object BloomMath {
   * hex export uses a big-endian footer, bloom.py:274-285).
   *
   * This is the engine-internal state block; Spark exposure is via
-  * [[graft.spark.aggs.BloomAgg]] (mergeable aggregation) and the probe/set-op
+  * [[graft.spark.aggs.NativeBloomAgg]] (mergeable aggregation) and the probe/set-op
   * functions in [[graft.spark.fns.SketchFunctions]].
   */
 final class BloomFilter private (

@@ -593,15 +593,6 @@ object SparkQueries {
         SketchFunctions.bfEstimate(
           SketchUdafs.bloom(100000, 0.01)(col("text"))).as("bloom_estimate"))
 
-  /** Native (pure-Catalyst TypedImperativeAggregate) HLL next to the udaf
-    * path — identical estimates, zero-copy update. */
-  def hllDistinctNative(spark: SparkSession, dir: String): DataFrame =
-    tbl(spark, dir, "documents")
-      .select(col("lang"), col("text"))
-      .groupBy(col("lang"))
-      .agg(graft.spark.aggs.NativeHllCountAgg.hllCountNative(col("text"), 14)
-        .as("hll_distinct_texts"))
-
   /** CMS-backed heavy hitters per lang: top sources with estimated counts. */
   def cmsHeavyHitters(spark: SparkSession, dir: String): DataFrame =
     tbl(spark, dir, "documents")
@@ -963,7 +954,7 @@ object SparkQueries {
   /** Flagship: one pass over a deterministic synthetic pages table building
     * the full sketch battery per lang — the north-star query shape
     * (distinct urls, heavy domains, text-length quantiles, membership).
-    * All four sketches run as pure-Catalyst TypedImperativeAggregates
+    * All four sketches are the Catalyst-native [[SketchUdafs]] aggregates
     * (zero-copy UTF8String folds, no per-row boxing through Encoders). */
   def pagesSketchBattery(spark: SparkSession, nPages: Long): DataFrame = {
     val pages = graft.spark.io.PagesGen.pages(spark, nPages)
@@ -977,13 +968,13 @@ object SparkQueries {
         length(col("text")).cast("double").as("text_len"))
       .groupBy(col("lang"))
       .agg(
-        NativeHllCountAgg.hllCountNative(col("url"), 14).as("distinct_urls_hll"),
+        SketchUdafs.hllCount(14)(col("url")).as("distinct_urls_hll"),
         SketchFunctions.bfEstimate(
-          NativeSketchAggs.bloomNative(col("url"), 2000000, 0.01)).as("distinct_urls_bloom"),
-        NativeSketchAggs.heavyHittersNative(col("domain"), lit(1L), 5, 4096, 5)
+          SketchUdafs.bloom(2000000, 0.01)(col("url"))).as("distinct_urls_bloom"),
+        SketchUdafs.heavyHitters(5, 4096, 5)(col("domain"), lit(1L))
           .as("top_domains"),
         SketchFunctions.kllQuantiles(
-          NativeSketchAggs.kllNative(col("text_len"), 200),
+          SketchUdafs.kll(200)(col("text_len")),
           array(lit(0.5), lit(0.95), lit(0.99))).as("len_quantiles"),
         count(lit(1)).as("n_pages"))
   }

@@ -46,16 +46,9 @@ object VerifiedQueries {
         withinBound(col("hll_est"), col("n_exact"), 0.03, 2).as("hll_ok"),
         withinBound(col("bloom_est"), col("n_exact"), 0.03, 2).as("bloom_ok"))
 
-  /** Native (pure-Catalyst TypedImperativeAggregate) HLL, same check. */
+  /** The HLL projection of [[hllDistinctVerified]] (q_hll_native). */
   def hllDistinctNativeVerified(spark: SparkSession, dir: String): DataFrame =
-    tbl(spark, dir, "documents")
-      .select(col("lang"), col("text"))
-      .groupBy(col("lang"))
-      .agg(
-        countDistinct(col("text")).as("n_exact"),
-        NativeHllCountAgg.hllCountNative(col("text"), 14).as("hll_est"))
-      .select(col("lang"), col("n_exact"),
-        withinBound(col("hll_est"), col("n_exact"), 0.03, 2).as("hll_ok"))
+    hllDistinctVerified(spark, dir).select(col("lang"), col("n_exact"), col("hll_ok"))
 
   /** Salted two-level HLL+Bloom distinct users per event type, checked
     * against exact COUNT(DISTINCT user_id). */
@@ -189,7 +182,7 @@ object VerifiedQueries {
   def cmsModesVerified(spark: SparkSession, dir: String): DataFrame = {
     val width = 2048
     val ev = tbl(spark, dir, "events").select(col("event_type"))
-    val bytes = ev.agg(NativeCmsAgg.cmsNative(col("event_type"), lit(1L), width, 5).as("b"))
+    val bytes = ev.agg(SketchUdafs.cms(width, 5)(col("event_type"), lit(1L)).as("b"))
       .head().getAs[Array[Byte]]("b")
     val n = graft.core.CountMinSketch.fromBytes(bytes).elementsAdded
     val minP = SketchFunctions.cmsCount(bytes)
@@ -207,7 +200,7 @@ object VerifiedQueries {
     * always >= the true count (min over rows of an overcounting grid). */
   def cmsPointVerified(spark: SparkSession, dir: String): DataFrame = {
     val ev = tbl(spark, dir, "events").select(col("event_type"))
-    val bytes = ev.agg(NativeCmsAgg.cmsNative(col("event_type"), lit(1L), 2048, 5).as("b"))
+    val bytes = ev.agg(SketchUdafs.cms(2048, 5)(col("event_type"), lit(1L)).as("b"))
       .head().getAs[Array[Byte]]("b")
     ev.groupBy(col("event_type")).agg(count(lit(1)).as("true_count"))
       .withColumn("cms_est",
@@ -1296,13 +1289,13 @@ object VerifiedQueries {
       length(col("text")).cast("double").as("text_len"))
 
     val sketch = base.groupBy(col("lang")).agg(
-      NativeHllCountAgg.hllCountNative(col("url"), 14).as("hll_est"),
+      SketchUdafs.hllCount(14)(col("url")).as("hll_est"),
       SketchFunctions.bfEstimate(
-        NativeSketchAggs.bloomNative(col("url"), 2000000, 0.01)).as("bloom_est"),
-      NativeSketchAggs.heavyHittersNative(col("domain"), lit(1L), 5, 4096, 5)
+        SketchUdafs.bloom(2000000, 0.01)(col("url"))).as("bloom_est"),
+      SketchUdafs.heavyHitters(5, 4096, 5)(col("domain"), lit(1L))
         .as("top_domains"),
       SketchFunctions.kllQuantiles(
-        NativeSketchAggs.kllNative(col("text_len"), 200),
+        SketchUdafs.kll(200)(col("text_len")),
         array(lit(0.5), lit(0.95), lit(0.99))).as("lq"),
       count(lit(1)).as("n_pages"))
 

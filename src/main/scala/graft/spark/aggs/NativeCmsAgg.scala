@@ -1,7 +1,5 @@
 package graft.spark.aggs
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -10,12 +8,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{CmsQueryType, CountMinSketch}
 
-/** Pure-Catalyst weighted Count-Min aggregate — the zero-copy companion to
-  * the udaf-based [[CmsAgg]]: reads (key UTF8String, count long) straight
-  * off the InternalRow (no tuple materialization per row). ASCII keys hash
-  * off the UTF8String bytes; non-ASCII falls back to the exact codepoint
-  * fold. Negative counts are removals (reference remove() semantics).
-  * OUT = reference-format CMS bytes.
+/** Weighted Count-Min aggregate (`cms_agg`, [[SketchUdafs.cms]]): reads
+  * (key UTF8String, count long) straight off the InternalRow (no tuple
+  * materialization per row). ASCII keys hash off the UTF8String bytes;
+  * non-ASCII falls back to the exact codepoint fold. Negative counts are
+  * removals (reference remove() semantics); a row with a null key or count
+  * is skipped. OUT = reference-format CMS bytes.
   */
 case class NativeCmsAgg(
     key: Expression,
@@ -40,9 +38,11 @@ case class NativeCmsAgg(
     val k = key.eval(input)
     if (k != null) {
       val c = count.eval(input)
-      val n = if (c == null) 1L else c.asInstanceOf[Long]
-      val hs = NativeHashes.hashesOf(k.asInstanceOf[UTF8String], depth)
-      if (n >= 0) buffer.addHashes(hs, n) else buffer.removeHashes(hs, -n)
+      if (c != null) {
+        val n = c.asInstanceOf[Long]
+        val hs = NativeHashes.hashesOf(k.asInstanceOf[UTF8String], depth)
+        if (n >= 0) buffer.addHashes(hs, n) else buffer.removeHashes(hs, -n)
+      }
     }
     buffer
   }
@@ -63,13 +63,5 @@ case class NativeCmsAgg(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(key = newChildren(0), count = newChildren(1))
 
-  override def prettyName: String = "graft_cms_native"
-}
-
-object NativeCmsAgg {
-  /** DataFrame-facing column: `df.agg(cmsNative($"key", $"count", 2048, 5))`. */
-  def cmsNative(key: Column, count: Column, width: Int = 2048, depth: Int = 5): Column =
-    GraftColumnBridge.column(
-      NativeCmsAgg(GraftColumnBridge.expression(key), GraftColumnBridge.expression(count),
-        width, depth).toAggregateExpression())
+  override def prettyName: String = "graft_cms"
 }

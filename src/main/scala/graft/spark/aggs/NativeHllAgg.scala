@@ -1,18 +1,17 @@
 package graft.spark.aggs
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ext.Hll
 import graft.hash.Fnv
 
-/** Pure-Catalyst HLL distinct-count aggregate (`TypedImperativeAggregate`),
-  * the zero-copy fast path next to the udaf-based [[HllCountAgg]]:
+/** HLL aggregate (`TypedImperativeAggregate`): `hll_count` /
+  * [[SketchUdafs.hllCount]] when `estimate` (OUT = the Long distinct-count
+  * estimate), `hll_agg` / [[SketchUdafs.hll]] otherwise (OUT = HLL bytes):
   *
   *  - the update path reads the `UTF8String` directly — for ASCII values the
   *    fnv-1a byte fold equals the reference's codepoint fold, so no java
@@ -24,9 +23,10 @@ import graft.hash.Fnv
   * This is the construction Spark's own approx_count_distinct uses
   * (SURVEY.md §1.3), instantiated with our sketch.
   */
-case class NativeHllCountAgg(
+case class NativeHllAgg(
     child: Expression,
     p: Int,
+    estimate: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
 ) extends TypedImperativeAggregate[Hll] with ImplicitCastInputTypes {
@@ -35,7 +35,7 @@ case class NativeHllCountAgg(
   // cast-or-reject at analysis time instead of a runtime CCE on non-strings
   override def inputTypes = Seq(StringType) // AbstractDataType is private[sql] — infer
   override def nullable: Boolean = false
-  override def dataType: DataType = LongType
+  override def dataType: DataType = if (estimate) LongType else BinaryType
 
   override def createAggregationBuffer(): Hll = Hll(p)
 
@@ -64,25 +64,18 @@ case class NativeHllCountAgg(
 
   override def merge(buffer: Hll, input: Hll): Hll = buffer.merge(input)
 
-  override def eval(buffer: Hll): Any = buffer.estimate
+  override def eval(buffer: Hll): Any = if (estimate) buffer.estimate else buffer.toBytes
 
   override def serialize(buffer: Hll): Array[Byte] = buffer.toBytes
   override def deserialize(bytes: Array[Byte]): Hll = Hll.fromBytes(bytes)
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): NativeHllCountAgg =
+  override def withNewMutableAggBufferOffset(newOffset: Int): NativeHllAgg =
     copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): NativeHllCountAgg =
+  override def withNewInputAggBufferOffset(newOffset: Int): NativeHllAgg =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren.head)
 
-  override def prettyName: String = "graft_hll_count_native"
-}
-
-object NativeHllCountAgg {
-  /** DataFrame-facing column: `df.agg(hllCountNative($"url"))`. */
-  def hllCountNative(c: Column, p: Int = 14): Column =
-    GraftColumnBridge.column(
-      NativeHllCountAgg(GraftColumnBridge.expression(c), p).toAggregateExpression())
+  override def prettyName: String = if (estimate) "graft_hll_count" else "graft_hll"
 }

@@ -1,11 +1,9 @@
 package graft.spark.aggs
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,7 +11,7 @@ import graft.core.{BloomFilter, HeavyHitters}
 import graft.ext.Kll
 import graft.hash.Fnv
 
-/** Shared zero-copy hash kernel for the native aggregates: `depth` seeded
+/** Shared zero-copy hash kernel for the sketch aggregates: `depth` seeded
   * fnv-1a-64 values computed straight off the UTF8String bytes for ASCII
   * keys (byte fold == the reference's codepoint fold), exact codepoint
   * fallback otherwise. */
@@ -37,10 +35,10 @@ private[aggs] object NativeHashes {
   }
 }
 
-/** Pure-Catalyst Bloom aggregate — the zero-copy companion to the udaf-based
-  * [[BloomAgg]]: per row, k seeded hashes folded off the UTF8String bytes,
-  * no java String materialization. merge = in-place OR (associative +
-  * commutative as bytes). OUT = reference-format Bloom bytes. */
+/** Bloom aggregate (`bloom_agg`, [[SketchUdafs.bloom]]): per row, k seeded
+  * hashes folded off the UTF8String bytes, no java String materialization.
+  * merge = in-place OR (associative + commutative as bytes). OUT =
+  * reference-format Bloom bytes. */
 case class NativeBloomAgg(
     child: Expression,
     estElements: Long,
@@ -78,65 +76,33 @@ case class NativeBloomAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren.head)
-  override def prettyName: String = "graft_bloom_native"
+  override def prettyName: String = "graft_bloom"
 }
 
-/** Pure-Catalyst KLL aggregate over a double column: the value is read
-  * primitively off the InternalRow (no Double boxing through an Encoder).
-  * OUT = engine KLL bytes (same codec the udaf path ships). */
+/** KLL aggregate over a double column (`kll_agg`, [[SketchUdafs.kll]]): the
+  * value is read primitively off the InternalRow (no Double boxing through
+  * an Encoder). With no `percentages` OUT = engine KLL bytes. With
+  * `percentages` it evaluates straight to the quantile value(s) — the target
+  * shape of the percentile_approx -> KLL optimizer rewrite — and returns null
+  * on empty input (percentile_approx parity). */
 case class NativeKllAgg(
     child: Expression,
     k: Int,
+    percentages: Seq[Double] = Nil,
+    asArray: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
 ) extends TypedImperativeAggregate[Kll] with ImplicitCastInputTypes {
 
-  override def children: Seq[Expression] = Seq(child)
-  override def inputTypes = Seq(DoubleType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Kll = Kll(k)
-
-  override def update(buffer: Kll, input: InternalRow): Kll = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[Double])
-    buffer
-  }
-
-  override def merge(buffer: Kll, input: Kll): Kll = buffer.merge(input)
-
-  override def eval(buffer: Kll): Any = buffer.toBytes
-  override def serialize(buffer: Kll): Array[Byte] = buffer.toBytes
-  override def deserialize(bytes: Array[Byte]): Kll = Kll.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): NativeKllAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): NativeKllAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_kll_native"
-}
-
-/** KLL aggregate evaluating directly to quantile value(s) — the target shape
-  * of the percentile_approx -> KLL optimizer rewrite. Returns null on empty
-  * input (percentile_approx parity). */
-case class NativeKllQuantileAgg(
-    child: Expression,
-    k: Int,
-    percentages: Seq[Double],
-    asArray: Boolean,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends TypedImperativeAggregate[Kll] with ImplicitCastInputTypes {
+  private def emitsBytes: Boolean = percentages.isEmpty
 
   override def children: Seq[Expression] = Seq(child)
   override def inputTypes = Seq(DoubleType)
-  override def nullable: Boolean = true
+  override def nullable: Boolean = !emitsBytes
   override def dataType: DataType =
-    if (asArray) ArrayType(DoubleType, containsNull = false) else DoubleType
+    if (emitsBytes) BinaryType
+    else if (asArray) ArrayType(DoubleType, containsNull = false)
+    else DoubleType
 
   override def createAggregationBuffer(): Kll = Kll(k)
 
@@ -149,29 +115,29 @@ case class NativeKllQuantileAgg(
   override def merge(buffer: Kll, input: Kll): Kll = buffer.merge(input)
 
   override def eval(buffer: Kll): Any =
-    if (buffer.n == 0) null
-    else if (asArray)
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-        percentages.map(buffer.quantile).toArray)
+    if (emitsBytes) buffer.toBytes
+    else if (buffer.n == 0) null
+    else if (asArray) ArrayData.toArrayData(percentages.map(buffer.quantile).toArray)
     else buffer.quantile(percentages.head)
 
   override def serialize(buffer: Kll): Array[Byte] = buffer.toBytes
   override def deserialize(bytes: Array[Byte]): Kll = Kll.fromBytes(bytes)
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): NativeKllQuantileAgg =
+  override def withNewMutableAggBufferOffset(newOffset: Int): NativeKllAgg =
     copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): NativeKllQuantileAgg =
+  override def withNewInputAggBufferOffset(newOffset: Int): NativeKllAgg =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren.head)
-  override def prettyName: String = "graft_kll_quantile"
+  override def prettyName: String = if (emitsBytes) "graft_kll" else "graft_kll_quantile"
 }
 
-/** Pure-Catalyst heavy hitters — zero-copy grid hashing (the key string is
-  * materialized only for the candidate dict, which needs it anyway). Same
-  * slack-tracking + candidate-union merge as [[HeavyHittersAgg]]; OUT is the
-  * final top-k map<string,bigint>. */
+/** Heavy hitters (`heavy_hitters`, [[SketchUdafs.heavyHitters]]) — zero-copy
+  * grid hashing (the key string is materialized only for the candidate dict,
+  * which needs it anyway). Each partition tracks extra candidates and merge
+  * is the two-phase candidate union of SURVEY.md §7.7.1; OUT is the final
+  * top-k map<string,bigint>. A row with a null key or count is skipped. */
 case class NativeHhAgg(
     key: Expression,
     count: Expression,
@@ -198,9 +164,10 @@ case class NativeHhAgg(
     val k = key.eval(input)
     if (k != null) {
       val c = count.eval(input)
-      val n = if (c == null) 1L else c.asInstanceOf[Long]
-      val s = k.asInstanceOf[UTF8String]
-      buffer.addWithHashes(s.toString, NativeHashes.hashesOf(s, depth), n)
+      if (c != null) {
+        val s = k.asInstanceOf[UTF8String]
+        buffer.addWithHashes(s.toString, NativeHashes.hashesOf(s, depth), c.asInstanceOf[Long])
+      }
     }
     buffer
   }
@@ -225,21 +192,5 @@ case class NativeHhAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(key = newChildren(0), count = newChildren(1))
-  override def prettyName: String = "graft_hh_native"
-}
-
-object NativeSketchAggs {
-  def bloomNative(c: Column, estElements: Long, fpr: Double): Column =
-    GraftColumnBridge.column(
-      NativeBloomAgg(GraftColumnBridge.expression(c), estElements, fpr).toAggregateExpression())
-
-  def kllNative(c: Column, k: Int = 200): Column =
-    GraftColumnBridge.column(
-      NativeKllAgg(GraftColumnBridge.expression(c), k).toAggregateExpression())
-
-  def heavyHittersNative(key: Column, count: Column, numHitters: Int,
-                         width: Int = 4096, depth: Int = 5): Column =
-    GraftColumnBridge.column(
-      NativeHhAgg(GraftColumnBridge.expression(key), GraftColumnBridge.expression(count),
-        numHitters, width, depth).toAggregateExpression())
+  override def prettyName: String = "graft_hh"
 }

@@ -7,7 +7,10 @@ import graft.core._
 import graft.ext._
 import graft.hash.Fnv1aHasher
 
-/** Mergeable sketch aggregators.
+/** Mergeable sketch aggregators for the sketches without a Catalyst-native
+  * aggregate (cbf, stream threshold, cuckoo, counting cuckoo, QF, EBF,
+  * t-digest; Bloom, CMS, heavy hitters, HLL and KLL are the `Native*Agg`
+  * `TypedImperativeAggregate`s).
   *
   * Each is a typed `Aggregator[IN, SKETCH, OUT]` exposed through
   * `functions.udaf(...)` (see [[SketchUdafs]]). Spark lowers these to
@@ -48,8 +51,6 @@ object SketchEncoders {
     refEncoder[CountingBloomFilter](_.toBytes, CountingBloomFilter.fromBytes(_))
   implicit val cmsEnc: Encoder[CountMinSketch] =
     refEncoder[CountMinSketch](_.toBytes, CountMinSketch.fromBytes(_))
-  implicit val hhEnc: Encoder[HeavyHitters] =
-    refEncoder[HeavyHitters](_.toBytes, HeavyHitters.fromBytes(_))
   implicit val stEnc: Encoder[StreamThreshold] =
     refEncoder[StreamThreshold](_.toBytes, StreamThreshold.fromBytes(_))
   implicit val qfEnc: Encoder[QuotientFilter] =
@@ -72,16 +73,6 @@ object SketchEncoders {
 
 import SketchEncoders._
 
-final class BloomAgg(estElements: Long, fpr: Double)
-    extends Aggregator[String, BloomFilter, Array[Byte]] {
-  def zero: BloomFilter = BloomFilter.empty(estElements, fpr, Fnv1aHasher)
-  def reduce(b: BloomFilter, key: String): BloomFilter = { if (key != null) b.add(key); b }
-  def merge(a: BloomFilter, b: BloomFilter): BloomFilter = a.orInPlace(b)
-  def finish(b: BloomFilter): Array[Byte] = b.toBytes
-  def bufferEncoder: Encoder[BloomFilter] = bloomEnc
-  def outputEncoder: Encoder[Array[Byte]] = binaryEnc
-}
-
 /** Weighted counting bloom: IN = (key, count). */
 final class CbfAgg(estElements: Long, fpr: Double)
     extends Aggregator[(String, Long), CountingBloomFilter, Array[Byte]] {
@@ -98,41 +89,6 @@ final class CbfAgg(estElements: Long, fpr: Double)
   def finish(b: CountingBloomFilter): Array[Byte] = b.toBytes
   def bufferEncoder: Encoder[CountingBloomFilter] = cbfEnc
   def outputEncoder: Encoder[Array[Byte]] = binaryEnc
-}
-
-final class CmsAgg(width: Int, depth: Int)
-    extends Aggregator[(String, Long), CountMinSketch, Array[Byte]] {
-  def zero: CountMinSketch = CountMinSketch.empty(width, depth, CmsQueryType.Min, Fnv1aHasher)
-  def reduce(b: CountMinSketch, in: (String, Long)): CountMinSketch = {
-    if (in._1 != null) {
-      if (in._2 >= 0) b.add(in._1, in._2) else b.remove(in._1, -in._2)
-    }
-    b
-  }
-  def merge(a: CountMinSketch, b: CountMinSketch): CountMinSketch = a.join(b)
-  def finish(b: CountMinSketch): Array[Byte] = b.toBytes
-  def bufferEncoder: Encoder[CountMinSketch] = cmsEnc
-  def outputEncoder: Encoder[Array[Byte]] = binaryEnc
-}
-
-/** Distributed heavy hitters: per-partition HH (CMS + candidate set), merged
-  * via the two-phase candidate-union documented in SURVEY.md §7.7.1. OUT is
-  * the final top-k map. */
-final class HeavyHittersAgg(numHitters: Int, width: Int, depth: Int)
-    extends Aggregator[(String, Long), HeavyHitters, Map[String, Long]] {
-  // track extra candidates per partition so the merged top-k is a superset
-  // of the exact top-k whenever the per-partition tails don't conspire
-  private val slack = math.max(numHitters * 4, numHitters + 16)
-  def zero: HeavyHitters = HeavyHitters.empty(slack, width, depth, Fnv1aHasher)
-  def reduce(b: HeavyHitters, in: (String, Long)): HeavyHitters = {
-    if (in._1 != null) b.add(in._1, in._2); b
-  }
-  def merge(a: HeavyHitters, b: HeavyHitters): HeavyHitters = a.merge(b)
-  def finish(b: HeavyHitters): Map[String, Long] =
-    b.heavyHitters.toSeq.sortBy { case (k, v) => (-v, k) }.take(numHitters).toMap
-  def bufferEncoder: Encoder[HeavyHitters] = hhEnc
-  def outputEncoder: Encoder[Map[String, Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
 }
 
 final class StreamThresholdAgg(threshold: Long, width: Int, depth: Int)
@@ -199,34 +155,6 @@ final class EbfAgg(estElements: Long, fpr: Double)
   def merge(a: ExpandingBloomFilter, b: ExpandingBloomFilter): ExpandingBloomFilter = a.mergeFrom(b)
   def finish(b: ExpandingBloomFilter): Array[Byte] = b.toBytes
   def bufferEncoder: Encoder[ExpandingBloomFilter] = ebfEnc
-  def outputEncoder: Encoder[Array[Byte]] = binaryEnc
-}
-
-final class HllAgg(p: Int) extends Aggregator[String, Hll, Array[Byte]] {
-  def zero: Hll = Hll(p)
-  def reduce(b: Hll, key: String): Hll = { if (key != null) b.add(key); b }
-  def merge(a: Hll, b: Hll): Hll = a.merge(b)
-  def finish(b: Hll): Array[Byte] = b.toBytes
-  def bufferEncoder: Encoder[Hll] = hllEnc
-  def outputEncoder: Encoder[Array[Byte]] = binaryEnc
-}
-
-/** HLL with a Long estimate as output — the common "distinct count" shape. */
-final class HllCountAgg(p: Int) extends Aggregator[String, Hll, Long] {
-  def zero: Hll = Hll(p)
-  def reduce(b: Hll, key: String): Hll = { if (key != null) b.add(key); b }
-  def merge(a: Hll, b: Hll): Hll = a.merge(b)
-  def finish(b: Hll): Long = b.estimate
-  def bufferEncoder: Encoder[Hll] = hllEnc
-  def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
-final class KllAgg(k: Int) extends Aggregator[Double, Kll, Array[Byte]] {
-  def zero: Kll = Kll(k)
-  def reduce(b: Kll, v: Double): Kll = { b.update(v); b }
-  def merge(a: Kll, b: Kll): Kll = a.merge(b)
-  def finish(b: Kll): Array[Byte] = b.toBytes
-  def bufferEncoder: Encoder[Kll] = kllEnc
   def outputEncoder: Encoder[Array[Byte]] = binaryEnc
 }
 

@@ -1,16 +1,13 @@
 package graft.spark.plans
 
-import org.apache.spark.sql.{Encoders, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.types.StringType
 
-import graft.ext.Hll
-import graft.spark.aggs.HllCountAgg
+import graft.spark.aggs.{NativeHllAgg, NativeKllAgg, SketchUdafs}
 
 /** Optimizer rule: rewrite exact `COUNT(DISTINCT stringCol)` into the HLL
   * sketch aggregate (SURVEY.md §4.3's optional rule). Opt-in per session:
@@ -19,9 +16,10 @@ import graft.spark.aggs.HllCountAgg
   *
   * Why this matters at scale: exact COUNT(DISTINCT) expands to an Expand +
   * two exchanges keyed by the distinct value (shuffling every distinct key);
-  * the HLL aggregate is one partial-agg pass with a 16KB buffer per group —
-  * the distinct values never cross the wire. The trade is the documented
-  * ~1.04/sqrt(2^p) relative error.
+  * the HLL aggregate ([[NativeHllAgg]], the one behind `hll_count`) is one
+  * partial-agg pass with a 16KB buffer per group — the distinct values never
+  * cross the wire. The trade is the documented ~1.04/sqrt(2^p) relative
+  * error.
   */
 case class RewriteCountDistinctToHll() extends Rule[LogicalPlan] {
   private val hllP = 14
@@ -29,28 +27,15 @@ case class RewriteCountDistinctToHll() extends Rule[LogicalPlan] {
   private def enabled: Boolean =
     conf.getConfString("spark.graft.hll.rewriteCountDistinct", "false").toBoolean
 
-  private def hllAggExpr(child: Expression, filter: Option[Expression]): AggregateExpression = {
-    import org.apache.spark.sql.catalyst.encoders.AgnosticEncoder
-    val inEnc = ExpressionEncoder(
-      Encoders.STRING.asInstanceOf[AgnosticEncoder[String]]).resolveAndBind()
-    // buffers cross the shuffle in the REFERENCE byte format (project
-    // invariant — same TransformingEncoder codec every other agg path uses)
-    val bufEnc = graft.spark.aggs.SketchEncoders.hllEnc
-      .asInstanceOf[ExpressionEncoder[Hll]].resolveAndBind()
-    new ScalaAggregator[String, Hll, Long](
-      Seq(child), new HllCountAgg(hllP), inEnc, bufEnc,
-      false, true, 0, 0, Some("graft_hll_count"))
-      .toAggregateExpression(isDistinct = false, filter = filter)
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
     plan.transform {
       case a: Aggregate =>
         a.transformExpressions {
-          case ae @ AggregateExpression(Count(Seq(child)), _, true, filter, _)
+          case AggregateExpression(Count(Seq(child)), _, true, filter, _)
               if child.dataType == StringType && child.resolved =>
-            hllAggExpr(child, filter)
+            NativeHllAgg(child, hllP, estimate = true)
+              .toAggregateExpression(isDistinct = false, filter = filter)
         }
     }
   }
@@ -99,8 +84,7 @@ case class RewritePercentileApproxToKll() extends Rule[LogicalPlan] {
                 ap.child.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] &&
                 percentagesOf(ap.percentageExpression).isDefined =>
             val (ps, asArray) = percentagesOf(ap.percentageExpression).get
-            val agg = graft.spark.aggs.NativeKllQuantileAgg(
-              Cast(ap.child, DoubleType), kllK, ps, asArray)
+            val agg = NativeKllAgg(Cast(ap.child, DoubleType), kllK, ps, asArray)
               .toAggregateExpression(isDistinct = false, filter = filter)
             // preserve percentile_approx's output type exactly
             val target =
@@ -118,36 +102,17 @@ case class RewritePercentileApproxToKll() extends Rule[LogicalPlan] {
   *     .withExtensions(new GraftExtensions)           // or
   *     .config("spark.sql.extensions", "graft.spark.plans.GraftExtensions")
   *
-  * Injects the COUNT(DISTINCT)->HLL optimizer rule plus SQL registrations of
-  * the pure-Catalyst native sketch aggregates (the udaf registry in
-  * SketchUdafs.registerAll covers the Aggregator-based paths; these are the
-  * zero-boxing TypedImperativeAggregates, usable directly from SQL:
-  * `SELECT hll_count_native(url), kll_native(len, 200) FROM pages`).
+  * Injects the COUNT(DISTINCT)->HLL and percentile_approx->KLL optimizer
+  * rules, the Bloom/CMS/heavy-hitters/HLL/KLL sketch aggregates from
+  * [[SketchUdafs.sqlAggregates]] (the same builders `SketchUdafs.registerAll`
+  * registers: `SELECT hll_count(url), kll_agg(len, 200) FROM pages`) and the
+  * scalar kernels below.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-  import graft.spark.aggs.{NativeBloomAgg, NativeCmsAgg, NativeHhAgg, NativeHllCountAgg, NativeKllAgg}
-
-  private def longArg(e: Expression, fn: String, name: String): Long = {
-    require(e.foldable, s"$fn: $name must be a literal")
-    e.eval() match {
-      case d: org.apache.spark.sql.types.Decimal => d.toLong
-      case n: Number => n.longValue
-      case other => throw new IllegalArgumentException(s"$fn: $name is not numeric: $other")
-    }
-  }
-  private def intArg(e: Expression, fn: String, name: String): Int =
-    Math.toIntExact(longArg(e, fn, name))
-  private def doubleArg(e: Expression, fn: String, name: String): Double = {
-    require(e.foldable, s"$fn: $name must be a literal")
-    e.eval() match {
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble // SQL 0.01 literal
-      case n: Number => n.doubleValue
-      case other => throw new IllegalArgumentException(s"$fn: $name is not numeric: $other")
-    }
-  }
+  import graft.spark.aggs.SqlArgs.{int => intArg, long => longArg}
 
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "")
@@ -156,62 +121,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => RewriteCountDistinctToHll())
     e.injectOptimizerRule(_ => RewritePercentileApproxToKll())
 
-    e.injectFunction((FunctionIdentifier("hll_count_native"),
-      info("hll_count_native", "hll_count_native(col[, p]) - native HLL distinct count"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => NativeHllCountAgg(c, 14).toAggregateExpression()
-        case Seq(c, p) =>
-          NativeHllCountAgg(c, intArg(p, "hll_count_native", "p")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("hll_count_native takes (col[, p])")
-      }))
-
-    e.injectFunction((FunctionIdentifier("cms_native"),
-      info("cms_native", "cms_native(key, count[, width, depth]) - native CMS bytes"),
-      (args: Seq[Expression]) => args match {
-        case Seq(k, c) => NativeCmsAgg(k, c, 2048, 5).toAggregateExpression()
-        case Seq(k, c, w, d) => NativeCmsAgg(k, c,
-          intArg(w, "cms_native", "width"), intArg(d, "cms_native", "depth"))
-          .toAggregateExpression()
-        case _ => throw new IllegalArgumentException("cms_native takes (key, count[, w, d])")
-      }))
-
-    e.injectFunction((FunctionIdentifier("bloom_native"),
-      info("bloom_native", "bloom_native(col, est_elements, fpr) - native Bloom bytes"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c, est, fpr) => NativeBloomAgg(c,
-          longArg(est, "bloom_native", "est_elements"),
-          doubleArg(fpr, "bloom_native", "fpr")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("bloom_native takes (col, est, fpr)")
-      }))
-
-    e.injectFunction((FunctionIdentifier("kll_native"),
-      info("kll_native", "kll_native(col[, k]) - native KLL sketch bytes"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => NativeKllAgg(c, 200).toAggregateExpression()
-        case Seq(c, k) =>
-          NativeKllAgg(c, intArg(k, "kll_native", "k")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("kll_native takes (col[, k])")
-      }))
+    SketchUdafs.sqlAggregates.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name), info(name, usage), build))
+    }
 
     e.injectFunction((FunctionIdentifier("cosine_f32"),
       info("cosine_f32", "cosine_f32(a, b) - codegen'd cosine over float arrays"),
       (args: Seq[Expression]) => args match {
         case Seq(a, b) => graft.spark.fns.CosineF32Expr(a, b)
         case _ => throw new IllegalArgumentException("cosine_f32 takes (a, b)")
-      }))
-
-    e.injectFunction((FunctionIdentifier("heavy_hitters_native"),
-      info("heavy_hitters_native",
-        "heavy_hitters_native(key, count, k[, width, depth]) - native top-k map"),
-      (args: Seq[Expression]) => args match {
-        case Seq(key, c, k) => NativeHhAgg(key, c,
-          intArg(k, "heavy_hitters_native", "k"), 4096, 5).toAggregateExpression()
-        case Seq(key, c, k, w, d) => NativeHhAgg(key, c,
-          intArg(k, "heavy_hitters_native", "k"),
-          intArg(w, "heavy_hitters_native", "width"),
-          intArg(d, "heavy_hitters_native", "depth")).toAggregateExpression()
-        case _ =>
-          throw new IllegalArgumentException("heavy_hitters_native takes (key, count, k[, w, d])")
       }))
 
     e.injectFunction((FunctionIdentifier("shingles"),

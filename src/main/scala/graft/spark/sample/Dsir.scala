@@ -70,11 +70,13 @@ object Dsir {
     // from a second thread so its tasks back-fill the raw scan's tail
     // (guide-§2.6 overlapping of independent jobs; results are plain count
     // aggregates, so concurrency cannot change the model)
-    val ctF = scala.concurrent.Future(fitCounts(target, textCol, buckets))(
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val ctF = Future(fitCounts(target, textCol, buckets))(
       scala.concurrent.ExecutionContext.global)
-    val cr = fitCounts(raw, textCol, buckets)
-    val ct = scala.concurrent.Await.result(
-      ctF, scala.concurrent.duration.Duration.Inf)
+    // a failing raw side must not leave the target's jobs running
+    val cr = try fitCounts(raw, textCol, buckets) finally Await.ready(ctF, Duration.Inf)
+    val ct = Await.result(ctF, Duration.Inf)
     val st = ct.sum.toDouble + alpha * buckets
     val sr = cr.sum.toDouble + alpha * buckets
     Model(buckets, Array.tabulate(buckets) { b =>

@@ -37,6 +37,27 @@ class DsirSpec extends AnyFunSuite {
     assert(bucketsOf("  alpha\t\nbeta   gamma ") == b3)
   }
 
+  test("fit: a failing raw side leaves no target job running") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val target = spark.range(0, 400000, 1, 4)
+        .select(concat(lit("alpha beta "), col("id").cast("string")).as("text"))
+      val raw = Seq("gamma delta").toDF("body") // lacks the text column
+      intercept[org.apache.spark.sql.AnalysisException](Dsir.fit(target, raw, "text", buckets = B))
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      // the target side ran inside fit and has finished
+      assert(started.get > 0, "fit returned before the target job started")
+      assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("fitCounts: exact multiset counts, bounded to the bucket table") {
     import spark.implicits._
     val df = Seq("x x x", "y x").toDF("text")

@@ -102,12 +102,12 @@ class ExtensionsSpec extends AnyFunSuite {
         .selectExpr("concat('u', id % 700) AS k", "CAST(id % 100 AS DOUBLE) AS v")
         .createOrReplaceTempView("t_native_fns")
       val row = spark.sql(
-        """SELECT hll_count_native(k) AS d,
-          |       hll_count_native(k, 12) AS d12,
-          |       cms_native(k, CAST(1 AS BIGINT)) AS cms,
-          |       bloom_native(k, 10000, 0.01) AS blm,
-          |       kll_native(v, 200) AS kll,
-          |       heavy_hitters_native(k, CAST(1 AS BIGINT), 3) AS hh
+        """SELECT hll_count(k) AS d,
+          |       hll_count(k, 12) AS d12,
+          |       cms_agg(k, CAST(1 AS BIGINT)) AS cms,
+          |       bloom_agg(k, 10000, 0.01) AS blm,
+          |       kll_agg(v, 200) AS kll,
+          |       heavy_hitters(k, CAST(1 AS BIGINT), 3) AS hh
           |FROM t_native_fns""".stripMargin).head()
       assert(math.abs(row.getLong(0) - 700L) <= 25)
       assert(math.abs(row.getLong(1) - 700L) <= 40)
@@ -217,9 +217,8 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("rewrite path buffers serialize in the reference HLL byte format") {
-    // the ScalaAggregator the rule builds must carry the SketchEncoders
-    // TransformingEncoder (reference bytes across the shuffle), not kryo:
-    // its buffer serializer output must parse as Hll.fromBytes
+    // the aggregate the rule builds must ship its buffer as the reference
+    // HLL export, not kryo: serialize() output must parse as Hll.fromBytes
     withExtSession { spark =>
       spark.conf.set("spark.graft.hll.rewriteCountDistinct", "true")
       try {
@@ -231,20 +230,14 @@ class ExtensionsSpec extends AnyFunSuite {
           case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
             a.aggregateExpressions
         }.flatten
-        val scalaAggs = aggExprs.flatMap(_.collect {
-          case s: org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _] => s
+        val hllAggs = aggExprs.flatMap(_.collect {
+          case h: graft.spark.aggs.NativeHllAgg => h
         })
-        assert(scalaAggs.nonEmpty, "rewritten ScalaAggregator not found in plan")
-        val agg = scalaAggs.head.asInstanceOf[
-          org.apache.spark.sql.execution.aggregate.ScalaAggregator[String, graft.ext.Hll, Long]]
+        assert(hllAggs.nonEmpty, "rewritten HLL aggregate not found in plan")
+        val agg = hllAggs.head
         val buf = agg.createAggregationBuffer()
         (0 until 100).foreach(i => buf.add(s"x$i"))
-        // serialize() emits the buffer as a 1-column UnsafeRow; the BINARY
-        // field inside must be the reference HLL export, not kryo bytes
-        val rowBytes = agg.serialize(buf)
-        val row = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(1)
-        row.pointTo(rowBytes, rowBytes.length)
-        val payload = row.getBinary(0)
+        val payload = agg.serialize(buf)
         assert(payload.toSeq == buf.toBytes.toSeq)
         val back = graft.ext.Hll.fromBytes(payload) // kryo bytes would fail here
         assert(back.estimate == buf.estimate)

@@ -78,13 +78,37 @@ class PlanShapeSpec extends AnyFunSuite {
   test("pagesSketchBattery: native aggs, partial -> exchange -> final") {
     val df = SparkQueries.pagesSketchBattery(spark, 2000L)
     val plan = formatted(df)
-    Seq("graft_hll_count_native", "graft_bloom_native", "graft_hh_native", "graft_kll_native")
+    Seq("graft_hll_count", "graft_bloom", "graft_hh", "graft_kll")
       .foreach(agg => assert(plan.contains(agg), s"$agg missing:\n$plan"))
     val firstAgg = plan.indexOf("ObjectHashAggregate")
     val exchange = plan.indexOf("Exchange", firstAgg)
     val finalAgg = plan.indexOf("ObjectHashAggregate", exchange)
     assert(firstAgg >= 0 && exchange > firstAgg && finalAgg > exchange,
       s"expected partial-agg -> exchange -> final-agg:\n$plan")
+  }
+
+  test("SQL sketch build runs the native aggregates, no ScalaAggregator") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ScalaAggregator}
+    graft.spark.aggs.SketchUdafs.registerAll(spark)
+    graft.spark.io.PagesGen.pages(spark, 2000L)
+      .select(col("url"), col("lang"),
+        substring_index(substring_index(col("url"), "/", 3), "/", -1).as("domain"),
+        length(col("text")).cast("double").as("len"))
+      .createOrReplaceTempView("plan_shape_pages")
+    val df = spark.sql(
+      """SELECT lang, hll_count(url) AS hll, bloom_agg(url) AS bloom,
+        |       heavy_hitters(domain, 1L) AS hh, kll_agg(len) AS kll, count(1) AS n
+        |FROM plan_shape_pages GROUP BY lang""".stripMargin)
+    df.collect()
+    val fns = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction)
+    }.flatten
+    assert(!fns.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), fns.mkString(", "))
+    val names = fns.map(_.prettyName).toSet
+    Seq("graft_hll_count", "graft_bloom", "graft_hh", "graft_kll")
+      .foreach(n => assert(names.contains(n), s"$n missing: $names"))
   }
 
   test("decontaminate: ONE-pass plan — codegen'd bloom gate, no explode, no join, no cache") {

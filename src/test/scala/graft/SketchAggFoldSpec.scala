@@ -1,0 +1,199 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.{BloomFilter, CountMinSketch}
+import graft.ext.{Hll, Kll}
+import graft.spark.aggs.SketchUdafs
+
+/** Rows and a driver-side fold for checking the sketch aggregates: ASCII
+  * keys take the zero-copy byte fold, non-ASCII keys the codepoint fallback,
+  * and each shape runs at 1 and 8 partitions. */
+trait SketchFoldFixture {
+  lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** Zipf-like heavy keys interleaved with a long unique tail. */
+  protected def keysOf(ascii: Boolean): Seq[String] = (0 until 8000).map { i =>
+    val heavy = math.sqrt(i % 1000 + 1.0).toInt
+    if (ascii) {
+      if (i % 2 == 0) s"https://d$heavy.example.com/" else s"https://u$i.example.com/p/${i % 97}"
+    } else {
+      if (i % 2 == 0) s"ключ-$heavy" else s"键-$i-ü"
+    }
+  }
+
+  /** (key k, value v, count c) rows. */
+  protected def rowsOf(ascii: Boolean): Seq[(String, Double, Long)] =
+    keysOf(ascii).zipWithIndex.map { case (k, i) =>
+      (k, ((i * 2654435761L) % 100000).toDouble, i % 5 + 1L)
+    }
+
+  /** Contiguous slices in input order, so one partition folds the rows in
+    * exactly the driver's order. */
+  protected def df(rows: Seq[(String, Double, Long)], parts: Int): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, parts).toDF("k", "v", "c")
+  }
+
+  protected def bytesOf(d: DataFrame, agg: Column): Array[Byte] =
+    d.agg(agg).head().getAs[Array[Byte]](0)
+
+  protected val cases: Seq[(Boolean, Int)] =
+    for (ascii <- Seq(true, false); parts <- Seq(1, 8)) yield (ascii, parts)
+}
+
+/** The KLL and heavy-hitters aggregates against a driver-side fold into the
+  * `graft.ext` / `graft.core` sketch; plus the SQL names against the
+  * DataFrame methods, and the null rule through both entry points. */
+class SketchAggFoldSpec extends AnyFunSuite with SketchFoldFixture {
+
+  test("kll: bytes == driver fold on one partition; 8 partitions within rank error") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val got = Kll.fromBytes(bytesOf(df(rows, parts), SketchUdafs.kll(200)(col("v"))))
+      val fold = Kll(200)
+      rows.foreach(r => fold.update(r._2))
+      val at = s"ascii=$ascii parts=$parts"
+      if (parts == 1) {
+        // the final aggregate merges the single partial buffer into a fresh one
+        assert(got.toBytes.toSeq == Kll(200).merge(fold).toBytes.toSeq, at)
+      }
+      assert(got.n == rows.size, at)
+      val exact = rows.map(_._2).sorted
+      for (q <- Seq(0.1, 0.5, 0.9)) {
+        val rank = exact.count(_ <= got.quantile(q)).toDouble / exact.size
+        assert(math.abs(rank - q) < 0.03, s"$at q=$q rank=$rank")
+      }
+    }
+  }
+
+  test("heavy hitters: top-k == driver top-k re-estimated from the folded grid") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val grid = CountMinSketch.empty(4096, 5)
+      rows.foreach(r => grid.add(r._1, r._3))
+      val want = rows.map(_._1).distinct.map(k => k -> grid.check(k))
+        .sortBy { case (k, v) => (-v, k) }.take(5).toMap
+      val got = df(rows, parts).agg(SketchUdafs.heavyHitters(5, 4096, 5)(col("k"), col("c")))
+        .head().getMap[String, Long](0)
+      assert(Map(got.toSeq: _*) == want, s"ascii=$ascii parts=$parts")
+    }
+  }
+
+  test("SQL names with default arguments == the SketchUdafs methods") {
+    SketchUdafs.registerAll(spark)
+    val d = df(rowsOf(ascii = false) ++ rowsOf(ascii = true), 1)
+    d.createOrReplaceTempView("fold_spec_rows")
+    val sql = spark.sql(
+      """SELECT bloom_agg(k), cms_agg(k, c), hll_agg(k), hll_count(k), kll_agg(v),
+        |       heavy_hitters(k, c)
+        |FROM fold_spec_rows""".stripMargin).head()
+    val api = d.agg(
+      SketchUdafs.bloom(1000000, 0.01)(col("k")),
+      SketchUdafs.cms(2048, 5)(col("k"), col("c")),
+      SketchUdafs.hll(14)(col("k")),
+      SketchUdafs.hllCount(14)(col("k")),
+      SketchUdafs.kll(200)(col("v")),
+      SketchUdafs.heavyHitters(10, 4096, 5)(col("k"), col("c"))).head()
+    Seq(0, 1, 2, 4).foreach { i =>
+      assert(sql.getAs[Array[Byte]](i).toSeq == api.getAs[Array[Byte]](i).toSeq, s"column $i")
+    }
+    assert(sql.getLong(3) == api.getLong(3))
+    assert(sql.getMap[String, Long](5) == api.getMap[String, Long](5))
+    assert(sql.getMap[String, Long](5).size == 10)
+  }
+
+  test("null key, value or count skips the row: DataFrame and SQL") {
+    import spark.implicits._
+    SketchUdafs.registerAll(spark)
+    val clean = Seq[(Option[String], Option[Double], Option[Long])](
+      (Some("a"), Some(1.0), Some(2L)), (Some("b"), Some(3.0), Some(1L)))
+    val noisy = clean ++ Seq[(Option[String], Option[Double], Option[Long])](
+      (None, None, Some(4L)), (Some("a"), None, None), (Some("c"), None, None))
+    def dfAgg(d: DataFrame): Row = d.agg(
+      SketchUdafs.bloom(1000, 0.01)(col("k")),
+      SketchUdafs.cms(64, 3)(col("k"), col("c")),
+      SketchUdafs.hll(10)(col("k")),
+      SketchUdafs.kll(200)(col("v")),
+      SketchUdafs.heavyHitters(5, 64, 3)(col("k"), col("c"))).head()
+    def sqlAgg(d: DataFrame): Row = {
+      d.createOrReplaceTempView("null_rule_rows")
+      spark.sql(
+        """SELECT bloom_agg(k, 1000, 0.01), cms_agg(k, c, 64, 3), hll_agg(k, 10),
+          |       kll_agg(v, 200), heavy_hitters(k, c, 5, 64, 3)
+          |FROM null_rule_rows""".stripMargin).head()
+    }
+    val keysOnly = clean.map(_._1) ++ Seq(Some("a"), Some("c"))
+    for (agg <- Seq[DataFrame => Row](dfAgg, sqlAgg)) {
+      // one partition each: KLL bytes keep the input order
+      val got = agg(noisy.toDF("k", "v", "c").coalesce(1))
+      val want = agg(clean.toDF("k", "v", "c").coalesce(1))
+      // CMS, KLL and HH see exactly the clean rows
+      Seq(1, 3).foreach(i => assert(got.getAs[Array[Byte]](i).toSeq == want.getAs[Array[Byte]](i).toSeq))
+      assert(got.getMap[String, Long](4) == Map("a" -> 2L, "b" -> 1L))
+      // Bloom and HLL see every non-null key, with or without a value
+      val keys = agg(keysOnly.map(k => (k, Option(0.0), Option(1L))).toDF("k", "v", "c"))
+      Seq(0, 2).foreach(i => assert(got.getAs[Array[Byte]](i).toSeq == keys.getAs[Array[Byte]](i).toSeq))
+      val kll = Kll.fromBytes(got.getAs[Array[Byte]](3))
+      assert(kll.n == 2 && kll.quantile(0.0) == 1.0)
+      val cms = CountMinSketch.fromBytes(got.getAs[Array[Byte]](1))
+      assert(cms.elementsAdded == 3 && cms.check("c") == 0)
+    }
+  }
+}
+
+/* The suites below keep the names they had when each sketch had both a udaf
+ * and a native aggregate. The udaf computed a fold of the core sketch over
+ * the string keys (codepoints for non-ASCII); the one remaining aggregate is
+ * checked against that fold directly, which also makes its bytes partition
+ * invariant. */
+
+/** Bloom: aggregate bytes == driver-side `BloomFilter` fold (OR algebra). */
+class NativeParitySpec extends AnyFunSuite with SketchFoldFixture {
+  test("native Bloom == udaf Bloom bytes; partition invariant (OR algebra)") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val bloom = BloomFilter.empty(20000, 0.01)
+      rows.foreach(r => bloom.add(r._1))
+      val got = bytesOf(df(rows, parts), SketchUdafs.bloom(20000, 0.01)(col("k")))
+      assert(got.toSeq == bloom.toBytes.toSeq, s"ascii=$ascii parts=$parts")
+    }
+  }
+}
+
+/** HLL: aggregate bytes and estimate == driver-side `Hll` fold. */
+class NativeHllSpec extends AnyFunSuite with SketchFoldFixture {
+  private def checkHll(ascii: Boolean): Unit =
+    for (parts <- Seq(1, 8)) {
+      val rows = rowsOf(ascii)
+      val d = df(rows, parts)
+      val hll = Hll(12)
+      rows.foreach(r => hll.add(r._1))
+      val at = s"ascii=$ascii parts=$parts"
+      assert(bytesOf(d, SketchUdafs.hll(12)(col("k"))).toSeq == hll.toBytes.toSeq, at)
+      assert(d.agg(SketchUdafs.hllCount(12)(col("k"))).head().getLong(0) == hll.estimate, at)
+    }
+
+  test("native HLL equals udaf HLL on ascii keys; partition invariant") {
+    checkHll(ascii = true)
+  }
+
+  test("native HLL non-ascii fallback matches codepoint semantics") {
+    checkHll(ascii = false)
+  }
+}
+
+/** CMS: aggregate bytes == driver-side `CountMinSketch` fold. */
+class NativeCmsSpec extends AnyFunSuite with SketchFoldFixture {
+  test("native CMS == udaf CMS bytes on ascii and non-ascii keys") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val cms = CountMinSketch.empty(1024, 5)
+      rows.foreach(r => cms.add(r._1, r._3))
+      val got = bytesOf(df(rows, parts), SketchUdafs.cms(1024, 5)(col("k"), col("c")))
+      assert(got.toSeq == cms.toBytes.toSeq, s"ascii=$ascii parts=$parts")
+    }
+  }
+}

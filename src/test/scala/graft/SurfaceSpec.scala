@@ -127,31 +127,6 @@ class LangIdSpec extends AnyFunSuite {
   }
 }
 
-/** Native TypedImperativeAggregate HLL: identical estimates to the udaf path
-  * (ASCII zero-copy fold == codepoint fold), non-ASCII exact fallback. */
-class NativeHllSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkTestSession.spark
-  import graft.spark.aggs.{NativeHllCountAgg, SketchUdafs}
-
-  test("native HLL equals udaf HLL on ascii keys; partition invariant") {
-    val df8 = spark.range(0, 30000, 1, 8).select(concat(lit("https://d"), col("id") % 7, lit(".x/p/"), col("id")).as("k"))
-    val native = df8.agg(NativeHllCountAgg.hllCountNative(col("k"), 14)).head().getLong(0)
-    val viaUdaf = df8.agg(SketchUdafs.hllCount(14)(col("k"))).head().getLong(0)
-    assert(native == viaUdaf)
-    val df1 = spark.range(0, 30000, 1, 1).select(concat(lit("https://d"), col("id") % 7, lit(".x/p/"), col("id")).as("k"))
-    assert(df1.agg(NativeHllCountAgg.hllCountNative(col("k"), 14)).head().getLong(0) == native)
-  }
-
-  test("native HLL non-ascii fallback matches codepoint semantics") {
-    import spark.implicits._
-    val keys = (0 until 2000).map(i => s"ключ-$i 键$i")
-    val df = spark.createDataset(keys).toDF("k").repartition(4)
-    val native = df.agg(NativeHllCountAgg.hllCountNative(col("k"), 12)).head().getLong(0)
-    val viaUdaf = df.agg(SketchUdafs.hllCount(12)(col("k"))).head().getLong(0)
-    assert(native == viaUdaf)
-  }
-}
-
 /** Codegen'd CMS/CBF probes: values match the core sketches inside codegen. */
 class NativeProbeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -173,27 +148,5 @@ class NativeProbeSpec extends AnyFunSuite {
       assert(r.getLong(2) == cbf.check(r.getString(0)))
       assert(r.getLong(1) == 25L)
     }
-  }
-}
-
-/** Native CMS aggregate: byte-identical output vs udaf path, partition
-  * invariant, non-ASCII fallback exact. */
-class NativeCmsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkTestSession.spark
-  import graft.spark.aggs.{NativeCmsAgg, SketchUdafs}
-
-  test("native CMS == udaf CMS bytes on ascii and non-ascii keys") {
-    val df = spark.range(0, 8000, 1, 8)
-      .select(concat(lit("key-"), col("id") % 60).as("k"), (col("id") % 5 + 1).as("c"))
-    val native = df.agg(NativeCmsAgg.cmsNative(col("k"), col("c"), 1024, 5)).head().getAs[Array[Byte]](0)
-    val viaUdaf = df.agg(SketchUdafs.cms(1024, 5)(col("k"), col("c"))).head().getAs[Array[Byte]](0)
-    assert(native.toSeq == viaUdaf.toSeq)
-
-    import spark.implicits._
-    val uni = (0 until 500).map(i => (s"ключ-${i % 20}", 2L)).toDF("k", "c").repartition(4)
-    val n2 = uni.agg(NativeCmsAgg.cmsNative(col("k"), col("c"), 512, 5)).head().getAs[Array[Byte]](0)
-    val u2 = uni.agg(SketchUdafs.cms(512, 5)(col("k"), col("c"))).head().getAs[Array[Byte]](0)
-    assert(n2.toSeq == u2.toSeq)
-    assert(graft.core.CountMinSketch.fromBytes(n2).check("ключ-3") == 50)
   }
 }
