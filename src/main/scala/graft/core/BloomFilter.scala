@@ -2,7 +2,7 @@ package graft.core
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import graft.hash.{Fnv1aHasher, Hashers, KeyHasher}
+import graft.hash.{Fnv, Fnv1aHasher, Hashers, KeyHasher}
 
 /** Shared Bloom sizing math, replicating the reference byte-for-byte
   * (/root/reference/probables/blooms/bloom.py:463-483):
@@ -82,17 +82,46 @@ final class BloomFilter private (
     elsAdded += 1
   }
 
-  def check(key: String): Boolean = checkHashes(hashes(key))
-  def check(key: Array[Byte]): Boolean = checkHashes(hashes(key))
+  /** Membership probe, equal to `checkHashes(hashes(key))`. The default
+    * fnv-1a hasher's seeds are independent (hashes.py:71-83), so it hashes
+    * one seed at a time and returns at the first clear bit, as Spark's
+    * `BloomFilterImpl.mightContain` does: a non-member of a sparse filter
+    * costs about one fnv pass instead of `numHashes`. The chained md5/sha256
+    * hashers derive each round from the previous one and keep the
+    * all-hashes path. */
+  def check(key: String): Boolean =
+    if (hasher eq Fnv1aHasher) {
+      var i = 0
+      while (i < numHashes) {
+        if (!bitSet(Fnv.fnv1a64(key, i))) return false
+        i += 1
+      }
+      true
+    } else checkHashes(hashes(key))
+
+  def check(key: Array[Byte]): Boolean =
+    if (hasher eq Fnv1aHasher) {
+      var i = 0
+      while (i < numHashes) {
+        if (!bitSet(Fnv.fnv1a64(key, i))) return false
+        i += 1
+      }
+      true
+    } else checkHashes(hashes(key))
 
   def checkHashes(hs: Array[Long]): Boolean = {
     var i = 0
     while (i < numHashes) {
-      val k = java.lang.Long.remainderUnsigned(hs(i), numBits)
-      if ((bloom((k >>> 3).toInt) & (1 << (k & 7L).toInt)) == 0) return false
+      if (!bitSet(hs(i))) return false
       i += 1
     }
     true
+  }
+
+  /** Whether the bit one hash value maps to is set. */
+  def bitSet(h: Long): Boolean = {
+    val k = java.lang.Long.remainderUnsigned(h, numBits)
+    (bloom((k >>> 3).toInt) & (1 << (k & 7L).toInt)) != 0
   }
 
   def clear(): Unit = {

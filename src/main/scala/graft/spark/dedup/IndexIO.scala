@@ -152,9 +152,14 @@ private[graft] object IndexIO {
     // ~0 files per bucket here and permanently mute the compaction
     // advisory — fail loudly on any data subdirectory instead. (A low
     // root-file count alone is legitimate: the bucketed writer skips empty
-    // buckets, so a sparse index holds fewer files than buckets.)
-    val dataDirs = entries.filter(st =>
-      st.isDirectory && !st.getPath.getName.startsWith("_"))
+    // buckets, so a sparse index holds fewer files than buckets.) Names
+    // starting with `_` or `.` are not data, as for Hadoop's hidden-path
+    // filter: `_temporary`, or a `.spark-staging-*` dir an in-flight or
+    // killed overwrite leaves behind.
+    val dataDirs = entries.filter { st =>
+      val name = st.getPath.getName
+      st.isDirectory && !name.startsWith("_") && !name.startsWith(".")
+    }
     require(dataDirs.isEmpty,
       s"graft index '$table' holds data subdirectories " +
         s"(${dataDirs.take(3).map(_.getPath.getName).mkString(", ")} ...) — " +

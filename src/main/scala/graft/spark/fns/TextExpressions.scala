@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.hash.Fnv
+import graft.hash.{Fnv, Fnv1aHasher}
 
 /** Codegen'd kernels for the dedup hot paths (round-1 verdict #8: the
   * minhash/simhash signature UDFs were the slowest bench stage). Each
@@ -308,19 +308,50 @@ object TextKernels extends Serializable {
   }
 
   /** Fused shingle -> Bloom probe: true iff ANY n-token shingle of the text
-    * hits the filter. Early-exits on the first hit and materializes no
+    * hits the filter (fewer than n tokens: the single joined-token shingle,
+    * as [[shingles]]). Early-exits on the first hit and materializes no
     * shingle array — the full-corpus decontamination prune stays inside
-    * whole-stage codegen. */
+    * whole-stage codegen. With the default fnv-1a hasher each window is
+    * first tested on its seed-0 bit, folded straight off the lowercased
+    * text ([[shingleFnv]]); only a window whose seed-0 bit is set builds its
+    * shingle string for the full [[graft.core.BloomFilter.check]]. In a
+    * sparse filter that first bit decides almost every window, so the hot
+    * path builds no string. */
   def shingleAnyInBloom(s: UTF8String, n: Int, filter: graft.core.BloomFilter): Boolean = {
     val text = s.toString.toLowerCase(java.util.Locale.ROOT)
     val (bounds, ntoks) = wsBounds(text)
-    if (ntoks < n) return filter.check(shingleStr(text, bounds, 0, ntoks))
+    val m = math.min(n, ntoks)
+    val fnvHasher = filter.hasher eq Fnv1aHasher
     var w = 0
-    while (w + n <= ntoks) {
-      if (filter.check(shingleStr(text, bounds, w, w + n))) return true
+    while (w + m <= ntoks) {
+      if ((!fnvHasher || filter.bitSet(shingleFnv(text, bounds, w, w + m))) &&
+          filter.check(shingleStr(text, bounds, w, w + m))) return true
       w += 1
     }
     false
+  }
+
+  /** `Fnv.fnv1a64(shingleStr(text, bounds, from, until), 0)` without the
+    * string: tokens joined by ' ', folded per code point. Tokens end at
+    * whitespace, so no surrogate pair straddles a token edge and
+    * `codePointAt` over `text` pairs exactly as it would over the joined
+    * shingle. */
+  private def shingleFnv(text: String, bounds: Array[Int], from: Int, until: Int): Long = {
+    var h = Fnv.Offset64
+    var t = from
+    while (t < until) {
+      if (t > from) { h ^= ' '.toInt; h *= Fnv.Prime64 }
+      var i = bounds(2 * t)
+      val e = bounds(2 * t + 1)
+      while (i < e) {
+        val cp = text.codePointAt(i)
+        h ^= cp
+        h *= Fnv.Prime64
+        i += Character.charCount(cp)
+      }
+      t += 1
+    }
+    h
   }
 
   /** Fused span-removal kernel: recompute the doc's n-token window hashes

@@ -15,12 +15,12 @@ import graft.spark.text.TextFunctions
   *   per-domain cap -> per-lang token budget -> sharded output
   *
   * Two surfaces:
-  *   - [[curate]]: the whole pipeline as one composed DataFrame (stages 1-3
-  *     stay declarative; the narrow stage-4 survivor relation is pinned via
-  *     localCheckpoint so the multi-consumer budget stage cannot re-execute
-  *     the upstream pipeline — round 7). The q_pipeline driver query checks
-  *     it end-to-end against a DuckDB oracle that re-derives every stage in
-  *     SQL.
+  *   - [[curate]]: the whole pipeline as one composed DataFrame (the narrow
+  *     stage-3 and stage-4 survivor relations are pinned via
+  *     localCheckpoint so the multi-consumer cap and budget stages cannot
+  *     re-execute the upstream pipeline — round 7). The q_pipeline driver
+  *     query checks it end-to-end against a DuckDB oracle that re-derives
+  *     every stage in SQL.
   *   - [[CuratePipeline]]: a spark-submit main that materializes each stage
   *     to parquet with per-stage lineage metrics and stage-level resume
   *     (a killed run re-executes only the stages whose outputs are missing).
@@ -60,12 +60,13 @@ object DataPipeline {
     * near-dup cluster): MinHash-LSH pairs at the given Jaccard threshold →
     * connected components → drop every doc whose cluster representative is
     * not itself (one anti-join keyed by doc_id). None = off (the default,
-    * and the q_pipeline oracle shape). NOTE: unlike every other stage, this
-    * one is EAGER — connected components is an iterative fixpoint (per-round
-    * checkpoints), so enabling it materializes the upstream stages at
-    * curate() call time; the upstream frame is persisted for the stage's
-    * repeated scans and unpersisted before returning (downstream recomputes
-    * its lineage once per action). */
+    * and the q_pipeline oracle shape). Connected components is an iterative
+    * fixpoint (per-round checkpoints), so this stage runs its jobs at
+    * curate() call time, like the stage-3 and stage-4 checkpoints. The
+    * stage-1..2 frame is persisted once and read by the LSH stage, CC and
+    * the stage-3 losers anti-join; it is unpersisted once the stage-3
+    * survivors are checkpointed, or when any of these throws. The quality
+    * gate and the digest-dedup window therefore run once per call. */
   def curate(docs: DataFrame, benchDocs: DataFrame,
              domainCap: Int = 5, tokenBudget: Long = 2000L,
              tokenCounter: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
@@ -97,38 +98,35 @@ object DataPipeline {
     // 2b. optional fuzzy dedup: keep one doc per near-dup cluster (the
     // cluster representative is the min doc_id — connectedComponents'
     // deterministic labeling); exact dedup already ran, so identical-content
-    // groups never reach the LSH stage (the documented ordering)
-    val fuzzy = nearDupThreshold match {
-      case None => deduped
-      case Some(th) =>
-        // pin the upstream frame: the LSH stage scans it for banding and
-        // joins it twice for the exact-Jaccard verify, and CC's iterative
-        // rounds run EAGERLY here — without the persist the quality gate +
-        // digest-dedup window would re-execute 4+ times
-        val pinned = deduped.persist()
-        val losers =
-          try graft.spark.dedup.Dedup.connectedComponents(
-              graft.spark.dedup.Dedup.minhashLshPairs(
-                pinned, "doc_id", "text", threshold = th))
-            .filter(col("doc_id") =!= col("rep"))
-            .select(col("doc_id"))
-            .localCheckpoint(true) // CC labels are checkpointed; pin the
-                                   // filtered losers so nothing below needs
-                                   // the pinned frame's cache
-          finally pinned.unpersist(blocking = false)
-        deduped.join(losers, Seq("doc_id"), "left_anti")
-    }
-    // 3. benchmark decontamination (drop any doc sharing an 8-token
-    // shingle — long n-grams so incidental vocabulary overlap does not
-    // count as contamination, GPT-3 App. C style). The NARROW survivor
-    // relation (text is projected away here) is pinned once (round 7): the
-    // domain-cap stage consumes it twice (decisions aggregate + join
-    // probe — see the groupCapFlags note), and un-pinned each consumption
-    // re-executed the whole stage-1..3 pipeline.
-    val clean = Corpus.decontaminate(fuzzy, benchDocs, "doc_id", "text", n = 8,
-        passthrough = Seq("lang", "source", "digest", "toks"))
-      .filter(!col("contaminated")).drop("contaminated")
-      .localCheckpoint(true)
+    // groups never reach the LSH stage (the documented ordering). The
+    // upstream frame is pinned: the LSH stage scans it for banding and joins
+    // it twice for the exact-Jaccard verify, CC's iterative rounds run
+    // EAGERLY here, and the stage-3 checkpoint below reads it once more for
+    // the losers anti-join — without the pin each of these reads would
+    // re-execute the quality gate and the digest-dedup window. It stays
+    // pinned until stage 3 is checkpointed and is released on every path.
+    val pinned = if (nearDupThreshold.isDefined) deduped.persist() else deduped
+    val clean = try {
+      val fuzzy = nearDupThreshold.fold(pinned) { th =>
+        val losers = graft.spark.dedup.Dedup.connectedComponents(
+            graft.spark.dedup.Dedup.minhashLshPairs(pinned, "doc_id", "text", threshold = th))
+          .filter(col("doc_id") =!= col("rep"))
+          .select(col("doc_id")) // CC's labels are already checkpointed
+                                 // (or driver-local): no pin of their own
+        pinned.join(losers, Seq("doc_id"), "left_anti")
+      }
+      // 3. benchmark decontamination (drop any doc sharing an 8-token
+      // shingle — long n-grams so incidental vocabulary overlap does not
+      // count as contamination, GPT-3 App. C style). The NARROW survivor
+      // relation (text is projected away here) is pinned once (round 7):
+      // the domain-cap stage consumes it twice (decisions aggregate + join
+      // probe — see the groupCapFlags note), and un-pinned each consumption
+      // re-executed the whole stage-1..3 pipeline.
+      Corpus.decontaminate(fuzzy, benchDocs, "doc_id", "text", n = 8,
+          passthrough = Seq("lang", "source", "digest", "toks"))
+        .filter(!col("contaminated")).drop("contaminated")
+        .localCheckpoint(true)
+    } finally if (nearDupThreshold.isDefined) pinned.unpersist(blocking = false)
     // 4. per-domain cap, priority = content digest
     val capped = Sampling.groupCapFlags(clean, Seq("lang", "source"),
         col("digest"), col("doc_id"), domainCap)

@@ -194,4 +194,22 @@ class BandIndexSpec extends AnyFunSuite {
       BandIndex.drop(spark, "graft_bidx_t4c")
     }
   }
+
+  test("filesPerBucket: a hidden dir is not data; a real data subdirectory still fails") {
+    import graft.spark.dedup.IndexIO
+    BandIndex.create(docs, "doc_id", "text", "graft_bidx_t5", BandIndex.Conf(numBuckets = 4))
+    try {
+      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("graft_bidx_t5")).location)
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fresh = IndexIO.filesPerBucket(spark, "graft_bidx_t5", 4)
+      // what an in-flight or killed overwrite leaves in the table dir
+      assert(fs.mkdirs(new org.apache.hadoop.fs.Path(loc, ".spark-staging-0f1e")))
+      assert(IndexIO.filesPerBucket(spark, "graft_bidx_t5", 4) == fresh)
+      assert(fs.mkdirs(new org.apache.hadoop.fs.Path(loc, "lang=en")))
+      val e = intercept[IllegalArgumentException](IndexIO.filesPerBucket(spark, "graft_bidx_t5", 4))
+      assert(e.getMessage.contains("lang=en") && !e.getMessage.contains(".spark-staging"),
+        e.getMessage)
+    } finally BandIndex.drop(spark, "graft_bidx_t5")
+  }
 }

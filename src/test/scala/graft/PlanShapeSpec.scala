@@ -126,6 +126,61 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("CASE WHEN"), plan) // candidates-only exact probe
   }
 
+  test("q_pipeline action plan has zero parquet scans") {
+    // curate() checkpoints its stage-3 and stage-4 survivors, so the
+    // returned plan reads those RDDs, never `documents`
+    val plan = formatted(SparkQueries.pipelineStats(spark, dir))
+    assert(!plan.contains("Scan parquet"), s"action plan must not rescan documents:\n$plan")
+    assert(plan.contains("Scan ExistingRDD"), plan)
+  }
+
+  test("curate with fuzzy dedup: the digest window runs once; stage 3 reads the pinned frame") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val helper = new AdaptiveSparkPlanHelper {}
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName -> qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("lang"), col("source"), col("text"))
+    val bench = docs.filter(col("doc_id") % 17 === 0).select(col("text"))
+    spark.listenerManager.register(listener)
+    try graft.spark.pipeline.DataPipeline.curate(docs, bench, nearDupThreshold = Some(0.8))
+    finally {
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val plans = actions.asScala.toSeq
+    def digestWindows(p: SparkPlan): Seq[WindowExec] = helper.collectWithSubqueries(p) {
+      case w: WindowExec if w.partitionSpec.collect { case a: Attribute => a.name } == Seq("digest") => w
+    }
+    def cached(p: SparkPlan): Seq[InMemoryTableScanExec] = helper.collectWithSubqueries(p) {
+      case s: InMemoryTableScanExec => s
+    }
+    val outside = plans.flatMap { case (_, p) => digestWindows(p) }
+    assert(outside.isEmpty, s"digest window re-run outside the pinned frame:\n${outside.mkString("\n")}")
+    val pinnedFrames = plans.flatMap { case (_, p) => cached(p) }
+      .map(_.relation.cacheBuilder).distinct
+      .filter(b => digestWindows(b.cachedPlan).nonEmpty)
+    assert(pinnedFrames.length == 1, s"${pinnedFrames.length} cached frames hold the digest window")
+    val stage3 = plans.collect {
+      case ("localCheckpoint", p) if p.toString.contains("bloom_shingle_hit(") => p
+    }
+    assert(stage3.length == 1, plans.map(_._1).mkString(", "))
+    assert(cached(stage3.head).nonEmpty, s"stage 3 must read the pinned frame:\n${stage3.head}")
+    assert(helper.collectWithSubqueries(stage3.head) { case w: WindowExec => w }.isEmpty,
+      s"stage 3 must run no window:\n${stage3.head}")
+  }
+
   test("lineDedup: count shuffle runs at build time; returned plan is one scan + agg") {
     // round-4 guarded broadcast path: the heavy set is counted/collected
     // EAGERLY when the operator is built (its shuffle never re-runs per
