@@ -50,8 +50,9 @@ object BloomMath {
   * hex export uses a big-endian footer, bloom.py:274-285).
   *
   * This is the engine-internal state block; Spark exposure is via
-  * [[graft.spark.aggs.NativeBloomAgg]] (mergeable aggregation) and the probe/set-op
-  * functions in [[graft.spark.fns.SketchFunctions]].
+  * [[graft.spark.aggs.NativeBloomAgg]] (mergeable aggregation), the codegen'd
+  * probe [[graft.spark.fns.BloomMightContainExpr]] and the set-op functions
+  * in [[graft.spark.fns.SketchFunctions]].
   */
 final class BloomFilter private (
     val estElements: Long,

@@ -626,38 +626,12 @@ object SparkQueries {
         element_at(col("qs"), 2).as("p95"),
         element_at(col("qs"), 3).as("p99"))
 
-  /** Counting-bloom point counts: estimated event count per user bucket
-    * (always >= true count; bound asserted in tests). */
-  def cbfCounts(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events")
-      .select(concat(lit("u"), (col("user_id") % 500).cast("string")).as("bucket"))
-    val bytes = ev.agg(SketchUdafs.cbf(2000, 0.01)(col("bucket"), lit(1L)).as("b"))
-      .head().getAs[Array[Byte]]("b")
-    val probeFn = SketchFunctions.cbfCount(bytes)
-    ev.groupBy(col("bucket")).agg(count(lit(1)).as("true_count"))
-      .withColumn("cbf_count", probeFn(col("bucket")))
-      .select(col("bucket"), col("true_count"), col("cbf_count"))
-  }
-
   /** Stream-threshold: users with >= threshold events (sketch-tracked). */
   def streamThreshold(spark: SparkSession, dir: String): DataFrame =
     tbl(spark, dir, "events")
       .select(col("user_id").cast("string").as("user"))
       .agg(SketchUdafs.streamThreshold(30, 4096, 5)(col("user"), lit(1L)).as("st"))
       .select(explode(col("st")).as(Seq("user", "est_events")))
-
-  /** Expanding-bloom build stats per lang (size/expansion telemetry). */
-  def ebfStats(spark: SparkSession, dir: String): DataFrame = {
-    val ebfBytes = tbl(spark, dir, "documents")
-      .groupBy(col("lang"))
-      .agg(SketchUdafs.ebf(64, 0.01)(col("doc_id").cast("string")).as("e"))
-    val expansions = udf((b: Array[Byte]) =>
-      graft.core.ExpandingBloomFilter.fromBytes(b).expansions)
-    val added = udf((b: Array[Byte]) =>
-      graft.core.ExpandingBloomFilter.fromBytes(b).elementsAdded)
-    ebfBytes.select(col("lang"), expansions(col("e")).as("expansions"),
-      added(col("e")).as("els_added"), length(col("e")).as("export_bytes"))
-  }
 
   /** MinHash-LSH near-duplicate pairs over documents (exact-Jaccard verified).
     * The oracle demands the EXACT jaccard>=0.5 pair set, so the oracle-facing
@@ -796,47 +770,6 @@ object SparkQueries {
     graft.spark.dedup.SemDedup.semDedup(tbl(spark, dir, "embeddings"),
       nClusters = 8, threshold = 0.4)
 
-  /** Explicit two-level salted aggregation (north-rule skew handling): HLL +
-    * Bloom per event_type built via groupBy(key, salt) then sketch-merge —
-    * result proven byte-equal to the direct aggregate in SaltedAggSpec. */
-  def saltedDistinctUsers(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events")
-      .select(col("event_type"), col("user_id").cast("string").as("user"))
-    graft.spark.aggs.SaltedAgg.hllBloomTwoLevel(ev, col("event_type"), col("user"),
-        saltBuckets = 16, hllP = 12, bloomEst = 100000, bloomFpr = 0.01)
-      .select(col("k").as("event_type"),
-        SketchFunctions.hllEstimate(col("hll")).as("distinct_users_hll"),
-        SketchFunctions.bfEstimate(col("bloom")).as("distinct_users_bloom"))
-  }
-
-  /** Counting-cuckoo point counts over event-type buckets: sketch count must
-    * equal the exact count when no fingerprint collision occurs (checked
-    * rows-only here; collision-free at this cardinality). */
-  def ccfCounts(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events")
-      .select(concat(col("event_type"), lit("#"), (col("user_id") % 100).cast("string")).as("bucket"))
-    val bytes = ev.agg(SketchUdafs.countingCuckoo(20000, 4, 32)(col("bucket")).as("b"))
-      .head().getAs[Array[Byte]]("b")
-    val probe = {
-      lazy val ccf = graft.core.CountingCuckooFilter.fromBytes(bytes, fingerprintBits = 32)
-      udf((k: String) => ccf.check(k))
-    }
-    ev.groupBy(col("bucket")).agg(count(lit(1)).as("true_count"))
-      .withColumn("ccf_count", probe(col("bucket")))
-  }
-
-  /** Multimodal plumbing over the pages' html binary column: stub decode +
-    * deterministic feature extraction + frame-sampling row shape. */
-  def multimodalFeatures(spark: SparkSession, nPages: Long): DataFrame = {
-    import graft.spark.multimodal.Multimodal
-    val pages = graft.spark.io.PagesGen.pages(spark, nPages)
-      .withColumn("doc_id", xxhash64(col("url")))
-    Multimodal.enrichImages(pages, "html", dim = 16)
-      .select(col("doc_id"), col("image_meta.width").as("width"),
-        col("image_meta.height").as("height"),
-        element_at(col("features"), 1).as("f0"))
-  }
-
   /** Brute-force cosine top-5 for the first 10 vectors as queries. */
   def annBruteForce(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
@@ -931,25 +864,6 @@ object SparkQueries {
       .groupBy(col("query_id"))
       .agg((sum(when(col("av").isNotNull, 1).otherwise(0)) / count(lit(1))).as("recall_at_5"))
   }
-
-  /** Heuristic language ID: (label, prediction) distribution. NOTE the
-    * fixture documents carry English-like synthetic text under every label,
-    * so the honest output is the confusion distribution, not an accuracy
-    * claim — the heuristic itself is deterministic and unit-tested on real
-    * script/stopword inputs. */
-  def langIdAccuracy(spark: SparkSession, dir: String): DataFrame =
-    tbl(spark, dir, "documents")
-      .select(col("lang"), TextFunctions.langId(col("text")).as("predicted"))
-      .groupBy(col("lang"), col("predicted"))
-      .agg(count(lit(1)).as("n_docs"))
-
-  /** Rolling-hash fingerprints (fnv mode) + per-lang distinct fingerprints. */
-  def fingerprintRolling(spark: SparkSession, dir: String): DataFrame =
-    tbl(spark, dir, "documents")
-      .select(col("lang"),
-        TextFunctions.fingerprint64(col("text"), lit(8)).as("fp"))
-      .groupBy(col("lang"))
-      .agg(countDistinct(col("fp")).as("n_distinct_fp"), count(lit(1)).as("n_docs"))
 
   /** Flagship: one pass over a deterministic synthetic pages table building
     * the full sketch battery per lang — the north-star query shape

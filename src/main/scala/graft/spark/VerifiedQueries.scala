@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CmsQueryType
 import graft.spark.aggs._
 import graft.spark.ann.Ann
 import graft.spark.dedup.Dedup
@@ -185,15 +186,14 @@ object VerifiedQueries {
     val bytes = ev.agg(SketchUdafs.cms(width, 5)(col("event_type"), lit(1L)).as("b"))
       .head().getAs[Array[Byte]]("b")
     val n = graft.core.CountMinSketch.fromBytes(bytes).elementsAdded
-    val minP = SketchFunctions.cmsCount(bytes)
-    val meanP = SketchFunctions.cmsCountMean(bytes)
-    val mmP = SketchFunctions.cmsCountMeanMin(bytes)
+    def est(mode: CmsQueryType): Column =
+      SketchExpressions.cmsCountNative(bytes, col("event_type"), mode)
     val bound = n / (width - 1) + 1 // floor(N/(w-1)) + 1, the mean-min correction
     ev.groupBy(col("event_type")).agg(count(lit(1)).as("true_count"))
       .select(col("event_type"), col("true_count"),
-        (minP(col("event_type")) >= col("true_count")).as("min_ge_ok"),
-        (meanP(col("event_type")) >= col("true_count")).as("mean_ge_ok"),
-        (abs(mmP(col("event_type")) - col("true_count")) <= bound).as("meanmin_close_ok"))
+        (est(CmsQueryType.Min) >= col("true_count")).as("min_ge_ok"),
+        (est(CmsQueryType.Mean) >= col("true_count")).as("mean_ge_ok"),
+        (abs(est(CmsQueryType.MeanMin) - col("true_count")) <= bound).as("meanmin_close_ok"))
   }
 
   /** CMS point counts per event type (codegen'd native probe): estimate is

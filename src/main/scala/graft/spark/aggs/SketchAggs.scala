@@ -73,15 +73,17 @@ object SketchEncoders {
 
 import SketchEncoders._
 
-/** Weighted counting bloom: IN = (key, count). */
+/** Weighted counting bloom: IN = (key, count); a row with a null key or
+  * count is skipped. */
 final class CbfAgg(estElements: Long, fpr: Double)
-    extends Aggregator[(String, Long), CountingBloomFilter, Array[Byte]] {
+    extends Aggregator[(String, java.lang.Long), CountingBloomFilter, Array[Byte]] {
   def zero: CountingBloomFilter = CountingBloomFilter.empty(estElements, fpr, Fnv1aHasher)
-  def reduce(b: CountingBloomFilter, in: (String, Long)): CountingBloomFilter = {
+  def reduce(b: CountingBloomFilter, in: (String, java.lang.Long)): CountingBloomFilter = {
     // negative counts are removals (the reference's remove(), with its own
     // clamping rules) — not negative adds
-    if (in._1 != null) {
-      if (in._2 >= 0) b.add(in._1, in._2) else b.remove(in._1, -in._2)
+    if (in._1 != null && in._2 != null) {
+      val n: Long = in._2
+      if (n >= 0) b.add(in._1, n) else b.remove(in._1, -n)
     }
     b
   }
@@ -91,11 +93,12 @@ final class CbfAgg(estElements: Long, fpr: Double)
   def outputEncoder: Encoder[Array[Byte]] = binaryEnc
 }
 
+/** IN = (key, count); a row with a null key or count is skipped. */
 final class StreamThresholdAgg(threshold: Long, width: Int, depth: Int)
-    extends Aggregator[(String, Long), StreamThreshold, Map[String, Long]] {
+    extends Aggregator[(String, java.lang.Long), StreamThreshold, Map[String, Long]] {
   def zero: StreamThreshold = StreamThreshold.empty(threshold, width, depth, Fnv1aHasher)
-  def reduce(b: StreamThreshold, in: (String, Long)): StreamThreshold = {
-    if (in._1 != null) b.add(in._1, in._2); b
+  def reduce(b: StreamThreshold, in: (String, java.lang.Long)): StreamThreshold = {
+    if (in._1 != null && in._2 != null) b.add(in._1, in._2); b
   }
   def merge(a: StreamThreshold, b: StreamThreshold): StreamThreshold = a.merge(b)
   def finish(b: StreamThreshold): Map[String, Long] = b.meetsThreshold
@@ -158,9 +161,11 @@ final class EbfAgg(estElements: Long, fpr: Double)
   def outputEncoder: Encoder[Array[Byte]] = binaryEnc
 }
 
-final class TDigestAgg(compression: Double) extends Aggregator[Double, TDigest, Array[Byte]] {
+/** A null value is skipped. */
+final class TDigestAgg(compression: Double)
+    extends Aggregator[java.lang.Double, TDigest, Array[Byte]] {
   def zero: TDigest = TDigest(compression)
-  def reduce(b: TDigest, v: Double): TDigest = { b.update(v); b }
+  def reduce(b: TDigest, v: java.lang.Double): TDigest = { if (v != null) b.update(v); b }
   def merge(a: TDigest, b: TDigest): TDigest = a.merge(b)
   def finish(b: TDigest): Array[Byte] = b.toBytes
   def bufferEncoder: Encoder[TDigest] = tdEnc

@@ -16,13 +16,14 @@ import org.apache.spark.sql.functions.udaf
   * per-partition buffer and serializes it in the sketch's reference byte
   * format at the shuffle. They skip a row whose key, value or count is null,
   * as SQL aggregates do. The other sketches are typed Aggregators
-  * ([[SketchAggs]]) lowered through `functions.udaf`; multi-column inputs
+  * ([[SketchAggs]]) lowered through `functions.udaf` over boxed input
+  * encoders, and skip null rows by the same rule; multi-column inputs
   * ((key, count)) map to the flattened tuple encoder, so
   * `cbf(...)($"key", $"cnt")` works directly.
   */
 object SketchUdafs {
-  private val keyCountEnc: Encoder[(String, Long)] =
-    Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
+  private val keyCountEnc: Encoder[(String, java.lang.Long)] =
+    Encoders.tuple(Encoders.STRING, Encoders.LONG)
 
   private def native(agg: TypedImperativeAggregate[_]): Column =
     GraftColumnBridge.column(agg.toAggregateExpression())
@@ -67,7 +68,7 @@ object SketchUdafs {
     native(NativeKllAgg(expr(value), k))
 
   def tdigest(compression: Double): UserDefinedFunction =
-    udaf(new TDigestAgg(compression), Encoders.scalaDouble)
+    udaf(new TDigestAgg(compression), Encoders.DOUBLE)
 
   /** SQL builders of the native aggregates, one `(name, usage, builder)`
     * row each. `registerAll` and [[graft.spark.plans.GraftExtensions]] both

@@ -3,10 +3,8 @@ package graft.spark.dedup
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.hash.Fnv
-import graft.spark.fns.{TextExpressions, TextKernels}
+import graft.spark.fns.TextExpressions
 
 /** Deduplication operators for web-scale corpora.
   *
@@ -30,45 +28,6 @@ object Dedup extends Serializable {
     * [[EmbedIndex]]) — one constant so the index-vs-operator
     * restricted-equality contract can't drift on a retuned seed. */
   val EmbedHyperplaneSeed = 2000L
-
-  /** MinHash signature of a shingle set (one-hash permutation family,
-    * Broder 1997 / universal hashing). UDF surface kept for API parity
-    * (takes pre-built shingles); same hash + finalizer family as the fused
-    * kernel — ASCII/BMP parity pinned in TextKernelsSpec. */
-  val minhashSignature: UserDefinedFunction = udf((shingles: Seq[String], numHashes: Int) => {
-    val sig = Array.fill(numHashes)(-1L) // unsigned max
-    shingles.foreach { s =>
-      val base = Fnv.fnv1a64(s, 0)
-      var i = 0
-      while (i < numHashes) {
-        var z = base + (i + 1) * 0x9e3779b97f4a7c15L
-        z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-        z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-        z = z ^ (z >>> 31)
-        if (java.lang.Long.compareUnsigned(z, sig(i)) < 0) sig(i) = z
-        i += 1
-      }
-    }
-    sig
-  })
-
-  /** 64-bit SimHash over whitespace tokens (Charikar 2002) — delegates to
-    * the codegen'd kernel (so the UDF and native paths agree by
-    * construction). */
-  val simhash64: UserDefinedFunction =
-    udf((text: String) => TextKernels.simhash64(UTF8String.fromString(text)))
-
-  val hamming64: UserDefinedFunction =
-    udf((a: Long, b: Long) => java.lang.Long.bitCount(a ^ b))
-
-  /** Exact Jaccard between two shingle arrays (verification stage). */
-  val jaccard: UserDefinedFunction = udf((a: Seq[String], b: Seq[String]) => {
-    if (a.isEmpty && b.isEmpty) 1.0
-    else {
-      val sa = a.toSet; val sb = b.toSet
-      sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble
-    }
-  })
 
   /** Exact word-shingle Jaccard of two raw texts (the candidate-verify UDF;
     * tokenization mirrors the kernel: lowercase + \s+ split). */

@@ -1,125 +1,76 @@
 package graft.spark.fns
 
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
 import graft.core._
 import graft.ext._
 
-/** Probe-side and sketch-algebra functions.
+/** Sketch-column algebra and hash functions.
   *
-  * Probe functions take the **deserialized** sketch at construction time:
-  * the driver deserializes once, the object ships inside the task binary and
-  * is deserialized once per executor, and every row probe is then a pure
-  * in-memory lookup (map-side only, no shuffle) — the Spark-native analogue
-  * of the reference's `check(key)` path over an in-process structure
-  * (SURVEY.md §3.2).
-  *
-  * Sketch-algebra functions (`bfUnion` etc.) operate on serialized sketch
+  * The algebra functions (`bfUnion` etc.) operate on serialized sketch
   * columns — the Spark analogue of the reference's union/intersection/
   * jaccard/join driver-side API (bloom.py:371-460, countminsketch.py:356-399).
+  * A null sketch gives null, as a SQL function does. Per-key probes of a
+  * fixed sketch are the codegen'd expressions in [[SketchExpressions]].
   */
 object SketchFunctions extends Serializable {
 
-  // ---- probes over a broadcast-style fixed sketch ----
+  /** A function of one sketch column; null when the sketch is null. */
+  private def ofSketch[R: TypeTag](f: Array[Byte] => R): UserDefinedFunction =
+    udf((b: Array[Byte]) => Option(b).map(f))
 
-  def bloomContains(bytes: Array[Byte]): UserDefinedFunction = {
-    lazy val blm = BloomFilter.fromBytes(bytes)
-    udf((key: String) => key != null && blm.check(key))
-  }
-
-  def cbfCount(bytes: Array[Byte]): UserDefinedFunction = {
-    lazy val cbf = CountingBloomFilter.fromBytes(bytes)
-    udf((key: String) => if (key == null) 0L else cbf.check(key))
-  }
-
-  def cmsCount(bytes: Array[Byte]): UserDefinedFunction = {
-    lazy val cms = CountMinSketch.fromBytes(bytes)
-    udf((key: String) => if (key == null) 0L else cms.check(key))
-  }
-
-  def cmsCountMean(bytes: Array[Byte]): UserDefinedFunction = {
-    lazy val cms = CountMinSketch.fromBytes(bytes, CmsQueryType.Mean)
-    udf((key: String) => if (key == null) 0L else cms.check(key))
-  }
-
-  def cmsCountMeanMin(bytes: Array[Byte]): UserDefinedFunction = {
-    lazy val cms = CountMinSketch.fromBytes(bytes, CmsQueryType.MeanMin)
-    udf((key: String) => if (key == null) 0L else cms.check(key))
-  }
-
-  def cuckooContains(bytes: Array[Byte], fingerprintBits: Int): UserDefinedFunction = {
-    lazy val cf = CuckooFilter.fromBytes(bytes, fingerprintBits = fingerprintBits)
-    udf((key: String) => key != null && cf.check(key))
-  }
-
-  def qfContains(bytes: Array[Byte]): UserDefinedFunction = {
-    lazy val qf = QuotientFilter.fromBytes(bytes)
-    udf((key: String) => key != null && qf.check(key))
-  }
-
-  def ebfContains(bytes: Array[Byte]): UserDefinedFunction = {
-    lazy val ebf = ExpandingBloomFilter.fromBytes(bytes)
-    udf((key: String) => key != null && ebf.check(key))
-  }
+  /** A function of two sketch columns; null when either is null. */
+  private def ofSketches[R: TypeTag](f: (Array[Byte], Array[Byte]) => R): UserDefinedFunction =
+    udf((a: Array[Byte], b: Array[Byte]) => if (a == null || b == null) None else Some(f(a, b)))
 
   // ---- sketch-column algebra (binary -> value / binary) ----
 
-  val bfEstimate: UserDefinedFunction =
-    udf((b: Array[Byte]) => BloomFilter.fromBytes(b).estimateElements)
+  val bfEstimate: UserDefinedFunction = ofSketch(BloomFilter.fromBytes(_).estimateElements)
 
   val bfCurrentFpr: UserDefinedFunction =
-    udf((b: Array[Byte]) => BloomFilter.fromBytes(b).currentFalsePositiveRate)
+    ofSketch(BloomFilter.fromBytes(_).currentFalsePositiveRate)
 
   val bfUnion: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      BloomFilter.fromBytes(a).union(BloomFilter.fromBytes(b)).toBytes)
+    ofSketches((a, b) => BloomFilter.fromBytes(a).union(BloomFilter.fromBytes(b)).toBytes)
 
   val bfIntersect: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      BloomFilter.fromBytes(a).intersection(BloomFilter.fromBytes(b)).toBytes)
+    ofSketches((a, b) => BloomFilter.fromBytes(a).intersection(BloomFilter.fromBytes(b)).toBytes)
 
   val bfJaccard: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      BloomFilter.fromBytes(a).jaccardIndex(BloomFilter.fromBytes(b)))
+    ofSketches((a, b) => BloomFilter.fromBytes(a).jaccardIndex(BloomFilter.fromBytes(b)))
 
   val cmsJoin: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      CountMinSketch.fromBytes(a).join(CountMinSketch.fromBytes(b)).toBytes)
+    ofSketches((a, b) => CountMinSketch.fromBytes(a).join(CountMinSketch.fromBytes(b)).toBytes)
 
-  val hllEstimate: UserDefinedFunction =
-    udf((b: Array[Byte]) => Hll.fromBytes(b).estimate)
+  val hllEstimate: UserDefinedFunction = ofSketch(Hll.fromBytes(_).estimate)
 
   val hllMerge: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) => Hll.fromBytes(a).merge(Hll.fromBytes(b)).toBytes)
+    ofSketches((a, b) => Hll.fromBytes(a).merge(Hll.fromBytes(b)).toBytes)
 
   /** KLL quantiles at the given ranks. */
   val kllQuantiles: UserDefinedFunction =
-    udf((b: Array[Byte], qs: Seq[Double]) => {
-      val k = Kll.fromBytes(b)
-      qs.map(k.quantile)
-    })
+    udf((b: Array[Byte], qs: Seq[Double]) =>
+      if (b == null || qs == null) None else Some(qs.map(Kll.fromBytes(b).quantile)))
 
   val tdigestQuantiles: UserDefinedFunction =
-    udf((b: Array[Byte], qs: Seq[Double]) => {
-      val t = TDigest.fromBytes(b)
-      qs.map(t.quantile)
-    })
+    udf((b: Array[Byte], qs: Seq[Double]) =>
+      if (b == null || qs == null) None else Some(qs.map(TDigest.fromBytes(b).quantile)))
 
   val tdigestCdf: UserDefinedFunction =
-    udf((b: Array[Byte], v: Double) => TDigest.fromBytes(b).cdf(v))
+    udf((b: Array[Byte], v: Double) => Option(b).map(TDigest.fromBytes(_).cdf(v)))
 
   /** The quotient filter's lossless hash enumeration (quotientfilter.py:208-245)
     * — the one generator/UDTF-shaped operator in the reference: sketch → rows.
     * Use with explode(): `df.select(explode(qfHashes($"qf")))`. */
-  val qfHashes: UserDefinedFunction =
-    udf((b: Array[Byte]) => QuotientFilter.fromBytes(b).hashes().toArray)
+  val qfHashes: UserDefinedFunction = ofSketch(QuotientFilter.fromBytes(_).hashes().toArray)
 
   /** Reference hash kernel as column functions (golden-vector parity with
-    * hashes.py; see HashesSpec). */
-  val fnv1a64: UserDefinedFunction =
-    udf((s: String, seed: Int) => graft.hash.Fnv.fnv1a64(s, seed))
-
+    * hashes.py; see HashesSpec). The 64-bit form is the codegen'd
+    * [[Fnv1a64Expr]] (`SketchExpressions.fnv1a64Native`, SQL `fnv1a64`). */
   val fnv1a32: UserDefinedFunction =
     udf((s: String, seed: Int) => graft.hash.Fnv.fnv1a32(s, seed) & 0xffffffffL)
 
@@ -140,7 +91,12 @@ object SketchFunctions extends Serializable {
     spark.udf.register("tdigest_quantiles", tdigestQuantiles)
     spark.udf.register("tdigest_cdf", tdigestCdf)
     spark.udf.register("qf_hashes", qfHashes)
-    spark.udf.register("fnv1a64", fnv1a64)
+    GraftColumnBridge.registerFunction(spark, "fnv1a64",
+      "fnv1a64(text, seed) - fnv-1a-64 of text; seed is a literal int", {
+        case Seq(text, seed) =>
+          Fnv1a64Expr(text, graft.spark.aggs.SqlArgs.int(seed, "fnv1a64", "seed"))
+        case _ => throw new IllegalArgumentException("fnv1a64 takes (text, seed)")
+      })
     spark.udf.register("fnv1a32", fnv1a32)
     spark.udf.register("fnv1a64_depth", fnv1a64Depth)
   }

@@ -96,10 +96,11 @@ object TextKernels extends Serializable {
   /** MinHash signature via the one-hash permutation family: each shingle is
     * fnv-hashed once; permutation i is a splitmix64-style finalizer of
     * (base, i). Duplicates need no dedup — min over a multiset equals min
-    * over its set. Matches Dedup.minhashSignature's values for BMP text
-    * (TextKernelsSpec); supplementary-plane codepoints fold per UTF-16 unit
-    * here vs per codepoint there — candidate hashing only, the exact-Jaccard
-    * verify stage is unaffected. */
+    * over its set. Matches a signature over fnv-1a-64 of each lowercased
+    * shingle string for BMP text (TextKernelsSpec's reference);
+    * supplementary-plane codepoints fold per UTF-16 unit here vs per
+    * codepoint there — candidate hashing only, the exact-Jaccard verify
+    * stage is unaffected. */
   def minhashSig(s: UTF8String, shingleSize: Int, numHashes: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(-1L) // unsigned max
     if (s == null) return sig

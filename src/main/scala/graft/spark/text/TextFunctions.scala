@@ -233,9 +233,9 @@ object TextFunctions extends Serializable {
     regexp_replace(regexp_replace(c, lit(emailPattern), lit("<EMAIL>")),
       lit(ipv4Pattern), lit("<IP>"))
 
-  // ---- language ID: script detection + char-trigram profiles (UDF) ----
+  // ---- language ID: script detection + char-trigram profiles ----
 
-  /** Stopword tables — retained as the fast-vote tier of [[langId]] (a
+  /** Stopword tables — retained as the fast-vote tier of [[classifyText]] (a
     * stopword-dense text is decided without touching the n-gram profiles). */
   private val stopwords: Map[String, Set[String]] = Map(
     "en" -> Set("the", "and", "of", "to", "a", "in", "is", "that", "it", "for", "was", "with"),
@@ -266,11 +266,10 @@ object TextFunctions extends Serializable {
     *     vote as primary misfires on Romance languages sharing function
     *     words — "una" is both es and it);
     *  3. stopword vote — fallback for text the profiles can't score.
-    * "und" when the text carries no signal at all. */
-  val langId: UserDefinedFunction = udf(classifyText _)
-
-  /** The langId kernel as a plain function (UDF body; also the direct
-    * surface LangTruth evaluates without a Spark session). */
+    * "und" when the text carries no signal at all. The body of the codegen'd
+    * [[graft.spark.fns.LangIdExpr]] (`TextExpressions.langIdNative`, SQL
+    * `lang_id`), and the direct surface LangTruth evaluates without a Spark
+    * session. */
   def classifyText(text: String): String = classifyTextWithConfidence(text)._1
 
   /** Confidence of the [[classifyText]] decision, per mille (the codegen'd

@@ -33,6 +33,18 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("bloom_might_contain"), plan)
   }
 
+  test("q_cms_modes probes the CMS through codegen'd expressions, no ScalaUDF") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val df = graft.spark.VerifiedQueries.cmsModesVerified(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val udfs = helper.flatMap(plan)(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    assert(udfs.isEmpty, plan.toString)
+    assert("cms_count\\(".r.findAllIn(plan.toString).length >= 3, plan.toString)
+  }
+
   test("hllDistinct: partial ObjectHashAggregate below the exchange, final above") {
     val plan = formatted(SparkQueries.hllDistinct(spark, dir))
     val firstAgg = plan.indexOf("ObjectHashAggregate")

@@ -214,13 +214,12 @@ class EmbedNearDupSpec extends AnyFunSuite {
   }
 }
 
-/** The UDF probe surface and the codegen'd probe expressions are parallel
-  * implementations of the same checks — pin them against each other so they
-  * can't silently drift (the UDF variants are the documented no-extensions
-  * API; the native expressions are the hot path). */
+/** The codegen'd cuckoo, quotient and expanding-Bloom probes against the
+  * core sketches' own `check`. (The name is from when each probe also had a
+  * ScalaUDF twin; the core `check` is the reference both ever had to match.) */
 class ProbeParitySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
-  import graft.spark.fns.{SketchExpressions, SketchFunctions}
+  import graft.spark.fns.SketchExpressions
 
   test("cuckoo/qf/ebf UDF probes == native expression probes on hits and misses") {
     val keys = (0 until 500).map(i => s"item-$i")
@@ -232,19 +231,17 @@ class ProbeParitySpec extends AnyFunSuite {
       .select(org.apache.spark.sql.functions.concat(
         org.apache.spark.sql.functions.lit("item-"), col("id")).as("k"))
     val out = df.select(col("k"),
-      SketchFunctions.cuckooContains(cko.toBytes, 32)(col("k")).as("cu"),
       SketchExpressions.cuckooContainsNative(cko.toBytes, 32, col("k")).as("cn"),
-      SketchFunctions.qfContains(qf.toBytes)(col("k")).as("qu"),
       SketchExpressions.qfContainsNative(qf.toBytes, col("k")).as("qn"),
-      SketchFunctions.ebfContains(ebf.toBytes)(col("k")).as("eu"),
       SketchExpressions.ebfContainsNative(ebf.toBytes, col("k")).as("en")).collect()
     out.foreach { r =>
-      assert(r.getBoolean(1) == r.getBoolean(2), s"cuckoo drift at ${r.getString(0)}")
-      assert(r.getBoolean(3) == r.getBoolean(4), s"qf drift at ${r.getString(0)}")
-      assert(r.getBoolean(5) == r.getBoolean(6), s"ebf drift at ${r.getString(0)}")
+      val k = r.getString(0)
+      assert(r.getBoolean(1) == cko.check(k), s"cuckoo drift at $k")
+      assert(r.getBoolean(2) == qf.check(k), s"qf drift at $k")
+      assert(r.getBoolean(3) == ebf.check(k), s"ebf drift at $k")
     }
     // and the probes are actually discriminating: all 500 members hit
-    val hits = out.filter(_.getBoolean(2))
+    val hits = out.filter(_.getBoolean(1))
     assert(hits.length >= 500 && hits.length <= 520) // members + bounded FPs
   }
 }
@@ -304,7 +301,7 @@ class LangFixtureSpec extends AnyFunSuite {
 
   test("every fixture doc classifies to its own language (exact accuracy 1.0)") {
     val rows = graft.spark.text.LangFixture.docs(spark, docsPerLang = 50)
-      .select(col("lang"), graft.spark.text.TextFunctions.langId(col("text")).as("p"))
+      .select(col("lang"), graft.spark.fns.TextExpressions.langIdNative(col("text")).as("p"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(when(col("p") === col("lang"), 1L).otherwise(0L)).as("c"))
       .collect()

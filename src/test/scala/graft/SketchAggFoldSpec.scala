@@ -117,12 +117,17 @@ class SketchAggFoldSpec extends AnyFunSuite with SketchFoldFixture {
       SketchUdafs.cms(64, 3)(col("k"), col("c")),
       SketchUdafs.hll(10)(col("k")),
       SketchUdafs.kll(200)(col("v")),
-      SketchUdafs.heavyHitters(5, 64, 3)(col("k"), col("c"))).head()
+      SketchUdafs.heavyHitters(5, 64, 3)(col("k"), col("c")),
+      // the udaf aggregates; threshold 0 would keep a key counted as 0
+      SketchUdafs.cbf(1000000, 0.01)(col("k"), col("c")),
+      SketchUdafs.streamThreshold(0, 4096, 5)(col("k"), col("c") * 100),
+      SketchUdafs.tdigest(100.0)(col("v"))).head()
     def sqlAgg(d: DataFrame): Row = {
       d.createOrReplaceTempView("null_rule_rows")
       spark.sql(
         """SELECT bloom_agg(k, 1000, 0.01), cms_agg(k, c, 64, 3), hll_agg(k, 10),
-          |       kll_agg(v, 200), heavy_hitters(k, c, 5, 64, 3)
+          |       kll_agg(v, 200), heavy_hitters(k, c, 5, 64, 3),
+          |       cbf_agg(k, c), stream_threshold(k, c * 100), tdigest_agg(v)
           |FROM null_rule_rows""".stripMargin).head()
     }
     val keysOnly = clean.map(_._1) ++ Seq(Some("a"), Some("c"))
@@ -130,9 +135,11 @@ class SketchAggFoldSpec extends AnyFunSuite with SketchFoldFixture {
       // one partition each: KLL bytes keep the input order
       val got = agg(noisy.toDF("k", "v", "c").coalesce(1))
       val want = agg(clean.toDF("k", "v", "c").coalesce(1))
-      // CMS, KLL and HH see exactly the clean rows
-      Seq(1, 3).foreach(i => assert(got.getAs[Array[Byte]](i).toSeq == want.getAs[Array[Byte]](i).toSeq))
+      // CMS, KLL, HH, CBF, stream threshold and t-digest see exactly the clean rows
+      Seq(1, 3, 5, 7).foreach(i =>
+        assert(got.getAs[Array[Byte]](i).toSeq == want.getAs[Array[Byte]](i).toSeq, s"column $i"))
       assert(got.getMap[String, Long](4) == Map("a" -> 2L, "b" -> 1L))
+      assert(got.getMap[String, Long](6) == Map("a" -> 200L, "b" -> 100L))
       // Bloom and HLL see every non-null key, with or without a value
       val keys = agg(keysOnly.map(k => (k, Option(0.0), Option(1L))).toDF("k", "v", "c"))
       Seq(0, 2).foreach(i => assert(got.getAs[Array[Byte]](i).toSeq == keys.getAs[Array[Byte]](i).toSeq))

@@ -52,6 +52,41 @@ class SurfaceSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  test("sketch-column functions give null for a null sketch: SQL and DataFrame") {
+    import spark.implicits._
+    SketchFunctions.registerAll(spark)
+    val built = spark.range(0, 100, 1, 2).select(concat(lit("k"), col("id")).as("k"))
+      .agg(SketchUdafs.bloom(1000, 0.01)(col("k")), SketchUdafs.cms(64, 3)(col("k"), lit(1L)),
+        SketchUdafs.hll(10)(col("k"))).head()
+    val row = Seq((built.getAs[Array[Byte]](0), built.getAs[Array[Byte]](1),
+        built.getAs[Array[Byte]](2))).toDF("bf", "cms", "hll")
+      .withColumn("n", lit(null).cast("binary"))
+    row.createOrReplaceTempView("null_sketch_row")
+    // each function over a null sketch; two-sketch functions with one valid side
+    val sqlCalls = Seq("bf_estimate(n)", "bf_current_fpr(n)", "bf_union(bf, n)",
+      "bf_intersect(n, bf)", "bf_jaccard(bf, n)", "cms_join(n, cms)", "hll_estimate(n)",
+      "hll_merge(hll, n)", "kll_quantiles(n, array(0.5D))", "tdigest_quantiles(n, array(0.5D))",
+      "tdigest_cdf(n, 1.0D)", "qf_hashes(n)", "hll_estimate(CAST(NULL AS BINARY))")
+    val sqlRow = spark.sql(s"SELECT ${sqlCalls.mkString(", ")} FROM null_sketch_row").head()
+    sqlCalls.indices.foreach(i => assert(sqlRow.isNullAt(i), sqlCalls(i)))
+    import SketchFunctions._
+    val (n, bf, qs) = (col("n"), col("bf"), array(lit(0.5)))
+    val dfCalls = Seq(bfEstimate(n), bfCurrentFpr(n), bfUnion(bf, n), bfIntersect(n, bf),
+      bfJaccard(bf, n), cmsJoin(n, col("cms")), hllEstimate(n), hllMerge(col("hll"), n),
+      kllQuantiles(n, qs), tdigestQuantiles(n, qs), tdigestCdf(n, lit(1.0)), qfHashes(n))
+    val dfRow = row.select(dfCalls: _*).head()
+    dfCalls.indices.foreach(i => assert(dfRow.isNullAt(i), sqlCalls(i)))
+    // valid sketches still answer
+    val ok = row.select(bfJaccard(bf, bf), hllEstimate(col("hll"))).head()
+    assert(ok.getDouble(0) == 1.0)
+    assert(math.abs(ok.getLong(1) - 100L) <= 5)
+    // a stored sketch column read through an outer join
+    val est = Seq(2L).toDF("id")
+      .join(row.select(lit(1L).as("id"), col("hll")), Seq("id"), "left")
+      .select(hllEstimate(col("hll"))).head()
+    assert(est.isNullAt(0))
+  }
+
   test("windowed stream threshold emits keys crossing the threshold") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -121,7 +156,7 @@ class LangIdSpec extends AnyFunSuite {
       ("ja", "これはテストのドキュメントですとても長い文章になります"))
       .toDF("expected", "text")
     val out = docs.select(col("expected"),
-      graft.spark.text.TextFunctions.langId(col("text")).as("got")).collect()
+      graft.spark.fns.TextExpressions.langIdNative(col("text")).as("got")).collect()
     out.foreach(r => assert(r.getString(0) == r.getString(1),
       s"expected ${r.getString(0)} got ${r.getString(1)}"))
   }
