@@ -66,6 +66,8 @@ final class CuckooFilter(
   private var fill: Array[Int] = new Array[Int](capacity)
   var insertedElements: Int = 0
   private val rng = new SplitMix64(0x5ca1ab1e5eedL)
+  // the fingerprint a failed insertFingerprint left without a slot
+  @transient private var homeless: Int = 0
 
   /** Read-only copy of the bins, one array per bucket in insertion order. */
   def buckets: Array[Array[Int]] =
@@ -98,7 +100,7 @@ final class CuckooFilter(
     val i1 = index1(fp)
     val i2 = index2(fp)
     if (findSlot(i1, fp) >= 0 || findSlot(i2, fp) >= 0) return // dedup (cuckoo.py:300-302)
-    dealWithInsertion(insertFingerprint(fp, i1, i2))
+    if (!insertFingerprint(fp, i1, i2)) dealWithHomeless()
   }
 
   def check(key: String): Boolean = locate(fingerprint(key)) >= 0
@@ -138,11 +140,12 @@ final class CuckooFilter(
     if (f < bucketSize) { slots(idx * bucketSize + f) = fp; fill(idx) = f + 1; true } else false
   }
 
-  /** Kick loop (cuckoo.py:361-392); returns Int.MinValue on success or the
-    * homeless fingerprint. */
-  private def insertFingerprint(fp0: Int, i1: Int, i2: Int): Int = {
-    if (insertElement(fp0, i1)) { insertedElements += 1; return Int.MinValue }
-    if (insertElement(fp0, i2)) { insertedElements += 1; return Int.MinValue }
+  /** Kick loop (cuckoo.py:361-392); true on success, else false with the
+    * fingerprint left without a slot in `homeless`. Success is signalled
+    * apart from the fingerprint: every Int is a valid fingerprint. */
+  private def insertFingerprint(fp0: Int, i1: Int, i2: Int): Boolean = {
+    if (insertElement(fp0, i1)) { insertedElements += 1; return true }
+    if (insertElement(fp0, i2)) { insertedElements += 1; return true }
     var fp = fp0
     var idx = if (rng.nextBoolean()) i1 else i2
     var swaps = 0
@@ -153,21 +156,20 @@ final class CuckooFilter(
       fp = swb
       val n1 = index1(fp)
       idx = if (idx == n1) index2(fp) else n1
-      if (insertElement(fp, idx)) { insertedElements += 1; return Int.MinValue }
+      if (insertElement(fp, idx)) { insertedElements += 1; return true }
       swaps += 1
     }
-    fp
+    homeless = fp
+    false
   }
 
-  private def dealWithInsertion(homeless: Int): Unit = {
-    if (homeless == Int.MinValue) return
-    if (autoExpand) expandLogic(homeless)
+  private def dealWithHomeless(): Unit =
+    if (autoExpand) expandLogic(Some(homeless))
     else throw new CuckooFilterFullException("The CuckooFilter is currently full")
-  }
 
-  def expand(): Unit = expandLogic(Int.MinValue)
+  def expand(): Unit = expandLogic(None)
 
-  private def expandLogic(extra: Int): Unit = {
+  private def expandLogic(extra: Option[Int]): Unit = {
     val oldSlots = slots
     val oldFill = fill
     val oldCapacity = capacity
@@ -176,9 +178,9 @@ final class CuckooFilter(
     fill = new Array[Int](capacity)
     insertedElements = 0
     def reinsert(fp: Int): Unit =
-      if (insertFingerprint(fp, index1(fp), index2(fp)) != Int.MinValue)
+      if (!insertFingerprint(fp, index1(fp), index2(fp)))
         throw new CuckooFilterFullException("The CuckooFilter failed to expand")
-    if (extra != Int.MinValue) reinsert(extra)
+    extra.foreach(reinsert)
     var i = 0
     while (i < oldCapacity) {
       var j = 0
@@ -298,6 +300,8 @@ final class CountingCuckooFilter(
   var insertedElements: Long = 0
   var uniqueElements: Int = 0
   private val rng = new SplitMix64(0xc01dc0ffeeL)
+  // the packed bin a failed insertFingerprint left without a slot
+  @transient private var homeless: Long = 0L
 
   @inline private def packed(fp: Int, count: Long): Long = ((fp & 0xffffffffL) << 32) | (count & 0xffffffffL)
   @inline private def fpOf(bin: Long): Int = (bin >>> 32).toInt
@@ -352,7 +356,7 @@ final class CountingCuckooFilter(
         slots(s) = packed(fp, countOf(slots(s)) + 1)
         insertedElements += 1
       } else {
-        dealWithInsertion(insertFingerprint(fp, i1, i2, 1L))
+        if (!insertFingerprint(fp, i1, i2, 1L)) dealWithHomeless()
       }
       remaining -= 1
     }
@@ -367,7 +371,7 @@ final class CountingCuckooFilter(
       slots(s) = packed(fp, math.min(countOf(slots(s)) + count, 0xffffffffL))
       insertedElements += count
     } else {
-      dealWithInsertion(insertFingerprint(fp, i1, i2, count))
+      if (!insertFingerprint(fp, i1, i2, count)) dealWithHomeless()
     }
   }
 
@@ -399,11 +403,13 @@ final class CountingCuckooFilter(
     if (f < bucketSize) { slots(idx * bucketSize + f) = bin; fill(idx) = f + 1; true } else false
   }
 
-  /** Kick loop carrying (fp,count) bins (countingcuckoo.py:230-265); returns
-    * -1 on success, else the homeless packed bin. */
-  private def insertFingerprint(fp0: Int, i1: Int, i2: Int, count: Long): Long = {
-    if (insertBin(packed(fp0, count), i1)) { insertedElements += count; uniqueElements += 1; return -1L }
-    if (insertBin(packed(fp0, count), i2)) { insertedElements += count; uniqueElements += 1; return -1L }
+  /** Kick loop carrying (fp,count) bins (countingcuckoo.py:230-265); true on
+    * success, else false with the packed bin left without a slot in
+    * `homeless`. Every Long is a valid packed bin (fingerprint -1 with count
+    * 2^32-1 packs to -1L), so success is signalled apart from it. */
+  private def insertFingerprint(fp0: Int, i1: Int, i2: Int, count: Long): Boolean = {
+    if (insertBin(packed(fp0, count), i1)) { insertedElements += count; uniqueElements += 1; return true }
+    if (insertBin(packed(fp0, count), i2)) { insertedElements += count; uniqueElements += 1; return true }
     var prv = packed(fp0, count)
     var idx = if (rng.nextBoolean()) i1 else i2
     var swaps = 0
@@ -431,20 +437,19 @@ final class CountingCuckooFilter(
         // below; CuckooSpec pins the engine behavior).
         insertedElements += count
         uniqueElements += 1
-        return -1L
+        return true
       }
       swaps += 1
     }
-    prv
+    homeless = prv
+    false
   }
 
-  private def dealWithInsertion(homeless: Long): Unit = {
-    if (homeless == -1L) return
-    if (autoExpand) expandLogic(homeless)
+  private def dealWithHomeless(): Unit =
+    if (autoExpand) expandLogic(Some(homeless))
     else throw new CuckooFilterFullException("The CountingCuckooFilter is currently full")
-  }
 
-  def expand(): Unit = expandLogic(-1L)
+  def expand(): Unit = expandLogic(None)
 
   /** DELIBERATE divergence from the reference here: countingcuckoo.py's
     * `_expand_logic` resets `_inserted_elements` (via `_setup_expand`) and
@@ -456,7 +461,7 @@ final class CountingCuckooFilter(
     * ([[mergeFrom]]/[[addFingerprintCount]]) depends on `elements_added`
     * staying the total occurrence count. Kick-path and add-path counting
     * match the reference exactly (q_export_parity / q_sketch_removes). */
-  private def expandLogic(extra: Long): Unit = {
+  private def expandLogic(extra: Option[Long]): Unit = {
     val oldSlots = slots
     val oldFill = fill
     val oldCapacity = capacity
@@ -467,10 +472,10 @@ final class CountingCuckooFilter(
     uniqueElements = 0
     def reinsert(bin: Long): Unit = {
       val fp = fpOf(bin)
-      if (insertFingerprint(fp, index1(fp), index2(fp), countOf(bin)) != -1L)
+      if (!insertFingerprint(fp, index1(fp), index2(fp), countOf(bin)))
         throw new CuckooFilterFullException("The CountingCuckooFilter failed to expand")
     }
-    if (extra != -1L) reinsert(extra)
+    extra.foreach(reinsert)
     var i = 0
     while (i < oldCapacity) {
       var j = 0

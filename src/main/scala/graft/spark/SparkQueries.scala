@@ -713,7 +713,10 @@ object SparkQueries {
       "vec_id", "embedding", "graft_q_embed_incr", threshold = 0.4)
   }
 
-  /** Bench-facing 64x16 variant (the common production configuration). */
+  /** Bench-facing 64x16 variant (the common production configuration). It
+    * keeps its own configuration because the oracle's exact pair set needs
+    * 128x32's recall; BenchEquivalenceSpec checks its pairs are a subset of
+    * [[minhashPairs]] with equal jaccard. */
   def minhashPairsBench(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashLshPairs(tbl(spark, dir, "documents"), "doc_id", "text",
       shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
@@ -740,11 +743,15 @@ object SparkQueries {
   /** DSIR importance resampling (Xie et al. 2023) — bench-facing: fit the
     * hashed-ngram model (target = en slice, raw = all), score all docs with
     * the codegen'd kernel, Gumbel top-k select without replacement. */
-  def dsirResample(spark: SparkSession, dir: String): DataFrame = {
+  def dsirResample(spark: SparkSession, dir: String): DataFrame = dsirFitResample(spark, dir)._2
+
+  /** [[dsirResample]] with the fitted model it scored with. */
+  private[spark] def dsirFitResample(spark: SparkSession,
+                                     dir: String): (graft.spark.sample.Dsir.Model, DataFrame) = {
     import graft.spark.sample.Dsir
     val docs = tbl(spark, dir, "documents")
     val model = Dsir.fit(docs.filter(col("lang") === "en"), docs, "text", buckets = 4096)
-    Dsir.resampleFlags(docs, "doc_id", "text", model, k = 100, seed = "graft-dsir-r5")
+    (model, Dsir.resampleFlags(docs, "doc_id", "text", model, k = 100, seed = "graft-dsir-r5"))
   }
 
   /** Classifier TRAINING throughput (bench-facing): 5 full-batch GD
@@ -770,100 +777,71 @@ object SparkQueries {
     graft.spark.dedup.SemDedup.semDedup(tbl(spark, dir, "embeddings"),
       nClusters = 8, threshold = 0.4)
 
-  /** Brute-force cosine top-5 for the first 10 vectors as queries. */
-  def annBruteForce(spark: SparkSession, dir: String): DataFrame = {
+  /** The ANN fixture: the corpus (vec_id, embedding) and the first 10
+    * vectors as queries (query_id, q_embedding). */
+  private[spark] def annInputs(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val emb = tbl(spark, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    Ann.bruteForceTopK(emb.select(col("vec_id"), col("embedding")), queries, 5)
+    (emb.select(col("vec_id"), col("embedding")), queries)
+  }
+
+  /** Brute-force cosine top-5 for the first 10 vectors as queries. */
+  def annBruteForce(spark: SparkSession, dir: String): DataFrame = {
+    val (corpus, queries) = annInputs(spark, dir)
+    Ann.bruteForceTopK(corpus, queries, 5)
       .select(col("query_id"), col("vec_id"), col("rank"))
   }
 
-  /** LSH ANN recall vs the exact baseline (per query). */
-  def annLshRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val corpus = emb.select(col("vec_id"), col("embedding"))
+  /** Per-query recall@5 of an approximate top-5 search `approx(corpus,
+    * queries)` against the exact brute-force baseline. */
+  private def annRecallAt5(spark: SparkSession, dir: String)(
+      approx: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val (corpus, queries) = annInputs(spark, dir)
     val exact = Ann.bruteForceTopK(corpus, queries, 5)
       .select(col("query_id"), col("vec_id"))
-    // weakly-separated neighbors (top-5 cos ~0.32 vs ~0 median) need coarse
-    // buckets: 4 bits x 24 tables measures recall@5 ~0.9 on the fixture
-    val approx = Ann.lshTopK(corpus, queries, 5, dim = 64, tables = 24, bitsPerTable = 4)
+    val found = approx(corpus, queries)
       .select(col("query_id").as("aq"), col("vec_id").as("av"))
-    exact.join(approx, exact("query_id") === col("aq") && exact("vec_id") === col("av"), "left")
+    exact.join(found, exact("query_id") === col("aq") && exact("vec_id") === col("av"), "left")
       .groupBy(col("query_id"))
       .agg((sum(when(col("av").isNotNull, 1).otherwise(0)) / count(lit(1))).as("recall_at_5"))
   }
 
+  /** LSH ANN recall vs the exact baseline (per query). Weakly-separated
+    * neighbors (top-5 cos ~0.32 vs ~0 median) need coarse buckets: 4 bits x
+    * 24 tables measures recall@5 ~0.9 on the fixture. */
+  def annLshRecall(spark: SparkSession, dir: String): DataFrame =
+    annRecallAt5(spark, dir)(Ann.lshTopK(_, _, 5, dim = 64, tables = 24, bitsPerTable = 4))
+
   /** IVF ANN recall vs the exact baseline (per query). */
-  def annIvfRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-    val exact = Ann.bruteForceTopK(corpus, queries, 5)
-      .select(col("query_id"), col("vec_id"))
-    val approx = Ann.ivfTopK(corpus, queries, 5, nlist = 16, nprobe = 8, lloydIters = 3)
-      .select(col("query_id").as("aq"), col("vec_id").as("av"))
-    exact.join(approx, exact("query_id") === col("aq") && exact("vec_id") === col("av"), "left")
-      .groupBy(col("query_id"))
-      .agg((sum(when(col("av").isNotNull, 1).otherwise(0)) / count(lit(1))).as("recall_at_5"))
-  }
+  def annIvfRecall(spark: SparkSession, dir: String): DataFrame =
+    annRecallAt5(spark, dir)(Ann.ivfTopK(_, _, 5, nlist = 16, nprobe = 8, lloydIters = 3))
 
   /** Product-quantization ANN recall vs the exact baseline (per query):
     * 64-dim vectors compressed to 16 one-byte codes (16x), ranked purely by
     * the ADC table scan — no exact re-score, so this measures what the
     * compressed representation alone retrieves. */
-  def annPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-    val exact = Ann.bruteForceTopK(corpus, queries, 5)
-      .select(col("query_id"), col("vec_id"))
-    val approx = Ann.pqTopK(corpus, queries, 5, dim = 64, m = 16, ksub = 256)
-      .select(col("query_id").as("aq"), col("vec_id").as("av"))
-    exact.join(approx, exact("query_id") === col("aq") && exact("vec_id") === col("av"), "left")
-      .groupBy(col("query_id"))
-      .agg((sum(when(col("av").isNotNull, 1).otherwise(0)) / count(lit(1))).as("recall_at_5"))
-  }
+  def annPqRecall(spark: SparkSession, dir: String): DataFrame =
+    annRecallAt5(spark, dir)(Ann.pqTopK(_, _, 5, dim = 64, m = 16, ksub = 256))
 
   /** [[annPqRecall]] with the OPQ rotation (Ge et al. 2013) learned on the
     * same deterministic sample — measures what the learned rotation buys the
     * pure compressed representation (no refine stage to hide behind). */
-  def annPqOpqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-    val exact = Ann.bruteForceTopK(corpus, queries, 5)
-      .select(col("query_id"), col("vec_id"))
-    val approx = Ann.pqTopK(corpus, queries, 5, dim = 64, m = 16, ksub = 256,
-        opqIters = 8)
-      .select(col("query_id").as("aq"), col("vec_id").as("av"))
-    exact.join(approx, exact("query_id") === col("aq") && exact("vec_id") === col("av"), "left")
-      .groupBy(col("query_id"))
-      .agg((sum(when(col("av").isNotNull, 1).otherwise(0)) / count(lit(1))).as("recall_at_5"))
-  }
+  def annPqOpqRecall(spark: SparkSession, dir: String): DataFrame =
+    annRecallAt5(spark, dir)(Ann.pqTopK(_, _, 5, dim = 64, m = 16, ksub = 256, opqIters = 8))
 
   /** IVFPQ recall vs the exact baseline (per query): the composed layout —
     * coarse cells prune the scan AND in-cell candidates rank from byte
     * codes; recall compounds both approximations. */
-  def annIvfPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-    val exact = Ann.bruteForceTopK(corpus, queries, 5)
-      .select(col("query_id"), col("vec_id"))
-    val approx = Ann.ivfPqTopK(corpus, queries, 5, dim = 64,
-        nlist = 16, nprobe = 8, m = 16, ksub = 256)
-      .select(col("query_id").as("aq"), col("vec_id").as("av"))
-    exact.join(approx, exact("query_id") === col("aq") && exact("vec_id") === col("av"), "left")
-      .groupBy(col("query_id"))
-      .agg((sum(when(col("av").isNotNull, 1).otherwise(0)) / count(lit(1))).as("recall_at_5"))
-  }
+  def annIvfPqRecall(spark: SparkSession, dir: String): DataFrame =
+    annRecallAt5(spark, dir)(Ann.ivfPqTopK(_, _, 5, dim = 64,
+      nlist = 16, nprobe = 8, m = 16, ksub = 256))
+
+  /** The host of a generated page url (all are https://host/path). Plain
+    * substring splits, not a per-row regex match: the host extraction stays
+    * off the regex engine on the battery's hot scan. */
+  private[spark] def pageDomain(url: Column): Column =
+    substring_index(substring_index(url, "/", 3), "/", -1)
 
   /** Flagship: one pass over a deterministic synthetic pages table building
     * the full sketch battery per lang — the north-star query shape
@@ -872,13 +850,8 @@ object SparkQueries {
     * (zero-copy UTF8String folds, no per-row boxing through Encoders). */
   def pagesSketchBattery(spark: SparkSession, nPages: Long): DataFrame = {
     val pages = graft.spark.io.PagesGen.pages(spark, nPages)
-    // round 7: plain substring splits instead of a per-row regex match —
-    // identical output for every generated url (all are
-    // https://host/path), and the host extraction leaves the regex engine
-    // off the battery's hot scan (guide §4.1: prefer cheaper built-ins)
-    val domain = substring_index(substring_index(col("url"), "/", 3), "/", -1)
     pages
-      .select(col("lang"), col("url"), domain.as("domain"),
+      .select(col("lang"), col("url"), pageDomain(col("url")).as("domain"),
         length(col("text")).cast("double").as("text_len"))
       .groupBy(col("lang"))
       .agg(

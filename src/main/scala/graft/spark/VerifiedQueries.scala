@@ -7,18 +7,25 @@ import org.apache.spark.sql.functions._
 import graft.core.CmsQueryType
 import graft.spark.aggs._
 import graft.spark.ann.Ann
-import graft.spark.dedup.Dedup
 import graft.spark.fns.{SketchExpressions, SketchFunctions}
-import graft.spark.text.{LangFixture, TextFunctions}
+import graft.spark.text.TextFunctions
 
-/** Probe → exact-verify variants of the sketch queries: each runs the sketch
-  * pipeline end-to-end AND computes the exact ground truth in the same job,
-  * emitting only deterministic, DuckDB-reproducible columns (exact values +
-  * within-bound booleans). A sketch bug flips a boolean or drops a row →
-  * the driver's hash compare goes red. This converts the round-1 `no_oracle`
-  * rows into hard driver signal (VERDICT.md "Next round" #2) without faking
-  * determinism — the estimates themselves stay visible in the pure variants
-  * ([[SparkQueries]]) that the bench runs.
+/** Probe → exact-verify variants of the sketch queries, emitting only
+  * deterministic, DuckDB-reproducible columns (exact values + within-bound
+  * booleans). A sketch bug flips a boolean or drops a row, and the DuckDB
+  * oracle compare fails.
+  *
+  * A verified query whose operator is timed is that [[SparkQueries]] leaf
+  * plus a verify projection: the leaf's output joined to the exact ground
+  * truth, then the within-bound booleans. The timed code is the checked
+  * code; only the ground truth and the independent reference
+  * recomputations live here. Two configurations differ on purpose:
+  *  - q_minhash_pairs is checked at 128 hashes x 32 bands, while the bench
+  *    times 64 x 16 ([[SparkQueries.minhashPairsBench]]): the oracle demands
+  *    the exact pair set, which needs 128 x 32's recall (BenchEquivalenceSpec
+  *    pins the 64 x 16 pairs as a subset with equal jaccard);
+  *  - [[semDedupVerified]] runs SemDedup with maxCellSize = 40, so the
+  *    salted skew-split path is the one checked.
   */
 object VerifiedQueries {
 
@@ -32,20 +39,16 @@ object VerifiedQueries {
 
   // ---------- distinct-count sketches ----------
 
-  /** HLL + Bloom distinct-texts per lang, checked against exact
-    * COUNT(DISTINCT text) computed in the same aggregate. */
+  /** HLL + Bloom distinct-texts per lang ([[SparkQueries.hllDistinct]]),
+    * checked against exact COUNT(DISTINCT text). */
   def hllDistinctVerified(spark: SparkSession, dir: String): DataFrame =
     tbl(spark, dir, "documents")
-      .select(col("lang"), col("text"))
       .groupBy(col("lang"))
-      .agg(
-        countDistinct(col("text")).as("n_exact"),
-        SketchUdafs.hllCount(14)(col("text")).as("hll_est"),
-        SketchFunctions.bfEstimate(
-          SketchUdafs.bloom(100000, 0.01)(col("text"))).as("bloom_est"))
+      .agg(countDistinct(col("text")).as("n_exact"))
+      .join(SparkQueries.hllDistinct(spark, dir), "lang")
       .select(col("lang"), col("n_exact"),
-        withinBound(col("hll_est"), col("n_exact"), 0.03, 2).as("hll_ok"),
-        withinBound(col("bloom_est"), col("n_exact"), 0.03, 2).as("bloom_ok"))
+        withinBound(col("hll_distinct_texts"), col("n_exact"), 0.03, 2).as("hll_ok"),
+        withinBound(col("bloom_estimate"), col("n_exact"), 0.03, 2).as("bloom_ok"))
 
   /** The HLL projection of [[hllDistinctVerified]] (q_hll_native). */
   def hllDistinctNativeVerified(spark: SparkSession, dir: String): DataFrame =
@@ -79,14 +82,13 @@ object VerifiedQueries {
     val w = Window.partitionBy(col("lang")).orderBy(col("n_docs").desc, col("source"))
     val top1 = counts.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
       .select(col("lang"), col("source").as("top_source"), col("n_docs").as("true_count"))
-    val sketch = docs.groupBy(col("lang"))
-      .agg(SketchUdafs.heavyHitters(3, 2048, 5)(col("source"), lit(1L)).as("hh"))
-    top1.join(sketch, "lang")
+    val hh = SparkQueries.cmsHeavyHitters(spark, dir)
+      .select(col("lang").as("hh_lang"), col("source"), col("est_count"))
+    // left join: a top source missing from the sketch reads as a null estimate
+    top1.join(hh, col("lang") === col("hh_lang") && col("top_source") === col("source"), "left")
       .select(col("lang"), col("top_source"), col("true_count"),
-        (element_at(col("hh"), col("top_source")).isNotNull &&
-          element_at(col("hh"), col("top_source")) >= col("true_count")).as("hh_found_ok"),
-        (element_at(col("hh"), col("top_source")) <=
-          col("true_count") * 1.05 + 2).as("est_close_ok"))
+        (col("est_count").isNotNull && col("est_count") >= col("true_count")).as("hh_found_ok"),
+        (col("est_count") <= col("true_count") * 1.05 + 2).as("est_close_ok"))
   }
 
   /** Token-level vocabulary mining: the HeavyHitters sketch over EXPLODED
@@ -177,18 +179,26 @@ object VerifiedQueries {
       (lit(jaccard) <= 0.05).as("jaccard_ok"))
   }
 
+  private val eventCmsWidth = 2048
+
+  /** The events' event_type column and its 2048x5 CMS, built once on the
+    * driver — the sketch q_cms_modes and q_cms_point probe. */
+  private def eventTypeCms(spark: SparkSession, dir: String): (DataFrame, Array[Byte]) = {
+    val ev = tbl(spark, dir, "events").select(col("event_type"))
+    val bytes = ev.agg(SketchUdafs.cms(eventCmsWidth, 5)(col("event_type"), lit(1L)).as("b"))
+      .head().getAs[Array[Byte]]("b")
+    (ev, bytes)
+  }
+
   /** The three CMS query modes driver-visible over the same grid: Min is
     * one-sided (>= true), Mean >= true (floor of an overcounting average),
     * MeanMin within the noise-correction bound floor(N/(w-1)) + 1. */
   def cmsModesVerified(spark: SparkSession, dir: String): DataFrame = {
-    val width = 2048
-    val ev = tbl(spark, dir, "events").select(col("event_type"))
-    val bytes = ev.agg(SketchUdafs.cms(width, 5)(col("event_type"), lit(1L)).as("b"))
-      .head().getAs[Array[Byte]]("b")
+    val (ev, bytes) = eventTypeCms(spark, dir)
     val n = graft.core.CountMinSketch.fromBytes(bytes).elementsAdded
     def est(mode: CmsQueryType): Column =
       SketchExpressions.cmsCountNative(bytes, col("event_type"), mode)
-    val bound = n / (width - 1) + 1 // floor(N/(w-1)) + 1, the mean-min correction
+    val bound = n / (eventCmsWidth - 1) + 1 // floor(N/(w-1)) + 1, the mean-min correction
     ev.groupBy(col("event_type")).agg(count(lit(1)).as("true_count"))
       .select(col("event_type"), col("true_count"),
         (est(CmsQueryType.Min) >= col("true_count")).as("min_ge_ok"),
@@ -199,9 +209,7 @@ object VerifiedQueries {
   /** CMS point counts per event type (codegen'd native probe): estimate is
     * always >= the true count (min over rows of an overcounting grid). */
   def cmsPointVerified(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events").select(col("event_type"))
-    val bytes = ev.agg(SketchUdafs.cms(2048, 5)(col("event_type"), lit(1L)).as("b"))
-      .head().getAs[Array[Byte]]("b")
+    val (ev, bytes) = eventTypeCms(spark, dir)
     ev.groupBy(col("event_type")).agg(count(lit(1)).as("true_count"))
       .withColumn("cms_est",
         SketchExpressions.cmsCountNative(bytes, col("event_type")))
@@ -240,14 +248,12 @@ object VerifiedQueries {
     * overestimates, so no true user is missed) exact-verified — output is
     * exactly the users with true count >= 30 and their exact counts. */
   def streamThresholdVerified(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events").select(col("user_id").cast("string").as("user"))
-    val reported = ev
-      .agg(SketchUdafs.streamThreshold(30, 4096, 5)(col("user"), lit(1L)).as("st"))
-      .select(explode(col("st")).as(Seq("user", "est_events")))
-    val exact = ev.groupBy(col("user")).agg(count(lit(1)).as("n_events"))
+    val exact = tbl(spark, dir, "events").select(col("user_id").cast("string").as("user"))
+      .groupBy(col("user")).agg(count(lit(1)).as("n_events"))
       .filter(col("n_events") >= 30)
     // inner join: a sketch false-negative drops a row -> driver red
-    exact.join(reported, "user").select(col("user"), col("n_events"))
+    exact.join(SparkQueries.streamThreshold(spark, dir), "user")
+      .select(col("user"), col("n_events"))
   }
 
   // ---------- quantile sketches ----------
@@ -273,35 +279,25 @@ object VerifiedQueries {
     counted.select(col(grp) +: checks: _*)
   }
 
-  /** KLL text-length quantiles per lang, rank-checked against the exact data. */
+  /** KLL text-length quantiles per lang ([[SparkQueries.kllQuantiles]]),
+    * rank-checked against the exact data. */
   def kllQuantilesVerified(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
       .select(col("lang"), col("n_chars").cast("double").as("v"))
-    val est = docs.groupBy(col("lang"))
-      .agg(SketchUdafs.kll(200)(col("v")).as("kll"))
-      .select(col("lang"),
-        SketchFunctions.kllQuantiles(col("kll"),
-          array(lit(0.5), lit(0.9), lit(0.99))).as("qs"))
-      .select(col("lang"),
-        element_at(col("qs"), 1).as("p50_est"),
-        element_at(col("qs"), 2).as("p90_est"),
-        element_at(col("qs"), 3).as("p99_est"))
+    val est = SparkQueries.kllQuantiles(spark, dir)
+      .select(col("lang"), col("p50").as("p50_est"), col("p90").as("p90_est"),
+        col("p99").as("p99_est"))
     quantileRankChecks(docs, "lang", "v", est,
       Seq(("p50", 0.5), ("p90", 0.9), ("p99", 0.99)), relTol = 0.05)
   }
 
-  /** t-digest value quantiles per event type, rank-checked. */
+  /** t-digest value quantiles per event type
+    * ([[SparkQueries.tdigestQuantiles]]), rank-checked. */
   def tdigestQuantilesVerified(spark: SparkSession, dir: String): DataFrame = {
     val ev = tbl(spark, dir, "events").select(col("event_type"), col("value").as("v"))
-    val est = ev.groupBy(col("event_type"))
-      .agg(SketchUdafs.tdigest(100.0)(col("v")).as("td"))
-      .select(col("event_type"),
-        SketchFunctions.tdigestQuantiles(col("td"),
-          array(lit(0.5), lit(0.95), lit(0.99))).as("qs"))
-      .select(col("event_type"),
-        element_at(col("qs"), 1).as("p50_est"),
-        element_at(col("qs"), 2).as("p95_est"),
-        element_at(col("qs"), 3).as("p99_est"))
+    val est = SparkQueries.tdigestQuantiles(spark, dir)
+      .select(col("event_type"), col("p50").as("p50_est"), col("p95").as("p95_est"),
+        col("p99").as("p99_est"))
     quantileRankChecks(ev, "event_type", "v", est,
       Seq(("p50", 0.5), ("p95", 0.95), ("p99", 0.99)), relTol = 0.05)
   }
@@ -411,15 +407,21 @@ object VerifiedQueries {
     * C(6,3)-block candidate path must surface it iff full hamming <= 3. */
   def simhashPairsVerified(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val exactPairs = exactJaccardPairs(spark, docs, 0.5)
+    simhashConsistency(docs, exactJaccardPairs(spark, docs, 0.5),
+      SparkQueries.simhashPairs(spark, dir))
+  }
+
+  /** consistent_ok per exact pair (id_a, id_b): the pair is in `found`
+    * (id_a, id_b) iff the full simhash hamming distance is <= 3. */
+  private def simhashConsistency(docs: DataFrame, exactPairs: DataFrame,
+                                 found: DataFrame): DataFrame = {
     val sims = docs.select(col("doc_id"),
       graft.spark.fns.TextExpressions.simhash64Native(col("text")).as("sim"))
-    val found = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      .select(col("id_a").as("f_a"), col("id_b").as("f_b"), lit(true).as("found"))
     exactPairs
       .join(sims.select(col("doc_id").as("id_a"), col("sim").as("sim_a")), "id_a")
       .join(sims.select(col("doc_id").as("id_b"), col("sim").as("sim_b")), "id_b")
-      .join(found, col("id_a") === col("f_a") && col("id_b") === col("f_b"), "left")
+      .join(found.select(col("id_a").as("f_a"), col("id_b").as("f_b"), lit(true).as("found")),
+        col("id_a") === col("f_a") && col("id_b") === col("f_b"), "left")
       .select(col("id_a"), col("id_b"),
         (coalesce(col("found"), lit(false)) ===
           (bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)).as("consistent_ok"))
@@ -441,18 +443,8 @@ object VerifiedQueries {
       numBuckets = 16)
     val exactPairs = exactJaccardPairs(spark, docs, 0.5)
       .filter(col("id_a") % 2 === 1 || col("id_b") % 2 === 1)
-    val sims = docs.select(col("doc_id"),
-      graft.spark.fns.TextExpressions.simhash64Native(col("text")).as("sim"))
-    val found = SimHashIndex.incrementalPairs(batch, "doc_id", "text",
-      "graft_q_simhash_incr", maxHamming = 3)
-      .select(col("id_a").as("f_a"), col("id_b").as("f_b"), lit(true).as("found"))
-    exactPairs
-      .join(sims.select(col("doc_id").as("id_a"), col("sim").as("sim_a")), "id_a")
-      .join(sims.select(col("doc_id").as("id_b"), col("sim").as("sim_b")), "id_b")
-      .join(found, col("id_a") === col("f_a") && col("id_b") === col("f_b"), "left")
-      .select(col("id_a"), col("id_b"),
-        (coalesce(col("found"), lit(false)) ===
-          (bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)).as("consistent_ok"))
+    simhashConsistency(docs, exactPairs, SimHashIndex.incrementalPairs(batch, "doc_id", "text",
+      "graft_q_simhash_incr", maxHamming = 3))
   }
 
   // ---------- text ----------
@@ -832,6 +824,17 @@ object VerifiedQueries {
 
   // ---------- streaming ----------
 
+  /** A collected events `ts` value as a Timestamp. The fixture ts is
+    * TIMESTAMP_NTZ (LocalDateTime); its wall-clock is pinned to UTC
+    * explicitly — Timestamp.valueOf would use the JVM default zone and shift
+    * windows on a non-UTC host. */
+  private def utcTimestamp(ts: Any): java.sql.Timestamp = ts match {
+    case t: java.sql.Timestamp => t
+    case ldt: java.time.LocalDateTime =>
+      java.sql.Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
+    case i: java.time.Instant => java.sql.Timestamp.from(i)
+  }
+
   /** Structured-Streaming end to end, driver-checkable: the events table is
     * replayed through a MemoryStream in two deterministic batches into the
     * windowed sketch aggregation (incremental state store), then the sink is
@@ -844,19 +847,8 @@ object VerifiedQueries {
     val events = tbl(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"),
         col("user_id").cast("string").as("user"))
-    val rows: Array[(Long, java.sql.Timestamp, String, String)] = events.collect()
-      .map { r =>
-        // the fixture ts is TIMESTAMP_NTZ (LocalDateTime); pin the wall-clock
-        // to UTC explicitly — Timestamp.valueOf would use the JVM default
-        // zone and shift windows on a non-UTC host
-        val ts = r.get(1) match {
-          case t: java.sql.Timestamp => t
-          case ldt: java.time.LocalDateTime =>
-            java.sql.Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
-          case i: java.time.Instant => java.sql.Timestamp.from(i)
-        }
-        (r.getLong(0), ts, r.getString(2), r.getString(3))
-      }
+    val rows = events.collect()
+      .map(r => (r.getLong(0), utcTimestamp(r.get(1)), r.getString(2), r.getString(3)))
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, String, String)]
@@ -906,16 +898,7 @@ object VerifiedQueries {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val events = tbl(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"))
-    val rows: Array[(java.sql.Timestamp, String)] = events.collect()
-      .map { r =>
-        val ts = r.get(1) match {
-          case t: java.sql.Timestamp => t
-          case ldt: java.time.LocalDateTime =>
-            java.sql.Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
-          case i: java.time.Instant => java.sql.Timestamp.from(i)
-        }
-        (ts, r.getString(2))
-      }
+    val rows = events.collect().map(r => (utcTimestamp(r.get(1)), r.getString(2)))
     val maxTs = rows.map(_._1.getTime).max
     val lateReplay = rows.filter(_._1.getTime <= maxTs - 2L * 3600 * 1000)
 
@@ -1170,15 +1153,12 @@ object VerifiedQueries {
 
   // ---------- ANN ----------
 
-  /** Exact brute-force cosine top-5 (query set = vec_id < 10), emitted with
-    * deterministic (sim desc, vec_id) ranks — DuckDB recomputes it exactly. */
-  def annBruteForceVerified(spark: SparkSession, dir: String): DataFrame = {
-    val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    Ann.bruteForceTopK(emb.select(col("vec_id"), col("embedding")), queries, 5)
+  /** Exact brute-force cosine top-5 ([[SparkQueries.annBruteForce]], query
+    * set = vec_id < 10), emitted with deterministic (sim desc, vec_id) ranks —
+    * DuckDB recomputes it exactly. */
+  def annBruteForceVerified(spark: SparkSession, dir: String): DataFrame =
+    SparkQueries.annBruteForce(spark, dir)
       .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rank"))
-  }
 
   /** LSH ANN recall >= threshold per query (recall itself is deterministic;
     * the bound is the driver-checkable projection). */
@@ -1227,11 +1207,8 @@ object VerifiedQueries {
     * (which also re-trains, so the flag additionally pins training
     * determinism). codec_ok pins fromBytes(toBytes) byte identity. */
   def annIndexRoundtripVerified(spark: SparkSession, dir: String): DataFrame = {
-    import graft.spark.ann.{Ann, IvfPqModel}
-    val emb = tbl(spark, dir, "embeddings")
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
+    import graft.spark.ann.IvfPqModel
+    val (corpus, queries) = SparkQueries.annInputs(spark, dir)
     val model = Ann.trainIvfPqModel(corpus, dim = 64)
     val bytes = model.toBytes
     val reloaded = IvfPqModel.fromBytes(bytes)
@@ -1278,26 +1255,16 @@ object VerifiedQueries {
 
   // ---------- flagship ----------
 
-  /** The north-star pages battery, flattened to scalar columns and verified:
+  /** The north-star pages battery ([[SparkQueries.pagesSketchBattery]]),
+    * flattened to scalar columns and verified:
     * exact n_pages + top domain (oracle = PagesTruth literals), HLL/Bloom
     * distinct-url estimates vs exact COUNT(DISTINCT url), HH containment of
     * the exact top domain, KLL length quantiles rank-checked. */
   def pagesSketchBatteryVerified(spark: SparkSession, nPages: Long): DataFrame = {
-    val pages = graft.spark.io.PagesGen.pages(spark, nPages)
-    val domain = regexp_extract(col("url"), "https://([^/]+)/", 1)
-    val base = pages.select(col("lang"), col("url"), domain.as("domain"),
-      length(col("text")).cast("double").as("text_len"))
-
-    val sketch = base.groupBy(col("lang")).agg(
-      SketchUdafs.hllCount(14)(col("url")).as("hll_est"),
-      SketchFunctions.bfEstimate(
-        SketchUdafs.bloom(2000000, 0.01)(col("url"))).as("bloom_est"),
-      SketchUdafs.heavyHitters(5, 4096, 5)(col("domain"), lit(1L))
-        .as("top_domains"),
-      SketchFunctions.kllQuantiles(
-        SketchUdafs.kll(200)(col("text_len")),
-        array(lit(0.5), lit(0.95), lit(0.99))).as("lq"),
-      count(lit(1)).as("n_pages"))
+    val base = graft.spark.io.PagesGen.pages(spark, nPages)
+      .select(col("lang"), col("url"), SparkQueries.pageDomain(col("url")).as("domain"),
+        length(col("text")).cast("double").as("text_len"))
+    val sketch = SparkQueries.pagesSketchBattery(spark, nPages)
 
     val exact = base.groupBy(col("lang")).agg(
       countDistinct(col("url")).as("exact_urls"))
@@ -1307,17 +1274,17 @@ object VerifiedQueries {
       .select(col("lang"), col("domain").as("top_domain"), col("n").as("top_count"))
 
     val est = sketch.select(col("lang"),
-      element_at(col("lq"), 1).as("p50_est"),
-      element_at(col("lq"), 2).as("p95_est"),
-      element_at(col("lq"), 3).as("p99_est"))
+      element_at(col("len_quantiles"), 1).as("p50_est"),
+      element_at(col("len_quantiles"), 2).as("p95_est"),
+      element_at(col("len_quantiles"), 3).as("p99_est"))
     val ranks = quantileRankChecks(
       base.select(col("lang"), col("text_len").as("v")), "lang", "v", est,
       Seq(("p50", 0.5), ("p95", 0.95), ("p99", 0.99)), relTol = 0.05)
 
     sketch.join(exact, "lang").join(topDom, "lang").join(ranks, "lang")
       .select(col("lang"), col("n_pages"), col("top_domain"),
-        withinBound(col("hll_est"), col("exact_urls"), 0.02, 2).as("hll_ok"),
-        withinBound(col("bloom_est"), col("exact_urls"), 0.02, 2).as("bloom_ok"),
+        withinBound(col("distinct_urls_hll"), col("exact_urls"), 0.02, 2).as("hll_ok"),
+        withinBound(col("distinct_urls_bloom"), col("exact_urls"), 0.02, 2).as("bloom_ok"),
         (element_at(col("top_domains"), col("top_domain")).isNotNull &&
           element_at(col("top_domains"), col("top_domain")) >= col("top_count") &&
           element_at(col("top_domains"), col("top_domain")) <=
@@ -1342,6 +1309,8 @@ object VerifiedQueries {
     import org.apache.spark.sql.Row
     import graft.spark.dedup.SemDedup
     val emb = tbl(spark, dir, "embeddings")
+    // maxCellSize = 40 (the operator default never splits a cell at this
+    // scale): the checked run takes the salted skew-split path
     val flags = SemDedup.semDedup(emb, nClusters = 8, threshold = 0.4,
       maxCellSize = 40)
     // one action for both contract counts (the pipeline is quadratic in the
@@ -1422,7 +1391,8 @@ object VerifiedQueries {
       .select(col("vec_id"), col("dropped"))
   }
 
-  /** DSIR importance resampling (Xie et al., NeurIPS 2023): fit the hashed
+  /** DSIR importance resampling (Xie et al., NeurIPS 2023), the
+    * [[SparkQueries.dsirResample]] operator: fit the hashed
     * unigram+bigram model with target = the en slice and raw = the whole
     * corpus, score every doc with the codegen'd kernel, and verify each
     * integer milli-score against an INDEPENDENT plain-Scala recomputation
@@ -1434,11 +1404,7 @@ object VerifiedQueries {
     * data). n_feats (= 2·tokens−1 hashed features) is the cross-engine
     * column DuckDB recomputes from the text. */
   def dsirVerified(spark: SparkSession, dir: String): DataFrame = {
-    import graft.spark.sample.Dsir
-    val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
-    val model = Dsir.fit(docs.filter(col("lang") === "en"), docs, "text", buckets = 4096)
-    val flags = Dsir.resampleFlags(docs, "doc_id", "text", model, k = 100,
-      seed = "graft-dsir-r5")
+    val (model, flags) = SparkQueries.dsirFitResample(spark, dir)
     // one action for both contract checks (k-count + separation)
     val stats = flags.groupBy((col("lang") === "en").as("is_en"))
       .agg(avg(col("dsir_logw_milli")).as("m"),

@@ -105,11 +105,11 @@ class AssignExprSpec extends AnyFunSuite {
 
   test("both expressions run inside codegen (no ScalaUDF eval boundary)") {
     val bc = spark.sparkContext.broadcast(cents)
-    val plan = testRows
+    val df = testRows
       .select(VecExpressions.assignCentroid(col("v"), bc).as("a"),
         VecExpressions.assignCellF32(col("v"), bc).as("c"))
-      .queryExecution.executedPlan.toString
+    val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("assign_centroid") && plan.contains("assign_cell_f32"), plan)
-    assert(!plan.contains("ScalaUDF"), plan)
+    assert(PlanUdfs.scalaUdfs(df).isEmpty, plan)
   }
 }

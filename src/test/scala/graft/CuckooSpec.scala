@@ -96,6 +96,19 @@ class CuckooSpec extends AnyFunSuite {
     assert(serialized <= 1.3 * exported, s"serialized $serialized B vs export $exported B")
   }
 
+  test("a homeless Int.MinValue fingerprint expands the filter or throws; it is never dropped") {
+    // capacity 1, bucket size 1, one swap: the second add kicks
+    // Int.MinValue out and leaves it homeless
+    val c = new CuckooFilter(1, 1, 1, 2, true, 32)
+    c.addFingerprint(Int.MinValue)
+    c.addFingerprint(1)
+    assert(c.capacity == 2 && c.elementsAdded == 2)
+    assert(c.buckets.flatten.sorted.toSeq == Seq(Int.MinValue, 1))
+    val full = new CuckooFilter(1, 1, 1, 2, false, 32)
+    full.addFingerprint(Int.MinValue)
+    intercept[CuckooFilterFullException](full.addFingerprint(1))
+  }
+
   test("digit-fold idx2 == fnv-1a-64 of the decimal string mod capacity") {
     val rnd = new scala.util.Random(20141202)
     val fps = Seq(0, 1, 9, 10, 99, 100, Int.MaxValue, -1) ++ Seq.fill(10000)(rnd.nextInt())
@@ -195,6 +208,18 @@ class CountingCuckooSpec extends AnyFunSuite {
     val bins = c.buckets.flatten.map(bin => ((bin >>> 32).toInt, bin & 0xffffffffL))
     assert(bins.toSet == Set((fp1, 1L), (fp2, 1L), (fpX, 3L)),
       "the relocated newcomer bin must keep count 3 (the reference would hold 1)")
+  }
+
+  test("a homeless bin packing to -1L (fingerprint -1, count 2^32-1) expands or throws") {
+    val c = new CountingCuckooFilter(1, 1, 1, 2, true, 32)
+    c.addFingerprintCount(-1, 0xffffffffL)
+    c.addFingerprintCount(2, 1L)
+    assert(c.capacity == 2 && c.uniqueElements == 2 && c.insertedElements == 0x100000000L)
+    val bins = c.buckets.flatten.map(bin => ((bin >>> 32).toInt, bin & 0xffffffffL))
+    assert(bins.toSet == Set((-1, 0xffffffffL), (2, 1L)))
+    val full = new CountingCuckooFilter(1, 1, 1, 2, false, 32)
+    full.addFingerprintCount(-1, 0xffffffffL)
+    intercept[CuckooFilterFullException](full.addFingerprintCount(2, 1L))
   }
 
   test("kick-and-expansion byte golden: 1,000 buckets fed 20,000 keys expand to 8,000") {

@@ -34,15 +34,20 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q_cms_modes probes the CMS through codegen'd expressions, no ScalaUDF") {
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val df = graft.spark.VerifiedQueries.cmsModesVerified(spark, dir)
     df.collect()
     val plan = df.queryExecution.executedPlan
-    val helper = new AdaptiveSparkPlanHelper {}
-    val udfs = helper.flatMap(plan)(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
-    assert(udfs.isEmpty, plan.toString)
+    assert(PlanUdfs.scalaUdfs(df).isEmpty, plan.toString)
     assert("cms_count\\(".r.findAllIn(plan.toString).length >= 3, plan.toString)
+  }
+
+  test("PlanUdfs finds a ScalaUDF that the plan string never names") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val plusOne = udf((x: Long) => x + 1)
+    val df = spark.range(0, 4, 1, 2).select(plusOne(col("id")).as("y"))
+    df.collect()
+    assert(!df.queryExecution.executedPlan.toString.contains("ScalaUDF"))
+    assert(PlanUdfs.scalaUdfs(df).size == 1, df.queryExecution.executedPlan.toString)
   }
 
   test("hllDistinct: partial ObjectHashAggregate below the exchange, final above") {
@@ -136,6 +141,20 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("InMemoryTableScan"),
       s"nothing stays cached on the collected path:\n$plan")
     assert(plan.contains("CASE WHEN"), plan) // candidates-only exact probe
+  }
+
+  test("topKFlags: the executed plan has zero exchanges") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // the boundary is decided by bounded driver collects while the flags are
+    // built; the returned flags are comparisons over one scan
+    val df = SparkQueries.topkSelect(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+      case e: Exchange => e
+    }
+    assert(exchanges.isEmpty, plan.toString)
   }
 
   test("q_pipeline action plan has zero parquet scans") {
@@ -240,7 +259,8 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("lang_id"), plan)
     // both kernels sit in a codegen'd Project (the `[codegen id : N]`
     // annotation in formatted mode), not behind a ScalaUDF eval boundary
-    assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
+    assert(!plan.contains("BatchEvalPython"), plan)
+    assert(PlanUdfs.scalaUdfs(df).isEmpty, plan)
     assert(plan.matches("(?s).*Project \\[codegen id : \\d+\\].*"), plan)
   }
 
@@ -264,7 +284,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), plan)
     // the scoring kernel runs as a native codegen'd expression
     assert(plan.contains("dsir_logw_milli"), plan)
-    assert(!plan.contains("ScalaUDF"), "scoring must not cross a UDF boundary:\n" + plan)
+    assert(PlanUdfs.scalaUdfs(df).isEmpty, "scoring must not cross a UDF boundary:\n" + plan)
   }
 
   test("classifier training iteration: ONE bounded gradient exchange, codegen'd margin") {
@@ -293,7 +313,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // tree entries are "Exchange (N" — the detail header "(N) Exchange"
     // must not double-count
     assert("Exchange \\(".r.findAllIn(plan).length == 1, plan)
-    assert(!plan.contains("ScalaUDF"), plan)
+    assert(PlanUdfs.scalaUdfs(grad).isEmpty, plan)
     assert(plan.contains("ReadSchema: struct<text:string>"), plan)
     bc.destroy()
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -86,8 +86,7 @@ class SketchProbeSpec extends AnyFunSuite {
 
     val helper = new AdaptiveSparkPlanHelper {}
     val plan = df.queryExecution.executedPlan
-    val udfs = helper.flatMap(plan)(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
-    assert(udfs.isEmpty, plan.toString)
+    assert(PlanUdfs.scalaUdfs(df).isEmpty, plan.toString)
     def inStage(p: SparkPlan): Seq[Expression] = p match {
       case _: InputAdapter => Nil
       case other => other.expressions ++ other.children.flatMap(inStage)
