@@ -44,8 +44,14 @@ final class CountMinSketch private (
 
   def hashes(key: String): Array[Long] = hasher.hashes(key, depth)
 
-  private def binIdx(h: Long, i: Int): Int =
-    java.lang.Long.remainderUnsigned(h, width.toLong).toInt + i * width
+  // width - 1 when width is a power of two, so that `h mod width` is a mask
+  // instead of a 64-bit division; -1 otherwise
+  private val widthMask: Long = if (Integer.bitCount(width) == 1) width - 1L else -1L
+
+  /** Cell of hash `h` in row `i`: the unsigned `h mod width`, row-major. */
+  private[graft] def binIdx(h: Long, i: Int): Int =
+    (if (widthMask >= 0) (h & widthMask).toInt
+     else java.lang.Long.remainderUnsigned(h, width.toLong).toInt) + i * width
 
   def add(key: String, numEls: Long = 1L): Long = addHashes(hashes(key), numEls)
 

@@ -83,10 +83,11 @@ final class CuckooFilter(
   def errorRate: Double =
     1.0 / math.pow(2.0, fingerprintSizeBits - (math.log(bucketSize.toDouble) / math.log(2.0) + 1))
 
-  protected def hash64(key: String): Long = Fnv.fnv1a64(key, 0)
+  def fingerprint(key: String): Int = fingerprintOf(Fnv.fnv1a64(key, 0))
 
-  def fingerprint(key: String): Int =
-    BitUtil.getXBits(hash64(key), 64, fingerprintSizeBits, rightBits = true).toInt
+  /** The fingerprint of a key whose seed-0 fnv-1a-64 is `h`. */
+  def fingerprintOf(h: Long): Int =
+    BitUtil.getXBits(h, 64, fingerprintSizeBits, rightBits = true).toInt
 
   def indicesFromFingerprint(fp: Int): (Int, Int) = (index1(fp), index2(fp))
 
@@ -103,7 +104,10 @@ final class CuckooFilter(
     if (!insertFingerprint(fp, i1, i2)) dealWithHomeless()
   }
 
-  def check(key: String): Boolean = locate(fingerprint(key)) >= 0
+  def check(key: String): Boolean = checkFingerprint(fingerprint(key))
+
+  /** Whether fingerprint `fp` is stored: `check` after hashing. */
+  def checkFingerprint(fp: Int): Boolean = locate(fp) >= 0
 
   def remove(key: String): Boolean = {
     val s = locate(fingerprint(key))
@@ -313,8 +317,11 @@ final class CountingCuckooFilter(
 
   def loadFactor: Double = uniqueElements.toDouble / (capacity.toDouble * bucketSize)
 
-  def fingerprint(key: String): Int =
-    BitUtil.getXBits(Fnv.fnv1a64(key, 0), 64, fingerprintSizeBits, rightBits = true).toInt
+  def fingerprint(key: String): Int = fingerprintOf(Fnv.fnv1a64(key, 0))
+
+  /** The fingerprint of a key whose seed-0 fnv-1a-64 is `h`. */
+  def fingerprintOf(h: Long): Int =
+    BitUtil.getXBits(h, 64, fingerprintSizeBits, rightBits = true).toInt
 
   def indicesFromFingerprint(fp: Int): (Int, Int) = (index1(fp), index2(fp))
 
@@ -375,8 +382,11 @@ final class CountingCuckooFilter(
     }
   }
 
-  def check(key: String): Long = {
-    val s = locate(fingerprint(key))
+  def check(key: String): Long = checkFingerprint(fingerprint(key))
+
+  /** The count stored for fingerprint `fp`, 0 if absent: `check` after hashing. */
+  def checkFingerprint(fp: Int): Long = {
+    val s = locate(fp)
     if (s < 0) 0L else countOf(slots(s))
   }
 

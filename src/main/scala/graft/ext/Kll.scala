@@ -25,14 +25,22 @@ final class Kll(val k: Int) extends Serializable {
 
   private def numLevels: Int = compactors.size
 
-  private def capacity(h: Int): Int =
-    math.max(2, math.ceil(k * math.pow(c, (numLevels - 1 - h).toDouble)).toInt)
+  // per-level capacities and their sum for `capLevels` levels; they depend
+  // only on the level count, so they are recomputed only when it changes
+  private var capLevels = 0
+  private var caps: Array[Int] = Array.emptyIntArray
+  private var capTotal = 0
 
-  private def totalCapacity: Int = {
-    var s = 0; var h = 0
-    while (h < numLevels) { s += capacity(h); h += 1 }
-    s
+  private def refreshCapacities(): Unit = if (capLevels != numLevels) {
+    capLevels = numLevels
+    caps = Array.tabulate(capLevels)(h =>
+      math.max(2, math.ceil(k * math.pow(c, (capLevels - 1 - h).toDouble)).toInt))
+    capTotal = caps.sum
   }
+
+  private def capacity(h: Int): Int = { refreshCapacities(); caps(h) }
+
+  private def totalCapacity: Int = { refreshCapacities(); capTotal }
 
   def update(v: Double): Unit = {
     compactors(0) += v

@@ -312,16 +312,16 @@ object VerifiedQueries {
     val perLang = docs.groupBy(col("lang"))
       .agg(SketchUdafs.ebf(64, 0.01)(col("doc_id").cast("string")).as("e"))
       .collect()
-      .map(r => r.getString(0) ->
-        graft.core.ExpandingBloomFilter.fromBytes(r.getAs[Array[Byte]]("e"))).toMap
-    // broadcast the deserialized filters: one instance per executor, pure
-    // in-memory probes per row
-    val bc = spark.sparkContext.broadcast(perLang)
-    val probe = udf((lang: String, key: String) => bc.value(lang).check(key))
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]]("e"))
+    // one codegen'd probe per lang, each carrying its own lang's filter
+    val key = col("doc_id").cast("string")
+    val member = perLang.foldLeft(lit(null).cast("boolean")) { case (other, (l, e)) =>
+      when(col("lang") <=> lit(l), SketchExpressions.ebfContainsNative(e, key)).otherwise(other)
+    }
     val added = spark.createDataFrame(perLang.toSeq.map { case (l, e) =>
-      (l, e.elementsAdded)
+      (l, graft.core.ExpandingBloomFilter.fromBytes(e).elementsAdded)
     }).toDF("lang", "els_added")
-    docs.withColumn("m", probe(col("lang"), col("doc_id").cast("string")))
+    docs.withColumn("m", member)
       .groupBy(col("lang"))
       .agg(every(col("m")).as("all_members_ok"))
       .join(added, "lang")

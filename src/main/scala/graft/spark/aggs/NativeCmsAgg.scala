@@ -7,13 +7,14 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{CmsQueryType, CountMinSketch}
+import graft.spark.fns.Utf8Fnv
 
 /** Weighted Count-Min aggregate (`cms_agg`, [[SketchUdafs.cms]]): reads
   * (key UTF8String, count long) straight off the InternalRow (no tuple
-  * materialization per row). ASCII keys hash off the UTF8String bytes;
-  * non-ASCII falls back to the exact codepoint fold. Negative counts are
-  * removals (reference remove() semantics); a row with a null key or count
-  * is skipped. OUT = reference-format CMS bytes.
+  * materialization per row). ASCII keys hash off the UTF8String bytes
+  * ([[Utf8Fnv]]); non-ASCII falls back to the exact codepoint fold.
+  * Negative counts are removals (reference remove() semantics); a row with
+  * a null key or count is skipped. OUT = reference-format CMS bytes.
   */
 case class NativeCmsAgg(
     key: Expression,
@@ -40,7 +41,7 @@ case class NativeCmsAgg(
       val c = count.eval(input)
       if (c != null) {
         val n = c.asInstanceOf[Long]
-        val hs = NativeHashes.hashesOf(k.asInstanceOf[UTF8String], depth)
+        val hs = Utf8Fnv.hashes(k.asInstanceOf[UTF8String], depth)
         if (n >= 0) buffer.addHashes(hs, n) else buffer.removeHashes(hs, -n)
       }
     }

@@ -7,16 +7,16 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ext.Hll
-import graft.hash.Fnv
+import graft.spark.fns.Utf8Fnv
 
 /** HLL aggregate (`TypedImperativeAggregate`): `hll_count` /
   * [[SketchUdafs.hllCount]] when `estimate` (OUT = the Long distinct-count
   * estimate), `hll_agg` / [[SketchUdafs.hll]] otherwise (OUT = HLL bytes):
   *
-  *  - the update path reads the `UTF8String` directly — for ASCII values the
-  *    fnv-1a byte fold equals the reference's codepoint fold, so no java
-  *    String is materialized per row (urls are the hot case); non-ASCII
-  *    values fall back to the exact codepoint fold;
+  *  - the update path reads the `UTF8String` directly ([[Utf8Fnv]]) — for
+  *    ASCII values the fnv-1a byte fold equals the reference's codepoint
+  *    fold, so no java String is materialized per row (urls are the hot
+  *    case); non-ASCII values fall back to the exact codepoint fold;
   *  - buffers serialize in the engine's HLL byte format — the same bytes the
   *    checkpoint table stores.
   *
@@ -42,22 +42,7 @@ case class NativeHllAgg(
   override def update(buffer: Hll, input: InternalRow): Hll = {
     val v = child.eval(input)
     if (v != null) {
-      val s = v.asInstanceOf[UTF8String]
-      val n = s.numBytes()
-      var ascii = true
-      var h = Fnv.Offset64
-      var i = 0
-      while (i < n && ascii) {
-        val b = s.getByte(i)
-        if (b < 0) ascii = false
-        else {
-          h ^= b
-          h *= Fnv.Prime64
-          i += 1
-        }
-      }
-      // ASCII: byte fold == the reference's codepoint fold; else exact path
-      buffer.addHash64(if (ascii) h else Fnv.fnv1a64(s.toString, 0))
+      buffer.addHash64(Utf8Fnv.hash64(v.asInstanceOf[UTF8String], 0))
     }
     buffer
   }

@@ -9,34 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{BloomFilter, HeavyHitters}
 import graft.ext.Kll
-import graft.hash.Fnv
-
-/** Shared zero-copy hash kernel for the sketch aggregates: `depth` seeded
-  * fnv-1a-64 values computed straight off the UTF8String bytes for ASCII
-  * keys (byte fold == the reference's codepoint fold), exact codepoint
-  * fallback otherwise. */
-private[aggs] object NativeHashes {
-  def hashesOf(s: UTF8String, depth: Int): Array[Long] = {
-    val n = s.numBytes()
-    var ascii = true
-    var i = 0
-    while (i < n && ascii) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    if (!ascii) return graft.hash.Fnv1aHasher.hashes(s.toString, depth)
-    val out = new Array[Long](depth)
-    var d = 0
-    while (d < depth) {
-      var h = Fnv.Offset64 + 31L * d
-      var j = 0
-      while (j < n) { h ^= s.getByte(j); h *= Fnv.Prime64; j += 1 }
-      out(d) = h
-      d += 1
-    }
-    out
-  }
-}
+import graft.spark.fns.Utf8Fnv
 
 /** Bloom aggregate (`bloom_agg`, [[SketchUdafs.bloom]]): per row, k seeded
-  * hashes folded off the UTF8String bytes, no java String materialization.
+  * hashes folded off the UTF8String bytes ([[Utf8Fnv]]), no java String
+  * for an ASCII key.
   * merge = in-place OR (associative + commutative as bytes). OUT =
   * reference-format Bloom bytes. */
 case class NativeBloomAgg(
@@ -57,7 +34,7 @@ case class NativeBloomAgg(
   override def update(buffer: BloomFilter, input: InternalRow): BloomFilter = {
     val v = child.eval(input)
     if (v != null) {
-      buffer.addHashes(NativeHashes.hashesOf(v.asInstanceOf[UTF8String], buffer.numHashes))
+      buffer.addHashes(Utf8Fnv.hashes(v.asInstanceOf[UTF8String], buffer.numHashes))
     }
     buffer
   }
@@ -166,7 +143,7 @@ case class NativeHhAgg(
       val c = count.eval(input)
       if (c != null) {
         val s = k.asInstanceOf[UTF8String]
-        buffer.addWithHashes(s.toString, NativeHashes.hashesOf(s, depth), c.asInstanceOf[Long])
+        buffer.addWithHashes(s.toString, Utf8Fnv.hashes(s, depth), c.asInstanceOf[Long])
       }
     }
     buffer

@@ -113,6 +113,19 @@ class CmsSpec extends AnyFunSuite {
     assert(x1.toBytes.toSeq == x3.toBytes.toSeq)
   }
 
+  test("bin index: the power-of-two mask equals the unsigned division, negative hashes included") {
+    val rnd = new scala.util.Random(65536L)
+    val hashes = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue, Long.MinValue + 1L) ++
+      Seq.fill(4000)(rnd.nextLong())
+    assert(hashes.count(_ < 0) > 1500)
+    Seq(1, 2, 1024, 2048, 4096, 65536, 1000, 3, 65535).foreach { w =>
+      val c = CountMinSketch.empty(w, 3)
+      for (h <- hashes; i <- 0 until 3)
+        assert(c.binIdx(h, i) == java.lang.Long.remainderUnsigned(h, w.toLong).toInt + i * w,
+          s"width $w, hash $h, row $i")
+    }
+  }
+
   test("overcount bound: est in [true, true + eps*N] (CMS guarantee)") {
     val cms = CountMinSketch.empty(1000, 5)
     val rnd = new scala.util.Random(42)

@@ -93,6 +93,21 @@ class KllSpec extends AnyFunSuite {
     }
   }
 
+  test("byte golden: 300k updates and a merge (level capacities cached per level count)") {
+    val rnd = new scala.util.Random(300000L)
+    val x = Kll(200); val y = Kll(200)
+    (0 until 300000).foreach(_ => x.update(rnd.nextGaussian() * 1000))
+    (0 until 50000).foreach(_ => y.update(rnd.nextDouble()))
+    x.merge(y)
+    assert(x.n == 350000)
+    // the bytes of the sketch that recomputed every capacity on every update
+    assert(TestUtil.md5hex(x.toBytes) == "154541aee26cb42fb70e1297b2333c77")
+    // a sketch read back from bytes grows its levels exactly like the original
+    val z = Kll.fromBytes(x.toBytes)
+    (0 until 20000).foreach { i => x.update(i.toDouble); z.update(i.toDouble) }
+    assert(z.toBytes.toSeq == x.toBytes.toSeq)
+  }
+
   test("bytes round trip") {
     val k = Kll(200)
     (0 until 10000).foreach(i => k.update(i.toDouble))

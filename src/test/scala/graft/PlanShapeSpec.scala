@@ -41,6 +41,14 @@ class PlanShapeSpec extends AnyFunSuite {
     assert("cms_count\\(".r.findAllIn(plan.toString).length >= 3, plan.toString)
   }
 
+  test("q_ebf_stats probes each lang's expanding Bloom through codegen'd expressions, no ScalaUDF") {
+    val df = graft.spark.VerifiedQueries.ebfStatsVerified(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(PlanUdfs.scalaUdfs(df).isEmpty, plan.toString)
+    assert("ebf_contains\\(".r.findAllIn(plan.toString).nonEmpty, plan.toString)
+  }
+
   test("PlanUdfs finds a ScalaUDF that the plan string never names") {
     import org.apache.spark.sql.functions.{col, udf}
     val plusOne = udf((x: Long) => x + 1)

@@ -11,17 +11,49 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
+import graft.hash.Hashers
 import graft.spark.fns._
 
 /** The seven per-key sketch probes (CMS in all three query modes) against
   * the core sketches' `check`: ASCII and non-ASCII keys, members and
   * non-members, and a null key, which probes to null. Each probe runs inside
   * WholeStageCodegen, with no ScalaUDF in the plan, and its interpreted eval
-  * gives the same answers. */
+  * gives the same answers. A differential over seeded random keys (ASCII,
+  * multi-byte and malformed UTF-8, the empty string) pins the byte-level
+  * fast path and the `check(key.toString)` fallback to the same answers. */
 class SketchProbeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private val members = (0 until 300).flatMap(i => Seq(s"item-$i", s"ключ-$i-键"))
+
+  /** Seeded random keys as UTF-8 bytes: ASCII with NUL (U+0000) and DEL (U+007F),
+    * 2-, 3- and 4-byte code points (surrogate pairs in the Java String),
+    * ASCII mixed with multi-byte, malformed UTF-8 (lone continuation bytes,
+    * sequences cut short) and the empty string. */
+  private val diffKeys: Seq[Array[Byte]] = {
+    val rnd = new scala.util.Random(20261019L)
+    def codePoints(lo: Int, hi: Int): String = {
+      val cps = Array.fill(1 + rnd.nextInt(10)) {
+        var cp = lo + rnd.nextInt(hi - lo)
+        while (cp >= 0xd800 && cp <= 0xdfff) cp = lo + rnd.nextInt(hi - lo)
+        cp
+      }
+      new String(cps, 0, cps.length)
+    }
+    def utf8(x: String): Array[Byte] = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    val wellFormed = Seq("\u0000", "\u007f", "a\u0000b\u007f", "") ++
+      Seq.fill(40)(codePoints(0, 0x80)) ++ Seq.fill(20)(codePoints(0x80, 0x800)) ++
+      Seq.fill(20)(codePoints(0x800, 0x10000)) ++ Seq.fill(20)(codePoints(0x10000, 0x110000)) ++
+      Seq.fill(20)(codePoints(0, 0x80) + codePoints(0x80, 0x110000) + codePoints(0, 0x80))
+    val malformed = Seq(bytes(0x80), bytes(0x61, 0xbf, 0x62), bytes(0xe4, 0xb8),
+      bytes(0x6b, 0x65, 0x79, 0xf0, 0x9f, 0x98), bytes(0xc3), bytes(0xff, 0x41)) ++
+      Seq.fill(10)(utf8(codePoints(0, 0x80)) :+ (0x80 + rnd.nextInt(0x40)).toByte)
+    wellFormed.map(utf8) ++ malformed
+  }
+  private def asString(b: Array[Byte]): String = UTF8String.fromBytes(b).toString
+  // every other differential key is added, so the differential sees hits and misses
+  private val diffMembers = diffKeys.zipWithIndex.collect { case (b, i) if i % 2 == 0 => asString(b) }
 
   private val bloom = BloomFilter.empty(2000, 0.01)
   private val cms = CountMinSketch.empty(512, 5)
@@ -30,7 +62,7 @@ class SketchProbeSpec extends AnyFunSuite {
   private val cuckoo = new CuckooFilter(2000, 4, 500, 2, true, 32)
   private val qf = QuotientFilter(12, autoExpand = true)
   private val ebf = ExpandingBloomFilter(200, 0.01)
-  members.zipWithIndex.foreach { case (k, i) =>
+  (members ++ diffMembers).zipWithIndex.foreach { case (k, i) =>
     bloom.add(k); cms.add(k, i % 7 + 1L); cbf.add(k, i % 3 + 1L); ccf.add(k)
     cuckoo.add(k); qf.add(k); ebf.add(k, force = true)
   }
@@ -84,26 +116,35 @@ class SketchProbeSpec extends AnyFunSuite {
       assert(memberRows.forall(_.getBoolean(i)), n)
     }
 
-    val helper = new AdaptiveSparkPlanHelper {}
     val plan = df.queryExecution.executedPlan
     assert(PlanUdfs.scalaUdfs(df).isEmpty, plan.toString)
+    assert(codegenedProbes(df).sorted == Seq("bloom_might_contain", "cbf_count", "ccf_count",
+      "cms_count", "cms_count", "cms_count", "cuckoo_contains", "ebf_contains", "qf_contains"),
+      plan.toString)
+    // the generated Java passes the key's UTF8String itself to
+    // SketchProbes.check with each sketch's concrete class: no probe key
+    // goes through toString()
+    val code = org.apache.spark.sql.execution.debug.codegenString(plan)
+    val sketchRef = "references\\[\\d+\\] /\\* \\w+ \\*/\\)"
+    Seq(classOf[BloomFilter] -> 1, classOf[CountingBloomFilter] -> 1,
+        classOf[CountingCuckooFilter] -> 1, classOf[CuckooFilter] -> 1, classOf[QuotientFilter] -> 1,
+        classOf[ExpandingBloomFilter] -> 1, classOf[CountMinSketch] -> 3).foreach { case (c, n) =>
+      val call = "graft\\.spark\\.fns\\.SketchProbes\\.check\\(" +
+        s"\\(\\(${java.util.regex.Pattern.quote(c.getName)}\\) $sketchRef, \\w+\\)"
+      assert(call.r.findAllIn(code).length == n, s"${c.getName}:\n$code")
+    }
+    assert(s"$sketchRef[.,][^;]*\\.toString\\(\\)".r.findFirstIn(code).isEmpty, code)
+  }
+
+  /** prettyNames of the sketch probes that run inside WholeStageCodegen. */
+  private def codegenedProbes(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     def inStage(p: SparkPlan): Seq[Expression] = p match {
       case _: InputAdapter => Nil
       case other => other.expressions ++ other.children.flatMap(inStage)
     }
-    val codegened = helper.collect(plan) { case w: WholeStageCodegenExec => inStage(w.child) }
-      .flatten.flatMap(_.collect { case e: SketchProbeExpr => e.prettyName })
-    assert(codegened.sorted == Seq("bloom_might_contain", "cbf_count", "ccf_count", "cms_count",
-      "cms_count", "cms_count", "cuckoo_contains", "ebf_contains", "qf_contains"), plan.toString)
-    // the generated Java calls check(String) on each sketch's concrete class
-    val code = org.apache.spark.sql.execution.debug.codegenString(plan)
-    Seq(classOf[BloomFilter] -> 1, classOf[CountingBloomFilter] -> 1,
-        classOf[CountingCuckooFilter] -> 1, classOf[CuckooFilter] -> 1, classOf[QuotientFilter] -> 1,
-        classOf[ExpandingBloomFilter] -> 1, classOf[CountMinSketch] -> 3).foreach { case (c, n) =>
-      val call = s"\\(\\(${java.util.regex.Pattern.quote(c.getName)}\\) references\\[\\d+\\] " +
-        "/\\* \\w+ \\*/\\)\\.check\\("
-      assert(call.r.findAllIn(code).length == n, s"${c.getName}:\n$code")
-    }
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => inStage(w.child)
+    }.flatten.flatMap(_.collect { case e: SketchProbeExpr => e.prettyName })
   }
 
   /** Java serialization round trip, as a plan outside codegen ships. */
@@ -126,5 +167,59 @@ class SketchProbeSpec extends AnyFunSuite {
       exprs.foreach { case (n, e, core) => assert(e.eval(row) == core(k), s"$n at $k") }
     }
     exprs.foreach { case (n, e, _) => assert(e.eval(InternalRow(null)) == null, n) }
+  }
+
+  /** Bloom, CMS and counting-Bloom sketches under the chained md5 hasher
+    * hold the differential members; their probes always take the
+    * `check(key.toString)` fallback. */
+  private def md5Probes(key: Column): Seq[(String, Column, String => Any)] = {
+    val bloomMd5 = BloomFilter.empty(500, 0.01, Hashers.md5)
+    val cmsMd5 = CountMinSketch.empty(256, 4, CmsQueryType.Min, Hashers.md5)
+    val cbfMd5 = CountingBloomFilter.empty(500, 0.01, Hashers.md5)
+    diffMembers.zipWithIndex.foreach { case (k, i) =>
+      bloomMd5.add(k); cmsMd5.add(k, i + 1L); cbfMd5.add(k, 2L)
+    }
+    val e = org.apache.spark.sql.GraftColumnBridge.expression(key)
+    def column(x: Expression): Column = org.apache.spark.sql.GraftColumnBridge.column(x)
+    Seq[(String, Column, String => Any)](
+      ("bloom md5", column(BloomMightContainExpr(e, bloomMd5)), bloomMd5.check(_: String)),
+      ("cms md5", column(CmsCountExpr(e, cmsMd5)), cmsMd5.check(_: String)),
+      ("cbf md5", column(CbfCountExpr(e, cbfMd5)), cbfMd5.check(_: String)))
+  }
+
+  test("differential: codegen'd probes == core check(key.toString) on ASCII, multi-byte and malformed UTF-8") {
+    val rows = spark.createDataFrame(diffKeys.map(Tuple1(_))).toDF("b").repartition(3)
+    val key = col("b").cast("string") // cast keeps malformed bytes as they are
+    val ps = probes(key) ++ md5Probes(key)
+    val df = rows.select(col("b") +: ps.map { case (n, c, _) => c.as(n) }: _*)
+    val out = df.collect()
+    assert(codegenedProbes(df).length == ps.length, df.queryExecution.executedPlan.toString)
+    assert(out.length == diffKeys.length)
+    out.foreach { r =>
+      val k = asString(r.getAs[Array[Byte]](0))
+      ps.zipWithIndex.foreach { case ((n, _, core), i) =>
+        assert(r.get(i + 1) == core(k), s"$n at ${r.getAs[Array[Byte]](0).mkString(",")}")
+      }
+    }
+    // the members hit: each membership probe answers true for every member
+    val hit = out.filter(r => diffMembers.contains(asString(r.getAs[Array[Byte]](0))))
+    assert(hit.length >= diffMembers.distinct.length)
+    Seq("bloom", "cuckoo", "qf", "ebf", "bloom md5").foreach { n =>
+      val i = ps.indexWhere(_._1 == n) + 1
+      assert(hit.forall(_.getBoolean(i)), n)
+    }
+  }
+
+  test("differential: interpreted probes == core check(key.toString) on ASCII, multi-byte and malformed UTF-8") {
+    val key = BoundReference(0, StringType, nullable = true)
+    val exprs = (probes(col("k")) ++ md5Probes(col("k"))).map { case (n, c, core) =>
+      (n, org.apache.spark.sql.GraftColumnBridge.expression(c).withNewChildren(Seq(key)), core)
+    }
+    diffKeys.foreach { b =>
+      val row = InternalRow(UTF8String.fromBytes(b))
+      exprs.foreach { case (n, e, core) =>
+        assert(e.eval(row) == core(asString(b)), s"$n at ${b.mkString(",")}")
+      }
+    }
   }
 }

@@ -115,8 +115,10 @@ class NativeExprSpec extends AnyFunSuite {
   import graft.spark.fns.SketchExpressions._
 
   test("fnv1a64Native matches the kernel and rides WholeStageCodegen") {
+    // ASCII keys take the byte fold, non-ASCII keys the code-point fold
     val df = spark.range(0, 100, 1, 2)
-      .select(concat(lit("key-"), col("id")).as("k"))
+      .select(concat(when(col("id") % 2 === 0, lit("key-")).otherwise(lit("ключ-键-")), col("id"))
+        .as("k"))
       .select(col("k"), fnv1a64Native(col("k")).as("h"))
     df.collect().foreach { r =>
       assert(r.getLong(1) == graft.hash.Fnv.fnv1a64(r.getString(0), 0))
