@@ -43,8 +43,9 @@ final class SplitMix64(seed: Long) extends Serializable {
   * Storage is one flat primitive slot array: bucket `i` holds its
   * fingerprints, in insertion order, at `slots[i*bucketSize, i*bucketSize +
   * fill(i))`, and every slot past `fill(i)` is 0 — which is the zero-padded
-  * export. Probe expressions ship the deserialized filter inside each task
-  * binary, so its Java-serialized form must stay close to the export size.
+  * export. A probe expression broadcasts the deserialized filter, which
+  * each executor fetches and deserializes once, so its Java-serialized form
+  * must stay close to the export size.
   *
   * The reference has no merge; [[mergeFrom]] is the documented extension that
   * re-inserts every fingerprint of `second` (the same mechanism the
@@ -64,6 +65,7 @@ final class CuckooFilter(
 
   private var slots: Array[Int] = new Array[Int](capacity * bucketSize)
   private var fill: Array[Int] = new Array[Int](capacity)
+  private var mask: Int = CuckooFilter.maskOf(capacity)
   var insertedElements: Int = 0
   private val rng = new SplitMix64(0x5ca1ab1e5eedL)
   // the fingerprint a failed insertFingerprint left without a slot
@@ -91,8 +93,8 @@ final class CuckooFilter(
 
   def indicesFromFingerprint(fp: Int): (Int, Int) = (index1(fp), index2(fp))
 
-  private def index1(fp: Int): Int = ((fp & 0xffffffffL) % capacity).toInt
-  private def index2(fp: Int): Int = CuckooFilter.altIndex(fp, capacity)
+  private def index1(fp: Int): Int = CuckooFilter.index1(fp, capacity, mask)
+  private def index2(fp: Int): Int = CuckooFilter.altIndex(fp, capacity, mask)
 
   def add(key: String): Unit = addFingerprint(fingerprint(key))
 
@@ -178,6 +180,7 @@ final class CuckooFilter(
     val oldFill = fill
     val oldCapacity = capacity
     capacity = capacity * expansionRate
+    mask = CuckooFilter.maskOf(capacity)
     slots = new Array[Int](capacity * bucketSize)
     fill = new Array[Int](capacity)
     insertedElements = 0
@@ -230,11 +233,21 @@ object CuckooFilter {
     math.ceil(math.log(1.0 / errorRate) / math.log(2.0) +
       math.log(bucketSize.toDouble) / math.log(2.0) + 1).toInt
 
+  /** `capacity - 1` when the capacity is a power of two, so that an index
+    * `mod capacity` is a mask instead of a 64-bit division; -1 otherwise. */
+  private[core] def maskOf(capacity: Int): Int =
+    if (Integer.bitCount(capacity) == 1) capacity - 1 else -1
+
+  /** idx1 of both cuckoo filters: the unsigned fingerprint mod `capacity`;
+    * `mask` is [[maskOf]]`(capacity)`. */
+  private[core] def index1(fp: Int, capacity: Int, mask: Int): Int =
+    if (mask >= 0) fp & mask else ((fp & 0xffffffffL) % capacity).toInt
+
   /** idx2 of both cuckoo filters: fnv-1a-64 (seed 0) of the unsigned
-    * fingerprint's decimal string, mod `capacity` (cuckoo.py:483-490). The
-    * digits are folded most-significant first straight from the number, so
-    * a probe builds no string. */
-  private[core] def altIndex(fp: Int, capacity: Int): Int = {
+    * fingerprint's decimal string, mod `capacity` (cuckoo.py:483-490); `mask`
+    * is [[maskOf]]`(capacity)`. The digits are folded most-significant first
+    * straight from the number, so a probe builds no string. */
+  private[core] def altIndex(fp: Int, capacity: Int, mask: Int): Int = {
     var v = fp & 0xffffffffL
     // at most 10 decimal digits, one per nibble, least-significant digit highest
     var digits = 0L
@@ -251,7 +264,7 @@ object CuckooFilter {
       digits >>>= 4
       n -= 1
     }
-    java.lang.Long.remainderUnsigned(h, capacity.toLong).toInt
+    if (mask >= 0) (h & mask).toInt else java.lang.Long.remainderUnsigned(h, capacity.toLong).toInt
   }
 
   def withErrorRate(errorRate: Double, capacity: Int = 10000, bucketSize: Int = 4,
@@ -301,6 +314,7 @@ final class CountingCuckooFilter(
   // slots[i*bucketSize, i*bucketSize + fill(i)), 0L past fill(i)
   private var slots: Array[Long] = new Array[Long](capacity * bucketSize)
   private var fill: Array[Int] = new Array[Int](capacity)
+  private var mask: Int = CuckooFilter.maskOf(capacity)
   var insertedElements: Long = 0
   var uniqueElements: Int = 0
   private val rng = new SplitMix64(0xc01dc0ffeeL)
@@ -325,8 +339,8 @@ final class CountingCuckooFilter(
 
   def indicesFromFingerprint(fp: Int): (Int, Int) = (index1(fp), index2(fp))
 
-  private def index1(fp: Int): Int = ((fp & 0xffffffffL) % capacity).toInt
-  private def index2(fp: Int): Int = CuckooFilter.altIndex(fp, capacity)
+  private def index1(fp: Int): Int = CuckooFilter.index1(fp, capacity, mask)
+  private def index2(fp: Int): Int = CuckooFilter.altIndex(fp, capacity, mask)
 
   /** Slot of the bin for `fp` in bucket `idx`, or -1. */
   private def findSlot(idx: Int, fp: Int): Int = {
@@ -476,6 +490,7 @@ final class CountingCuckooFilter(
     val oldFill = fill
     val oldCapacity = capacity
     capacity = capacity * expansionRate
+    mask = CuckooFilter.maskOf(capacity)
     slots = new Array[Long](capacity * bucketSize)
     fill = new Array[Int](capacity)
     insertedElements = 0

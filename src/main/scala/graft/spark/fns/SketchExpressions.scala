@@ -1,6 +1,9 @@
 package graft.spark.fns
 
-import org.apache.spark.sql.Column
+import scala.reflect.ClassTag
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftColumnBridge
@@ -41,137 +44,172 @@ case class Fnv1a64Expr(child: Expression, seed: Int)
 /** Per-key probe of a FIXED sketch: the Spark-native analogue of the
   * reference's `check(key)` over an in-process structure, mirroring Spark's
   * own `BloomFilterMightContain` but with the reference-compatible layouts
-  * and hashing. The deserialized sketch rides the plan as a codegen
-  * reference object: `addReferenceObj` puts it into the stage's task binary,
-  * and every task deserializes its own copy, so a sketch's Java-serialized
-  * size is a per-task cost (sketch state is kept in flat primitive arrays for
-  * that reason). The generated code passes the key's `UTF8String` to
-  * [[SketchProbes]]`.check` with the sketch's concrete class. A null key
-  * probes to null. */
-abstract class SketchProbeExpr extends UnaryExpression {
-  def sketch: AnyRef
+  * and hashing. The sketch rides the plan as a broadcast handle (SURVEY.md
+  * §4.3: "a scalar expression over a broadcast sketch"): the `*Native`
+  * helpers broadcast the deserialized sketch once, a task binary carries
+  * only the handle, and every task of an executor probes the one copy the
+  * executor fetched. The generated code reads the broadcast's value into a
+  * typed field at class init and passes it, the row's shared [[KeyFold]]
+  * and the key's `UTF8String` to [[SketchProbes]]`.check`. A plan string
+  * names the sketch by its broadcast (`Broadcast(<id>)`), never through the
+  * sketch's own `toString`, which may walk all its state. A null key probes
+  * to null. */
+abstract class SketchProbeExpr[S <: AnyRef] extends UnaryExpression {
+  def sketch: Broadcast[S]
+
+  /** The type of the generated sketch field; it picks the `check` overload. */
+  protected def sketchClass: Class[S]
+
+  @transient protected lazy val value: S = sketch.value
 
   /** The interpreted probe; the generated code makes the same call. */
-  protected def check(key: UTF8String): Any
+  protected def check(fold: KeyFold, key: UTF8String): Any
 
   override def nullIntolerant: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any = check(input.asInstanceOf[UTF8String])
+  override protected def nullSafeEval(input: Any): Any =
+    check(KeyFold.local, input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj(prettyName, sketch, sketch.getClass.getName)
-    defineCodeGen(ctx, ev, c => s"graft.spark.fns.SketchProbes.check($ref, $c)")
+    val cls = sketchClass.getName
+    val bc = ctx.addReferenceObj(prettyName, sketch, classOf[Broadcast[_]].getName)
+    val field = ctx.addMutableState(cls, prettyName, v => s"$v = ($cls) $bc.value();",
+      forceInline = true)
+    ctx.addImmutableStateIfNotExists(classOf[KeyFold].getName, SketchProbeExpr.Fold,
+      v => s"$v = new ${classOf[KeyFold].getName}();")
+    defineCodeGen(ctx, ev,
+      c => s"graft.spark.fns.SketchProbes.check($field, ${SketchProbeExpr.Fold}, $c)")
   }
+}
+
+object SketchProbeExpr {
+  /** The generated field holding the fold that a generated class's probes share. */
+  val Fold = "graftKeyFold"
 }
 
 /** The UTF-8 entry point of the seven sketch probes, one `check` per
   * concrete sketch class, each equal to the sketch's `check(key.toString)`.
-  * An all-ASCII key under the default fnv-1a hasher is hashed off its bytes
-  * ([[Utf8Fnv]]) and checked at the hash level; a key with any non-ASCII
-  * byte, or a sketch with a chained md5/sha256 hasher, takes
+  * An all-ASCII key under the default fnv-1a hasher takes its hashes from
+  * the row's [[KeyFold]] and is checked at the hash level; a key with any
+  * non-ASCII byte, or a sketch with a chained md5/sha256 hasher, takes
   * `check(key.toString)`. */
 object SketchProbes {
-  private def fnvAscii(hasher: KeyHasher, key: UTF8String): Boolean =
-    (hasher eq Fnv1aHasher) && key.isFullAscii
+  private def fnvAscii(hasher: KeyHasher, fold: KeyFold, key: UTF8String): Boolean =
+    (hasher eq Fnv1aHasher) && fold.of(key)
 
   /** Seed by seed with early exit on the first clear bit: a non-member of a
-    * sparse filter costs one fold; past seed 0, the remaining seeds share
-    * their passes over the key. */
-  def check(b: BloomFilter, key: UTF8String): Boolean =
-    if (fnvAscii(b.hasher, key)) {
-      b.bitSet(Utf8Fnv.fnv1a64(key, 0)) && (b.numHashes == 1 || {
-        val hs = new Array[Long](b.numHashes)
-        Utf8Fnv.fnv1a64Seeds(key, hs, 1)
-        var i = 1
-        while (i < hs.length && b.bitSet(hs(i))) i += 1
-        i == hs.length
-      })
+    * sparse filter usually needs only the seeds the fold already holds. */
+  def check(b: BloomFilter, fold: KeyFold, key: UTF8String): Boolean =
+    if (fnvAscii(b.hasher, fold, key)) {
+      var i = 0
+      while (i < b.numHashes && b.bitSet(fold.seed(i))) i += 1
+      i == b.numHashes
     } else b.check(key.toString)
 
-  def check(c: CountMinSketch, key: UTF8String): Long =
-    if (fnvAscii(c.hasher, key)) c.checkHashes(Utf8Fnv.asciiHashes(key, c.depth))
+  def check(c: CountMinSketch, fold: KeyFold, key: UTF8String): Long =
+    if (fnvAscii(c.hasher, fold, key)) c.checkHashes(fold.hashes(c.depth))
     else c.check(key.toString)
 
-  def check(c: CountingBloomFilter, key: UTF8String): Long =
-    if (fnvAscii(c.hasher, key)) c.checkHashes(Utf8Fnv.asciiHashes(key, c.numHashes))
+  def check(c: CountingBloomFilter, fold: KeyFold, key: UTF8String): Long =
+    if (fnvAscii(c.hasher, fold, key)) c.checkHashes(fold.hashes(c.numHashes))
     else c.check(key.toString)
 
-  def check(e: ExpandingBloomFilter, key: UTF8String): Boolean =
-    if (fnvAscii(e.hasher, key)) e.checkHashes(Utf8Fnv.asciiHashes(key, e.blooms.head.numHashes))
+  def check(e: ExpandingBloomFilter, fold: KeyFold, key: UTF8String): Boolean =
+    if (fnvAscii(e.hasher, fold, key)) e.checkHashes(fold.hashes(e.blooms.head.numHashes))
     else e.check(key.toString)
 
-  def check(q: QuotientFilter, key: UTF8String): Boolean =
-    if (key.isFullAscii) q.checkHash(Utf8Fnv.fnv1a32(key, 0) & 0xffffffffL)
+  def check(q: QuotientFilter, fold: KeyFold, key: UTF8String): Boolean =
+    if (fold.of(key)) q.checkHash(fold.fnv32 & 0xffffffffL)
     else q.check(key.toString)
 
-  def check(c: CuckooFilter, key: UTF8String): Boolean =
-    if (key.isFullAscii) c.checkFingerprint(c.fingerprintOf(Utf8Fnv.fnv1a64(key, 0)))
+  def check(c: CuckooFilter, fold: KeyFold, key: UTF8String): Boolean =
+    if (fold.of(key)) c.checkFingerprint(c.fingerprintOf(fold.seed(0)))
     else c.check(key.toString)
 
-  def check(c: CountingCuckooFilter, key: UTF8String): Long =
-    if (key.isFullAscii) c.checkFingerprint(c.fingerprintOf(Utf8Fnv.fnv1a64(key, 0)))
+  def check(c: CountingCuckooFilter, fold: KeyFold, key: UTF8String): Long =
+    if (fold.of(key)) c.checkFingerprint(c.fingerprintOf(fold.seed(0)))
     else c.check(key.toString)
 }
 
 /** Bloom filter membership. */
-case class BloomMightContainExpr(child: Expression, sketch: BloomFilter) extends SketchProbeExpr {
+case class BloomMightContainExpr(child: Expression, sketch: Broadcast[BloomFilter])
+    extends SketchProbeExpr[BloomFilter] {
   override def dataType: DataType = BooleanType
-  override protected def check(key: UTF8String): Any = SketchProbes.check(sketch, key)
+  override protected def sketchClass: Class[BloomFilter] = classOf[BloomFilter]
+  override protected def check(fold: KeyFold, key: UTF8String): Any =
+    SketchProbes.check(value, fold, key)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "bloom_might_contain"
 }
 
 /** Count-Min point count, in the query mode the sketch was loaded with. */
-case class CmsCountExpr(child: Expression, sketch: CountMinSketch) extends SketchProbeExpr {
+case class CmsCountExpr(child: Expression, sketch: Broadcast[CountMinSketch])
+    extends SketchProbeExpr[CountMinSketch] {
   override def dataType: DataType = LongType
-  override protected def check(key: UTF8String): Any = SketchProbes.check(sketch, key)
+  override protected def sketchClass: Class[CountMinSketch] = classOf[CountMinSketch]
+  override protected def check(fold: KeyFold, key: UTF8String): Any =
+    SketchProbes.check(value, fold, key)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "cms_count"
 }
 
 /** Counting Bloom filter min count. */
-case class CbfCountExpr(child: Expression, sketch: CountingBloomFilter) extends SketchProbeExpr {
+case class CbfCountExpr(child: Expression, sketch: Broadcast[CountingBloomFilter])
+    extends SketchProbeExpr[CountingBloomFilter] {
   override def dataType: DataType = LongType
-  override protected def check(key: UTF8String): Any = SketchProbes.check(sketch, key)
+  override protected def sketchClass: Class[CountingBloomFilter] = classOf[CountingBloomFilter]
+  override protected def check(fold: KeyFold, key: UTF8String): Any =
+    SketchProbes.check(value, fold, key)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "cbf_count"
 }
 
 /** Counting cuckoo filter count. */
-case class CcfCountExpr(child: Expression, sketch: CountingCuckooFilter) extends SketchProbeExpr {
+case class CcfCountExpr(child: Expression, sketch: Broadcast[CountingCuckooFilter])
+    extends SketchProbeExpr[CountingCuckooFilter] {
   override def dataType: DataType = LongType
-  override protected def check(key: UTF8String): Any = SketchProbes.check(sketch, key)
+  override protected def sketchClass: Class[CountingCuckooFilter] = classOf[CountingCuckooFilter]
+  override protected def check(fold: KeyFold, key: UTF8String): Any =
+    SketchProbes.check(value, fold, key)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "ccf_count"
 }
 
 /** Cuckoo filter membership. */
-case class CuckooContainsExpr(child: Expression, sketch: CuckooFilter) extends SketchProbeExpr {
+case class CuckooContainsExpr(child: Expression, sketch: Broadcast[CuckooFilter])
+    extends SketchProbeExpr[CuckooFilter] {
   override def dataType: DataType = BooleanType
-  override protected def check(key: UTF8String): Any = SketchProbes.check(sketch, key)
+  override protected def sketchClass: Class[CuckooFilter] = classOf[CuckooFilter]
+  override protected def check(fold: KeyFold, key: UTF8String): Any =
+    SketchProbes.check(value, fold, key)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "cuckoo_contains"
 }
 
 /** Quotient filter membership. */
-case class QfContainsExpr(child: Expression, sketch: QuotientFilter) extends SketchProbeExpr {
+case class QfContainsExpr(child: Expression, sketch: Broadcast[QuotientFilter])
+    extends SketchProbeExpr[QuotientFilter] {
   override def dataType: DataType = BooleanType
-  override protected def check(key: UTF8String): Any = SketchProbes.check(sketch, key)
+  override protected def sketchClass: Class[QuotientFilter] = classOf[QuotientFilter]
+  override protected def check(fold: KeyFold, key: UTF8String): Any =
+    SketchProbes.check(value, fold, key)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "qf_contains"
 }
 
 /** Expanding Bloom filter membership. */
-case class EbfContainsExpr(child: Expression, sketch: ExpandingBloomFilter)
-    extends SketchProbeExpr {
+case class EbfContainsExpr(child: Expression, sketch: Broadcast[ExpandingBloomFilter])
+    extends SketchProbeExpr[ExpandingBloomFilter] {
   override def dataType: DataType = BooleanType
-  override protected def check(key: UTF8String): Any = SketchProbes.check(sketch, key)
+  override protected def sketchClass: Class[ExpandingBloomFilter] = classOf[ExpandingBloomFilter]
+  override protected def check(fold: KeyFold, key: UTF8String): Any =
+    SketchProbes.check(value, fold, key)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "ebf_contains"
@@ -181,39 +219,43 @@ object SketchExpressions {
   private def expr(c: Column): Expression = GraftColumnBridge.expression(c)
   private def column(e: Expression): Column = GraftColumnBridge.column(e)
 
+  /** Broadcasts a probe's sketch once, from the active session. */
+  private[fns] def broadcast[S: ClassTag](sketch: S): Broadcast[S] =
+    SparkSession.active.sparkContext.broadcast(sketch)
+
   /** Codegen'd fnv-1a-64 column. */
   def fnv1a64Native(c: Column, seed: Int = 0): Column = column(Fnv1a64Expr(expr(c), seed))
 
   /** Codegen'd Bloom probe over serialized reference-format bytes. */
   def bloomMightContainNative(bloomBytes: Array[Byte], key: Column): Column =
-    column(BloomMightContainExpr(expr(key), BloomFilter.fromBytes(bloomBytes)))
+    column(BloomMightContainExpr(expr(key), broadcast(BloomFilter.fromBytes(bloomBytes))))
 
   /** Codegen'd CMS point-count probe in the given query mode (Min is the
     * Count-Min sketch; Mean and MeanMin the reference's CountMeanSketch and
     * CountMeanMinSketch over the same grid). */
   def cmsCountNative(cmsBytes: Array[Byte], key: Column,
                      mode: CmsQueryType = CmsQueryType.Min): Column =
-    column(CmsCountExpr(expr(key), CountMinSketch.fromBytes(cmsBytes, mode)))
+    column(CmsCountExpr(expr(key), broadcast(CountMinSketch.fromBytes(cmsBytes, mode))))
 
   /** Codegen'd counting-Bloom min-count probe. */
   def cbfCountNative(cbfBytes: Array[Byte], key: Column): Column =
-    column(CbfCountExpr(expr(key), CountingBloomFilter.fromBytes(cbfBytes)))
+    column(CbfCountExpr(expr(key), broadcast(CountingBloomFilter.fromBytes(cbfBytes))))
 
   /** Codegen'd counting-cuckoo count probe. */
   def ccfCountNative(bytes: Array[Byte], fingerprintBits: Int, key: Column): Column =
     column(CcfCountExpr(expr(key),
-      CountingCuckooFilter.fromBytes(bytes, fingerprintBits = fingerprintBits)))
+      broadcast(CountingCuckooFilter.fromBytes(bytes, fingerprintBits = fingerprintBits))))
 
   /** Codegen'd cuckoo membership probe. */
   def cuckooContainsNative(bytes: Array[Byte], fingerprintBits: Int, key: Column): Column =
     column(CuckooContainsExpr(expr(key),
-      CuckooFilter.fromBytes(bytes, fingerprintBits = fingerprintBits)))
+      broadcast(CuckooFilter.fromBytes(bytes, fingerprintBits = fingerprintBits))))
 
   /** Codegen'd quotient-filter membership probe. */
   def qfContainsNative(bytes: Array[Byte], key: Column): Column =
-    column(QfContainsExpr(expr(key), QuotientFilter.fromBytes(bytes)))
+    column(QfContainsExpr(expr(key), broadcast(QuotientFilter.fromBytes(bytes))))
 
   /** Codegen'd expanding-Bloom membership probe. */
   def ebfContainsNative(bytes: Array[Byte], key: Column): Column =
-    column(EbfContainsExpr(expr(key), ExpandingBloomFilter.fromBytes(bytes)))
+    column(EbfContainsExpr(expr(key), broadcast(ExpandingBloomFilter.fromBytes(bytes))))
 }

@@ -500,20 +500,29 @@ case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
 }
 
 /** Codegen'd fused shingle -> Bloom-filter probe of a string column (the
-  * decontamination prune; the filter rides the plan as a shared reference
-  * object, like [[graft.spark.fns.BloomMightContainExpr]]). */
-case class BloomShingleHitExpr(child: Expression, n: Int, filter: graft.core.BloomFilter)
+  * decontamination prune). The filter rides the plan as a broadcast handle,
+  * like the sketch probes ([[graft.spark.fns.SketchProbeExpr]]): codegen
+  * reads its value into a typed field at class init, and the plan string
+  * names the broadcast, not the filter. */
+case class BloomShingleHitExpr(child: Expression, n: Int,
+                               filter: org.apache.spark.broadcast.Broadcast[graft.core.BloomFilter])
     extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
   override def nullIntolerant: Boolean = true
 
+  @transient private lazy val bloom: graft.core.BloomFilter = filter.value
+
   override protected def nullSafeEval(input: Any): Any =
-    TextKernels.shingleAnyInBloom(input.asInstanceOf[UTF8String], n, filter)
+    TextKernels.shingleAnyInBloom(input.asInstanceOf[UTF8String], n, bloom)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftDecontBloom", filter,
-      classOf[graft.core.BloomFilter].getName)
-    defineCodeGen(ctx, ev, c => s"graft.spark.fns.TextKernels.shingleAnyInBloom($c, $n, $ref)")
+    val cls = classOf[graft.core.BloomFilter].getName
+    val bcRef = ctx.addReferenceObj("graftDecontBloomBc", filter,
+      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
+    val bloomRef = ctx.addMutableState(cls, "graftDecontBloom",
+      v => s"$v = ($cls) $bcRef.value();", forceInline = true)
+    defineCodeGen(ctx, ev,
+      c => s"graft.spark.fns.TextKernels.shingleAnyInBloom($c, $n, $bloomRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -887,10 +896,27 @@ case class CjkSegmentExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "cjk_segment"
 }
 
+/** Codegen'd CJK-word predicate: non-empty and all CJK letters
+  * ([[graft.spark.text.CjkSegment.isCjkWord]], over the UTF-8 bytes). */
+case class CjkWordExpr(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+  override def nullIntolerant: Boolean = true
+
+  override protected def nullSafeEval(input: Any): Any =
+    graft.spark.text.CjkSegment.isCjkWord(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.spark.text.CjkSegment.isCjkWord($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "is_cjk_word"
+}
+
 /** Codegen'd true-BPE merged-token count: pre-tokenize + run the learned
   * merge loop per pre-token, sum piece counts. The tokenizer (merge ranks)
-  * rides the plan as a shared per-executor reference object — the same
-  * broadcast-small-model shape as the sketch probes. */
+  * rides the plan as a codegen reference object, so each task deserializes
+  * its own copy of the small table. */
 case class BpeCountExpr(child: Expression, bpe: graft.spark.text.BpeTokenizer)
     extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -986,9 +1012,11 @@ object TextExpressions {
     GraftColumnBridge.column(
       DsirBucketWeightExpr(GraftColumnBridge.expression(c), table))
 
+  /** Codegen'd "any `n`-token shingle of the text may be in the Bloom
+    * filter" over reference-format bytes; the filter is broadcast once. */
   def bloomShingleHitNative(bloomBytes: Array[Byte], n: Int, text: Column): Column =
     GraftColumnBridge.column(BloomShingleHitExpr(GraftColumnBridge.expression(text), n,
-      graft.core.BloomFilter.fromBytes(bloomBytes)))
+      SketchExpressions.broadcast(graft.core.BloomFilter.fromBytes(bloomBytes))))
 
   /** Codegen'd merged-BPE token count under the given tokenizer (defaults to
     * the deterministic [[graft.spark.text.BpeTokenizer.standard]] table). */
@@ -1023,6 +1051,10 @@ object TextExpressions {
     * the preprocessing that makes whitespace-tokenized operators CJK-aware. */
   def cjkSegmentNative(c: Column): Column =
     GraftColumnBridge.column(CjkSegmentExpr(GraftColumnBridge.expression(c)))
+
+  /** Codegen'd predicate: the word is non-empty and all CJK letters. */
+  def cjkWordNative(c: Column): Column =
+    GraftColumnBridge.column(CjkWordExpr(GraftColumnBridge.expression(c)))
 
   /** Codegen'd URL canonicalization. */
   def urlCanonicalizeNative(c: Column): Column =

@@ -92,6 +92,27 @@ object CjkSegment extends Serializable {
       (c >= 0x3040 && c <= 0x309F) || // Hiragana
       (c >= 0x30A0 && c <= 0x30FF) // Katakana
 
+  /** Whether `w`, decoded, is non-empty and all CJK letters: `w.toString`'s
+    * chars all pass [[isCjkLetter]]. Every CJK letter is a BMP code point in
+    * U+3040..U+9FFF, a 3-byte UTF-8 sequence led by 0xE3..0xE9, where no
+    * overlong or surrogate encoding exists; any other byte sequence,
+    * malformed UTF-8 included, decodes to at least one char outside the
+    * letter ranges. So the word is walked in 3-byte steps, with no String. */
+  def isCjkWord(w: org.apache.spark.unsafe.types.UTF8String): Boolean = {
+    val n = w.numBytes()
+    if (n == 0 || n % 3 != 0) return false
+    var i = 0
+    while (i < n) {
+      val b0 = w.getByte(i) & 0xff
+      val b1 = w.getByte(i + 1) & 0xff
+      val b2 = w.getByte(i + 2) & 0xff
+      if (b0 < 0xe3 || b0 > 0xe9 || (b1 & 0xc0) != 0x80 || (b2 & 0xc0) != 0x80) return false
+      if (!isCjkLetter((((b0 & 0x0f) << 12) | ((b1 & 0x3f) << 6) | (b2 & 0x3f)).toChar)) return false
+      i += 3
+    }
+    true
+  }
+
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 

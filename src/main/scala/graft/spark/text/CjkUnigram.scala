@@ -123,10 +123,10 @@ object CjkUnigram {
             maxVocab: Int = 100000, alpha: Double = 0.5,
             maxWordLen: Int = 16): Model = {
     require(maxWordLen >= 1, s"maxWordLen must be >= 1, got $maxWordLen")
-    val isCjkWord = udf((w: String) => w.nonEmpty && w.forall(CjkSegment.isCjkLetter))
     val rows = df
       .select(explode(split(col(textCol), "\\s+")).as("w"))
-      .filter(col("w") =!= "" && length(col("w")) <= maxWordLen && isCjkWord(col("w")))
+      .filter(length(col("w")) <= maxWordLen &&
+        graft.spark.fns.TextExpressions.cjkWordNative(col("w")))
       .groupBy(col("w")).count()
       .filter(col("count") >= minCount)
       .orderBy(col("count").desc, col("w"))

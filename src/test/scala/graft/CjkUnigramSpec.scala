@@ -80,4 +80,51 @@ class CjkUnigramSpec extends AnyFunSuite {
     val a = model.segment("夏冬").toSeq
     assert(a == Seq("夏", "冬") && a == model.segment("夏冬").toSeq)
   }
+
+  test("is_cjk_word (codegen'd and interpreted) == the String rule on CJK, mixed, supplementary and malformed UTF-8") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(0x3040L)
+    def cp(lo: Int, hi: Int): Int = {
+      var c = lo + rnd.nextInt(hi - lo)
+      while (c >= 0xd800 && c <= 0xdfff) c -= 0x800
+      c
+    }
+    def str(cps: Seq[Int]): String = new String(cps.toArray, 0, cps.length)
+    // the letter ranges first, then their neighbours (CJK punctuation,
+    // Bopomofo, Yijing hexagrams, Yi), ASCII, 2-byte and supplementary Han
+    val pool = Seq((0x3040, 0x3100), (0x3400, 0x4dc0), (0x4e00, 0xa000), (0x3000, 0x3040),
+      (0x3100, 0x3400), (0x4dc0, 0x4e00), (0xa000, 0xa4d0), (0x20, 0x7f), (0x80, 0x800),
+      (0x20000, 0x2a6e0))
+    val words = Seq("", "中", "研究生", "ひらがな", "カタカナ", "中a", "a中", "、", "中。", "\ud840\udc00", "中\ud840\udc00") ++
+      Seq.fill(200) {
+        val n = 1 + rnd.nextInt(5)
+        val from = if (rnd.nextInt(3) == 0) pool.length else 3
+        str(Seq.fill(n)(pool(rnd.nextInt(from))).map { case (lo, hi) => cp(lo, hi) })
+      }
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    // malformed: cut short, bad continuation, stray continuation, overlong, surrogate
+    val keys = words.map(_.getBytes(utf8)) ++ Seq(bytes(0xe4, 0xb8), bytes(0xe4, 0xb8, 0x41),
+      bytes(0xe4, 0xb8, 0xad, 0xe4), bytes(0xe4, 0x41, 0xad), bytes(0xad, 0xe4, 0xb8),
+      bytes(0xe0, 0x81, 0x81), bytes(0xed, 0xa0, 0x80), bytes(0xe4, 0xb8, 0xad, 0xe5, 0x9b))
+    def rule(b: Array[Byte]): Boolean = {
+      val w = UTF8String.fromBytes(b).toString
+      w.nonEmpty && w.forall(CjkSegment.isCjkLetter)
+    }
+    assert(keys.count(rule) > 50 && keys.count(!rule(_)) > 50)
+    val e = graft.spark.fns.CjkWordExpr(BoundReference(0, StringType, nullable = true))
+    keys.foreach(b => assert(e.eval(InternalRow(UTF8String.fromBytes(b))) == rule(b), b.mkString(",")))
+    assert(e.eval(InternalRow(null)) == null)
+    val df = spark.createDataFrame(keys.map(Tuple1(_))).toDF("b").repartition(2)
+      .select(col("b"), graft.spark.fns.TextExpressions.cjkWordNative(col("b").cast("string")).as("w"))
+    val out = df.collect()
+    assert(out.length == keys.length && PlanUdfs.scalaUdfs(df).isEmpty)
+    out.foreach { r =>
+      assert(r.getBoolean(1) == rule(r.getAs[Array[Byte]](0)), r.getAs[Array[Byte]](0).mkString(","))
+    }
+  }
 }

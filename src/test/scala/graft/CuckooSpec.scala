@@ -51,6 +51,30 @@ class CuckooSpec extends AnyFunSuite {
     }
   }
 
+  test("bucket indices: the power-of-two mask equals the unsigned remainder, also after expand()") {
+    val rnd = new scala.util.Random(131072L)
+    val fps = Seq(0, 1, -1, Int.MinValue, Int.MaxValue, Int.MinValue + 1) ++ Seq.fill(3000)(rnd.nextInt())
+    assert(fps.count(_ < 0) > 1000)
+    // the reference: fp mod capacity, and fnv-1a-64 of the fingerprint's decimal string mod capacity
+    def reference(fp: Int, capacity: Int): (Int, Int) = {
+      val u = fp & 0xffffffffL
+      ((u % capacity).toInt,
+        java.lang.Long.remainderUnsigned(graft.hash.Fnv.fnv1a64(u.toString, 0), capacity.toLong).toInt)
+    }
+    Seq(1, 2, 1024, 1 << 17, 1000, 3, 65535).foreach { cap =>
+      val c = new CuckooFilter(cap, 4, 500, 2, true, 32)
+      val cc = new CountingCuckooFilter(cap, 4, 500, 2, true, 32)
+      Seq(cap, 2 * cap).foreach { expected =>
+        assert(c.capacity == expected && cc.capacity == expected)
+        fps.foreach { fp =>
+          assert(c.indicesFromFingerprint(fp) == reference(fp, expected), s"cuckoo capacity $expected, fp $fp")
+          assert(cc.indicesFromFingerprint(fp) == reference(fp, expected), s"counting capacity $expected, fp $fp")
+        }
+        if (expected == cap) { c.expand(); cc.expand() }
+      }
+    }
+  }
+
   test("bytes round trip") {
     val c = CuckooFilter()
     (0 until 500).foreach(i => c.add(i.toString))

@@ -22,7 +22,8 @@ import graft.spark.fns._
   * multi-byte and malformed UTF-8, the empty string) pins the byte-level
   * fast path and the `check(key.toString)` fallback to the same answers. */
 class SketchProbeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkTestSession.spark
+  // eager: the probe helpers broadcast their sketches from the active session
+  val spark: SparkSession = SparkTestSession.spark
 
   private val members = (0 until 300).flatMap(i => Seq(s"item-$i", s"ключ-$i-键"))
 
@@ -121,20 +122,29 @@ class SketchProbeSpec extends AnyFunSuite {
     assert(codegenedProbes(df).sorted == Seq("bloom_might_contain", "cbf_count", "ccf_count",
       "cms_count", "cms_count", "cms_count", "cuckoo_contains", "ebf_contains", "qf_contains"),
       plan.toString)
-    // the generated Java passes the key's UTF8String itself to
-    // SketchProbes.check with each sketch's concrete class: no probe key
-    // goes through toString()
+    // each probe reads its sketch once from the broadcast into a field
+    // typed with the sketch's concrete class, and passes that field, the
+    // shared fold and the key's UTF8String itself to SketchProbes.check: no
+    // probe key goes through toString()
     val code = org.apache.spark.sql.execution.debug.codegenString(plan)
-    val sketchRef = "references\\[\\d+\\] /\\* \\w+ \\*/\\)"
     Seq(classOf[BloomFilter] -> 1, classOf[CountingBloomFilter] -> 1,
         classOf[CountingCuckooFilter] -> 1, classOf[CuckooFilter] -> 1, classOf[QuotientFilter] -> 1,
         classOf[ExpandingBloomFilter] -> 1, classOf[CountMinSketch] -> 3).foreach { case (c, n) =>
-      val call = "graft\\.spark\\.fns\\.SketchProbes\\.check\\(" +
-        s"\\(\\(${java.util.regex.Pattern.quote(c.getName)}\\) $sketchRef, \\w+\\)"
-      assert(call.r.findAllIn(code).length == n, s"${c.getName}:\n$code")
+      val fields = sketchFields(code, c)
+      assert(fields.length == n, s"${c.getName}:\n$code")
+      fields.foreach { f =>
+        val call = s"graft\\.spark\\.fns\\.SketchProbes\\.check\\($f, ${SketchProbeExpr.Fold}, \\w+\\)"
+        assert(call.r.findAllIn(code).length == 1, s"$f:\n$code")
+        assert(s"SketchProbes\\.check\\($f,[^;]*\\.toString\\(\\)".r.findFirstIn(code).isEmpty, code)
+      }
     }
-    assert(s"$sketchRef[.,][^;]*\\.toString\\(\\)".r.findFirstIn(code).isEmpty, code)
   }
+
+  /** The generated fields that read a `c` sketch from a broadcast reference. */
+  private def sketchFields(code: String, c: Class[_]): Seq[String] =
+    (s"(\\w+) = \\(${java.util.regex.Pattern.quote(c.getName)}\\) " +
+      "\\(\\(org\\.apache\\.spark\\.broadcast\\.Broadcast\\) references\\[\\d+\\] /\\* \\w+ \\*/\\)\\.value\\(\\);")
+      .r.findAllMatchIn(code).map(_.group(1)).toSeq
 
   /** prettyNames of the sketch probes that run inside WholeStageCodegen. */
   private def codegenedProbes(df: org.apache.spark.sql.DataFrame): Seq[String] = {
@@ -144,17 +154,20 @@ class SketchProbeSpec extends AnyFunSuite {
     }
     new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
       case w: WholeStageCodegenExec => inStage(w.child)
-    }.flatten.flatMap(_.collect { case e: SketchProbeExpr => e.prettyName })
+    }.flatten.flatMap(_.collect { case e: SketchProbeExpr[_] => e.prettyName })
   }
 
-  /** Java serialization round trip, as a plan outside codegen ships. */
-  private def roundTrip(e: Expression): Expression = {
+  private def serialized(e: Expression): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.ObjectOutputStream(bos)
     out.writeObject(e); out.close()
-    new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bos.toByteArray))
-      .readObject().asInstanceOf[Expression]
+    bos.toByteArray
   }
+
+  /** Java serialization round trip, as a plan outside codegen ships. */
+  private def roundTrip(e: Expression): Expression =
+    new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(serialized(e)))
+      .readObject().asInstanceOf[Expression]
 
   test("interpreted eval == the core check, also after Java serialization; null key -> null") {
     val key = BoundReference(0, StringType, nullable = true)
@@ -181,10 +194,11 @@ class SketchProbeSpec extends AnyFunSuite {
     }
     val e = org.apache.spark.sql.GraftColumnBridge.expression(key)
     def column(x: Expression): Column = org.apache.spark.sql.GraftColumnBridge.column(x)
+    val bc = spark.sparkContext
     Seq[(String, Column, String => Any)](
-      ("bloom md5", column(BloomMightContainExpr(e, bloomMd5)), bloomMd5.check(_: String)),
-      ("cms md5", column(CmsCountExpr(e, cmsMd5)), cmsMd5.check(_: String)),
-      ("cbf md5", column(CbfCountExpr(e, cbfMd5)), cbfMd5.check(_: String)))
+      ("bloom md5", column(BloomMightContainExpr(e, bc.broadcast(bloomMd5))), bloomMd5.check(_: String)),
+      ("cms md5", column(CmsCountExpr(e, bc.broadcast(cmsMd5))), cmsMd5.check(_: String)),
+      ("cbf md5", column(CbfCountExpr(e, bc.broadcast(cbfMd5))), cbfMd5.check(_: String)))
   }
 
   test("differential: codegen'd probes == core check(key.toString) on ASCII, multi-byte and malformed UTF-8") {
@@ -219,6 +233,128 @@ class SketchProbeSpec extends AnyFunSuite {
       val row = InternalRow(UTF8String.fromBytes(b))
       exprs.foreach { case (n, e, core) =>
         assert(e.eval(row) == core(asString(b)), s"$n at ${b.mkString(",")}")
+      }
+    }
+  }
+
+  /** The seven probes and the decontamination probe over sketches that
+    * hold `n` keys, each with capacity for `n`. */
+  private def sized(n: Int, key: Column): Seq[(String, Column)] = {
+    import SketchExpressions._
+    val keys = (0 until n).map(i => s"k-$i")
+    val b = BloomFilter.empty(n, 0.01)
+    val c = CountMinSketch.empty(math.max(n / 4, 16), 5)
+    val cb = CountingBloomFilter.empty(n, 0.01)
+    val cc = new CountingCuckooFilter(math.max(n / 4, 1), 4, 500, 2, true, 32)
+    val ck = new CuckooFilter(math.max(n / 4, 1), 4, 500, 2, true, 32)
+    val q = QuotientFilter(32 - Integer.numberOfLeadingZeros(n) + 1, autoExpand = true)
+    val e = ExpandingBloomFilter(n, 0.01)
+    keys.foreach { k => b.add(k); c.add(k); cb.add(k); cc.add(k); ck.add(k); q.add(k); e.add(k) }
+    Seq("bloom" -> bloomMightContainNative(b.toBytes, key), "cms" -> cmsCountNative(c.toBytes, key),
+      "cbf" -> cbfCountNative(cb.toBytes, key), "ccf" -> ccfCountNative(cc.toBytes, 32, key),
+      "cuckoo" -> cuckooContainsNative(ck.toBytes, 32, key), "qf" -> qfContainsNative(q.toBytes, key),
+      "ebf" -> ebfContainsNative(e.toBytes, key),
+      "shingle" -> TextExpressions.bloomShingleHitNative(b.toBytes, 2, key))
+  }
+
+  test("a Java-serialized probe expression stays the same size as its sketch grows") {
+    val key = BoundReference(0, StringType, nullable = true)
+    def sizes(n: Int): Seq[(String, Int)] = sized(n, col("k")).map { case (name, c) =>
+      val e = org.apache.spark.sql.GraftColumnBridge.expression(c).withNewChildren(Seq(key))
+      // the interpreted probe has fetched its sketch before it is serialized
+      e.eval(InternalRow(UTF8String.fromString("k-1")))
+      name -> serialized(e).length
+    }
+    val small = sizes(100)
+    val large = sizes(100000)
+    assert(small == large)
+    // the Bloom filter of 100,000 keys alone exports ~117 KB
+    assert(large.forall(_._2 < 4096), large)
+  }
+
+  test("rendering a probe plan never calls a sketch's toString: the plan string does not grow with the sketch") {
+    def rendered(n: Int): String = {
+      val df = spark.range(0, 64, 1, 2).select(concat(lit("k-"), col("id")).as("k"))
+        .select(sized(n, col("k")).map { case (name, c) => c.as(name) }: _*)
+      val qe = df.queryExecution
+      val before = qe.toString + qe.explainString(org.apache.spark.sql.execution.ExtendedMode)
+      df.collect()
+      (before + qe.executedPlan.toString + qe.executedPlan.treeString(verbose = true) +
+        qe.analyzed.expressions.mkString).replaceAll("\\d+", "N")
+    }
+    val small = rendered(100)
+    val large = rendered(100000)
+    assert(small.contains("bloom_might_contain(") && small.contains("bloom_shingle_hit("), small)
+    assert(!large.contains("number bits set") && !large.contains("BloomFilter:"), large)
+    assert(large == small)
+  }
+
+  /** Keys for the fold differential, in order: each ASCII key twice in a
+    * row and again as a distinct array with the same bytes, alternating
+    * with multi-byte and malformed UTF-8 keys. */
+  private val foldKeys: Seq[Array[Byte]] = {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val (ascii, other) = diffKeys.partition(_.forall(_ >= 0))
+    val malformed = other.filter(b => !java.util.Arrays.equals(asString(b).getBytes(utf8), b))
+    val multi = other.filterNot(malformed.contains)
+    val asciiKeys = members.take(40).filter(_.forall(_ < 0x80)).map(_.getBytes(utf8)) ++ ascii
+    assert(asciiKeys.nonEmpty && multi.nonEmpty && malformed.nonEmpty)
+    (0 until 80).flatMap { i =>
+      val a = asciiKeys(i % asciiKeys.length)
+      val m = multi(i % multi.length)
+      val x = malformed(i % malformed.length)
+      Seq(a, a, a.clone(), m, a.clone(), x, x.clone(), m, a)
+    }
+  }
+
+  /** Every rotation of the probe list and of its reverse. */
+  private def orders[T](xs: Seq[T]): Seq[Seq[T]] =
+    Seq(xs, xs.reverse).flatMap(o => o.indices.map(r => o.drop(r) ++ o.take(r)))
+
+  test("fold differential: every probe order, codegen'd, over repeated, equal-byte and alternating keys") {
+    val arr = typedLit(foldKeys)
+    // one partition, so each task sees the keys in order
+    val keyed = spark.range(0, foldKeys.length, 1, 1)
+      .select(col("id"), element_at(arr, (col("id") + 1).cast("int")).cast("string").as("k"))
+    val ps = probes(col("k")) ++ md5Probes(col("k"))
+    orders(ps.indices).foreach { order =>
+      val df = keyed.select(col("id") +: order.map(i => ps(i)._2.as(ps(i)._1)): _*)
+      assert(codegenedProbes(df).length == ps.length, df.queryExecution.executedPlan.toString)
+      val out = df.collect()
+      assert(out.length == foldKeys.length)
+      out.foreach { r =>
+        val k = asString(foldKeys(r.getLong(0).toInt))
+        order.zipWithIndex.foreach { case (p, j) =>
+          assert(r.get(j + 1) == ps(p)._3(k), s"${ps(p)._1} at $k in order ${order.mkString(",")}")
+        }
+      }
+    }
+  }
+
+  test("fold differential: every probe order, interpreted, over repeated, equal-byte and alternating keys") {
+    val key = BoundReference(0, StringType, nullable = true)
+    val exprs = (probes(col("k")) ++ md5Probes(col("k"))).map { case (n, c, core) =>
+      (n, org.apache.spark.sql.GraftColumnBridge.expression(c).withNewChildren(Seq(key)), core)
+    }
+    orders(exprs).foreach { order =>
+      foldKeys.foreach { b =>
+        val row = InternalRow(UTF8String.fromBytes(b))
+        order.foreach { case (n, e, core) => assert(e.eval(row) == core(asString(b)), s"$n at ${b.mkString(",")}") }
+      }
+    }
+  }
+
+  test("KeyFold: seed-d fnv-1a-64 and seed-0 fnv-1a-32 of the folded key, seeds asked in any order") {
+    val rnd = new scala.util.Random(7L)
+    val fold = new KeyFold
+    foldKeys.foreach { b =>
+      val k = asString(b)
+      val ascii = b.forall(_ >= 0)
+      assert(fold.of(UTF8String.fromBytes(b)) == ascii)
+      if (ascii) {
+        assert(fold.fnv32 == graft.hash.Fnv.fnv1a32(k, 0))
+        rnd.shuffle((0 until 13).toList).foreach(d => assert(fold.seed(d) == graft.hash.Fnv.fnv1a64(k, d), s"$k seed $d"))
+        assert(fold.hashes(13).take(13).toSeq == (0 until 13).map(graft.hash.Fnv.fnv1a64(k, _)))
       }
     }
   }
