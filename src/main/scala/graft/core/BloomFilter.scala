@@ -50,7 +50,7 @@ object BloomMath {
   * hex export uses a big-endian footer, bloom.py:274-285).
   *
   * This is the engine-internal state block; Spark exposure is via
-  * [[graft.spark.aggs.NativeBloomAgg]] (mergeable aggregation), the codegen'd
+  * [[graft.spark.aggs.BloomKind]] (mergeable aggregation), the codegen'd
   * probe [[graft.spark.fns.BloomMightContainExpr]] and the set-op functions
   * in [[graft.spark.fns.SketchFunctions]].
   */

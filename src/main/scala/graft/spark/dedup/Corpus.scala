@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.spark.aggs.SketchUdafs
+import graft.spark.io.DriverBudget
 
 /** Corpus-level text-pipeline operators: decisions that depend on the WHOLE
   * corpus (or a second corpus), not a single document — the stages an LLM
@@ -83,23 +84,22 @@ object Corpus {
     val distinctSh = bench
       .select(explode(shingles(col(textCol), n)).as("s"))
       .distinct()
-    val lim = (math.min(maxBenchCollect, (Int.MaxValue - 2).toLong) + 1L).toInt
-    val probe = distinctSh.limit(lim).collect()
-    if (probe.length < lim) {
-      val bf = graft.core.BloomFilter.empty(bloomCapacity, fpr)
-      val hs = new java.util.HashSet[String](probe.length * 2)
-      probe.foreach { r =>
-        val s = r.getString(0)
-        bf.add(s)
-        hs.add(s)
-      }
-      (base, Left(docs.sparkSession.sparkContext.broadcast(hs)), bf.toBytes)
-    } else {
-      val persisted = distinctSh.persist()
-      val bloomBytes = persisted
-        .agg(SketchUdafs.bloom(bloomCapacity, fpr)(col("s")).as("b"))
-        .head().getAs[Array[Byte]]("b")
-      (base, Right(persisted), bloomBytes)
+    DriverBudget.collectAtMost(distinctSh, maxBenchCollect) match {
+      case Some(probe) =>
+        val bf = graft.core.BloomFilter.empty(bloomCapacity, fpr)
+        val hs = new java.util.HashSet[String](probe.length * 2)
+        probe.foreach { r =>
+          val s = r.getString(0)
+          bf.add(s)
+          hs.add(s)
+        }
+        (base, Left(docs.sparkSession.sparkContext.broadcast(hs)), bf.toBytes)
+      case None =>
+        val persisted = distinctSh.persist()
+        val bloomBytes = persisted
+          .agg(SketchUdafs.bloom(bloomCapacity, fpr)(col("s")).as("b"))
+          .head().getAs[Array[Byte]]("b")
+        (base, Right(persisted), bloomBytes)
     }
   }
 
@@ -189,8 +189,9 @@ object Corpus {
     * Two equivalent execution paths (CorpusSpec pins byte-identical output):
     *
     *  - **broadcast** (heavy set <= `maxHeavyBroadcast`): the thresholded
-    *    64-bit line-hash set collects to the driver and broadcasts to a
-    *    per-row kernel that filters lines in place — no explode/reassemble.
+    *    64-bit line-hash set ([[heavySet]]) broadcasts as a sorted array to
+    *    a per-row kernel that filters lines in place by binary search — no
+    *    explode/reassemble.
     *    The set is bounded by total_lines / minCount, so this is the normal
     *    path; the probe cache is unpersisted before returning. At 10^12 docs
     *    × ~50 lines with a low threshold the set can reach 10^10+ hashes and
@@ -207,57 +208,44 @@ object Corpus {
                         maxHeavyBroadcast: Long = 50000000L,
                         idCol: Option[String] = None): DataFrame = {
     import graft.hash.Fnv
-    val spark = docs.sparkSession
-    // materialize the (thresholded, corpus-much-smaller) heavy set ONCE —
-    // the limit-probe below answers the size question in the same job that
-    // collects the broadcast-path data, and persist (lazy marking;
-    // lineage-keeping, cluster-safe) lets the join-rebuild fallback reuse
-    // what the probe already computed instead of re-aggregating the corpus
-    val heavyDf = docs
+    val lineHashes = docs
       .select(explode(split(col(textCol), "\n")).as("line"))
       .filter(trim(col("line")) =!= "")
       .select(graft.spark.fns.SketchExpressions.fnv1a64Native(col("line")).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= minCount)
-      .select(col("h"))
-      .persist()
-    val lim = (math.min(maxHeavyBroadcast, (Int.MaxValue - 2).toLong) + 1L).toInt
-    val probe = heavyDf.limit(lim).collect()
-    if (probe.length < lim) {
-      val heavy = probe.map(_.getLong(0)).toSet
-      heavyDf.unpersist(blocking = false) // the broadcast variable owns the data now
-      val bc = spark.sparkContext.broadcast(heavy)
-      // blank test must equal SQL trim(x) = '' (spaces only — NOT Java trim,
-      // which also strips tabs/CR)
-      val clean = udf((text: String) =>
-        if (text == null) null
-        else text.split("\n", -1)
-          .filter(l => l.forall(_ == ' ') || !bc.value.contains(Fnv.fnv1a64(l, 0)))
-          .mkString("\n"))
-      docs.withColumn("text_clean", clean(col(textCol)))
-    } else {
-      val (tagged, rid) = taggedWithRid(docs, idCol)
-      val lines = tagged
-        .select(rid.as("__rid"),
-          posexplode(split(col(textCol), "\n")).as(Seq("__idx", "__line")))
-      val kept = lines
-        .withColumn("__h", graft.spark.fns.SketchExpressions.fnv1a64Native(col("__line")))
-        .join(heavyDf.withColumnRenamed("h", "__h").withColumn("__heavy", lit(true)),
-          Seq("__h"), "left")
-        .filter(trim(col("__line")) === "" || col("__heavy").isNull)
-      val rebuilt = kept.groupBy(col("__rid"))
-        .agg(concat_ws("\n", transform(
-          array_sort(collect_list(struct(col("__idx"), col("__line")))),
-          s => s.getField("__line"))).as("__clean"))
-      // left join: a rid missing from `rebuilt` means text was null
-      // (posexplode emitted nothing) OR every line was heavy and dropped —
-      // the null/'' split below distinguishes the two exactly as the
-      // broadcast kernel does
-      tagged.join(rebuilt, rid === col("__rid"), "left")
-        .withColumn("text_clean",
-          when(col(textCol).isNull, lit(null).cast("string"))
-            .otherwise(coalesce(col("__clean"), lit(""))))
-        .drop("__rid", "__clean", "__graft_rid")
+    heavySet(lineHashes, minCount, maxHeavyBroadcast) match {
+      case Left(bc) =>
+        // blank test must equal SQL trim(x) = '' (spaces only — NOT Java trim,
+        // which also strips tabs/CR)
+        val clean = udf((text: String) =>
+          if (text == null) null
+          else text.split("\n", -1)
+            .filter(l => l.forall(_ == ' ') ||
+              java.util.Arrays.binarySearch(bc.value, Fnv.fnv1a64(l, 0)) < 0)
+            .mkString("\n"))
+        docs.withColumn("text_clean", clean(col(textCol)))
+      case Right(heavyDf) =>
+        val (tagged, rid) = taggedWithRid(docs, idCol)
+        val lines = tagged
+          .select(rid.as("__rid"),
+            posexplode(split(col(textCol), "\n")).as(Seq("__idx", "__line")))
+        val kept = lines
+          .withColumn("__h", graft.spark.fns.SketchExpressions.fnv1a64Native(col("__line")))
+          .join(heavyDf.withColumnRenamed("h", "__h").withColumn("__heavy", lit(true)),
+            Seq("__h"), "left")
+          .filter(trim(col("__line")) === "" || col("__heavy").isNull)
+        val rebuilt = kept.groupBy(col("__rid"))
+          .agg(concat_ws("\n", transform(
+            array_sort(collect_list(struct(col("__idx"), col("__line")))),
+            s => s.getField("__line"))).as("__clean"))
+        // left join: a rid missing from `rebuilt` means text was null
+        // (posexplode emitted nothing) OR every line was heavy and dropped —
+        // the null/'' split below distinguishes the two exactly as the
+        // broadcast kernel does
+        tagged.join(rebuilt, rid === col("__rid"), "left")
+          .withColumn("text_clean",
+            when(col(textCol).isNull, lit(null).cast("string"))
+              .otherwise(coalesce(col("__clean"), lit(""))))
+          .drop("__rid", "__clean", "__graft_rid")
     }
   }
 
@@ -288,16 +276,14 @@ object Corpus {
       .filter(col("c") >= minCount)
       .select(col("h"))
       .persist() // marks only; the probe job below materializes what it scans
-    // ONE probe job: limit(max+1) bounds the driver memory AND answers the
-    // size question — a result shorter than the limit IS the complete set
-    val lim = (math.min(maxHeavyBroadcast, (Int.MaxValue - 2).toLong) + 1L).toInt
-    val probe = heavyDf.limit(lim).collect()
-    if (probe.length < lim) {
-      val arr = probe.map(_.getLong(0))
-      heavyDf.unpersist(blocking = false) // the broadcast variable owns the data now
-      java.util.Arrays.sort(arr)
-      Left(spans.sparkSession.sparkContext.broadcast(arr))
-    } else Right(heavyDf)
+    DriverBudget.collectAtMost(heavyDf, maxHeavyBroadcast) match {
+      case Some(probe) =>
+        val arr = probe.map(_.getLong(0))
+        heavyDf.unpersist(blocking = false) // the broadcast variable owns the data now
+        java.util.Arrays.sort(arr)
+        Left(spans.sparkSession.sparkContext.broadcast(arr))
+      case None => Right(heavyDf)
+    }
   }
 
   /** Flag each span row by heavy-set membership: codegen'd binary-search

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.spark.fns.TextExpressions
+import graft.spark.io.DriverBudget
 
 /** Deduplication operators for web-scale corpora.
   *
@@ -261,32 +262,15 @@ object Dedup extends Serializable {
     // path, which then runs the unchanged distributed min-label +
     // pointer-halving rounds (the 10^12-doc shape). Pass
     // maxDriverEdges = 0 to force the distributed path (the specs do).
-    if (maxDriverEdges > 0) {
-      val lim = (math.min(maxDriverEdges, (Int.MaxValue - 2).toLong) + 1L).toInt
-      val probe = edgePairs
-        .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-        .limit(lim).collect()
-      if (probe.length < lim) {
-        val parent = new scala.collection.mutable.LongMap[Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        probe.foreach { e =>
-          val a = e.getLong(0); val b = e.getLong(1)
-          if (!parent.contains(a)) parent(a) = a
-          if (!parent.contains(b)) parent(b) = b
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        val spark = pairs.sparkSession
-        import spark.implicits._
-        return parent.keysIterator.map(n => (n, find(n))).toSeq
-          .toDF("doc_id", "rep")
-      }
+    val driverEdges = if (maxDriverEdges <= 0) None else DriverBudget.collectAtMost(
+      edgePairs.select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst")),
+      maxDriverEdges)
+    if (driverEdges.isDefined) {
+      val uf = new LongUnionFind
+      driverEdges.get.foreach(e => uf.union(e.getLong(0), e.getLong(1)))
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      return uf.ids.map(n => (n, uf.find(n))).toSeq.toDF("doc_id", "rep")
     }
     val ck: DataFrame => DataFrame = checkpointDir match {
       case Some(dir) =>

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.spark.dedup.{BandIndex, Corpus, Dedup, IndexIO}
-import graft.spark.io.Bucketing
+import graft.spark.dedup.{BandIndex, Corpus, Dedup, IndexIO, LongUnionFind}
+import graft.spark.io.{Bucketing, DriverBudget}
 import graft.spark.text.TextFunctions
 
 /** INCREMENTAL curation — the round-5 per-modality persisted indexes
@@ -268,34 +268,23 @@ object IncrementalCurate {
     // driver path never unboxes a null id (Row.getLong throws on one) and
     // both paths see one edge set
     val edgePairs = pairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
-    val lim = (math.min(maxDriverEdges, (Int.MaxValue - 2).toLong) + 1L).toInt
-    val probe = edgePairs.select(col("id_a"), col("id_b")).limit(lim).collect()
-    if (probe.length < lim) {
+    val driverEdges =
+      DriverBudget.collectAtMost(edgePairs.select(col("id_a"), col("id_b")), maxDriverEdges)
+    if (driverEdges.isDefined) {
       // driver union-find over batch-batch edges, min-id roots; anchored =
       // a batch endpoint of any batch-history pair
-      val parent = new scala.collection.mutable.LongMap[Long]()
-      def add(x: Long): Unit = if (!parent.contains(x)) parent(x) = x
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
+      val uf = new LongUnionFind
       val anchored = scala.collection.mutable.Set[Long]()
-      probe.foreach { e =>
+      driverEdges.get.foreach { e =>
         val a = e.getLong(0); val b = e.getLong(1)
         val aNew = a > watermark; val bNew = b > watermark
-        if (aNew && bNew) {
-          add(a); add(b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        } else if (aNew) { add(a); anchored += a }
-        else if (bNew) { add(b); anchored += b }
+        if (aNew && bNew) uf.union(a, b)
+        else if (aNew) { uf.add(a); anchored += a }
+        else if (bNew) { uf.add(b); anchored += b }
       }
-      val anchoredReps = anchored.map(find)
-      val drops = parent.keysIterator.filter { n =>
-        val r = find(n)
+      val anchoredReps = anchored.map(uf.find)
+      val drops = uf.ids.filter { n =>
+        val r = uf.find(n)
         anchoredReps.contains(r) || n != r
       }.toSeq
       drops.map(d => (d, true)).toDF("doc_id", "__fd")

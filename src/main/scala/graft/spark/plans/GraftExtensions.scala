@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.StringType
 
-import graft.spark.aggs.{NativeHllAgg, NativeKllAgg, SketchUdafs}
+import graft.spark.aggs.{HllKind, KllKind, SketchAgg, SketchUdafs}
 
 /** Optimizer rule: rewrite exact `COUNT(DISTINCT stringCol)` into the HLL
   * sketch aggregate (SURVEY.md §4.3's optional rule). Opt-in per session:
@@ -16,7 +16,7 @@ import graft.spark.aggs.{NativeHllAgg, NativeKllAgg, SketchUdafs}
   *
   * Why this matters at scale: exact COUNT(DISTINCT) expands to an Expand +
   * two exchanges keyed by the distinct value (shuffling every distinct key);
-  * the HLL aggregate ([[NativeHllAgg]], the one behind `hll_count`) is one
+  * the HLL aggregate ([[HllKind]], the one behind `hll_count`) is one
   * partial-agg pass with a 16KB buffer per group — the distinct values never
   * cross the wire. The trade is the documented ~1.04/sqrt(2^p) relative
   * error.
@@ -34,7 +34,7 @@ case class RewriteCountDistinctToHll() extends Rule[LogicalPlan] {
         a.transformExpressions {
           case AggregateExpression(Count(Seq(child)), _, true, filter, _)
               if child.dataType == StringType && child.resolved =>
-            NativeHllAgg(child, hllP, estimate = true)
+            SketchAgg(Seq(child), HllKind(hllP, estimate = true))
               .toAggregateExpression(isDistinct = false, filter = filter)
         }
     }
@@ -84,7 +84,7 @@ case class RewritePercentileApproxToKll() extends Rule[LogicalPlan] {
                 ap.child.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] &&
                 percentagesOf(ap.percentageExpression).isDefined =>
             val (ps, asArray) = percentagesOf(ap.percentageExpression).get
-            val agg = NativeKllAgg(Cast(ap.child, DoubleType), kllK, ps, asArray)
+            val agg = SketchAgg(Seq(Cast(ap.child, DoubleType)), KllKind(kllK, ps, asArray))
               .toAggregateExpression(isDistinct = false, filter = filter)
             // preserve percentile_approx's output type exactly
             val target =
@@ -103,10 +103,9 @@ case class RewritePercentileApproxToKll() extends Rule[LogicalPlan] {
   *     .config("spark.sql.extensions", "graft.spark.plans.GraftExtensions")
   *
   * Injects the COUNT(DISTINCT)->HLL and percentile_approx->KLL optimizer
-  * rules, the Bloom/CMS/heavy-hitters/HLL/KLL sketch aggregates from
-  * [[SketchUdafs.sqlAggregates]] (the same builders `SketchUdafs.registerAll`
-  * registers: `SELECT hll_count(url), kll_agg(len, 200) FROM pages`) and the
-  * scalar kernels below.
+  * rules, the sketch aggregates of [[SketchUdafs.sqlAggregates]] (the same
+  * table `SketchUdafs.registerAll` registers: `SELECT hll_count(url),
+  * kll_agg(len, 200) FROM pages`) and the scalar kernels below.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier

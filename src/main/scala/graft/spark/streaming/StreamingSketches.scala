@@ -21,9 +21,10 @@ case class RotatingDedupEvent(key: String, value: String, first_seen: Boolean)
   *   - `ExpandingBloomFilter` growth → the aggregator buffer grows inside
   *     the window's state.
   *
-  * Because every sketch aggregator is an associative+commutative udaf, it
-  * rides Spark's incremental aggregation state store directly — no custom
-  * `flatMapGroupsWithState` needed for these shapes.
+  * Because every sketch aggregate is a `SketchAgg` with an
+  * associative+commutative merge, it rides Spark's incremental aggregation
+  * state store directly — no custom `flatMapGroupsWithState` needed for
+  * these shapes.
   */
 object StreamingSketches {
 

@@ -216,6 +216,27 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("a GraftExtensions session resolves all 13 sketch aggregate names") {
+    withExtSession { spark =>
+      val names = graft.spark.aggs.SketchUdafs.sqlAggregates.map(_._1)
+      assert(names.sorted == Seq("bloom_agg", "cbf_agg", "cms_agg", "counting_cuckoo_agg",
+        "cuckoo_agg", "ebf_agg", "heavy_hitters", "hll_agg", "hll_count", "kll_agg", "qf_agg",
+        "stream_threshold", "tdigest_agg"))
+      names.foreach(n => assert(spark.catalog.functionExists(n), n))
+      spark.range(0, 100, 1, 2)
+        .selectExpr("CAST(id % 7 AS STRING) AS k", "id AS c", "CAST(id AS DOUBLE) AS v")
+        .createOrReplaceTempView("t_all_aggs")
+      val row = spark.sql(
+        """SELECT bloom_agg(k), cms_agg(k, c), heavy_hitters(k, c), hll_agg(k), hll_count(k),
+          |       kll_agg(v), cbf_agg(k, c), stream_threshold(k, c), cuckoo_agg(k),
+          |       counting_cuckoo_agg(k), qf_agg(k), ebf_agg(k), tdigest_agg(v)
+          |FROM t_all_aggs""".stripMargin).head()
+      assert(row.getLong(4) == 7L)
+      assert(row.getMap[String, Long](2).size == 7)
+      assert(graft.ext.TDigest.fromBytes(row.getAs[Array[Byte]](12)).totalWeight == 100.0)
+    }
+  }
+
   test("rewrite path buffers serialize in the reference HLL byte format") {
     // the aggregate the rule builds must ship its buffer as the reference
     // HLL export, not kryo: serialize() output must parse as Hll.fromBytes
@@ -231,7 +252,8 @@ class ExtensionsSpec extends AnyFunSuite {
             a.aggregateExpressions
         }.flatten
         val hllAggs = aggExprs.flatMap(_.collect {
-          case h: graft.spark.aggs.NativeHllAgg => h
+          case h: graft.spark.aggs.SketchAgg[_] if h.kind.isInstanceOf[graft.spark.aggs.HllKind] =>
+            h.asInstanceOf[graft.spark.aggs.SketchAgg[graft.ext.Hll]]
         })
         assert(hllAggs.nonEmpty, "rewritten HLL aggregate not found in plan")
         val agg = hllAggs.head

@@ -114,26 +114,45 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("SQL sketch build runs the native aggregates, no ScalaAggregator") {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Count
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ScalaAggregator}
-    graft.spark.aggs.SketchUdafs.registerAll(spark)
+    import graft.spark.aggs.{SaltedAgg, SketchAgg, SketchUdafs}
+    SketchUdafs.registerAll(spark)
     graft.spark.io.PagesGen.pages(spark, 2000L)
       .select(col("url"), col("lang"),
         substring_index(substring_index(col("url"), "/", 3), "/", -1).as("domain"),
         length(col("text")).cast("double").as("len"))
       .createOrReplaceTempView("plan_shape_pages")
-    val df = spark.sql(
-      """SELECT lang, hll_count(url) AS hll, bloom_agg(url) AS bloom,
-        |       heavy_hitters(domain, 1L) AS hh, kll_agg(len) AS kll, count(1) AS n
-        |FROM plan_shape_pages GROUP BY lang""".stripMargin)
-    df.collect()
-    val fns = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
-      case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction)
-    }.flatten
+    val calls = Seq("hll_count(url) AS hll", "bloom_agg(url) AS bloom",
+      "heavy_hitters(domain, 1L) AS hh", "kll_agg(len) AS kll", "hll_agg(url) AS hll_b",
+      "cms_agg(domain, 1L) AS cms", "cbf_agg(domain, 1L) AS cbf",
+      "stream_threshold(domain, 1L) AS st", "cuckoo_agg(url) AS ck",
+      "counting_cuckoo_agg(domain) AS ccf", "qf_agg(url) AS qf", "ebf_agg(url) AS ebf",
+      "tdigest_agg(len) AS td")
+    assert(calls.map(_.takeWhile(_ != '(')).toSet == SketchUdafs.sqlAggregates.map(_._1).toSet)
+    val built = spark.sql(
+      s"SELECT lang, ${calls.mkString(", ")}, count(1) AS n FROM plan_shape_pages GROUP BY lang")
+    val merged = built.agg(SaltedAgg.bloomUnion(col("bloom")), SaltedAgg.hllUnion(col("hll_b")),
+      SaltedAgg.cmsJoin(col("cms")), SaltedAgg.kllMerge(col("kll")),
+      SaltedAgg.tdigestMerge(col("td")))
+    def aggFns(df: DataFrame) = {
+      df.collect()
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction)
+      }.flatten
+    }
+    val fns = aggFns(built)
     assert(!fns.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), fns.mkString(", "))
+    assert(fns.forall(f => f.isInstanceOf[SketchAgg[_]] || f.isInstanceOf[Count]),
+      fns.mkString(", "))
+    assert(fns.count(_.isInstanceOf[SketchAgg[_]]) >= calls.size, fns.mkString(", "))
     val names = fns.map(_.prettyName).toSet
     Seq("graft_hll_count", "graft_bloom", "graft_hh", "graft_kll")
       .foreach(n => assert(names.contains(n), s"$n missing: $names"))
+    val mergeFns = aggFns(merged)
+    assert(mergeFns.nonEmpty && mergeFns.forall(_.isInstanceOf[SketchAgg[_]]),
+      mergeFns.mkString(", "))
   }
 
   test("decontaminate: ONE-pass plan — codegen'd bloom gate, no explode, no join, no cache") {

@@ -67,4 +67,21 @@ class SaltedAggSpec extends AnyFunSuite {
     val td = graft.ext.TDigest.fromBytes(row.getAs[Array[Byte]]("td"))
     assert(math.abs(td.quantile(0.5) - 50.0) < 8)
   }
+
+  test("merge aggregates skip null sketches; all-null input and all-null partitions give null") {
+    val a = BloomFilter.empty(1000, 0.01); a.add("x")
+    val b = BloomFilter.empty(1000, 0.01); b.add("y")
+    val want = BloomFilter.fromBytes(a.toBytes).orInPlace(b).toBytes.toSeq
+    val rows = Seq[Array[Byte]](null, null, a.toBytes, null, b.toBytes, null, null, null)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("b BINARY")
+    for (parts <- Seq(1, 4)) { // at 4, the first and last partitions are all null
+      val d = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(org.apache.spark.sql.Row(_)), parts), schema)
+      val got = d.agg(SaltedAgg.bloomUnion(col("b"))).head().getAs[Array[Byte]](0)
+      assert(got.toSeq == want, s"parts=$parts")
+      val nulls = d.filter(col("b").isNull)
+      assert(nulls.agg(SaltedAgg.bloomUnion(col("b"))).head().isNullAt(0), s"parts=$parts")
+      assert(nulls.groupBy(lit(1)).agg(SaltedAgg.hllUnion(col("b"))).head().isNullAt(1))
+    }
+  }
 }

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, MapType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{BloomFilter, CountMinSketch}
-import graft.ext.{Hll, Kll}
+import graft.core._
+import graft.ext.{Hll, Kll, TDigest}
 import graft.spark.aggs.SketchUdafs
 
 /** Rows and a driver-side fold for checking the sketch aggregates: ASCII
@@ -42,11 +43,28 @@ trait SketchFoldFixture {
 
   protected val cases: Seq[(Boolean, Int)] =
     for (ascii <- Seq(true, false); parts <- Seq(1, 8)) yield (ascii, parts)
+
+  /** The aggregate's fold, on the driver: each of `df(rows, parts)`'s
+    * slices into a fresh sketch, and the partials, each through its bytes,
+    * merged in partition order into one more fresh sketch (the final
+    * aggregate's buffer). */
+  protected def driverAgg[S](rows: Seq[(String, Double, Long)], parts: Int)(
+      create: => S, add: (S, (String, Double, Long)) => Unit, roundTrip: S => S,
+      merge: (S, S) => S): S = {
+    val n = rows.size
+    (0 until parts).map { i =>
+      val s = create
+      rows.slice(i * n / parts, (i + 1) * n / parts).foreach(add(s, _))
+      roundTrip(s)
+    }.foldLeft(create)(merge)
+  }
 }
 
-/** The KLL and heavy-hitters aggregates against a driver-side fold into the
-  * `graft.ext` / `graft.core` sketch; plus the SQL names against the
-  * DataFrame methods, and the null rule through both entry points. */
+/** The KLL, heavy-hitters, counting Bloom, stream-threshold, cuckoo,
+  * counting-cuckoo, quotient-filter, expanding-Bloom and t-digest aggregates
+  * against a driver-side fold into the `graft.ext` / `graft.core` sketch;
+  * plus the SQL names against the DataFrame methods, and the null rule
+  * through both entry points. */
 class SketchAggFoldSpec extends AnyFunSuite with SketchFoldFixture {
 
   test("kll: bytes == driver fold on one partition; 8 partitions within rank error") {
@@ -80,6 +98,144 @@ class SketchAggFoldSpec extends AnyFunSuite with SketchFoldFixture {
         .head().getMap[String, Long](0)
       assert(Map(got.toSeq: _*) == want, s"ascii=$ascii parts=$parts")
     }
+  }
+
+  test("cbf: bytes == driver fold on 1 and 8 partitions (counter sums commute)") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val want = driverAgg(rows, parts)(CountingBloomFilter.empty(20000, 0.01),
+        (s: CountingBloomFilter, r) => s.add(r._1, r._3),
+        (s: CountingBloomFilter) => CountingBloomFilter.fromBytes(s.toBytes),
+        (a: CountingBloomFilter, b: CountingBloomFilter) => a.addInPlace(b))
+      val got = bytesOf(df(rows, parts), SketchUdafs.cbf(20000, 0.01)(col("k"), col("c")))
+      assert(got.toSeq == want.toBytes.toSeq, s"ascii=$ascii parts=$parts")
+      val whole = CountingBloomFilter.empty(20000, 0.01)
+      rows.foreach(r => whole.add(r._1, r._3))
+      assert(got.toSeq == whole.toBytes.toSeq, s"ascii=$ascii parts=$parts")
+    }
+  }
+
+  test("stream threshold: map == driver fold on 1 and 8 partitions") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val want = driverAgg(rows, parts)(StreamThreshold.empty(40, 4096, 5),
+        (s: StreamThreshold, r) => s.add(r._1, r._3),
+        (s: StreamThreshold) => StreamThreshold.fromBytes(s.toBytes),
+        (a: StreamThreshold, b: StreamThreshold) => a.merge(b))
+      val got = df(rows, parts).agg(SketchUdafs.streamThreshold(40, 4096, 5)(col("k"), col("c")))
+        .head().getMap[String, Long](0)
+      val at = s"ascii=$ascii parts=$parts"
+      // 40 is low enough that some key meets it within one of 8 slices
+      assert(want.meetsThreshold.nonEmpty, at)
+      assert(Map(got.toSeq: _*) == want.meetsThreshold, at)
+    }
+  }
+
+  test("cuckoo and counting cuckoo: bytes == driver fold on one partition; 8 agree") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val at = s"ascii=$ascii parts=$parts"
+      val ck = driverAgg(rows, parts)(new CuckooFilter(4096, 4, 500, 2, true, 32),
+        (s: CuckooFilter, r) => s.add(r._1),
+        (s: CuckooFilter) => CuckooFilter.fromBytes(s.toBytes, 2, true, 32),
+        (a: CuckooFilter, b: CuckooFilter) =>
+          if (a.elementsAdded >= b.elementsAdded) a.mergeFrom(b) else b.mergeFrom(a))
+      val ckGot = bytesOf(df(rows, parts), SketchUdafs.cuckoo(4096, 4, 32)(col("k")))
+      val ccf = driverAgg(rows, parts)(new CountingCuckooFilter(4096, 4, 500, 2, true, 32),
+        (s: CountingCuckooFilter, r) => s.add(r._1),
+        (s: CountingCuckooFilter) => CountingCuckooFilter.fromBytes(s.toBytes, 2, true, 32),
+        (a: CountingCuckooFilter, b: CountingCuckooFilter) =>
+          if (a.insertedElements >= b.insertedElements) a.mergeFrom(b) else b.mergeFrom(a))
+      val ccfGot = bytesOf(df(rows, parts), SketchUdafs.countingCuckoo(4096, 4, 32)(col("k")))
+      if (parts == 1) {
+        assert(ckGot.toSeq == ck.toBytes.toSeq, at)
+        assert(ccfGot.toSeq == ccf.toBytes.toSeq, at)
+      }
+      val ckBack = CuckooFilter.fromBytes(ckGot, 2, true, 32)
+      val ccfBack = CountingCuckooFilter.fromBytes(ccfGot, 2, true, 32)
+      assert(ckBack.elementsAdded == ck.elementsAdded, at)
+      rows.map(_._1).distinct.foreach { k =>
+        assert(ckBack.check(k), s"$at key=$k")
+        assert(ccfBack.check(k) == ccf.check(k), s"$at key=$k")
+      }
+    }
+  }
+
+  test("quotient filter and expanding Bloom: bytes == driver fold on one partition; 8 agree") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val at = s"ascii=$ascii parts=$parts"
+      val qf = driverAgg(rows, parts)(QuotientFilter(14, autoExpand = true),
+        (s: QuotientFilter, r) => s.add(r._1),
+        (s: QuotientFilter) => QuotientFilter.fromBytes(s.toBytes),
+        (a: QuotientFilter, b: QuotientFilter) =>
+          if (a.elementsAdded >= b.elementsAdded) { a.merge(b); a } else { b.merge(a); b })
+      val qfGot = bytesOf(df(rows, parts), SketchUdafs.quotientFilter(14)(col("k")))
+      val ebf = driverAgg(rows, parts)(ExpandingBloomFilter(2000, 0.01),
+        (s: ExpandingBloomFilter, r) => s.add(r._1, force = true),
+        (s: ExpandingBloomFilter) => ExpandingBloomFilter.fromBytes(s.toBytes),
+        (a: ExpandingBloomFilter, b: ExpandingBloomFilter) => a.mergeFrom(b))
+      val ebfGot = bytesOf(df(rows, parts), SketchUdafs.ebf(2000, 0.01)(col("k")))
+      if (parts == 1) {
+        assert(qfGot.toSeq == qf.toBytes.toSeq, at)
+        assert(ebfGot.toSeq == ebf.toBytes.toSeq, at)
+      }
+      val qfBack = QuotientFilter.fromBytes(qfGot)
+      val ebfBack = ExpandingBloomFilter.fromBytes(ebfGot)
+      assert(qfBack.elementsAdded == qf.elementsAdded, at)
+      assert(ebfBack.elementsAdded == ebf.elementsAdded, at)
+      rows.map(_._1).distinct.foreach { k =>
+        assert(qfBack.check(k) && ebfBack.check(k), s"$at key=$k")
+      }
+    }
+  }
+
+  test("t-digest: bytes == driver fold on one partition; 8 partitions within rank error") {
+    for ((ascii, parts) <- cases) {
+      val rows = rowsOf(ascii)
+      val at = s"ascii=$ascii parts=$parts"
+      val want = driverAgg(rows, parts)(TDigest(100.0),
+        (s: TDigest, r) => s.update(r._2),
+        (s: TDigest) => TDigest.fromBytes(s.toBytes),
+        (a: TDigest, b: TDigest) => a.merge(b))
+      val got = TDigest.fromBytes(bytesOf(df(rows, parts), SketchUdafs.tdigest(100.0)(col("v"))))
+      if (parts == 1) assert(got.toBytes.toSeq == want.toBytes.toSeq, at)
+      val exact = rows.map(_._2).sorted
+      for (q <- Seq(0.1, 0.5, 0.9)) {
+        val rank = exact.count(_ <= got.quantile(q)).toDouble / exact.size
+        assert(math.abs(rank - q) < 0.02, s"$at q=$q rank=$rank")
+      }
+      assert(got.totalWeight == rows.size, at)
+    }
+  }
+
+  test("SQL names of the cbf, stream-threshold, cuckoo, QF, EBF and t-digest aggregates") {
+    SketchUdafs.registerAll(spark)
+    val d = df(rowsOf(ascii = false) ++ rowsOf(ascii = true), 1)
+    d.createOrReplaceTempView("fold_spec_more")
+    val sql = spark.sql(
+      """SELECT cbf_agg(k, c), stream_threshold(k, c), cuckoo_agg(k), counting_cuckoo_agg(k),
+        |       qf_agg(k), ebf_agg(k), tdigest_agg(v)
+        |FROM fold_spec_more""".stripMargin)
+    val api = d.agg(
+      SketchUdafs.cbf(1000000, 0.01)(col("k"), col("c")),
+      SketchUdafs.streamThreshold(100, 4096, 5)(col("k"), col("c")),
+      SketchUdafs.cuckoo(100000, 4, 32)(col("k")),
+      SketchUdafs.countingCuckoo(100000, 4, 32)(col("k")),
+      SketchUdafs.quotientFilter(18)(col("k")),
+      SketchUdafs.ebf(10000, 0.01)(col("k")),
+      SketchUdafs.tdigest(100.0)(col("v")))
+    assert(sql.columns.toSeq == Seq("cbf_agg(k, c)", "stream_threshold(k, c)", "cuckoo_agg(k)",
+      "counting_cuckoo_agg(k)", "qf_agg(k)", "ebf_agg(k)", "tdigest_agg(v)"))
+    val map = MapType(StringType, LongType, valueContainsNull = false)
+    assert(sql.schema.map(_.dataType) == Seq(BinaryType, map) ++ Seq.fill(5)(BinaryType))
+    assert(api.schema.map(_.dataType) == sql.schema.map(_.dataType))
+    val (s, a) = (sql.head(), api.head())
+    Seq(0, 2, 3, 4, 5, 6).foreach { i =>
+      assert(s.getAs[Array[Byte]](i).toSeq == a.getAs[Array[Byte]](i).toSeq, s"column $i")
+    }
+    assert(s.getMap[String, Long](1) == a.getMap[String, Long](1))
+    assert(s.getMap[String, Long](1).nonEmpty)
   }
 
   test("SQL names with default arguments == the SketchUdafs methods") {
