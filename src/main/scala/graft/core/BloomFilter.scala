@@ -2,7 +2,7 @@ package graft.core
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import graft.hash.{Fnv, Fnv1aHasher, Hashers, KeyHasher}
+import graft.hash.{Fnv, Fnv1aHasher, KeyHasher}
 
 /** Shared Bloom sizing math, replicating the reference byte-for-byte
   * (/root/reference/probables/blooms/bloom.py:463-483):
@@ -75,12 +75,17 @@ final class BloomFilter private (
   def addHashes(hs: Array[Long]): Unit = {
     var i = 0
     while (i < numHashes) {
-      val k = java.lang.Long.remainderUnsigned(hs(i), numBits)
-      val idx = (k >>> 3).toInt
-      bloom(idx) = (bloom(idx) | (1 << (k & 7L).toInt)).toByte
+      setBit(java.lang.Long.remainderUnsigned(hs(i), numBits))
       i += 1
     }
     elsAdded += 1
+  }
+
+  /** Sets bit `k` (a position in `[0, numBits)`, the unsigned remainder of
+    * one hash); leaves `elsAdded` alone. */
+  def setBit(k: Long): Unit = {
+    val idx = (k >>> 3).toInt
+    bloom(idx) = (bloom(idx) | (1 << (k & 7L).toInt)).toByte
   }
 
   /** Membership probe, equal to `checkHashes(hashes(key))`. The default
@@ -199,12 +204,10 @@ final class BloomFilter private (
 
   /** Reference export format: payload bytes + LE `QQf` footer (bloom.py:287-304). */
   def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(bloomLength + 20).order(ByteOrder.LITTLE_ENDIAN)
-    bb.put(bloom)
-    bb.putLong(estElements)
-    bb.putLong(elsAdded)
-    bb.putFloat(fpr)
-    bb.array()
+    val out = java.util.Arrays.copyOf(bloom, bloomLength + 20)
+    ByteBuffer.wrap(out, bloomLength, 20).order(ByteOrder.LITTLE_ENDIAN)
+      .putLong(estElements).putLong(elsAdded).putFloat(fpr)
+    out
   }
 
   /** Hex export: payload hex + **big-endian** footer hex (bloom.py:274-285). */
@@ -254,19 +257,24 @@ final class BloomFilter private (
 object BloomFilter {
   def empty(estElements: Long, falsePositiveRate: Double, hasher: KeyHasher = Fnv1aHasher): BloomFilter = {
     val p = BloomMath.optimizedParams(estElements, falsePositiveRate)
-    val len = math.ceil(p.numBits / 8.0).toInt
-    new BloomFilter(estElements, p.fpr, p.numHashes, p.numBits, new Array[Byte](len), 0L, hasher)
+    new BloomFilter(estElements, p.fpr, p.numHashes, p.numBits, new Array[Byte](lengthOf(p)), 0L,
+      hasher)
   }
+
+  /** Payload bytes of a filter with these parameters: `ceil(numBits / 8)`. */
+  def lengthOf(p: BloomMath.Params): Int = math.ceil(p.numBits / 8.0).toInt
 
   def fromBytes(b: Array[Byte], hasher: KeyHasher = Fnv1aHasher): BloomFilter = {
     val bb = ByteBuffer.wrap(b, b.length - 20, 20).order(ByteOrder.LITTLE_ENDIAN)
     val est = bb.getLong
     val added = bb.getLong
     val fpr = bb.getFloat
-    val blm = empty(est, fpr.toDouble, hasher)
-    System.arraycopy(b, 0, blm.bloom, 0, blm.bloomLength)
-    blm.elsAdded = added
-    blm
+    val p = BloomMath.optimizedParams(est, fpr.toDouble)
+    val len = lengthOf(p)
+    if (b.length < len + 20)
+      throw new IllegalArgumentException(s"Bloom export of ${b.length} bytes, need ${len + 20}")
+    new BloomFilter(est, p.fpr, p.numHashes, p.numBits, java.util.Arrays.copyOfRange(b, 0, len),
+      added, hasher)
   }
 
   def fromHex(s: String, hasher: KeyHasher = Fnv1aHasher): BloomFilter = {

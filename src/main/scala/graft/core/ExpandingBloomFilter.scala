@@ -56,14 +56,17 @@ class ExpandingBloomFilter(
     if (blooms.last.elsAdded >= estElements) push()
   }
 
-  /** Distributed-merge extension: concatenate sub-bloom lists (the union of
-    * two expanding filters' contents; documented deviation — the reference
-    * has no EBF merge). Keeps every sub-bloom's own bit array intact. */
+  /** Distributed-merge extension: this filter's non-empty sub-blooms, then
+    * the other's (the union of two expanding filters' contents; documented
+    * deviation — the reference has no EBF merge), each bit array intact.
+    * An empty sub-bloom (no adds, so no bits) answers no probe, so dropping
+    * it changes no answer, and merging into a fresh filter gives the other
+    * side's bytes; one empty sub-bloom stays when both sides are empty. */
   def mergeFrom(second: ExpandingBloomFilter): ExpandingBloomFilter = {
-    blooms ++= second.blooms.map { b =>
-      val copy = BloomFilter.fromBytes(b.toBytes, hasher)
-      copy
-    }
+    blooms.filterInPlace(_.elsAdded > 0)
+    blooms ++= second.blooms.iterator.filter(_.elsAdded > 0)
+      .map(b => BloomFilter.fromBytes(b.toBytes, hasher))
+    if (blooms.isEmpty) blooms += newBloom()
     addedElements += second.addedElements
     this
   }

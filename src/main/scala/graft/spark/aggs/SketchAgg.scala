@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * rewrite rules is this `TypedImperativeAggregate` over a [[SketchKind]].
   * The live sketch is the per-partition hash-aggregate buffer (no per-row
   * serialization), crosses the partial -> final shuffle in the sketch's
-  * reference byte format (`kind.toBytes` / `kind.fromBytes`), and partials
+  * reference byte format (`kind.toBytes` / `kind.fromBytes`; the one
+  * exception is a sparse [[BloomPartial]], which is shorter), and partials
   * fold with the sketch's own union, which is associative and commutative,
   * so the partition count cannot change the answer (SparkAggSpec).
   *

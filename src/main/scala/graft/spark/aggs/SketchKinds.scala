@@ -45,17 +45,23 @@ trait TDigestBytes extends SketchKind[TDigest] {
   def merge(s: TDigest, o: TDigest): TDigest = s.merge(o)
 }
 
-/** `bloom_agg`: k seeded hashes per key; merge = in-place OR. */
-case class BloomKind(estElements: Long, fpr: Double) extends BloomBytes {
+/** `bloom_agg`: k seeded hashes per key into a [[BloomPartial]], which
+  * stays a list of set-bit positions while that is smaller than the filter;
+  * merge = concatenation or in-place OR. OUT = the reference Bloom export. */
+case class BloomKind(estElements: Long, fpr: Double) extends SketchKind[BloomPartial] {
   def prettyName: String = "graft_bloom"
   def inputTypes: Seq[DataType] = Seq(StringType)
   def dataType: DataType = BinaryType
   override def nullable: Boolean = false
-  def create(): BloomFilter = BloomFilter.empty(estElements, fpr)
-  def update(s: BloomFilter, key: Any, unused: Any): BloomFilter = {
+  def create(): BloomPartial = BloomPartial.empty(estElements, fpr)
+  def update(s: BloomPartial, key: Any, unused: Any): BloomPartial = {
     s.addHashes(Utf8Fnv.hashes(key.asInstanceOf[UTF8String], s.numHashes))
     s
   }
+  def merge(s: BloomPartial, o: BloomPartial): BloomPartial = s.merge(o)
+  override def eval(s: BloomPartial): Any = s.toDense.toBytes
+  def toBytes(s: BloomPartial): Array[Byte] = s.toBytes
+  def fromBytes(b: Array[Byte]): BloomPartial = BloomPartial.fromBytes(estElements, fpr, b)
 }
 
 /** `cms_agg`: weighted Count-Min; a negative count is a removal (the

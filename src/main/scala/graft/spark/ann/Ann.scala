@@ -240,7 +240,7 @@ object Ann extends Serializable {
     * be inserted without touching any other part of the search. */
   private def buildAdcLuts(queries: DataFrame, books: Array[Array[Array[Float]]],
                            dim: Int, m: Int,
-                           rotation: Option[Array[Array[Float]]] = None): Map[Long, Array[Array[Float]]] = {
+                           rotation: Option[Array[Array[Float]]]): Map[Long, Array[Array[Float]]] = {
     val dsub = dim / m
     val ksub = books(0).length
     queries
@@ -266,7 +266,7 @@ object Ann extends Serializable {
   private def pqEncodeUdf(
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]],
       dim: Int, m: Int,
-      rotation: Option[Array[Array[Float]]] = None): UserDefinedFunction = {
+      rotation: Option[Array[Array[Float]]]): UserDefinedFunction = {
     val dsub = dim / m
     udf((v: Seq[Float]) => {
       val nv0 = normalizeVec(v, dim)

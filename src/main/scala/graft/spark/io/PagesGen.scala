@@ -3,7 +3,6 @@ package graft.spark.io
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.core.SplitMix64
 

@@ -2,7 +2,7 @@ package graft.spark.io
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** WARC/1.0 (ISO 28500) reader/writer — the container Common Crawl actually

@@ -358,7 +358,7 @@ object JpegCodec extends Serializable {
       // libjpeg "fancy" weights (9, 3, 3, 1)/16 with edge replication, which
       // is what the JDK's reader uses, so cross-validation stays within IDCT
       // tolerance even at sharp chroma edges; other factors sample nearest
-      def sampleChroma(plane: Array[Byte], pw: Int, ph: Int, hC: Int, vC: Int,
+      def sampleChroma(plane: Array[Byte], pw: Int, hC: Int, vC: Int,
                        x: Int, y: Int): Int = {
         if (hC == 1 && vC == 1 && hMax == 2 && vMax == 2) {
           // neighbors replicate at the VALID chroma edge (ceil(dim/2)), not
@@ -383,8 +383,8 @@ object JpegCodec extends Serializable {
         var x = 0
         while (x < width) {
           val yy = y0p((y * compV(0) / vMax) * planeW(0) + x * compH(0) / hMax) & 0xff
-          val cb = sampleChroma(cbp, planeW(1), planeH(1), compH(1), compV(1), x, y) - 128
-          val cr = sampleChroma(crp, planeW(2), planeH(2), compH(2), compV(2), x, y) - 128
+          val cb = sampleChroma(cbp, planeW(1), compH(1), compV(1), x, y) - 128
+          val cr = sampleChroma(crp, planeW(2), compH(2), compV(2), x, y) - 128
           val r = math.round(yy + 1.402 * cr).toInt
           val g = math.round(yy - 0.344136 * cb - 0.714136 * cr).toInt
           val b = math.round(yy + 1.772 * cb).toInt

@@ -1,6 +1,6 @@
 package graft.spark.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.hash.Fnv

@@ -1,6 +1,6 @@
 package graft.spark.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-trained CJK unigram segmenter (round-5 verdict "what's missing"

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.spark.text.{LangEval, LangFixture, LangProfiles}
+import graft.spark.text.{LangEval, LangFixture}
 
 /** Dev tool: measure the language-ID classifier on the HELD-OUT fixture
   * (and, for reference, the legacy stopword fixture + per-sentence

@@ -190,6 +190,28 @@ class SketchAggFoldSpec extends AnyFunSuite with SketchFoldFixture {
     }
   }
 
+  test("ebf: one-partition ebf_agg == the plain fold; a fresh filter merges to the other side") {
+    for (ascii <- Seq(true, false)) {
+      val rows = rowsOf(ascii)
+      val fold = ExpandingBloomFilter(2000, 0.01)
+      rows.foreach(r => fold.add(r._1, force = true))
+      assert(fold.expansions > 0)
+      val got = bytesOf(df(rows, 1), SketchUdafs.ebf(2000, 0.01)(col("k")))
+      assert(got.toSeq == fold.toBytes.toSeq, s"ascii=$ascii")
+      assert(ExpandingBloomFilter(2000, 0.01).mergeFrom(fold).toBytes.toSeq == fold.toBytes.toSeq)
+      assert(fold.mergeFrom(ExpandingBloomFilter(2000, 0.01)).toBytes.toSeq == got.toSeq)
+      // at 8 partitions every sub-bloom holds adds: no empty head, no empty tails
+      val eight = ExpandingBloomFilter.fromBytes(
+        bytesOf(df(rows, 8), SketchUdafs.ebf(2000, 0.01)(col("k"))))
+      assert(eight.blooms.forall(_.elsAdded > 0), s"ascii=$ascii")
+      assert(eight.elementsAdded == rows.size && rows.forall(r => eight.check(r._1)))
+    }
+    // both sides empty: one empty sub-bloom stays
+    val empty = ExpandingBloomFilter(2000, 0.01)
+    val merged = ExpandingBloomFilter(2000, 0.01).mergeFrom(ExpandingBloomFilter(2000, 0.01))
+    assert(merged.toBytes.toSeq == empty.toBytes.toSeq)
+  }
+
   test("t-digest: bytes == driver fold on one partition; 8 partitions within rank error") {
     for ((ascii, parts) <- cases) {
       val rows = rowsOf(ascii)
