@@ -89,7 +89,7 @@ final class BloomFilterOnDisk private (
   }
 
   /** Copy the (flushed) backing file elsewhere (bloom.py:646-656). */
-  def export(dest: Path): Unit = {
+  def `export`(dest: Path): Unit = {
     flush()
     if (dest.toAbsolutePath != filepath.toAbsolutePath)
       Files.copy(filepath, dest, StandardCopyOption.REPLACE_EXISTING)

@@ -554,7 +554,7 @@ object VerifiedQueries {
     * the GPT-2 byte-alphabet tokenizer ([[graft.spark.text.BpeTokenizer
     * .standardBytes]]) — the unit real training stacks budget with. Verifies
     * codegen parity (same [[graft.spark.fns.BpeCountExpr]], byte tokenizer
-    * reference object), the pre-token <= merged <= non-ws UTF-8 BYTES
+    * broadcast), the pre-token <= merged <= non-ws UTF-8 BYTES
     * bounds, and that byte-level counts strictly exceed codepoint-level ones
     * on every page (a non-ASCII code point is >= 2 unmergeable byte symbols
     * under the ASCII-trained table; the pages fixture is ASCII word-salad,

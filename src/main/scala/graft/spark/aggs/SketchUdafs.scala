@@ -125,9 +125,7 @@ object SketchUdafs {
   private def sqlAgg(name: String, args: String, what: String)(
       build: PartialFunction[Seq[Expression], SketchAgg[_]])
       : (String, String, Seq[Expression] => Expression) =
-    (name, s"$name$args - $what", (in: Seq[Expression]) =>
-      build.applyOrElse(in, (_: Seq[Expression]) =>
-        throw new IllegalArgumentException(s"$name takes $args")).toAggregateExpression())
+    SqlArgs.function(name, args, what)(build.andThen(_.toAggregateExpression()))
 
   /** Register every sketch aggregate for SQL use:
     * `SELECT lang, hll_count(url) FROM pages GROUP BY lang`. */
@@ -137,8 +135,18 @@ object SketchUdafs {
     }
 }
 
-/** Literal arguments of SQL function builders, read at analysis time. */
+/** SQL function rows and the literal arguments of their builders, read at
+  * analysis time. */
 private[spark] object SqlArgs {
+  /** One `(name, usage, builder)` row; the builder rejects any argument list
+    * `build` does not match with the usage. */
+  def function(name: String, args: String, what: String)(
+      build: PartialFunction[Seq[Expression], Expression])
+      : (String, String, Seq[Expression] => Expression) =
+    (name, s"$name$args - $what", (in: Seq[Expression]) =>
+      build.applyOrElse(in, (_: Seq[Expression]) =>
+        throw new IllegalArgumentException(s"$name takes $args")))
+
   def long(e: Expression, fn: String, name: String): Long = {
     require(e.foldable, s"$fn: $name must be a literal")
     e.eval() match {

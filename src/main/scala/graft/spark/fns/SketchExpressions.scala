@@ -4,8 +4,8 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,21 +23,10 @@ import graft.hash.{Fnv1aHasher, KeyHasher}
 /** fnv-1a-64 over a string column with a fixed seed — the reference hash
   * kernel (hashes.py:86-103) as a codegen'd scalar. Non-string input is
   * cast to string, as the SQL `fnv1a64(text, seed)` caller expects. */
-case class Fnv1a64Expr(child: Expression, seed: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class Fnv1a64Expr(child: Expression, seed: Int) extends KernelExpr with ImplicitCastInputTypes {
+  override protected def kernel: Kernel = Kernel(Utf8Fnv, "hash64", child, seed)
   override def dataType: DataType = LongType
   override def inputTypes = Seq(StringType) // AbstractDataType is private[sql]
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    Utf8Fnv.hash64(input.asInstanceOf[UTF8String], seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.fns.Utf8Fnv.hash64($c, $seed)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
   override def prettyName: String = "fnv1a64"
 }
 
@@ -49,42 +38,32 @@ case class Fnv1a64Expr(child: Expression, seed: Int)
   * helpers broadcast the deserialized sketch once, a task binary carries
   * only the handle, and every task of an executor probes the one copy the
   * executor fetched. The generated code reads the broadcast's value into a
-  * typed field at class init and passes it, the row's shared [[KeyFold]]
-  * and the key's `UTF8String` to [[SketchProbes]]`.check`. A plan string
-  * names the sketch by its broadcast (`Broadcast(<id>)`), never through the
-  * sketch's own `toString`, which may walk all its state. A null key probes
-  * to null. */
-abstract class SketchProbeExpr[S <: AnyRef] extends UnaryExpression {
+  * field typed with [[sketchClass]] (which picks the `check` overload) at
+  * class init and passes it, the row's shared [[KeyFold]] and the key's
+  * `UTF8String` to [[SketchProbes]]`.check`. A null key probes to null. */
+abstract class SketchProbeExpr[S <: AnyRef] extends BroadcastKernelExpr {
+  def child: Expression
   def sketch: Broadcast[S]
-
-  /** The type of the generated sketch field; it picks the `check` overload. */
   protected def sketchClass: Class[S]
 
-  @transient protected lazy val value: S = sketch.value
-
-  /** The interpreted probe; the generated code makes the same call. */
-  protected def check(fold: KeyFold, key: UTF8String): Any
-
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    check(KeyFold.local, input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = sketchClass.getName
-    val bc = ctx.addReferenceObj(prettyName, sketch, classOf[Broadcast[_]].getName)
-    val field = ctx.addMutableState(cls, prettyName, v => s"$v = ($cls) $bc.value();",
-      forceInline = true)
-    ctx.addImmutableStateIfNotExists(classOf[KeyFold].getName, SketchProbeExpr.Fold,
-      v => s"$v = new ${classOf[KeyFold].getName}();")
-    defineCodeGen(ctx, ev,
-      c => s"graft.spark.fns.SketchProbes.check($field, ${SketchProbeExpr.Fold}, $c)")
-  }
+  override protected def kernel: Kernel =
+    Kernel(SketchProbes, "check", broadcastValue(sketchClass), SketchProbeExpr.FoldArg, child)
 }
 
 object SketchProbeExpr {
   /** The generated field holding the fold that a generated class's probes share. */
   val Fold = "graftKeyFold"
+
+  /** The shared fold as a kernel argument; interpreted probes use the thread's. */
+  private object FoldArg extends KernelArg {
+    def javaClass: Class[_] = classOf[KeyFold]
+    def value: Any = KeyFold.local
+    def code(ctx: CodegenContext): String = {
+      ctx.addImmutableStateIfNotExists(classOf[KeyFold].getName, Fold,
+        v => s"$v = new ${classOf[KeyFold].getName}();")
+      Fold
+    }
+  }
 }
 
 /** The UTF-8 entry point of the seven sketch probes, one `check` per
@@ -136,10 +115,6 @@ case class BloomMightContainExpr(child: Expression, sketch: Broadcast[BloomFilte
     extends SketchProbeExpr[BloomFilter] {
   override def dataType: DataType = BooleanType
   override protected def sketchClass: Class[BloomFilter] = classOf[BloomFilter]
-  override protected def check(fold: KeyFold, key: UTF8String): Any =
-    SketchProbes.check(value, fold, key)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
   override def prettyName: String = "bloom_might_contain"
 }
 
@@ -148,10 +123,6 @@ case class CmsCountExpr(child: Expression, sketch: Broadcast[CountMinSketch])
     extends SketchProbeExpr[CountMinSketch] {
   override def dataType: DataType = LongType
   override protected def sketchClass: Class[CountMinSketch] = classOf[CountMinSketch]
-  override protected def check(fold: KeyFold, key: UTF8String): Any =
-    SketchProbes.check(value, fold, key)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
   override def prettyName: String = "cms_count"
 }
 
@@ -160,10 +131,6 @@ case class CbfCountExpr(child: Expression, sketch: Broadcast[CountingBloomFilter
     extends SketchProbeExpr[CountingBloomFilter] {
   override def dataType: DataType = LongType
   override protected def sketchClass: Class[CountingBloomFilter] = classOf[CountingBloomFilter]
-  override protected def check(fold: KeyFold, key: UTF8String): Any =
-    SketchProbes.check(value, fold, key)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
   override def prettyName: String = "cbf_count"
 }
 
@@ -172,10 +139,6 @@ case class CcfCountExpr(child: Expression, sketch: Broadcast[CountingCuckooFilte
     extends SketchProbeExpr[CountingCuckooFilter] {
   override def dataType: DataType = LongType
   override protected def sketchClass: Class[CountingCuckooFilter] = classOf[CountingCuckooFilter]
-  override protected def check(fold: KeyFold, key: UTF8String): Any =
-    SketchProbes.check(value, fold, key)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
   override def prettyName: String = "ccf_count"
 }
 
@@ -184,10 +147,6 @@ case class CuckooContainsExpr(child: Expression, sketch: Broadcast[CuckooFilter]
     extends SketchProbeExpr[CuckooFilter] {
   override def dataType: DataType = BooleanType
   override protected def sketchClass: Class[CuckooFilter] = classOf[CuckooFilter]
-  override protected def check(fold: KeyFold, key: UTF8String): Any =
-    SketchProbes.check(value, fold, key)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
   override def prettyName: String = "cuckoo_contains"
 }
 
@@ -196,10 +155,6 @@ case class QfContainsExpr(child: Expression, sketch: Broadcast[QuotientFilter])
     extends SketchProbeExpr[QuotientFilter] {
   override def dataType: DataType = BooleanType
   override protected def sketchClass: Class[QuotientFilter] = classOf[QuotientFilter]
-  override protected def check(fold: KeyFold, key: UTF8String): Any =
-    SketchProbes.check(value, fold, key)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
   override def prettyName: String = "qf_contains"
 }
 
@@ -208,10 +163,6 @@ case class EbfContainsExpr(child: Expression, sketch: Broadcast[ExpandingBloomFi
     extends SketchProbeExpr[ExpandingBloomFilter] {
   override def dataType: DataType = BooleanType
   override protected def sketchClass: Class[ExpandingBloomFilter] = classOf[ExpandingBloomFilter]
-  override protected def check(fold: KeyFold, key: UTF8String): Any =
-    SketchProbes.check(value, fold, key)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
   override def prettyName: String = "ebf_contains"
 }
 

@@ -1,11 +1,14 @@
 package graft.spark.fns
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField,
+  StructType}
 
 /** Codegen'd vector kernels for the embedding hot paths. The previous
   * cosine was a `zip_with` + `aggregate` expression chain — higher-order
@@ -60,8 +63,7 @@ object VecKernels extends Serializable {
     * the boxed assign UDF this replaced (round-5 verdict "what's wrong"
     * #3) AND to SemDedup's pair-verify cosine, so assignment and verify
     * can never desynchronize numerically. */
-  def assignCentroidF64(v: ArrayData, ids: Array[Int],
-                        cents: Array[Array[Float]]): org.apache.spark.sql.catalyst.InternalRow = {
+  def assignCentroidF64(v: ArrayData, ids: Array[Int], cents: Array[Array[Float]]): InternalRow = {
     var best = 0
     var bestSim = Double.NegativeInfinity
     var k = 0
@@ -80,8 +82,7 @@ object VecKernels extends Serializable {
       if (s > bestSim) { bestSim = s; best = ids(k) }
       k += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](best, bestSim))
+    new GenericInternalRow(Array[Any](best, bestSim))
   }
 
   /** Ann's IVF cell rule — same traversal/tie rule as [[assignCentroidF64]]
@@ -146,56 +147,27 @@ case class CosineF32Expr(left: Expression, right: Expression) extends BinaryExpr
   * the distributed exact top-k selection ([[graft.spark.sample.Sampling
   * .topKFlags]]): signed comparisons and arithmetic-shift bucket prefixes
   * of the result respect the double's numeric order. */
-case class SortableDoubleBitsExpr(child: Expression) extends UnaryExpression {
+case class SortableDoubleBitsExpr(child: Expression) extends KernelExpr {
+  override protected def kernel: Kernel = Kernel(VecKernels, "sortableBits", child)
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VecKernels.sortableBits(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.fns.VecKernels.sortableBits($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
   override def prettyName: String = "sortable_double_bits"
 }
 
 /** Codegen'd fused (cell, centroid_sim) assignment against a BROADCAST
-  * centroid table (broadcast-handle + hoisted-fetch mechanics as
-  * SortedLongContainsExpr): `assign_centroid(array<float>) ->
+  * centroid table: `assign_centroid(array<float>) ->
   * struct<cell:int, sim:double>`. Per-row work is one primitive
-  * nClusters×dim loop inside whole-stage codegen — no boxed Seq[Float], no
-  * per-centroid tuple allocation (at the SemDeDup paper's k=11k clusters ×
-  * dim=768 the old UDF boxed ~8.4M float multiplies per doc). */
-case class AssignCentroidExpr(child: Expression,
-                              bc: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Float])]])
-    extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.IntegerType,
-      nullable = false),
-    org.apache.spark.sql.types.StructField("sim", DoubleType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val ids = VecKernels.centroidIds(bc.value)
-  @transient private lazy val vecs = VecKernels.centroidVecs(bc.value)
-
-  override protected def nullSafeEval(input: Any): Any =
-    VecKernels.assignCentroidF64(input.asInstanceOf[ArrayData], ids, vecs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("graftCentBc", bc,
-      classOf[org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Float])]]].getName)
-    val idsArr = ctx.addMutableState("int[]", "graftCentIds",
-      v => s"$v = graft.spark.fns.VecKernels.centroidIds((scala.Tuple2[])$bcRef.value());")
-    val vecsArr = ctx.addMutableState("float[][]", "graftCentVecs",
-      v => s"$v = graft.spark.fns.VecKernels.centroidVecs((scala.Tuple2[])$bcRef.value());")
-    defineCodeGen(ctx, ev,
-      c => s"graft.spark.fns.VecKernels.assignCentroidF64($c, $idsArr, $vecsArr)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  * nClusters×dim loop inside whole-stage codegen over the table's id and
+  * vector arrays, derived once per generated class — no boxed Seq[Float],
+  * no per-centroid tuple allocation (at the SemDeDup paper's k=11k clusters
+  * × dim=768 the old UDF boxed ~8.4M float multiplies per doc). */
+case class AssignCentroidExpr(child: Expression, bc: Broadcast[Array[(Int, Array[Float])]])
+    extends BroadcastKernelExpr {
+  override protected def kernel: Kernel = Kernel(VecKernels, "assignCentroidF64", child,
+    derived(classOf[Array[Int]], VecKernels, "centroidIds"),
+    derived(classOf[Array[Array[Float]]], VecKernels, "centroidVecs"))
+  override def dataType: DataType = StructType(Seq(
+    StructField("cell", IntegerType, nullable = false),
+    StructField("sim", DoubleType, nullable = false)))
   override def prettyName: String = "assign_centroid"
 }
 
@@ -204,47 +176,26 @@ case class AssignCentroidExpr(child: Expression,
   * [[AssignCentroidExpr]]; kept as a separate kernel because Ann's cosine
   * accumulates FLOAT products (bit-parity with every stored IVF/IVFPQ
   * index and the driver-side sample training). */
-case class AssignCellF32Expr(child: Expression,
-                             bc: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Float])]])
-    extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val ids = VecKernels.centroidIds(bc.value)
-  @transient private lazy val vecs = VecKernels.centroidVecs(bc.value)
-
-  override protected def nullSafeEval(input: Any): Any =
-    VecKernels.assignCellF32(input.asInstanceOf[ArrayData], ids, vecs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("graftCellBc", bc,
-      classOf[org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Float])]]].getName)
-    val idsArr = ctx.addMutableState("int[]", "graftCellIds",
-      v => s"$v = graft.spark.fns.VecKernels.centroidIds((scala.Tuple2[])$bcRef.value());")
-    val vecsArr = ctx.addMutableState("float[][]", "graftCellVecs",
-      v => s"$v = graft.spark.fns.VecKernels.centroidVecs((scala.Tuple2[])$bcRef.value());")
-    defineCodeGen(ctx, ev,
-      c => s"graft.spark.fns.VecKernels.assignCellF32($c, $idsArr, $vecsArr)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class AssignCellF32Expr(child: Expression, bc: Broadcast[Array[(Int, Array[Float])]])
+    extends BroadcastKernelExpr {
+  override protected def kernel: Kernel = Kernel(VecKernels, "assignCellF32", child,
+    derived(classOf[Array[Int]], VecKernels, "centroidIds"),
+    derived(classOf[Array[Array[Float]]], VecKernels, "centroidVecs"))
+  override def dataType: DataType = IntegerType
   override def prettyName: String = "assign_cell_f32"
 }
 
 object VecExpressions {
-  def cosineF32(a: Column, b: Column): Column =
-    GraftColumnBridge.column(
-      CosineF32Expr(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+  private def expr(c: Column): Expression = GraftColumnBridge.expression(c)
+  private def column(e: Expression): Column = GraftColumnBridge.column(e)
 
-  def sortableDoubleBits(c: Column): Column =
-    GraftColumnBridge.column(SortableDoubleBitsExpr(GraftColumnBridge.expression(c)))
+  def cosineF32(a: Column, b: Column): Column = column(CosineF32Expr(expr(a), expr(b)))
 
-  def assignCentroid(c: Column,
-                     bc: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Float])]]): Column =
-    GraftColumnBridge.column(AssignCentroidExpr(GraftColumnBridge.expression(c), bc))
+  def sortableDoubleBits(c: Column): Column = column(SortableDoubleBitsExpr(expr(c)))
 
-  def assignCellF32(c: Column,
-                    bc: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Float])]]): Column =
-    GraftColumnBridge.column(AssignCellF32Expr(GraftColumnBridge.expression(c), bc))
+  def assignCentroid(c: Column, bc: Broadcast[Array[(Int, Array[Float])]]): Column =
+    column(AssignCentroidExpr(expr(c), bc))
+
+  def assignCellF32(c: Column, bc: Broadcast[Array[(Int, Array[Float])]]): Column =
+    column(AssignCellF32Expr(expr(c), bc))
 }

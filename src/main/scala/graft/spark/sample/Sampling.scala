@@ -313,7 +313,7 @@ object Sampling {
               // id; ids are unique, so it terminates at an exact boundary
               ~walkBoundaryDesc(
                 proj.filter(col("__kb") === t)
-                  .select(bitwiseNOT(col("__id")).as("__nid")),
+                  .select(bitwise_not(col("__id")).as("__nid")),
                 col("__nid"), kRem).get._1
             }
           return Some((t, bId))

@@ -44,8 +44,8 @@ final class BpeTokenizer(val merges: Vector[(String, String)],
 
   /** Per-thread piece-count memo: web text is Zipf-distributed, so the same
     * pre-tokens recur constantly — caching turns the merge loop into a map
-    * hit for the frequent head. ThreadLocal (the tokenizer is a shared
-    * per-executor plan reference object probed by many tasks), bounded by
+    * hit for the frequent head. ThreadLocal (the tokenizer is a broadcast
+    * value that an executor's tasks share), bounded by
     * clear-on-full; results are a pure function of the token, so caching
     * cannot change any count. */
   @transient private lazy val countCache: ThreadLocal[java.util.HashMap[String, Integer]] =

@@ -100,7 +100,7 @@ object CorpusScale {
       // deterministic (fixed partitioning, pure map-side generation)
       val rows = graft.spark.io.PagesGen.pages(spark, 50000L, numPartitions = 32)
         .select(col("url"), col("lang"), col("text"))
-        .rdd.zipWithIndex.map { case (r, i) =>
+        .rdd.zipWithIndex().map { case (r, i) =>
           (i * 16L, r.getString(1), r.getString(0), r.getString(2))
         }.toDF("doc_id", "lang", "source", "text")
       withPlants(rows).repartition(32).write.mode("overwrite").parquet(dir("sf1"))

@@ -11,9 +11,13 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The catalog entry of a graft SQL function. */
+  def info(name: String, usage: String): ExpressionInfo =
+    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "")
+
   /** Register a Catalyst function builder as a session SQL function. */
   def registerFunction(spark: SparkSession, name: String, usage: String,
                        builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), new ExpressionInfo("graft", null, name, usage, ""), builder)
+      FunctionIdentifier(name), info(name, usage), builder)
 }

@@ -93,10 +93,10 @@ class BloomPartialSpec extends AnyFunSuite with SketchFoldFixture {
     // a dense export written as the reference format (the format of every
     // buffer before sparse partials) reads back dense and merges with both
     for (n <- Seq(0, 10, 300)) {
-      val export = fold(keys.take(n), est, fpr).toBytes
-      val back = agg.deserialize(export)
-      assert(back.isDense && agg.serialize(back).toSeq == export.toSeq, s"n=$n")
-      val merged = agg.merge(agg.deserialize(export), partial(keys.slice(n, n + 30), est, fpr))
+      val `export` = fold(keys.take(n), est, fpr).toBytes
+      val back = agg.deserialize(`export`)
+      assert(back.isDense && agg.serialize(back).toSeq == `export`.toSeq, s"n=$n")
+      val merged = agg.merge(agg.deserialize(`export`), partial(keys.slice(n, n + 30), est, fpr))
       assert(agg.eval(merged).asInstanceOf[Array[Byte]].toSeq ==
         fold(keys.take(n + 30), est, fpr).toBytes.toSeq, s"n=$n")
     }

@@ -48,7 +48,7 @@ class CharLmSpec extends AnyFunSuite {
   test("fuzz: random unicode soup always scores finite, positive, idempotent-stable") {
     val lm = CharLm.standard
     val rng = new graft.core.SplitMix64(0xBEEFL)
-    (0 until 1000).foreach { i =>
+    (0 until 1000).foreach { _ =>
       val len = (Math.floorMod(rng.nextLong(), 60L) + 1).toInt
       val s = new String(Array.fill(len) {
         // mix ASCII, Latin-1, CJK, surrogate-pair plane chars

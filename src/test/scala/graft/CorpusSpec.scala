@@ -102,7 +102,6 @@ class CorpusSpec extends AnyFunSuite {
 
   test("spanFrequencyFlags marks exactly the corpus-repeated window positions") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // window n=3, minCount=3: "a b c" occurs 3x (docs 1,2,3), "x y z" 2x
     val docs = Seq(
       (1L, "a b c d e"),        // windows: "a b c"(R) "b c d" "c d e"

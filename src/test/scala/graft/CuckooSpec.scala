@@ -313,7 +313,7 @@ class QuotientFilterSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val qf = QuotientFilter(10, autoExpand = false)
     var set = Set.empty[String]
-    (0 until 400).foreach { i =>
+    (0 until 400).foreach { _ =>
       val k = s"key-${rnd.nextInt(300)}"
       if (rnd.nextBoolean() || set.isEmpty) {
         if (set.size < 800) { qf.add(k); set += k }

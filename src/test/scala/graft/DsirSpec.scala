@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.spark.fns.{TextExpressions, TextKernels}
+import graft.spark.fns.TextKernels
 import graft.spark.sample.Dsir
 
 /** DSIR (Xie et al. 2023) importance resampling: hashed-feature extraction
@@ -54,7 +54,7 @@ class DsirSpec extends AnyFunSuite {
       org.apache.spark.GraftTestBridge.drainListenerBus(sc)
       // the target side ran inside fit and has finished
       assert(started.get > 0, "fit returned before the target job started")
-      assert(sc.statusTracker.getActiveJobIds.isEmpty)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
     } finally sc.removeSparkListener(listener)
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,29 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * install-time), so it uses a distinct appName/context carefully. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  private def withExtSession[T](f: SparkSession => T): T = {
-    // The SparkContext is shared JVM-wide across suites; clear the
-    // active/default session so getOrCreate builds a NEW SparkSession (with
-    // extensions) on the existing context, then restore the shared one.
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val spark = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-ext-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.spark.plans.GraftExtensions)
-        .getOrCreate()
-      f(spark)
-    } finally {
-      prior.foreach { s => SparkSession.setDefaultSession(s); SparkSession.setActiveSession(s) }
-    }
-  }
-
   test("COUNT(DISTINCT string) rewrites to the HLL aggregate when enabled") {
-    withExtSession { spark =>
+    GraftExtSession { spark =>
       val df = spark.range(0, 20000, 1, 4)
         .select(concat(lit("u"), col("id") % 5000).as("k"), (col("id") % 7).as("g"))
       df.createOrReplaceTempView("t_ext")
@@ -59,7 +37,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("percentile_approx rewrites to the KLL quantile aggregate when enabled") {
-    withExtSession { spark =>
+    GraftExtSession { spark =>
       // uniform 0..9999 doubles plus an INT column (type-preservation check)
       spark.range(0, 20000, 1, 4)
         .selectExpr("CAST(id % 10000 AS DOUBLE) AS v", "CAST(id % 1000 AS INT) AS iv",
@@ -97,7 +75,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("injected native-agg SQL functions work end to end") {
-    withExtSession { spark =>
+    GraftExtSession { spark =>
       spark.range(0, 5000, 1, 4)
         .selectExpr("concat('u', id % 700) AS k", "CAST(id % 100 AS DOUBLE) AS v")
         .createOrReplaceTempView("t_native_fns")
@@ -198,6 +176,17 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(dsir == graft.spark.fns.TextKernels.dsirBuckets(
         org.apache.spark.unsafe.types.UTF8String.fromString("alpha beta gamma"), 512)
         .toIntArray().toSeq)
+      // the bucket count is read like every other literal argument: a bigint
+      // or a folded cast gives the same buckets, a column is rejected
+      Seq("512L", "CAST(512 AS BIGINT)", "CAST('512' AS INT)", "256 + 256").foreach { b =>
+        val got = spark.sql(s"SELECT dsir_buckets('alpha beta gamma', $b) AS f")
+          .head().getSeq[Int](0)
+        assert(got == dsir, b)
+      }
+      val nonLiteral = intercept[Exception] {
+        spark.sql("SELECT dsir_buckets(t, n) FROM VALUES ('alpha', 512) AS v(t, n)").collect()
+      }
+      assert(nonLiteral.getMessage.contains("buckets must be a literal"), nonLiteral.getMessage)
 
       // round-6 kernel: deterministic text embedding straight from SQL
       val e1 = spark.sql("SELECT text_embedding('alpha beta gamma', 16) AS e")
@@ -217,7 +206,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("a GraftExtensions session resolves all 13 sketch aggregate names") {
-    withExtSession { spark =>
+    GraftExtSession { spark =>
       val names = graft.spark.aggs.SketchUdafs.sqlAggregates.map(_._1)
       assert(names.sorted == Seq("bloom_agg", "cbf_agg", "cms_agg", "counting_cuckoo_agg",
         "cuckoo_agg", "ebf_agg", "heavy_hitters", "hll_agg", "hll_count", "kll_agg", "qf_agg",
@@ -240,7 +229,7 @@ class ExtensionsSpec extends AnyFunSuite {
   test("rewrite path buffers serialize in the reference HLL byte format") {
     // the aggregate the rule builds must ship its buffer as the reference
     // HLL export, not kryo: serialize() output must parse as Hll.fromBytes
-    withExtSession { spark =>
+    GraftExtSession { spark =>
       spark.conf.set("spark.graft.hll.rewriteCountDistinct", "true")
       try {
         val df = spark.range(0, 1000, 1, 2)

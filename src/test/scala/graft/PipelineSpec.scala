@@ -17,7 +17,6 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   test("checkpoint/resume: killed-after-half-partitions resume == full run") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft_ckpt").toString
     val pages = PagesGen.pages(spark, 8000, numPartitions = 8)
 

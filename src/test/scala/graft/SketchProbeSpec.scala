@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -237,8 +237,13 @@ class SketchProbeSpec extends AnyFunSuite {
     }
   }
 
-  /** The seven probes and the decontamination probe over sketches that
-    * hold `n` keys, each with capacity for `n`. */
+  /** Every expression that carries a broadcast, over a payload that grows
+    * with `n`: the seven probes and the decontamination probe over sketches
+    * that hold `n` keys, each with capacity for `n`; the heavy-set,
+    * span-removal, DSIR and centroid expressions over `n`-entry arrays; and
+    * BPE and the char LM over an `n`-merge tokenizer and an LM trained on
+    * `n` keys. The expressions that take no string read the columns of
+    * [[sizedInputs]]. */
   private def sized(n: Int, key: Column): Seq[(String, Column)] = {
     import SketchExpressions._
     val keys = (0 until n).map(i => s"k-$i")
@@ -254,15 +259,41 @@ class SketchProbeSpec extends AnyFunSuite {
       "cbf" -> cbfCountNative(cb.toBytes, key), "ccf" -> ccfCountNative(cc.toBytes, 32, key),
       "cuckoo" -> cuckooContainsNative(ck.toBytes, 32, key), "qf" -> qfContainsNative(q.toBytes, key),
       "ebf" -> ebfContainsNative(e.toBytes, key),
-      "shingle" -> TextExpressions.bloomShingleHitNative(b.toBytes, 2, key))
+      "shingle" -> TextExpressions.bloomShingleHitNative(b.toBytes, 2, key)) ++
+      payloadSized(n, key)
   }
 
+  private def payloadSized(n: Int, key: Column): Seq[(String, Column)] = {
+    import TextExpressions._
+    val bc = spark.sparkContext
+    val longs = bc.broadcast((0 until n).map(_.toLong * 7).toArray)
+    val table = bc.broadcast(Array.tabulate(n)(i => i * 0.25))
+    val cents = bc.broadcast(Array.tabulate(n)(i => (i, Array(i.toFloat, 1f))))
+    val bpe = new graft.spark.text.BpeTokenizer((0 until n).map(i => (s"k$i", s"-$i")).toVector)
+    val lm = graft.spark.text.CharLm.train((0 until n).map(i => s"k-$i"))
+    Seq("heavy" -> sortedLongContainsNative(col("h"), longs),
+      "spans" -> removeCoveredSpansNative(key, 2, longs),
+      "dsir" -> dsirLogWeightNative(key, n, table),
+      "dsir buckets" -> dsirBucketWeightNative(col("ids"), table),
+      "centroid" -> VecExpressions.assignCentroid(col("v"), cents),
+      "cell" -> VecExpressions.assignCellF32(col("v"), cents),
+      "bpe" -> bpeMergedCountNative(key, bpe),
+      "charlm" -> charLmBitsNative(key, lm))
+  }
+
+  /** The non-string inputs of [[payloadSized]] next to a key column. */
+  private def sizedInputs(key: Column): Seq[Column] = Seq(key.as("k"),
+    xxhash64(key).as("h"), array(length(key) % 2, lit(0)).as("ids"),
+    array(length(key).cast("float"), lit(1f)).as("v"))
+
   test("a Java-serialized probe expression stays the same size as its sketch grows") {
-    val key = BoundReference(0, StringType, nullable = true)
+    val input = spark.range(1).select(sizedInputs(lit("k-1")): _*)
+    val row = input.queryExecution.toRdd.first().copy()
     def sizes(n: Int): Seq[(String, Int)] = sized(n, col("k")).map { case (name, c) =>
-      val e = org.apache.spark.sql.GraftColumnBridge.expression(c).withNewChildren(Seq(key))
+      val analyzed = input.select(c).queryExecution.analyzed.expressions.head.children.head
+      val e = BindReferences.bindReference(analyzed, input.queryExecution.analyzed.output)
       // the interpreted probe has fetched its sketch before it is serialized
-      e.eval(InternalRow(UTF8String.fromString("k-1")))
+      e.eval(row)
       name -> serialized(e).length
     }
     val small = sizes(100)
@@ -274,7 +305,7 @@ class SketchProbeSpec extends AnyFunSuite {
 
   test("rendering a probe plan never calls a sketch's toString: the plan string does not grow with the sketch") {
     def rendered(n: Int): String = {
-      val df = spark.range(0, 64, 1, 2).select(concat(lit("k-"), col("id")).as("k"))
+      val df = spark.range(0, 64, 1, 2).select(sizedInputs(concat(lit("k-"), col("id"))): _*)
         .select(sized(n, col("k")).map { case (name, c) => c.as(name) }: _*)
       val qe = df.queryExecution
       val before = qe.toString + qe.explainString(org.apache.spark.sql.execution.ExtendedMode)
@@ -284,7 +315,10 @@ class SketchProbeSpec extends AnyFunSuite {
     }
     val small = rendered(100)
     val large = rendered(100000)
-    assert(small.contains("bloom_might_contain(") && small.contains("bloom_shingle_hit("), small)
+    Seq("bloom_might_contain(", "bloom_shingle_hit(", "sorted_long_contains(",
+        "remove_covered_spans(", "dsir_logw_milli(", "dsir_bucket_weight_milli(",
+        "assign_centroid(", "assign_cell_f32(", "bpe_count(", "charlm_bits_milli(")
+      .foreach(name => assert(small.contains(name.replaceAll("\\d+", "N")), small))
     assert(!large.contains("number bits set") && !large.contains("BloomFilter:"), large)
     assert(large == small)
   }

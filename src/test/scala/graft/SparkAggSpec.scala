@@ -8,7 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.ext._
 import graft.spark.aggs.SketchUdafs
-import graft.spark.fns.SketchFunctions
 import graft.spark.io.PagesGen
 
 object SparkTestSession {
@@ -28,7 +27,6 @@ object SparkTestSession {
   * deterministic pages fixture. */
 class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
-  import spark.implicits._
 
   private def keysDf(n: Int, parts: Int): DataFrame =
     spark.range(0, n, 1, parts).select(concat(lit("key-"), (col("id") % (n / 2)).cast("string")).as("k"))

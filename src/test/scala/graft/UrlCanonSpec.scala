@@ -47,7 +47,7 @@ class UrlCanonSpec extends AnyFunSuite {
   test("fuzz: random byte soup never throws, output is always idempotent") {
     val rng = new graft.core.SplitMix64(0xF00DL)
     val alphabet = "aZ09:/?#@&=%._-[]é中 \t".toCharArray
-    (0 until 2000).foreach { i =>
+    (0 until 2000).foreach { _ =>
       val len = (Math.floorMod(rng.nextLong(), 40L) + 1).toInt
       val s = new String(Array.fill(len)(
         alphabet(Math.floorMod(rng.nextLong(), alphabet.length.toLong).toInt)))
