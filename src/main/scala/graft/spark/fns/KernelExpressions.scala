@@ -30,6 +30,7 @@ object Kernel {
       .getMethods.find(m => m.getName == method && Modifier.isStatic(m.getModifiers) &&
         m.getParameterCount == types.length &&
         m.getParameterTypes.zip(types).forall { case (p, t) => t == null || p == t })
+      .map { m => m.setAccessible(true); m } // no access check per call
       .getOrElse(throw new NoSuchMethodException(
         s"static ${className(owner)}.$method(${types.mkString(", ")})"))
 
@@ -90,21 +91,37 @@ trait KernelExpr extends Expression {
       case _ => java.lang.Long.TYPE
     })
 
+  /** The argument slot of each child: every child is one kernel argument. */
+  @transient private lazy val childSlot: Array[Int] = {
+    val at = children.indices.map(i => slots.indexOf(ChildValue(i)))
+    require(at.forall(_ >= 0) && slots.count(_.isInstanceOf[ChildValue]) == children.length,
+      s"$prettyName: every child must be exactly one kernel argument")
+    at.toArray
+  }
+
+  /** The interpreted call's arguments, constants filled once. One
+    * expression instance is evaluated by one thread at a time (as Spark's
+    * own `RegExpReplace` assumes of its reused buffer), so a row allocates
+    * no array, only the boxes of primitive values. */
+  @transient private lazy val argBuf: Array[AnyRef] = slots.map {
+    case Constant(c) => c.asInstanceOf[AnyRef]
+    case _ => null
+  }
+
   override def eval(input: InternalRow): Any = {
-    val in = new Array[AnyRef](children.length)
+    val args = argBuf
     var i = 0
-    while (i < in.length) {
-      in(i) = children(i).eval(input).asInstanceOf[AnyRef]
-      if (in(i) == null) return null
+    while (i < childSlot.length) {
+      val v = children(i).eval(input).asInstanceOf[AnyRef]
+      if (v == null) return null
+      args(childSlot(i)) = v
       i += 1
     }
-    val args = new Array[AnyRef](slots.length)
     i = 0
     while (i < args.length) {
-      args(i) = slots(i) match {
-        case ChildValue(j) => in(j)
-        case a: KernelArg => a.value.asInstanceOf[AnyRef]
-        case Constant(c) => c.asInstanceOf[AnyRef]
+      slots(i) match {
+        case a: KernelArg => args(i) = a.value.asInstanceOf[AnyRef]
+        case _ =>
       }
       i += 1
     }

@@ -1,7 +1,10 @@
 package graft.spark.fns
 
+import java.lang.ref.WeakReference
+
 import scala.reflect.ClassTag
 
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
@@ -173,6 +176,31 @@ object SketchExpressions {
   /** Broadcasts a probe's sketch once, from the active session. */
   private[fns] def broadcast[S: ClassTag](sketch: S): Broadcast[S] =
     SparkSession.active.sparkContext.broadcast(sketch)
+
+  /** Per SparkContext, the live broadcast of each model object. Both keys
+    * are weak (a model compares by identity: [[graft.spark.text
+    * .BpeTokenizer]] and [[graft.spark.text.CharLm]] keep `AnyRef`'s
+    * equals), and so is the handle: once no plan holds it, the
+    * ContextCleaner reclaims the broadcast and the next call makes another. */
+  private val models =
+    new java.util.WeakHashMap[SparkContext, java.util.WeakHashMap[AnyRef, WeakReference[Broadcast[_]]]]
+
+  /** `model` broadcast once from the active session's context: while one
+    * handle is live, every call with the same model returns it, so two
+    * calls of `bpe_count(text)` are one expression (GROUP BY, common
+    * subexpressions) and analyzing a plan again broadcasts nothing. */
+  private[fns] def broadcastModel[M <: AnyRef: ClassTag](model: M): Broadcast[M] =
+    models.synchronized {
+      val sc = SparkSession.active.sparkContext
+      val live = models.computeIfAbsent(sc, _ => new java.util.WeakHashMap)
+      Option(live.get(model)).flatMap(r => Option(r.get)) match {
+        case Some(b) => b.asInstanceOf[Broadcast[M]]
+        case None =>
+          val b = sc.broadcast(model)
+          live.put(model, new WeakReference[Broadcast[_]](b))
+          b
+      }
+    }
 
   /** Codegen'd fnv-1a-64 column. */
   def fnv1a64Native(c: Column, seed: Int = 0): Column = column(Fnv1a64Expr(expr(c), seed))

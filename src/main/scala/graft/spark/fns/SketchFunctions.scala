@@ -161,7 +161,8 @@ object SketchFunctions {
     * both register exactly these rows, next to
     * [[graft.spark.aggs.SketchUdafs.sqlAggregates]]. Size arguments are
     * literals; where a name makes them optional, the usage string gives the
-    * defaults. The tokenizer and LM functions broadcast their model. */
+    * defaults. The tokenizer and LM functions share one broadcast of their model per
+    * SparkContext, so repeated calls are equal expressions. */
   val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = {
     import SqlArgs.{function, int, long}
     columnFunctions.map { f =>
@@ -186,11 +187,11 @@ object SketchFunctions {
         case Seq(t) => SimHash64Expr(t)
       },
       function("bpe_count", "(text)", "TRUE merged-BPE token count (standard table)") {
-        case Seq(t) => BpeCountExpr(t, SketchExpressions.broadcast(BpeTokenizer.standard))
+        case Seq(t) => BpeCountExpr(t, SketchExpressions.broadcastModel(BpeTokenizer.standard))
       },
       function("bpe_count_bytes", "(text)",
           "byte-level merged-BPE token count (GPT-2 byte alphabet)") {
-        case Seq(t) => BpeCountExpr(t, SketchExpressions.broadcast(BpeTokenizer.standardBytes))
+        case Seq(t) => BpeCountExpr(t, SketchExpressions.broadcastModel(BpeTokenizer.standardBytes))
       },
       function("span_hashes", "(text, n)", "fused non-distinct n-token window hashes") {
         case Seq(t, n) => SpanHashesExpr(t, int(n, "span_hashes", "n"))
@@ -218,7 +219,7 @@ object SketchFunctions {
       },
       function("charlm_bits_milli", "(text)",
           "char-LM perplexity score, milli-bits/char (standard model)") {
-        case Seq(t) => CharLmBitsExpr(t, SketchExpressions.broadcast(CharLm.standard))
+        case Seq(t) => CharLmBitsExpr(t, SketchExpressions.broadcastModel(CharLm.standard))
       },
       function("dsir_buckets", "(text, buckets)",
           "DSIR hashed unigram+bigram feature bucket ids; buckets is a literal int") {

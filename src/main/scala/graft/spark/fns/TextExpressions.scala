@@ -747,9 +747,9 @@ object TextExpressions {
 
   /** Codegen'd merged-BPE token count under the given tokenizer (defaults to
     * the deterministic [[graft.spark.text.BpeTokenizer.standard]] table),
-    * broadcast once. */
+    * broadcast once per SparkContext (`SketchExpressions.broadcastModel`). */
   def bpeMergedCountNative(c: Column, bpe: BpeTokenizer = BpeTokenizer.standard): Column =
-    column(BpeCountExpr(expr(c), SketchExpressions.broadcast(bpe)))
+    column(BpeCountExpr(expr(c), SketchExpressions.broadcastModel(bpe)))
 
   /** Codegen'd three-tier language ID. */
   def langIdNative(c: Column): Column = column(LangIdExpr(expr(c)))
@@ -763,9 +763,9 @@ object TextExpressions {
 
   /** Codegen'd char-LM score (milli-bits/char) under the given model
     * (defaults to the deterministic [[graft.spark.text.CharLm.standard]]),
-    * broadcast once. */
+    * broadcast once per SparkContext (`SketchExpressions.broadcastModel`). */
   def charLmBitsNative(c: Column, lm: CharLm = CharLm.standard): Column =
-    column(CharLmBitsExpr(expr(c), SketchExpressions.broadcast(lm)))
+    column(CharLmBitsExpr(expr(c), SketchExpressions.broadcastModel(lm)))
 
   /** Codegen'd CJK-aware token count (== whitespace count on CJK-free text). */
   def cjkTokenCountNative(c: Column): Column = column(CjkTokenCountExpr(expr(c)))

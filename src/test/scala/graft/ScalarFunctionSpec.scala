@@ -1,18 +1,26 @@
 package graft
 
+import java.lang.reflect.Modifier
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{BloomFilter, CountMinSketch, QuotientFilter}
+import graft.core.{BloomFilter, CountingBloomFilter, CountingCuckooFilter, CountMinSketch, CuckooFilter,
+  ExpandingBloomFilter, QuotientFilter}
 import graft.ext.{Hll, Kll, TDigest}
-import graft.spark.fns.SketchFunctions
+import graft.spark.fns.{KernelExpr, SketchExpressions, SketchFunctions, SortableDoubleBitsExpr,
+  TextExpressions, TextKernels, VecExpressions}
 
 /** A session built with [[graft.spark.plans.GraftExtensions]] on the shared
   * SparkContext. */
@@ -43,7 +51,8 @@ object GraftExtSession {
   * resolves in a GraftExtensions session and after `registerAll`, and gives
   * the same answers there and interpreted as codegen'd, over null, empty,
   * ASCII, multi-byte and malformed UTF-8 text and the sketches built from
-  * it. */
+  * it. The same eval-path check covers every other [[KernelExpr]] class, so
+  * a kernel declaration that no longer resolves fails here. */
 class ScalarFunctionSpec extends AnyFunSuite {
   // eager: the tokenizer and LM builders broadcast from the active session
   val spark: SparkSession = SparkTestSession.spark
@@ -168,6 +177,23 @@ class ScalarFunctionSpec extends AnyFunSuite {
     assert(viaRegister.exists(_.forall(_ == null)))
   }
 
+  /** `e`'s answers interpreted == through `GenerateUnsafeProjection` on
+    * every input, null exactly on the first (all-null) one; its generated
+    * code makes one static call into a graft kernel. */
+  private def assertSameEvalPaths(name: String, e: Expression, inputs: Seq[InternalRow]): Unit = {
+    assert(e.genCode(new CodegenContext).code.toString.contains("graft."), name)
+    val generated = GenerateUnsafeProjection.generate(Seq(e))
+    inputs.zipWithIndex.foreach { case (row, i) =>
+      val interpreted = CatalystTypeConverters.convertToScala(e.eval(row), e.dataType)
+      val out = generated(row)
+      val codegend =
+        if (out.isNullAt(0)) null
+        else CatalystTypeConverters.convertToScala(out.get(0, e.dataType), e.dataType)
+      assert(normalize(codegend) == normalize(interpreted), s"$name on input $i")
+      assert((interpreted == null) == (i == 0), s"$name on input $i: $row")
+    }
+  }
+
   test("each scalar function gives the same answers interpreted and codegen'd") {
     val exprs = callExprs
     assert(exprs.keySet == names.toSet)
@@ -176,20 +202,130 @@ class ScalarFunctionSpec extends AnyFunSuite {
       case (v: Array[Float], _) => ArrayData.toArrayData(v)
       case (other, _) => other
     }))
-    names.foreach { n =>
-      val e = exprs(n)
-      // the generated code makes one static call into a graft kernel
-      assert(e.genCode(new CodegenContext).code.toString.contains("graft."), n)
-      val generated = GenerateUnsafeProjection.generate(Seq(e))
-      inputs.zipWithIndex.foreach { case (row, i) =>
-        val interpreted = CatalystTypeConverters.convertToScala(e.eval(row), e.dataType)
-        val out = generated(row)
-        val codegend =
-          if (out.isNullAt(0)) null
-          else CatalystTypeConverters.convertToScala(out.get(0, e.dataType), e.dataType)
-        assert(normalize(codegend) == normalize(interpreted), s"$n on input $i")
-        assert((interpreted == null) == (i == 0), s"$n on input $i")
+    names.foreach(n => assertSameEvalPaths(n, exprs(n), inputs))
+  }
+
+  /** Every concrete [[KernelExpr]] class compiled into `graft.spark.fns`. */
+  private def kernelExprClasses: Set[Class[_]] = {
+    val root = Paths.get(classOf[KernelExpr].getProtectionDomain.getCodeSource.getLocation.toURI)
+    val dir = root.resolve("graft/spark/fns")
+    assert(Files.isDirectory(dir), s"$dir: the classes are read from a directory")
+    val files = Files.list(dir)
+    try files.iterator.asScala.map(_.getFileName.toString).filter(_.endsWith(".class"))
+      .map(f => Class.forName("graft.spark.fns." + f.stripSuffix(".class"), false,
+        classOf[KernelExpr].getClassLoader))
+      .filter(c => classOf[KernelExpr].isAssignableFrom(c) && !c.isInterface &&
+        !Modifier.isAbstract(c.getModifiers))
+      .toSet
+    finally files.close()
+  }
+
+  test("every KernelExpr class in graft.spark.fns gives the same answers interpreted and codegen'd") {
+    import SketchExpressions._
+    import TextExpressions._
+    val decoded = texts.map(b => UTF8String.fromBytes(b).toString)
+    val bloom = BloomFilter.empty(100, 0.01)
+    val cms = CountMinSketch.empty(64, 3)
+    val cbf = CountingBloomFilter.empty(100, 0.01)
+    val ccf = new CountingCuckooFilter(100, 4, 500, 2, true, 32)
+    val cuckoo = new CuckooFilter(100, 4, 500, 2, true, 32)
+    val qf = QuotientFilter(8, autoExpand = true)
+    val ebf = ExpandingBloomFilter(100, 0.01)
+    // the ASCII and multi-byte texts and their tokens are members
+    (decoded.slice(1, 3) ++ decoded.flatMap(_.split(" "))).foreach { k =>
+      bloom.add(k); cms.add(k); cbf.add(k); ccf.add(k); cuckoo.add(k); qf.add(k); ebf.add(k)
+    }
+    val sc = spark.sparkContext
+    val heavy = sc.broadcast(Array(0L, 8L))
+    val spans = sc.broadcast(TextKernels.spanHashes(UTF8String.fromString(decoded(1)), 2)
+      .toLongArray().distinct.sorted.take(3))
+    val table = sc.broadcast(Array.tabulate(64)(i => (i - 32) * 0.125))
+    val cents = sc.broadcast(Array((3, Array(1f, 0f, 0f, 0f)), (9, Array(0f, 1f, 0f, 0.5f))))
+    val s = col("s")
+    val columns = Seq(
+      bloomMightContainNative(bloom.toBytes, s), cmsCountNative(cms.toBytes, s),
+      cbfCountNative(cbf.toBytes, s), ccfCountNative(ccf.toBytes, 32, s),
+      cuckooContainsNative(cuckoo.toBytes, 32, s), qfContainsNative(qf.toBytes, s),
+      ebfContainsNative(ebf.toBytes, s), bloomShingleHitNative(bloom.toBytes, 2, s),
+      minhashBandsNative(s, 3, 16, 4), langIdWithConfidenceNative(s), cjkWordNative(s),
+      sortedLongContainsNative(col("l"), heavy), removeCoveredSpansNative(s, 2, spans),
+      dsirLogWeightNative(s, 64, table), dsirBucketWeightNative(col("ids"), table),
+      VecExpressions.sortableDoubleBits(col("d")), VecExpressions.assignCentroid(col("vec"), cents),
+      VecExpressions.assignCellF32(col("vec"), cents))
+
+    val fields = Seq("b" -> BinaryType, "d" -> DoubleType, "l" -> LongType,
+      "vec" -> ArrayType(FloatType, containsNull = false),
+      "ids" -> ArrayType(IntegerType, containsNull = false))
+    val inputRows = Row.fromSeq(Seq.fill(fields.length)(null)) +: texts.indices.map { j =>
+      Row(texts(j), Seq(0.0, -2.5, 1e300, Double.NaN)(j), Seq(0L, 7L, 8L, Long.MinValue)(j),
+        Seq(j.toFloat, 1f, -j.toFloat, 0.5f), Seq(0, j, 63))
+    }
+    val input = spark.createDataFrame(sc.parallelize(inputRows, 1),
+        StructType(fields.map { case (n, t) => StructField(n, t) }))
+      .selectExpr("CAST(b AS STRING) AS s", "d", "l", "vec", "ids")
+    val inputs = input.queryExecution.toRdd.map(_.copy()).collect().toSeq
+    val bound = columns.map { c =>
+      val analyzed = input.select(c).queryExecution.analyzed.expressions.head.children.head
+      BindReferences.bindReference(analyzed, input.queryExecution.analyzed.output)
+    }
+    bound.foreach(e => assertSameEvalPaths(e.prettyName, e, inputs))
+
+    val covered: Set[Class[_]] = (bound ++ callExprs.values).map(_.getClass).toSet
+    assert(kernelExprClasses.nonEmpty && kernelExprClasses.subsetOf(covered),
+      s"not checked: ${(kernelExprClasses -- covered).map(_.getSimpleName)}")
+  }
+
+  test("repeated calls of a model function are one expression: GROUP BY bpe_count(s) selects bpe_count(s)") {
+    def grouped(session: SparkSession): Seq[Seq[(String, Long)]] = {
+      session.createDataFrame(Seq(Tuple1("a b a"), Tuple1("a b a"), Tuple1("x"), Tuple1(null)))
+        .toDF("s").createOrReplaceTempView("model_inputs")
+      Seq("bpe_count", "bpe_count_bytes", "charlm_bits_milli").map { f =>
+        session.sql(s"SELECT $f(s) AS n, count(*) AS c FROM model_inputs GROUP BY $f(s)")
+          .collect().map(r => (Option(r.get(0)).fold("")(_.toString), r.getLong(1)))
+          .sorted.toSeq
       }
     }
+    val registered = spark.newSession()
+    SketchFunctions.registerAll(registered)
+    val viaRegister = grouped(registered)
+    assert(viaRegister.forall(g => g.length == 3 && g.map(_._2).sum == 4))
+    assert(GraftExtSession(grouped) == viaRegister)
+    // the DataFrame helpers share the one broadcast of each model too
+    val df = spark.range(1).select(lit("a b").as("s"))
+    Seq(() => TextExpressions.bpeMergedCountNative(col("s")),
+        () => TextExpressions.charLmBitsNative(col("s"))).foreach { f =>
+      val Seq(a, b) =
+        Seq(f(), f()).map(c => df.select(c).queryExecution.analyzed.expressions.head.children.head)
+      assert(a.semanticEquals(b), a)
+    }
+  }
+
+  test("sketch-column DataFrame methods are auto-named like their SQL calls") {
+    val df = spark.range(1).select(lit(Array[Byte](1, 2)).as("bf"), lit("x").as("s"))
+    assert(df.select(SketchFunctions.bfEstimate(col("bf"))).columns.toSeq == Seq("bf_estimate(bf)"))
+    assert(df.select(SketchFunctions.fnv1a32(col("s"), lit(3))).columns.toSeq == Seq("fnv1a32(s, 3)"))
+  }
+
+  test("interpreted eval allocates no argument array per row") {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    assume(mx.isThreadAllocatedMemorySupported && mx.isThreadAllocatedMemoryEnabled)
+    val e = SortableDoubleBitsExpr(BoundReference(0, DoubleType, nullable = true))
+    val row = InternalRow(1.5e300)
+    def perRow(eval: () => Any): Double = {
+      val tid = Thread.currentThread.getId
+      val n = 200000
+      val before = mx.getThreadAllocatedBytes(tid)
+      var i = 0
+      while (i < n) { eval(); i += 1 }
+      (mx.getThreadAllocatedBytes(tid) - before).toDouble / n
+    }
+    perRow(() => e.eval(row)) // inflate the reflective call
+    // one box: the child's boxed Double (its size depends on the JVM's heap layout)
+    val box = perRow(() => e.child.eval(row))
+    val bytes = perRow(() => e.eval(row))
+    info(f"$bytes%.1f bytes per row, a box is $box%.1f")
+    // the child's box and the boxed Long result, nothing else
+    assert(box > 0 && bytes <= 2 * box + 1)
   }
 }
