@@ -84,7 +84,7 @@ object Corpus {
     val distinctSh = bench
       .select(explode(shingles(col(textCol), n)).as("s"))
       .distinct()
-    DriverBudget.collectAtMost(distinctSh, maxBenchCollect) match {
+    DriverBudget.collectAtMost(distinctSh, maxBenchCollect, "Corpus bench shingles") match {
       case Some(probe) =>
         val bf = graft.core.BloomFilter.empty(bloomCapacity, fpr)
         val hs = new java.util.HashSet[String](probe.length * 2)
@@ -276,7 +276,7 @@ object Corpus {
       .filter(col("c") >= minCount)
       .select(col("h"))
       .persist() // marks only; the probe job below materializes what it scans
-    DriverBudget.collectAtMost(heavyDf, maxHeavyBroadcast) match {
+    DriverBudget.collectAtMost(heavyDf, maxHeavyBroadcast, "Corpus heavy set") match {
       case Some(probe) =>
         val arr = probe.map(_.getLong(0))
         heavyDf.unpersist(blocking = false) // the broadcast variable owns the data now

@@ -264,7 +264,7 @@ object Dedup extends Serializable {
     // maxDriverEdges = 0 to force the distributed path (the specs do).
     val driverEdges = if (maxDriverEdges <= 0) None else DriverBudget.collectAtMost(
       edgePairs.select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst")),
-      maxDriverEdges)
+      maxDriverEdges, "Dedup.connectedComponents edges")
     if (driverEdges.isDefined) {
       val uf = new LongUnionFind
       driverEdges.get.foreach(e => uf.union(e.getLong(0), e.getLong(1)))

@@ -1,15 +1,61 @@
 package graft.spark.io
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** Bounded driver collects for the operators' size-adaptive fast paths. */
+/** Bounded driver collects for the operators' size-adaptive fast paths.
+  *
+  * Every probe logs one line per decision — the asking operator's label,
+  * the limit, the rows seen and the path taken — and its Spark jobs carry
+  * the call site of the operator that asked ("collect at Dedup.scala:<line>"),
+  * so job listeners and the SQL tab attribute them to that operator rather
+  * than to this file. */
 object DriverBudget {
-  /** All of `df`'s rows when it has at most `max` of them, else None. One
-    * `limit(max + 1)` job bounds the driver memory and answers the size
-    * question: a result shorter than the limit is the complete set. */
-  def collectAtMost(df: DataFrame, max: Long): Option[Array[Row]] = {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** All of `df`'s rows when it has at most `max` of them, else None (the
+    * caller then takes its distributed path). One `limit(max + 1)` probe
+    * bounds the driver memory and answers the size question: a result
+    * shorter than the limit is the complete set. */
+  def collectAtMost(df: DataFrame, max: Long, label: String): Option[Array[Row]] =
+    probe(df, max, label, overPath = "distributed")
+
+  /** All of `df`'s rows when it has at most `max` of them; otherwise fails
+    * loudly, naming `label` and the limit — for operators that have no
+    * distributed alternative to the collect. */
+  def collectOrFail(df: DataFrame, max: Long, label: String): Array[Row] =
+    probe(df, max, label, overPath = "fail").getOrElse(throw new IllegalStateException(
+      s"$label: more than $max rows would be collected to the driver (limit $max)"))
+
+  private def probe(df: DataFrame, max: Long, label: String,
+                    overPath: String): Option[Array[Row]] = {
     val lim = (math.min(max, (Int.MaxValue - 2).toLong) + 1L).toInt
-    val rows = df.limit(lim).collect()
-    if (rows.length < lim) Some(rows) else None
+    val rows = withCallerSite(df.sparkSession.sparkContext)(df.limit(lim).collect())
+    val fits = rows.length < lim
+    log.info(s"$label: limit $max, rows seen ${rows.length}, path " +
+      (if (fits) "driver" else overPath))
+    if (fits) Some(rows) else None
+  }
+
+  // SparkContext's call-site local properties (org.apache.spark.util.CallSite)
+  private val ShortForm = "callSite.short"
+  private val LongForm = "callSite.long"
+
+  /** Runs `body` with the call site set to the first stack frame outside
+    * this object, then restores whatever call site was set before. */
+  private def withCallerSite[T](sc: SparkContext)(body: => T): T = {
+    val frames = Thread.currentThread.getStackTrace.toSeq
+      .dropWhile(f => f.getClassName.startsWith("java.") ||
+        f.getClassName.startsWith(DriverBudget.getClass.getName.stripSuffix("$")))
+    val prev = (sc.getLocalProperty(ShortForm), sc.getLocalProperty(LongForm))
+    frames.headOption.foreach { f =>
+      sc.setLocalProperty(ShortForm, s"collect at ${f.getFileName}:${f.getLineNumber}")
+      sc.setLocalProperty(LongForm, frames.take(20).mkString("\n"))
+    }
+    try body
+    finally {
+      sc.setLocalProperty(ShortForm, prev._1)
+      sc.setLocalProperty(LongForm, prev._2)
+    }
   }
 }

@@ -3,8 +3,10 @@ package graft.spark.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.spark.dedup.Corpus
+import graft.spark.io.DriverBudget
 import graft.spark.sample.Sampling
 import graft.spark.text.TextFunctions
 
@@ -15,12 +17,15 @@ import graft.spark.text.TextFunctions
   *   per-domain cap -> per-lang token budget -> sharded output
   *
   * Two surfaces:
-  *   - [[curate]]: the whole pipeline as one composed DataFrame (the narrow
-  *     stage-3 and stage-4 survivor relations are pinned via
-  *     localCheckpoint so the multi-consumer cap and budget stages cannot
-  *     re-execute the upstream pipeline — round 7). The q_pipeline driver
-  *     query checks it end-to-end against a DuckDB oracle that re-derives
-  *     every stage in SQL.
+  *   - [[curate]]: the whole pipeline as one composed DataFrame. The
+  *     narrow stage-3 survivor relation is pinned via localCheckpoint;
+  *     when it holds at most [[DriverCapBudgetRows]] rows the cap and
+  *     budget are decided on the driver in one pass, otherwise they run
+  *     distributed over a second pin of the stage-4 survivors (round 7:
+  *     the multi-consumer cap and budget stages must not re-execute the
+  *     upstream pipeline). The q_pipeline driver query checks it
+  *     end-to-end against a DuckDB oracle that re-derives every stage in
+  *     SQL.
   *   - [[CuratePipeline]]: a spark-submit main that materializes each stage
   *     to parquet with per-stage lineage metrics and stage-level resume
   *     (a killed run re-executes only the stages whose outputs are missing).
@@ -32,6 +37,17 @@ import graft.spark.text.TextFunctions
   * bucket.
   */
 object DataPipeline {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Row limit of [[curate]]'s driver path for the cap and budget stages:
+    * 2^16 stage-3 survivors. A survivor is the narrow (doc_id, lang,
+    * source, digest, toks) row — two longs, a 32-char md5 digest and two
+    * short strings, a few hundred bytes as a Row — so the collected rows,
+    * their sort keys and the local result relation stay in the tens of MB.
+    * Below it the distributed stages' fixed per-job cost dominates: they
+    * run about a dozen Spark jobs over rows a driver sorts in
+    * milliseconds. */
+  val DriverCapBudgetRows: Long = 1L << 16
 
   /** The composed pipeline. `docs` carries (doc_id, lang, source, text);
     * `benchDocs` carries (text). Returns kept docs as
@@ -66,7 +82,14 @@ object DataPipeline {
     * stage-1..2 frame is persisted once and read by the LSH stage, CC and
     * the stage-3 losers anti-join; it is unpersisted once the stage-3
     * survivors are checkpointed, or when any of these throws. The quality
-    * gate and the digest-dedup window therefore run once per call. */
+    * gate and the digest-dedup window therefore run once per call.
+    *
+    * `maxDriverRows`: the cap and budget stages run on the driver
+    * ([[Sampling.capThenBudgetKeep]], one bounded probe of the pinned
+    * stage-3 survivors, a local result relation) when the survivors number
+    * at most this many and hold no null or negative token count; otherwise
+    * they run distributed. Both paths keep the same rows with the same
+    * schema. 0 forces the distributed path (the specs do). */
   def curate(docs: DataFrame, benchDocs: DataFrame,
              domainCap: Int = 5, tokenBudget: Long = 2000L,
              tokenCounter: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
@@ -74,7 +97,8 @@ object DataPipeline {
              maxLmBitsMilli: Option[Long] = None,
              nearDupThreshold: Option[Double] = None,
              classifierGate: Option[(graft.spark.text.QualityClassifier.Model, Long)] =
-               None): DataFrame = {
+               None,
+             maxDriverRows: Long = DriverCapBudgetRows): DataFrame = {
     val base = docs.select(col("doc_id"), col("lang"), col("source"), col("text"),
       md5(col("text")).as("digest"),
       tokenCounter(col("text")).cast("long").as("toks"))
@@ -118,15 +142,37 @@ object DataPipeline {
       // 3. benchmark decontamination (drop any doc sharing an 8-token
       // shingle — long n-grams so incidental vocabulary overlap does not
       // count as contamination, GPT-3 App. C style). The NARROW survivor
-      // relation (text is projected away here) is pinned once (round 7):
-      // the domain-cap stage consumes it twice (decisions aggregate + join
-      // probe — see the groupCapFlags note), and un-pinned each consumption
+      // relation (doc_id, lang, source, digest, toks — text is projected
+      // away here) is pinned once (round 7): the driver path's probe and
+      // the distributed domain cap (decisions aggregate + join probe — see
+      // the groupCapFlags note) each read it, and un-pinned each read
       // re-executed the whole stage-1..3 pipeline.
       Corpus.decontaminate(fuzzy, benchDocs, "doc_id", "text", n = 8,
           passthrough = Seq("lang", "source", "digest", "toks"))
         .filter(!col("contaminated")).drop("contaminated")
         .localCheckpoint(true)
     } finally if (nearDupThreshold.isDefined) pinned.unpersist(blocking = false)
+    // 4 + 5 on the driver: one bounded probe of the pinned survivors, both
+    // rules in one pass, a local result relation with clean's schema
+    val narrow = clean.schema.map(_.dataType) == Seq(LongType, StringType, StringType,
+      StringType, LongType) // the (doc_id, lang, source, digest, toks) layout the kernel reads
+    val driverKept = if (maxDriverRows <= 0 || !narrow) None else
+      DriverBudget.collectAtMost(clean, maxDriverRows, "DataPipeline.curate cap+budget")
+        .flatMap { rows =>
+          val kept = Sampling.capThenBudgetKeep(rows, domainCap, tokenBudget)
+          if (kept.isEmpty) log.info("DataPipeline.curate cap+budget: a stage-3 survivor " +
+            "holds a null or a negative token count, path distributed")
+          kept
+        }
+    driverKept.fold(distributedCapBudget(clean, domainCap, tokenBudget)) { kept =>
+      clean.sparkSession.createDataFrame(java.util.Arrays.asList(kept: _*), clean.schema)
+    }
+  }
+
+  /** Stages 4 and 5 of [[curate]] as distributed operators over the pinned
+    * stage-3 survivors `clean`. */
+  private def distributedCapBudget(clean: DataFrame, domainCap: Int,
+                                   tokenBudget: Long): DataFrame = {
     // 4. per-domain cap, priority = content digest
     val capped = Sampling.groupCapFlags(clean, Seq("lang", "source"),
         col("digest"), col("doc_id"), domainCap)

@@ -268,8 +268,8 @@ object IncrementalCurate {
     // driver path never unboxes a null id (Row.getLong throws on one) and
     // both paths see one edge set
     val edgePairs = pairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
-    val driverEdges =
-      DriverBudget.collectAtMost(edgePairs.select(col("id_a"), col("id_b")), maxDriverEdges)
+    val driverEdges = DriverBudget.collectAtMost(edgePairs.select(col("id_a"), col("id_b")),
+      maxDriverEdges, "IncrementalCurate.fuzzyDropSet edges")
     if (driverEdges.isDefined) {
       // driver union-find over batch-batch edges, min-id roots; anchored =
       // a batch endpoint of any batch-history pair

@@ -1,8 +1,11 @@
 package graft.spark.sample
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.spark.io.DriverBudget
 
 /** Data-mixing / sampling operators — the stage after filtering and dedup
   * where a training-data pipeline decides WHAT of the surviving corpus to
@@ -23,6 +26,29 @@ object Sampling {
     require(df.schema(name).dataType == org.apache.spark.sql.types.StringType,
       s"column '$name' must be STRING (got ${df.schema(name).dataType.simpleString}); " +
         "group and priority columns are string-keyed (priority = a hex content hash)")
+
+  /** Spark's string order (unsigned UTF-8 bytes, i.e. code points) for the
+    * driver-side sorts: `String.compareTo` compares UTF-16 units, which put
+    * a supplementary character before U+E000..U+FFFF. */
+  private val sparkStringOrder: Ordering[String] =
+    Ordering.by[String, UTF8String](UTF8String.fromString)
+
+  /** Driver limit of the per-(group, bucket) totals [[groupPrefixSums]] and
+    * [[tokenBudgetKeepFlags]] collect: 2^18 rows is 1,024 groups with all
+    * 256 buckets populated. A total is a group string, a 2-char bucket and
+    * a long (about 150 bytes as a Row), so the collect stays near 40 MB
+    * and the broadcast decision tables are no larger. Past it the
+    * operators fail loudly rather than grow the driver without bound. */
+  val MaxDriverTotals: Long = 1L << 18
+
+  /** Per-(group, `__bkt`) sums of `tokensCol`, through one bounded collect
+    * that fails loudly under `label` past `max` rows. */
+  private def bucketTotals(bucketed: DataFrame, groupCol: String, tokensCol: String,
+                           max: Long, label: String): Array[(String, String, Long)] =
+    DriverBudget.collectOrFail(
+        bucketed.groupBy(col(groupCol), col("__bkt")).agg(sum(col(tokensCol)).as("t")),
+        max, s"$label bucket totals")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
 
   /** Keep at most `cap` docs per group, in (priority, tie) order — the
     * per-domain cap, EXACTLY `row_number() <= cap` over that order but
@@ -114,19 +140,20 @@ object Sampling {
     * window. The sort-exchange is keyed by (group, bucket) — 256x finer
     * than a per-group sort, so no group ever needs a single-reducer sort.
     * Adds a `cum_excl` column; result equals the naive per-group window
-    * exactly. `priorityCol` must be a hex content hash. */
+    * exactly. `priorityCol` must be a hex content hash. The per-(group,
+    * bucket) totals reach the driver through one bounded collect: more
+    * than `maxDriverTotals` of them fail loudly (see [[MaxDriverTotals]]). */
   def groupPrefixSums(df: DataFrame, groupCol: String, tokensCol: String,
-                      priorityCol: String, tieCol: String): DataFrame = {
+                      priorityCol: String, tieCol: String,
+                      maxDriverTotals: Long = MaxDriverTotals): DataFrame = {
     requireStringCol(df, groupCol); requireStringCol(df, priorityCol)
     val bucketed = df.withColumn("__bkt", substring(col(priorityCol), 1, 2))
-    val totals = bucketed.groupBy(col(groupCol), col("__bkt"))
-      .agg(sum(col(tokensCol)).as("t"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val totals = bucketTotals(bucketed, groupCol, tokensCol, maxDriverTotals,
+      "Sampling.groupPrefixSums")
     val offsetsB = List.newBuilder[(String, String, Long)]
     totals.groupBy(_._1).foreach { case (g, rows) =>
       var offset = 0L
-      rows.toList.sortBy(_._2).foreach { case (_, bkt, t) =>
+      rows.toList.sortBy(_._2)(sparkStringOrder).foreach { case (_, bkt, t) =>
         offsetsB += ((g, bkt, offset))
         offset += t
       }
@@ -161,15 +188,16 @@ object Sampling {
     *
     * `priorityCol` must be a hex-string content hash (e.g. md5 of the
     * text); `tieCol` breaks exact-duplicate priorities deterministically.
+    * Step 2's collect is bounded: more than `maxDriverTotals` (group,
+    * bucket) totals fail loudly (see [[MaxDriverTotals]]).
     * Returns the input rows plus a `kept` boolean. */
   def tokenBudgetKeepFlags(df: DataFrame, groupCol: String, tokensCol: String,
-                           priorityCol: String, tieCol: String, budget: Long): DataFrame = {
+                           priorityCol: String, tieCol: String, budget: Long,
+                           maxDriverTotals: Long = MaxDriverTotals): DataFrame = {
     requireStringCol(df, groupCol); requireStringCol(df, priorityCol)
     val bucketed = df.withColumn("__bkt", substring(col(priorityCol), 1, 2))
-    val totals = bucketed.groupBy(col(groupCol), col("__bkt"))
-      .agg(sum(col(tokensCol)).as("t"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val totals = bucketTotals(bucketed, groupCol, tokensCol, maxDriverTotals,
+      "Sampling.tokenBudgetKeepFlags")
     // NOTE (round 7, measured): the union's two branches each evaluate the
     // input subtree once per action (plus the totals probe above — three
     // evaluations total). A shared explicit repartition was tried and
@@ -183,7 +211,7 @@ object Sampling {
     val boundaryB = List.newBuilder[(String, String, Long)]
     totals.groupBy(_._1).foreach { case (g, rows) =>
       var offset = 0L
-      rows.toList.sortBy(_._2).foreach { case (_, bkt, t) =>
+      rows.toList.sortBy(_._2)(sparkStringOrder).foreach { case (_, bkt, t) =>
         if (offset + t <= budget) keepAllB += ((g, bkt))           // KEEP-ALL
         else if (offset <= budget) boundaryB += ((g, bkt, offset)) // boundary
         // else DROP-ALL: any inclusive prefix sum there exceeds the budget
@@ -210,6 +238,51 @@ object Sampling {
     val boundaryRows = joined.filter(col("__off").isNotNull)
       .withColumn("kept", (col("__off") + sum(col(tokensCol)).over(w)) <= budget)
     wholesale.unionByName(boundaryRows).drop("__bkt", "__ka", "__off")
+  }
+
+  /** The per-domain cap followed by the per-lang token budget in one
+    * driver-side pass: the rule [[groupCapFlags]] then [[tokenBudgetKeepFlags]]
+    * implement distributed, for relations small enough to collect
+    * (DataPipeline.curate's stage-3 survivors).
+    *
+    *  - order: (priority, tie), priority compared as Spark compares strings
+    *    (unsigned UTF-8 bytes, not `String.compareTo`'s UTF-16 units);
+    *  - cap: keep the first `cap` rows of each (group, subgroup);
+    *  - budget: keep a capped row while its group's inclusive running token
+    *    sum over the capped rows is <= `budget`.
+    *
+    * `rows` are (tie BIGINT, group STRING, subgroup STRING, priority STRING,
+    * tokens BIGINT) — curate's (doc_id, lang, source, digest, toks); `tie`
+    * must be unique within a subgroup. Returns the kept input rows in
+    * (priority, tie) order, or None when a row holds a null or a negative
+    * token count: the distributed pair then decides, so the two paths agree
+    * on every input (the pair has rules of its own for null groups and
+    * priorities, and its wholesale bucket decisions read a negative count
+    * differently from a running sum). SamplingSpec pins equality with the
+    * pair on randomized inputs. */
+  def capThenBudgetKeep(rows: Array[Row], cap: Int, budget: Long): Option[Array[Row]] = {
+    require(cap >= 0, s"cap must be >= 0, got $cap")
+    if (rows.exists(r => (0 until 5).exists(r.isNullAt) || r.getLong(4) < 0)) return None
+    val prio = rows.map(r => UTF8String.fromString(r.getString(3)))
+    val order = Array.range(0, rows.length).sorted(new Ordering[Int] {
+      def compare(a: Int, b: Int): Int = {
+        val c = prio(a).compareTo(prio(b))
+        if (c != 0) c else java.lang.Long.compare(rows(a).getLong(0), rows(b).getLong(0))
+      }
+    })
+    val taken = scala.collection.mutable.HashMap[(String, String), Int]()
+    val spent = scala.collection.mutable.HashMap[String, Long]()
+    Some(order.iterator.map(rows(_)).filter { r =>
+      val group = r.getString(1)
+      val sub = (group, r.getString(2))
+      val n = taken.getOrElse(sub, 0) + 1
+      taken(sub) = n
+      n <= cap && {
+        val sum = Math.addExact(spent.getOrElse(group, 0L), r.getLong(4))
+        spent(group) = sum
+        sum <= budget
+      }
+    }.toArray)
   }
 
   // ---- distributed exact top-k selection ----

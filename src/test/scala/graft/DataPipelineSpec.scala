@@ -68,6 +68,59 @@ class DataPipelineSpec extends AnyFunSuite {
     new Directory(new java.io.File(work)).deleteRecursively()
   }
 
+  private def sfDocs = spark.read.parquet(s"$sfDir/documents.parquet")
+    .select(col("doc_id"), col("lang"), col("source"), col("text"))
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[org.apache.spark.sql.Row] =
+    df.collect().toSet
+
+  private def takesDriverPath(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("curate: the driver cap/budget path == the forced distributed path, schema included") {
+    val docs = sfDocs
+    val bench = docs.filter(col("doc_id") % 17 === 0).select(col("text"))
+    for ((cap, budget) <- Seq((5, 2000L), (1, 300L), (0, 2000L), (50, 0L), (3, 1L << 40))) {
+      val driver = DataPipeline.curate(docs, bench, cap, budget)
+      val dist = DataPipeline.curate(docs, bench, cap, budget, maxDriverRows = 0L)
+      assert(takesDriverPath(driver) && !takesDriverPath(dist))
+      assert(driver.schema == dist.schema)
+      assert(rowSet(driver) == rowSet(dist), s"cap=$cap budget=$budget")
+    }
+  }
+
+  test("curate: the forced distributed path reads the pinned stage-4 survivors") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Window => WindowNode}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val docs = sfDocs
+    val bench = docs.filter(col("doc_id") % 17 === 0).select(col("text"))
+    val plan = DataPipeline.curate(docs, bench, maxDriverRows = 0L).queryExecution.optimizedPlan
+    // the budget's branches read ONE checkpointed relation (plus its
+    // broadcast decision tables), never parquet or the stage-3 pin
+    val rdds = plan.collectLeaves().collect { case r: LogicalRDD => r.rdd.id }
+    assert(rdds.nonEmpty && rdds.distinct.size == 1, plan)
+    assert(plan.collectLeaves().forall(l => l.isInstanceOf[LogicalRDD] ||
+      l.isInstanceOf[LocalRelation]), plan)
+    // the cap's (lang, source)-partitioned window ran inside that pin
+    val capWindows = plan.collect {
+      case w: WindowNode if w.partitionSpec.exists(_.references.exists(_.name == "source")) => w
+    }
+    assert(capWindows.isEmpty, plan)
+  }
+
+  test("curate: a null source or lang takes the distributed path and keeps the same rows") {
+    val bench = sfDocs.filter(col("doc_id") % 17 === 0).select(col("text"))
+    for (c <- Seq("source", "lang")) {
+      val docs = sfDocs.withColumn(c, when(col("doc_id") % 5 === 0, lit(null)).otherwise(col(c)))
+      val auto = DataPipeline.curate(docs, bench)
+      val dist = DataPipeline.curate(docs, bench, maxDriverRows = 0L)
+      assert(!takesDriverPath(auto), c)
+      assert(auto.schema == dist.schema)
+      assert(rowSet(auto) == rowSet(dist), c)
+    }
+  }
+
   test("optional perplexity gate drops gibberish the heuristic gate passes") {
     import spark.implicits._
     val natural = "the work is divided between the machines that share it and " +

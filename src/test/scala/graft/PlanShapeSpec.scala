@@ -185,11 +185,23 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q_pipeline action plan has zero parquet scans") {
-    // curate() checkpoints its stage-3 and stage-4 survivors, so the
-    // returned plan reads those RDDs, never `documents`
+    // curate() decides cap and budget on the driver for sf0.001's few
+    // hundred stage-3 survivors: the returned plan reads the local kept
+    // rows, never `documents` nor a checkpoint
     val plan = formatted(SparkQueries.pipelineStats(spark, dir))
     assert(!plan.contains("Scan parquet"), s"action plan must not rescan documents:\n$plan")
-    assert(plan.contains("Scan ExistingRDD"), plan)
+    assert(plan.contains("LocalTableScan") && !plan.contains("Scan ExistingRDD"), plan)
+    // forced distributed, the same query reads the checkpointed stage-4
+    // survivors instead
+    import org.apache.spark.sql.functions._
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("lang"), col("source"), col("text"))
+    val bench = docs.filter(col("doc_id") % 17 === 0).select(col("text"))
+    val distPlan = formatted(graft.spark.pipeline.DataPipeline.curate(docs, bench, maxDriverRows = 0L)
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_kept"), sum(col("toks")).as("tokens_kept")))
+    assert(!distPlan.contains("Scan parquet"), s"action plan must not rescan documents:\n$distPlan")
+    assert(distPlan.contains("Scan ExistingRDD"), distPlan)
   }
 
   test("curate with fuzzy dedup: the digest window runs once; stage 3 reads the pinned frame") {

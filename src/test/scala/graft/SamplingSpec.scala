@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -332,5 +332,104 @@ class SamplingSpec extends AnyFunSuite {
     // tie must fall through to the id rule, not the sign bit)
     assert(graft.spark.fns.VecKernels.sortableBits(0.0) ==
       graft.spark.fns.VecKernels.sortableBits(-0.0))
+  }
+
+  test("a supplementary-char priority sorts after U+FF21 in the budget's bucket order") {
+    import spark.implicits._
+    // Spark orders strings by UTF-8 bytes: U+FF21 < U+1F600, while
+    // String.compareTo's UTF-16 units put the surrogate pair first
+    val df = Seq(("g", 1L, 10L, "\uFF21a"), ("g", 2L, 10L, "\uD83D\uDE00a"))
+      .toDF("g", "id", "toks", "p")
+    assert("\uD83D\uDE00a".compareTo("\uFF21a") < 0)
+    for (budget <- Seq(0L, 10L, 20L)) assert(fast(df, budget) == naive(df, budget), s"budget=$budget")
+    assert(fast(df, 10L) == Map(1L -> true, 2L -> false))
+  }
+
+  test("the per-(group, bucket) totals collects fail loudly past a lowered bound") {
+    // 3 groups x up to 256 buckets: far more than 8 totals
+    val df = mkDf((0L until 300L).map(id => (s"g${id % 3}", id, 1L)))
+    val budget = intercept[IllegalStateException] {
+      Sampling.tokenBudgetKeepFlags(df, "g", "toks", "p", "id", 100L, maxDriverTotals = 8L)
+    }
+    assert(budget.getMessage.contains("Sampling.tokenBudgetKeepFlags") &&
+      budget.getMessage.contains("limit 8"), budget.getMessage)
+    val prefix = intercept[IllegalStateException] {
+      Sampling.groupPrefixSums(df, "g", "toks", "p", "id", maxDriverTotals = 8L)
+    }
+    assert(prefix.getMessage.contains("Sampling.groupPrefixSums") &&
+      prefix.getMessage.contains("limit 8"), prefix.getMessage)
+    // at the default bound both run
+    assert(fast(df, 100L) == naive(df, 100L))
+  }
+
+  // ---- capThenBudgetKeep: the driver kernel vs the distributed pair ----
+
+  private val capBudgetSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id BIGINT, lang STRING, source STRING, digest STRING, toks BIGINT")
+
+  private def capBudgetDf(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), capBudgetSchema)
+
+  /** groupCapFlags followed by tokenBudgetKeepFlags, as curate's distributed
+    * path composes them: the kept doc_ids. */
+  private def distributedKept(df: DataFrame, cap: Int, budget: Long): Set[Long] = {
+    val capped = Sampling.groupCapFlags(df, Seq("lang", "source"), col("digest"),
+      col("doc_id"), cap).filter(col("kept")).drop("kept")
+    Sampling.tokenBudgetKeepFlags(capped, "lang", "toks", "digest", "doc_id", budget)
+      .filter(col("kept")).select(col("doc_id")).collect().map(_.getLong(0)).toSet
+  }
+
+  private def kernelKept(rows: Seq[Row], cap: Int, budget: Long): Set[Long] =
+    Sampling.capThenBudgetKeep(rows.toArray, cap, budget)
+      .getOrElse(fail("a null-free relation must take the driver path"))
+      .map(_.getLong(0)).toSet
+
+  test("capThenBudgetKeep equals groupCapFlags then tokenBudgetKeepFlags, randomized") {
+    val rnd = new scala.util.Random(13)
+    // digests share 2-char prefixes (one bucket), repeat across distinct
+    // doc_ids, and mix U+FF21 with a surrogate pair (UTF-16 and UTF-8
+    // orders differ); a quarter of the docs carry zero tokens
+    val prefixes = Seq("", "a", "aa", "ab", "b7", "\uFF21", "\uFF21x", "\uD83D\uDE00", "\u00e9")
+    val pool = (0 until 40).map(i => prefixes(i % prefixes.size) + rnd.nextInt(50).toString)
+    for (round <- 0 until 2) {
+      val ids = rnd.shuffle((0L until 500L).map(_ * 7 - 900))
+      val rows = ids.map { id =>
+        Row(id, s"l${rnd.nextInt(3)}", s"s${rnd.nextInt(4)}",
+          if (rnd.nextInt(3) == 0) pool(rnd.nextInt(pool.size))
+          else prefixes(rnd.nextInt(prefixes.size)) + rnd.nextInt(1000000).toString,
+          if (rnd.nextInt(4) == 0) 0L else rnd.nextInt(30).toLong)
+      }
+      val df = capBudgetDf(rows).repartition(3).localCheckpoint(true)
+      for (cap <- Seq(0, 20, 1000); budget <- Seq(0L, 50L, 400L, 1L << 20)) {
+        assert(kernelKept(rows, cap, budget) == distributedKept(df, cap, budget),
+          s"round=$round cap=$cap budget=$budget")
+      }
+    }
+  }
+
+  test("capThenBudgetKeep: zero-token docs at the exact budget boundary, cap 0, budget 0") {
+    // one (lang, source) group: 7-token docs with a zero-token doc after
+    // every third, so running sums land exactly on multiples of 7
+    val rows = (0L until 40L).map(id => Row(id, "en", "a.com", f"$id%02x" + "ff",
+      if (id % 4 == 3) 0L else 7L))
+    val df = capBudgetDf(rows)
+    for (cap <- Seq(0, 40); budget <- Seq(0L, 7L, 21L, 70L)) {
+      assert(kernelKept(rows, cap, budget) == distributedKept(df, cap, budget),
+        s"cap=$cap budget=$budget")
+    }
+    assert(kernelKept(rows, 40, 21L) == Set(0L, 1L, 2L, 3L))
+    assert(kernelKept(rows, 0, 1000L).isEmpty)
+    assert(kernelKept(rows, 40, 0L).isEmpty) // the first doc already spends 7
+  }
+
+  test("capThenBudgetKeep declines a null in any column and a negative token count") {
+    val ok = Row(1L, "en", "a.com", "ab", 3L)
+    for (c <- 0 until 5) {
+      val withNull = Row.fromSeq(ok.toSeq.updated(c, null))
+      assert(Sampling.capThenBudgetKeep(Array(ok, withNull), 5, 100L).isEmpty, s"null in column $c")
+    }
+    assert(Sampling.capThenBudgetKeep(Array(ok, Row(2L, "en", "a.com", "cd", -1L)), 5, 100L).isEmpty)
+    assert(Sampling.capThenBudgetKeep(Array(ok), 5, 100L).get.toSeq == Seq(ok))
+    intercept[IllegalArgumentException](Sampling.capThenBudgetKeep(Array(ok), -1, 100L))
   }
 }
