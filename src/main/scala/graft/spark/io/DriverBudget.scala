@@ -27,29 +27,45 @@ object DriverBudget {
     probe(df, max, label, overPath = "fail").getOrElse(throw new IllegalStateException(
       s"$label: more than $max rows would be collected to the driver (limit $max)"))
 
+  /** [[collectAtMost]] for a pinned (checkpointed or cached) `df`, which it
+    * reads twice: one job counts the rows and ships only per-partition
+    * counts, and a second collects them when they number at most `max`.
+    * Past the bound no row reaches the driver, where `collectAtMost`'s
+    * `limit(max + 1)` probe ships max + 1 rows only to drop them. */
+  def collectPinnedAtMost(df: DataFrame, max: Long, label: String): Option[Array[Row]] = {
+    val sc = df.sparkSession.sparkContext
+    val n = withCallerSite(sc, "count")(df.queryExecution.toRdd.count())
+    decide(label, max, n, n <= max, "distributed")
+    if (n <= max) Some(withCallerSite(sc, "collect")(df.collect())) else None
+  }
+
   private def probe(df: DataFrame, max: Long, label: String,
                     overPath: String): Option[Array[Row]] = {
     val lim = (math.min(max, (Int.MaxValue - 2).toLong) + 1L).toInt
-    val rows = withCallerSite(df.sparkSession.sparkContext)(df.limit(lim).collect())
+    val rows = withCallerSite(df.sparkSession.sparkContext, "collect")(df.limit(lim).collect())
     val fits = rows.length < lim
-    log.info(s"$label: limit $max, rows seen ${rows.length}, path " +
-      (if (fits) "driver" else overPath))
+    decide(label, max, rows.length.toLong, fits, overPath)
     if (fits) Some(rows) else None
   }
+
+  private def decide(label: String, max: Long, seen: Long, fits: Boolean,
+                     overPath: String): Unit =
+    log.info(s"$label: limit $max, rows seen $seen, path " + (if (fits) "driver" else overPath))
 
   // SparkContext's call-site local properties (org.apache.spark.util.CallSite)
   private val ShortForm = "callSite.short"
   private val LongForm = "callSite.long"
 
-  /** Runs `body` with the call site set to the first stack frame outside
-    * this object, then restores whatever call site was set before. */
-  private def withCallerSite[T](sc: SparkContext)(body: => T): T = {
+  /** Runs `body` with the call site set to `action` at the first stack
+    * frame outside this object, then restores whatever call site was set
+    * before. */
+  private def withCallerSite[T](sc: SparkContext, action: String)(body: => T): T = {
     val frames = Thread.currentThread.getStackTrace.toSeq
       .dropWhile(f => f.getClassName.startsWith("java.") ||
         f.getClassName.startsWith(DriverBudget.getClass.getName.stripSuffix("$")))
     val prev = (sc.getLocalProperty(ShortForm), sc.getLocalProperty(LongForm))
     frames.headOption.foreach { f =>
-      sc.setLocalProperty(ShortForm, s"collect at ${f.getFileName}:${f.getLineNumber}")
+      sc.setLocalProperty(ShortForm, s"$action at ${f.getFileName}:${f.getLineNumber}")
       sc.setLocalProperty(LongForm, frames.take(20).mkString("\n"))
     }
     try body

@@ -41,13 +41,17 @@ object Sampling {
     * operators fail loudly rather than grow the driver without bound. */
   val MaxDriverTotals: Long = 1L << 18
 
+  /** The bound [[bucketTotals]] applies: [[MaxDriverTotals]], lowered only
+    * by specs (`withValue`) to drive the loud failure on small inputs. */
+  private[graft] val driverTotalsLimit = new scala.util.DynamicVariable[Long](MaxDriverTotals)
+
   /** Per-(group, `__bkt`) sums of `tokensCol`, through one bounded collect
-    * that fails loudly under `label` past `max` rows. */
+    * that fails loudly under `label` past [[driverTotalsLimit]] rows. */
   private def bucketTotals(bucketed: DataFrame, groupCol: String, tokensCol: String,
-                           max: Long, label: String): Array[(String, String, Long)] =
+                           label: String): Array[(String, String, Long)] =
     DriverBudget.collectOrFail(
         bucketed.groupBy(col(groupCol), col("__bkt")).agg(sum(col(tokensCol)).as("t")),
-        max, s"$label bucket totals")
+        driverTotalsLimit.value, s"$label bucket totals")
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
 
   /** Keep at most `cap` docs per group, in (priority, tie) order — the
@@ -142,14 +146,12 @@ object Sampling {
     * Adds a `cum_excl` column; result equals the naive per-group window
     * exactly. `priorityCol` must be a hex content hash. The per-(group,
     * bucket) totals reach the driver through one bounded collect: more
-    * than `maxDriverTotals` of them fail loudly (see [[MaxDriverTotals]]). */
+    * than [[MaxDriverTotals]] of them fail loudly. */
   def groupPrefixSums(df: DataFrame, groupCol: String, tokensCol: String,
-                      priorityCol: String, tieCol: String,
-                      maxDriverTotals: Long = MaxDriverTotals): DataFrame = {
+                      priorityCol: String, tieCol: String): DataFrame = {
     requireStringCol(df, groupCol); requireStringCol(df, priorityCol)
     val bucketed = df.withColumn("__bkt", substring(col(priorityCol), 1, 2))
-    val totals = bucketTotals(bucketed, groupCol, tokensCol, maxDriverTotals,
-      "Sampling.groupPrefixSums")
+    val totals = bucketTotals(bucketed, groupCol, tokensCol, "Sampling.groupPrefixSums")
     val offsetsB = List.newBuilder[(String, String, Long)]
     totals.groupBy(_._1).foreach { case (g, rows) =>
       var offset = 0L
@@ -188,16 +190,14 @@ object Sampling {
     *
     * `priorityCol` must be a hex-string content hash (e.g. md5 of the
     * text); `tieCol` breaks exact-duplicate priorities deterministically.
-    * Step 2's collect is bounded: more than `maxDriverTotals` (group,
-    * bucket) totals fail loudly (see [[MaxDriverTotals]]).
+    * Step 2's collect is bounded: more than [[MaxDriverTotals]] (group,
+    * bucket) totals fail loudly.
     * Returns the input rows plus a `kept` boolean. */
   def tokenBudgetKeepFlags(df: DataFrame, groupCol: String, tokensCol: String,
-                           priorityCol: String, tieCol: String, budget: Long,
-                           maxDriverTotals: Long = MaxDriverTotals): DataFrame = {
+                           priorityCol: String, tieCol: String, budget: Long): DataFrame = {
     requireStringCol(df, groupCol); requireStringCol(df, priorityCol)
     val bucketed = df.withColumn("__bkt", substring(col(priorityCol), 1, 2))
-    val totals = bucketTotals(bucketed, groupCol, tokensCol, maxDriverTotals,
-      "Sampling.tokenBudgetKeepFlags")
+    val totals = bucketTotals(bucketed, groupCol, tokensCol, "Sampling.tokenBudgetKeepFlags")
     // NOTE (round 7, measured): the union's two branches each evaluate the
     // input subtree once per action (plus the totals probe above — three
     // evaluations total). A shared explicit repartition was tried and
@@ -254,15 +254,21 @@ object Sampling {
     * `rows` are (tie BIGINT, group STRING, subgroup STRING, priority STRING,
     * tokens BIGINT) — curate's (doc_id, lang, source, digest, toks); `tie`
     * must be unique within a subgroup. Returns the kept input rows in
-    * (priority, tie) order, or None when a row holds a null or a negative
-    * token count: the distributed pair then decides, so the two paths agree
-    * on every input (the pair has rules of its own for null groups and
-    * priorities, and its wholesale bucket decisions read a negative count
-    * differently from a running sum). SamplingSpec pins equality with the
-    * pair on randomized inputs. */
+    * (priority, tie) order, or None when a row strays from that layout (a
+    * null, a value of another type) or holds a negative token count: the
+    * distributed pair then decides, so the two paths agree on every input
+    * (the pair has rules of its own for null groups and priorities, takes
+    * any subgroup type, and its wholesale bucket decisions read a negative
+    * count differently from a running sum). SamplingSpec pins equality
+    * with the pair on randomized inputs. */
   def capThenBudgetKeep(rows: Array[Row], cap: Int, budget: Long): Option[Array[Row]] = {
     require(cap >= 0, s"cap must be >= 0, got $cap")
-    if (rows.exists(r => (0 until 5).exists(r.isNullAt) || r.getLong(4) < 0)) return None
+    def fits(r: Row): Boolean = r.length == 5 && r.get(0).isInstanceOf[java.lang.Long] &&
+      (1 to 3).forall(i => r.get(i).isInstanceOf[String]) && (r.get(4) match {
+        case t: java.lang.Long => t >= 0
+        case _ => false
+      })
+    if (!rows.forall(fits)) return None
     val prio = rows.map(r => UTF8String.fromString(r.getString(3)))
     val order = Array.range(0, rows.length).sorted(new Ordering[Int] {
       def compare(a: Int, b: Int): Int = {

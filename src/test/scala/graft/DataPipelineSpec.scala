@@ -121,6 +121,20 @@ class DataPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("curate: an INT doc_id takes the driver path, an INT source the distributed path") {
+    val bench = sfDocs.filter(col("doc_id") % 17 === 0).select(col("text"))
+    // stage 3 casts doc_id to BIGINT, so only a non-string lang or source
+    // leaves the kernel's layout
+    for ((c, driverPath) <- Seq(("doc_id", true), ("source", false))) {
+      val docs = sfDocs.withColumn(c, if (c == "doc_id") col(c).cast("int") else hash(col(c)))
+      val auto = DataPipeline.curate(docs, bench)
+      val dist = DataPipeline.curate(docs, bench, maxDriverRows = 0L)
+      assert(takesDriverPath(auto) == driverPath, c)
+      assert(auto.schema == dist.schema, c)
+      assert(rowSet(auto) == rowSet(dist), c)
+    }
+  }
+
   test("optional perplexity gate drops gibberish the heuristic gate passes") {
     import spark.implicits._
     val natural = "the work is divided between the machines that share it and " +

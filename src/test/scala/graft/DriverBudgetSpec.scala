@@ -8,7 +8,8 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,6 +43,26 @@ class DriverBudgetSpec extends AnyFunSuite {
       org.apache.spark.GraftTestBridge.drainListenerBus(sc)
     } finally sc.removeSparkListener(listener)
     descs.asScala.toSeq
+  }
+
+  /** The call sites (last stage names) of the jobs `body` runs, and the
+    * bytes their tasks send back to the driver. */
+  private def jobsAndResultBytes(body: => Unit): (Seq[String], Long) = {
+    val sc = spark.sparkContext
+    val sites = new ConcurrentLinkedQueue[String]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    (sites.asScala.toSeq, bytes.get)
   }
 
   /** The messages DriverBudget logs while `body` runs. */
@@ -90,5 +111,31 @@ class DriverBudgetSpec extends AnyFunSuite {
       "spec fits: limit 10, rows seen 10, path driver",
       "spec over: limit 9, rows seen 10, path distributed",
       "spec loud: limit 4, rows seen 5, path fail"), lines)
+  }
+
+  test("collectPinnedAtMost counts first and ships no row past the bound") {
+    import spark.implicits._
+    val text = "x" * 2000
+    val df = (0 until 400).map(i => (i.toLong, text)).toDF("id", "t")
+      .repartition(4).localCheckpoint(true)
+    var got: Option[Array[org.apache.spark.sql.Row]] = None
+    val lines = logged {
+      val (overSites, overBytes) = jobsAndResultBytes {
+        got = DriverBudget.collectPinnedAtMost(df, 399L, "spec pinned over")
+      }
+      assert(got.isEmpty)
+      assert(overSites.size == 1 && overSites.head.matches("count at DriverBudgetSpec\\.scala:\\d+"),
+        overSites)
+      // four tasks each send back a count, not 100 rows of 2 KB
+      assert(overBytes < 100000L, overBytes)
+      val (fitSites, _) = jobsAndResultBytes {
+        got = DriverBudget.collectPinnedAtMost(df, 400L, "spec pinned fits")
+      }
+      assert(got.map(_.map(_.getLong(0)).sorted.toSeq).contains((0L until 400L).toSeq))
+      assert(fitSites.size == 2 && fitSites.forall(_.contains("DriverBudgetSpec.scala")), fitSites)
+    }
+    assert(lines == Seq(
+      "spec pinned over: limit 399, rows seen 400, path distributed",
+      "spec pinned fits: limit 400, rows seen 400, path driver"), lines)
   }
 }

@@ -349,12 +349,14 @@ class SamplingSpec extends AnyFunSuite {
     // 3 groups x up to 256 buckets: far more than 8 totals
     val df = mkDf((0L until 300L).map(id => (s"g${id % 3}", id, 1L)))
     val budget = intercept[IllegalStateException] {
-      Sampling.tokenBudgetKeepFlags(df, "g", "toks", "p", "id", 100L, maxDriverTotals = 8L)
+      Sampling.driverTotalsLimit.withValue(8L) {
+        Sampling.tokenBudgetKeepFlags(df, "g", "toks", "p", "id", 100L)
+      }
     }
     assert(budget.getMessage.contains("Sampling.tokenBudgetKeepFlags") &&
       budget.getMessage.contains("limit 8"), budget.getMessage)
     val prefix = intercept[IllegalStateException] {
-      Sampling.groupPrefixSums(df, "g", "toks", "p", "id", maxDriverTotals = 8L)
+      Sampling.driverTotalsLimit.withValue(8L)(Sampling.groupPrefixSums(df, "g", "toks", "p", "id"))
     }
     assert(prefix.getMessage.contains("Sampling.groupPrefixSums") &&
       prefix.getMessage.contains("limit 8"), prefix.getMessage)
@@ -422,13 +424,18 @@ class SamplingSpec extends AnyFunSuite {
     assert(kernelKept(rows, 40, 0L).isEmpty) // the first doc already spends 7
   }
 
-  test("capThenBudgetKeep declines a null in any column and a negative token count") {
+
+  test("capThenBudgetKeep declines a null in any column, a negative token count, another layout") {
     val ok = Row(1L, "en", "a.com", "ab", 3L)
     for (c <- 0 until 5) {
       val withNull = Row.fromSeq(ok.toSeq.updated(c, null))
       assert(Sampling.capThenBudgetKeep(Array(ok, withNull), 5, 100L).isEmpty, s"null in column $c")
     }
     assert(Sampling.capThenBudgetKeep(Array(ok, Row(2L, "en", "a.com", "cd", -1L)), 5, 100L).isEmpty)
+    for (odd <- Seq(Row(2, "en", "a.com", "cd", 1L), Row(2L, 7, "a.com", "cd", 1L),
+                    Row(2L, "en", 7, "cd", 1L), Row(2L, "en", "a.com", "cd", 1))) {
+      assert(Sampling.capThenBudgetKeep(Array(ok, odd), 5, 100L).isEmpty, odd)
+    }
     assert(Sampling.capThenBudgetKeep(Array(ok), 5, 100L).get.toSeq == Seq(ok))
     intercept[IllegalArgumentException](Sampling.capThenBudgetKeep(Array(ok), -1, 100L))
   }
