@@ -191,7 +191,8 @@ object SparkQueries {
 
   /** Per-domain doc cap (data-mixing stage): keep at most 5 docs per
     * (lang, source), deterministic priority = content md5. The window
-    * partitions are individual domains — small at any corpus scale. */
+    * partitions are (domain, priority-prefix bucket) pairs — never a whole
+    * domain. */
   def domainCapStats(spark: SparkSession, dir: String): DataFrame = {
     import graft.spark.sample.Sampling
     Sampling.groupCapFlags(
@@ -204,8 +205,9 @@ object SparkQueries {
 
   /** Per-lang token budget (data-mixing stage): keep docs in content-hash
     * order while the running token sum stays <= 2000 — computed by the
-    * two-level bucket cut (only the boundary bucket is ever sorted), result
-    * identical to the naive windowed definition the oracle runs. */
+    * bucketed running sum (each sort confined to one (lang, bucket)
+    * partition), result identical to the naive windowed definition the
+    * oracle runs. */
   def tokenBudgetStats(spark: SparkSession, dir: String): DataFrame = {
     import graft.spark.sample.Sampling
     val d = tbl(spark, dir, "documents").select(col("lang"), col("doc_id"),

@@ -17,15 +17,13 @@ object DriverBudget {
     * caller then takes its distributed path). One `limit(max + 1)` probe
     * bounds the driver memory and answers the size question: a result
     * shorter than the limit is the complete set. */
-  def collectAtMost(df: DataFrame, max: Long, label: String): Option[Array[Row]] =
-    probe(df, max, label, overPath = "distributed")
-
-  /** All of `df`'s rows when it has at most `max` of them; otherwise fails
-    * loudly, naming `label` and the limit — for operators that have no
-    * distributed alternative to the collect. */
-  def collectOrFail(df: DataFrame, max: Long, label: String): Array[Row] =
-    probe(df, max, label, overPath = "fail").getOrElse(throw new IllegalStateException(
-      s"$label: more than $max rows would be collected to the driver (limit $max)"))
+  def collectAtMost(df: DataFrame, max: Long, label: String): Option[Array[Row]] = {
+    val lim = (math.min(max, (Int.MaxValue - 2).toLong) + 1L).toInt
+    val rows = withCallerSite(df.sparkSession.sparkContext, "collect")(df.limit(lim).collect())
+    val fits = rows.length < lim
+    decide(label, max, rows.length.toLong, fits)
+    if (fits) Some(rows) else None
+  }
 
   /** [[collectAtMost]] for a pinned (checkpointed or cached) `df`, which it
     * reads twice: one job counts the rows and ships only per-partition
@@ -35,22 +33,12 @@ object DriverBudget {
   def collectPinnedAtMost(df: DataFrame, max: Long, label: String): Option[Array[Row]] = {
     val sc = df.sparkSession.sparkContext
     val n = withCallerSite(sc, "count")(df.queryExecution.toRdd.count())
-    decide(label, max, n, n <= max, "distributed")
+    decide(label, max, n, n <= max)
     if (n <= max) Some(withCallerSite(sc, "collect")(df.collect())) else None
   }
 
-  private def probe(df: DataFrame, max: Long, label: String,
-                    overPath: String): Option[Array[Row]] = {
-    val lim = (math.min(max, (Int.MaxValue - 2).toLong) + 1L).toInt
-    val rows = withCallerSite(df.sparkSession.sparkContext, "collect")(df.limit(lim).collect())
-    val fits = rows.length < lim
-    decide(label, max, rows.length.toLong, fits, overPath)
-    if (fits) Some(rows) else None
-  }
-
-  private def decide(label: String, max: Long, seen: Long, fits: Boolean,
-                     overPath: String): Unit =
-    log.info(s"$label: limit $max, rows seen $seen, path " + (if (fits) "driver" else overPath))
+  private def decide(label: String, max: Long, seen: Long, fits: Boolean): Unit =
+    log.info(s"$label: limit $max, rows seen $seen, path " + (if (fits) "driver" else "distributed"))
 
   // SparkContext's call-site local properties (org.apache.spark.util.CallSite)
   private val ShortForm = "callSite.short"

@@ -87,9 +87,9 @@ object DataPipeline {
     * `maxDriverRows`: the cap and budget stages run on the driver
     * ([[Sampling.capThenBudgetKeep]]: a count of the pinned stage-3
     * survivors, their collect when they fit, a local result relation)
-    * when the survivors number at most this many, hold no null or negative
-    * token count and have string lang and source columns (stage 3 casts
-    * doc_id to BIGINT); otherwise they run distributed. Both paths keep the same rows with the same schema. 0
+    * when the survivors number at most this many, hold no null and have
+    * string lang and source columns (stage 3 casts doc_id to BIGINT);
+    * otherwise they run distributed. Both paths keep the same rows with the same schema. 0
     * forces the distributed path (the specs do). */
   def curate(docs: DataFrame, benchDocs: DataFrame,
              domainCap: Int = 5, tokenBudget: Long = 2000L,
@@ -145,8 +145,8 @@ object DataPipeline {
       // count as contamination, GPT-3 App. C style). The NARROW survivor
       // relation (doc_id, lang, source, digest, toks — text is projected
       // away here) is pinned once (round 7): the driver path's count and
-      // collect and the distributed domain cap (decisions aggregate + join
-      // probe — see the groupCapFlags note) each read it, and un-pinned
+      // collect and the distributed domain cap (totals aggregate + join
+      // probe — see Sampling.runningSum) each read it, and un-pinned
       // each read re-executed the whole stage-1..3 pipeline.
       Corpus.decontaminate(fuzzy, benchDocs, "doc_id", "text", n = 8,
           passthrough = Seq("lang", "source", "digest", "toks"))
@@ -160,7 +160,7 @@ object DataPipeline {
         .flatMap { rows =>
           val kept = Sampling.capThenBudgetKeep(rows, domainCap, tokenBudget)
           if (kept.isEmpty) log.info("DataPipeline.curate cap+budget: a stage-3 survivor " +
-            "holds a null, a negative token count or a non-string lang or source, path distributed")
+            "holds a null or a non-string lang or source, path distributed")
           kept
         }
     driverKept.fold(distributedCapBudget(clean, domainCap, tokenBudget)) { kept =>
@@ -178,15 +178,18 @@ object DataPipeline {
       .filter(col("kept")).drop("kept")
       // round 7: pin the NARROW stage-4 survivor relation (doc_id, lang,
       // source, digest, toks — text never reaches this point) ONCE. The
-      // token-budget stage consumes its input three ways (the eager
-      // bucket-totals probe plus the keep/boundary branches of its output
-      // plan); un-pinned, each consumption re-executed the ENTIRE stage-1..4
-      // pipeline — measured 8 parquet scans of `documents` per q_pipeline
-      // action. The checkpoint makes curate() eager (the optional fuzzy
-      // stage already was); on a cluster prefer the staged CuratePipeline
-      // main, which materializes every stage to parquet anyway.
+      // token-budget stage reads its input twice (under its bucket-totals
+      // aggregate and under the join probe); un-pinned, each read
+      // re-executes the stage-4 cap over the stage-3 checkpoint. Dropping
+      // the pin once the budget became one running-sum plan gained nothing
+      // (forced-distributed curate at sf0.1, local[4], 6 alternating
+      // fresh-JVM pairs: 3 won each way, medians 1.79 vs 1.85 s, inside the
+      // run-to-run spread), so it stays. The checkpoint makes curate()
+      // eager (the optional fuzzy stage already was); on a cluster prefer
+      // the staged CuratePipeline main, which materializes every stage to
+      // parquet anyway.
       .localCheckpoint(true)
-    // 5. per-lang token budget (two-level boundary-bucket cut)
+    // 5. per-lang token budget (bucketed running sum)
     Sampling.tokenBudgetKeepFlags(capped, "lang", "toks", "digest", "doc_id", tokenBudget)
       .filter(col("kept")).drop("kept")
       .select(col("doc_id"), col("lang"), col("source"), col("digest"), col("toks"))

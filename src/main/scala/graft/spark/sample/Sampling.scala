@@ -5,240 +5,120 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.spark.io.DriverBudget
-
 /** Data-mixing / sampling operators — the stage after filtering and dedup
   * where a training-data pipeline decides WHAT of the surviving corpus to
   * keep: per-domain caps and per-language token budgets, deterministically
   * (priority = a content hash), so reruns and resumes pick identical docs.
   *
-  * Scale shape: the naive definition of a token budget is a per-language
-  * total sort + running sum — a single-reducer sort per language at 10^12
-  * docs. [[tokenBudgetKeep]] computes the SAME result with a two-level cut:
-  * docs are bucketed by their priority-hash prefix (256 buckets), per-bucket
-  * token totals (a tiny aggregate) locate the boundary bucket per group, and
-  * only the boundary bucket's docs — 1/256 of one group — are ever sorted.
-  * Every other bucket is kept or dropped wholesale by a broadcast decision.
+  * Scale shape: the naive definition of a cap, a token budget or a packing
+  * offset is a per-group running sum in priority order — a single-reducer
+  * sort per group at 10^12 docs. [[groupCapFlags]], [[tokenBudgetKeepFlags]]
+  * and [[groupPrefixSums]] compute the SAME sums through one distributed
+  * two-level scan (`runningSum`): docs bucket by their 2-char priority
+  * prefix, per-(group, bucket) totals become running bucket offsets, and
+  * each doc's window is confined to its own (group, bucket) partition.
   */
 object Sampling {
 
-  private def requireStringCol(df: DataFrame, name: String): Unit =
-    require(df.schema(name).dataType == org.apache.spark.sql.types.StringType,
-      s"column '$name' must be STRING (got ${df.schema(name).dataType.simpleString}); " +
-        "group and priority columns are string-keyed (priority = a hex content hash)")
-
-  /** Spark's string order (unsigned UTF-8 bytes, i.e. code points) for the
-    * driver-side sorts: `String.compareTo` compares UTF-16 units, which put
-    * a supplementary character before U+E000..U+FFFF. */
-  private val sparkStringOrder: Ordering[String] =
-    Ordering.by[String, UTF8String](UTF8String.fromString)
-
-  /** Driver limit of the per-(group, bucket) totals [[groupPrefixSums]] and
-    * [[tokenBudgetKeepFlags]] collect: 2^18 rows is 1,024 groups with all
-    * 256 buckets populated. A total is a group string, a 2-char bucket and
-    * a long (about 150 bytes as a Row), so the collect stays near 40 MB
-    * and the broadcast decision tables are no larger. Past it the
-    * operators fail loudly rather than grow the driver without bound. */
-  val MaxDriverTotals: Long = 1L << 18
-
-  /** The bound [[bucketTotals]] applies: [[MaxDriverTotals]], lowered only
-    * by specs (`withValue`) to drive the loud failure on small inputs. */
-  private[graft] val driverTotalsLimit = new scala.util.DynamicVariable[Long](MaxDriverTotals)
-
-  /** Per-(group, `__bkt`) sums of `tokensCol`, through one bounded collect
-    * that fails loudly under `label` past [[driverTotalsLimit]] rows. */
-  private def bucketTotals(bucketed: DataFrame, groupCol: String, tokensCol: String,
-                           label: String): Array[(String, String, Long)] =
-    DriverBudget.collectOrFail(
-        bucketed.groupBy(col(groupCol), col("__bkt")).agg(sum(col(tokensCol)).as("t")),
-        driverTotalsLimit.value, s"$label bucket totals")
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-
-  /** Keep at most `cap` docs per group, in (priority, tie) order — the
-    * per-domain cap, EXACTLY `row_number() <= cap` over that order but
-    * computed without ever sorting a whole group in one task (round 6: the
-    * old implementation windowed whole (group) partitions, so one hot
-    * domain at corpus scale was a single-task sort even for cap = 5):
+  /** `out` = `sum(weight) over (partition by groupCols order by priority,
+    * tie rows between unbounded preceding and current row)`, EXACTLY, for
+    * any weights (negative and null included) and any group values (null
+    * included) — computed without ever sorting a whole group in one task:
     *
     *  1. bucket = first 2 chars of the priority string (a lexicographic
-    *     prefix, so bucket order refines doc order);
-    *  2. per-(group, bucket) counts plus a ≤256-rows-per-group running
-    *     offset window classify each bucket KEEP-ALL / DROP-ALL /
-    *     boundary — a DISTRIBUTED decision relation joined back on
-    *     (group, bucket), never collected or broadcast (domains are
-    *     unbounded in number, unlike the langs the token budget collects
-    *     per);
-    *  3. only boundary-bucket rows get the (priority, tie) window, scoped
-    *     to their own (group, bucket) partition — ~1/256 of one group.
+    *     prefix, so bucket order refines doc order); a null priority joins
+    *     the "" bucket, where the in-bucket NULLS FIRST order puts it before
+    *     "" — exactly the whole-group window's order;
+    *  2. per-(group, bucket) weight totals plus an exclusive running offset
+    *     over each group's ≤256 buckets — a DISTRIBUTED relation (bucket
+    *     totals are exact mergeable summaries), joined back null-safely on
+    *     (group, bucket), never collected or broadcast;
+    *  3. each row adds its bucket's offset to a window scoped to its own
+    *     (group, bucket) partition — ~1/256 of one group.
+    *
+    * Every row is sorted, but only inside its (group, bucket) partition:
+    * CorpusScale's `domain_cap` row measured this shape at 10× the rows for
+    * +9% wall time (BENCH/CORPUS_SCALE.md). The input subtree is evaluated
+    * twice per action (under the totals aggregate and under the join
+    * probe); an explicit shared (group, bucket) repartition was tried and
+    * rejected (round 7, measured): column pruning projects the two subtrees
+    * differently, so the exchanges never canonicalize equal. Callers whose
+    * input is expensive pin it (DataPipeline.curate localCheckpoints it).
     *
     * `priority` must be a STRING column whose lexicographic order is the
-    * intended priority order (the callers' content hex hashes — checked at
-    * runtime like the sibling operators; a numeric priority would silently
-    * rank "10" < "9" as a string); `tie` must be unique within a group.
-    * NULL-safe: null groups and null priorities survive with the exact
-    * row_number semantics (null priority sorts first, NULLS FIRST). Returns
-    * the input rows plus a `kept` boolean (SamplingSpec pins equality with
-    * the row_number definition, randomized, incl. nulls). */
-  def groupCapFlags(df: DataFrame, groupCols: Seq[String], priority: Column,
-                    tie: Column, cap: Int): DataFrame = {
-    require(cap >= 0, s"cap must be >= 0, got $cap")
-    require(df.select(priority).schema.head.dataType ==
-      org.apache.spark.sql.types.StringType,
-      "groupCapFlags: priority must be a STRING column (lexicographic order " +
-        "IS the priority order; a cast from numerics would silently reorder)")
-    val internal = Seq("__p", "__t", "__bkt", "__off", "__ka", "__da", "__n")
-    internal.foreach(n => require(!df.columns.contains(n),
-      s"groupCapFlags: input already has an internal column name '$n'"))
+    * intended priority order (a numeric priority would silently rank "10"
+    * < "9" as a string); `tie` must be unique within a group. */
+  private def runningSum(df: DataFrame, groupCols: Seq[String], priority: Column,
+                         tie: Column, weight: Column, out: String): DataFrame = {
+    require(df.select(priority).schema.head.dataType == org.apache.spark.sql.types.StringType,
+      "Sampling: priority must be a STRING column (lexicographic order IS the " +
+        "priority order; a cast from numerics would silently reorder)")
+    Seq("__p", "__t", "__w", "__bkt", "__n", "__off", "__run").foreach(n =>
+      require(!df.columns.contains(n), s"Sampling: input already has an internal column name '$n'"))
     val gcols = groupCols.map(col)
     val bucketed = df
       .withColumn("__p", priority)
       .withColumn("__t", tie)
-      // null priority joins the "" bucket: both sort before every non-empty
-      // prefix, and the in-bucket window's NULLS FIRST puts null before ""
-      // — exactly the whole-group window's order
+      .withColumn("__w", weight)
       .withColumn("__bkt", coalesce(substring(col("__p"), 1, 2), lit("")))
-    // NOTE (round 7, measured): the input subtree IS evaluated twice per
-    // action — once under the decisions aggregate, once under the join
-    // probe. An explicit shared (group, __bkt) repartition was tried to
-    // collapse the two via exchange reuse and REJECTED: column pruning
-    // projects the two subtrees differently (the aggregate side drops
-    // __p/__t), so the exchanges never canonicalize equal and the extra
-    // shuffle only cost the aggregate its map-side partial aggregation.
-    // Callers whose input is expensive pin it instead
-    // (DataPipeline.curate localCheckpoints the stage-3 relation).
-    val wB = Window.partitionBy(gcols: _*).orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val decisions = bucketed
-      .groupBy(gcols :+ col("__bkt"): _*).agg(count(lit(1)).as("__n"))
-      .withColumn("__off", sum(col("__n")).over(wB) - col("__n"))
-      .withColumn("__ka", col("__off") + col("__n") <= cap)
-      .withColumn("__da", col("__off") >= cap)
-      .select((groupCols.map(c => col(c).as(s"__d_$c")) :+
-        col("__bkt").as("__d_bkt")) ++
-        Seq(col("__off"), col("__ka"), col("__da")): _*)
+    val before = Window.partitionBy(gcols: _*).orderBy(col("__bkt"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = bucketed
+      .groupBy(gcols :+ col("__bkt"): _*).agg(sum(col("__w")).as("__n"))
+      .select((groupCols.map(c => col(c).as(s"__d_$c")) :+ col("__bkt").as("__d_bkt")) :+
+        sum(col("__n")).over(before).as("__off"): _*)
     // NULL-SAFE equi-join (<=>): a null group value must still find its
-    // decision row — a plain using-join would silently delete those docs
+    // offset row — a plain using-join would silently delete those docs
     val cond = (groupCols.map(c => col(c) <=> col(s"__d_$c")) :+
       (col("__bkt") <=> col("__d_bkt"))).reduce(_ && _)
-    val joined = bucketed.join(decisions, cond)
-      .drop(groupCols.map(c => s"__d_$c") :+ "__d_bkt": _*)
-    // ONE branch, ONE (group, bucket)-scoped window: a wholesale/boundary
-    // union would evaluate the scan + decisions subtree twice per action
-    // (measured: ReuseExchange does not fire across the branches). The
-    // rank is computed for every bucket rather than only the boundary one,
-    // but each sort is confined to its own (group, bucket) partition —
-    // still never a whole-group single-task sort.
-    val wIn = Window.partitionBy(gcols :+ col("__bkt"): _*)
+    val inBucket = Window.partitionBy(gcols :+ col("__bkt"): _*)
       .orderBy(col("__p"), col("__t"))
-    joined
-      .withColumn("kept",
-        col("__ka") ||
-          (!col("__da") && col("__off") + row_number().over(wIn) <= cap))
-      .drop("__p", "__t", "__bkt", "__off", "__ka", "__da")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    bucketed.join(offsets, cond)
+      .withColumn("__run", sum(col("__w")).over(inBucket))
+      // Spark's sum skips nulls and is null only when every summed value is
+      .withColumn(out, coalesce(col("__off") + col("__run"), col("__off"), col("__run")))
+      .drop(groupCols.map(c => s"__d_$c") ++
+        Seq("__d_bkt", "__p", "__t", "__w", "__bkt", "__off", "__run"): _*)
+  }
+
+  /** Keep at most `cap` docs per group, in (priority, tie) order — the
+    * per-domain cap, EXACTLY `row_number() <= cap` over that order, through
+    * the bucketed running count (no whole-group sort: one hot domain at
+    * corpus scale is not a single-task sort even for cap = 5).
+    * `priority` must be a STRING column; `tie` unique within a group.
+    * Null groups and null priorities follow row_number (null priority
+    * sorts first). Returns the input rows plus a `kept` boolean. */
+  def groupCapFlags(df: DataFrame, groupCols: Seq[String], priority: Column,
+                    tie: Column, cap: Int): DataFrame = {
+    require(cap >= 0, s"cap must be >= 0, got $cap")
+    runningSum(df, groupCols, priority, tie, lit(1L), "kept")
+      .withColumn("kept", col("kept") <= cap)
   }
 
   /** Exclusive prefix sum of `tokensCol` per `groupCol` in (priorityCol,
-    * tieCol) order — the distributed scan: docs bucket by their
-    * priority-hash prefix, per-bucket totals (a tiny aggregate) become
-    * broadcast bucket offsets, and each bucket computes its own local
-    * window. The sort-exchange is keyed by (group, bucket) — 256x finer
-    * than a per-group sort, so no group ever needs a single-reducer sort.
-    * Adds a `cum_excl` column; result equals the naive per-group window
-    * exactly. `priorityCol` must be a hex content hash. The per-(group,
-    * bucket) totals reach the driver through one bounded collect: more
-    * than [[MaxDriverTotals]] of them fail loudly. */
+    * tieCol) order — the sequence-packing offset, EXACTLY the naive
+    * `sum(tokens) over (...) - tokens` window, through the bucketed running
+    * sum. Adds a `cum_excl` column. `priorityCol` must be a STRING column
+    * (a hex content hash). */
   def groupPrefixSums(df: DataFrame, groupCol: String, tokensCol: String,
-                      priorityCol: String, tieCol: String): DataFrame = {
-    requireStringCol(df, groupCol); requireStringCol(df, priorityCol)
-    val bucketed = df.withColumn("__bkt", substring(col(priorityCol), 1, 2))
-    val totals = bucketTotals(bucketed, groupCol, tokensCol, "Sampling.groupPrefixSums")
-    val offsetsB = List.newBuilder[(String, String, Long)]
-    totals.groupBy(_._1).foreach { case (g, rows) =>
-      var offset = 0L
-      rows.toList.sortBy(_._2)(sparkStringOrder).foreach { case (_, bkt, t) =>
-        offsetsB += ((g, bkt, offset))
-        offset += t
-      }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offsets = broadcast(offsetsB.result().toDF(groupCol, "__bkt", "__off"))
-    val w = Window.partitionBy(col(groupCol), col("__bkt"))
-      .orderBy(col(priorityCol), col(tieCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bucketed
-      .join(offsets, Seq(groupCol, "__bkt"), "inner")
-      .withColumn("cum_excl",
-        col("__off") + sum(col(tokensCol)).over(w) - col(tokensCol))
-      .drop("__bkt", "__off")
-  }
+                      priorityCol: String, tieCol: String): DataFrame =
+    runningSum(df, Seq(groupCol), col(priorityCol), col(tieCol),
+        col(tokensCol), "cum_excl")
+      .withColumn("cum_excl", col("cum_excl") - col(tokensCol))
 
   /** Keep docs per `groupCol` while the running token sum (in (priorityCol,
-    * tieCol) order, inclusive of the current doc) stays <= `budget`.
-    * Result is EXACTLY the naive windowed-prefix-sum definition, computed
-    * without ever totally sorting a group:
-    *
-    *  1. bucket = first 2 hex chars of `priorityCol` (a lexicographic prefix
-    *     of the priority order, so bucket order refines doc order);
-    *  2. per-(group, bucket) token totals -> driver (|groups| * 256 rows);
-    *  3. running bucket totals classify each bucket: KEEP-ALL when
-    *     offset + total <= budget, DROP-ALL when offset > budget (any doc's
-    *     inclusive prefix sum there already exceeds the budget), else the
-    *     single boundary bucket per group;
-    *  4. only boundary-bucket docs get the window prefix-sum, with the
-    *     bucket's offset added.
-    *
-    * `priorityCol` must be a hex-string content hash (e.g. md5 of the
-    * text); `tieCol` breaks exact-duplicate priorities deterministically.
-    * Step 2's collect is bounded: more than [[MaxDriverTotals]] (group,
-    * bucket) totals fail loudly.
-    * Returns the input rows plus a `kept` boolean. */
+    * tieCol) order, inclusive of the current doc) stays <= `budget` —
+    * EXACTLY the naive windowed-prefix-sum definition, for any token counts
+    * and group values, through the bucketed running sum. `priorityCol` must
+    * be a STRING column (e.g. md5 of the text); `tieCol` breaks exact
+    * duplicate priorities deterministically. Returns the input rows plus a
+    * `kept` boolean. */
   def tokenBudgetKeepFlags(df: DataFrame, groupCol: String, tokensCol: String,
-                           priorityCol: String, tieCol: String, budget: Long): DataFrame = {
-    requireStringCol(df, groupCol); requireStringCol(df, priorityCol)
-    val bucketed = df.withColumn("__bkt", substring(col(priorityCol), 1, 2))
-    val totals = bucketTotals(bucketed, groupCol, tokensCol, "Sampling.tokenBudgetKeepFlags")
-    // NOTE (round 7, measured): the union's two branches each evaluate the
-    // input subtree once per action (plus the totals probe above — three
-    // evaluations total). A shared explicit repartition was tried and
-    // REJECTED: the boundary branch's pushed-down isnotnull filter makes
-    // the two exchange subtrees canonicalize differently, so no reuse
-    // fires and the extra shuffle is pure cost. Callers whose input is
-    // expensive pin it instead (DataPipeline.curate localCheckpoints the
-    // stage-4 relation this operator consumes).
-    // running offsets per group, buckets in priority (lexicographic) order
-    val keepAllB = List.newBuilder[(String, String)]
-    val boundaryB = List.newBuilder[(String, String, Long)]
-    totals.groupBy(_._1).foreach { case (g, rows) =>
-      var offset = 0L
-      rows.toList.sortBy(_._2)(sparkStringOrder).foreach { case (_, bkt, t) =>
-        if (offset + t <= budget) keepAllB += ((g, bkt))           // KEEP-ALL
-        else if (offset <= budget) boundaryB += ((g, bkt, offset)) // boundary
-        // else DROP-ALL: any inclusive prefix sum there exceeds the budget
-        offset += t
-      }
-    }
-    val keepAll = keepAllB.result()
-    val boundary = boundaryB.result()
-    val spark = df.sparkSession
-    import spark.implicits._
-    val keepAllDf = broadcast(keepAll.toDF(groupCol, "__bkt").withColumn("__ka", lit(true)))
-    val boundaryDf = broadcast(boundary.toDF(groupCol, "__bkt", "__off"))
-    val w = Window.partitionBy(col(groupCol), col("__bkt"))
-      .orderBy(col(priorityCol), col(tieCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val joined = bucketed
-      .join(keepAllDf, Seq(groupCol, "__bkt"), "left")
-      .join(boundaryDf, Seq(groupCol, "__bkt"), "left")
-    // the window's input is FILTERED to boundary-bucket rows first — the
-    // sort-exchange only ever sees ~1/256 of one group; everything else is
-    // decided by the broadcast joins with no shuffle at all
-    val wholesale = joined.filter(col("__off").isNull)
-      .withColumn("kept", coalesce(col("__ka"), lit(false)))
-    val boundaryRows = joined.filter(col("__off").isNotNull)
-      .withColumn("kept", (col("__off") + sum(col(tokensCol)).over(w)) <= budget)
-    wholesale.unionByName(boundaryRows).drop("__bkt", "__ka", "__off")
-  }
+                           priorityCol: String, tieCol: String, budget: Long): DataFrame =
+    runningSum(df, Seq(groupCol), col(priorityCol), col(tieCol),
+        col(tokensCol), "kept")
+      .withColumn("kept", col("kept") <= budget)
 
   /** The per-domain cap followed by the per-lang token budget in one
     * driver-side pass: the rule [[groupCapFlags]] then [[tokenBudgetKeepFlags]]
@@ -255,19 +135,15 @@ object Sampling {
     * tokens BIGINT) — curate's (doc_id, lang, source, digest, toks); `tie`
     * must be unique within a subgroup. Returns the kept input rows in
     * (priority, tie) order, or None when a row strays from that layout (a
-    * null, a value of another type) or holds a negative token count: the
-    * distributed pair then decides, so the two paths agree on every input
-    * (the pair has rules of its own for null groups and priorities, takes
-    * any subgroup type, and its wholesale bucket decisions read a negative
-    * count differently from a running sum). SamplingSpec pins equality
-    * with the pair on randomized inputs. */
+    * null, a value of another type): the distributed pair then decides, so
+    * the two paths agree on every input (the pair has rules of its own for
+    * null groups and priorities and takes any subgroup type). Any token
+    * count, negative included, is summed as the pair's running sum sums it.
+    * SamplingSpec pins equality with the pair on randomized inputs. */
   def capThenBudgetKeep(rows: Array[Row], cap: Int, budget: Long): Option[Array[Row]] = {
     require(cap >= 0, s"cap must be >= 0, got $cap")
     def fits(r: Row): Boolean = r.length == 5 && r.get(0).isInstanceOf[java.lang.Long] &&
-      (1 to 3).forall(i => r.get(i).isInstanceOf[String]) && (r.get(4) match {
-        case t: java.lang.Long => t >= 0
-        case _ => false
-      })
+      (1 to 3).forall(i => r.get(i).isInstanceOf[String]) && r.get(4).isInstanceOf[java.lang.Long]
     if (!rows.forall(fits)) return None
     val prio = rows.map(r => UTF8String.fromString(r.getString(3)))
     val order = Array.range(0, rows.length).sorted(new Ordering[Int] {
@@ -293,52 +169,13 @@ object Sampling {
 
   // ---- distributed exact top-k selection ----
 
-  /** Walk 16-bit-prefix histograms of a signed-long `keyCol` in DESCENDING
-    * order to the exact top-`k` boundary value. Each of the (at most) four
-    * rounds is one bounded aggregate — ≤ 2^16 bucket counts to the driver —
-    * over `proj` (persist it; every round scans it). Returns None when the
-    * relation holds fewer than `k` rows (select everything), else
-    * Some((boundary value T, rows still to take at T, total rows at T)). */
-  private def walkBoundaryDesc(proj: DataFrame, keyCol: Column,
-                               k: Long): Option[(Long, Long, Long)] = {
-    var kRem = k
-    var lo = Long.MinValue
-    var hi = Long.MaxValue
-    var res: Option[(Long, Long, Long)] = None
-    var selectAll = false
-    val shifts = Seq(48, 32, 16, 0)
-    var s = 0
-    while (s < shifts.length && res.isEmpty && !selectAll) {
-      val shift = shifts(s)
-      // bucket = arithmetic-shift prefix: signed-monotone in the key, so
-      // walking buckets in descending signed order walks keys descending
-      val counts = proj.filter(keyCol >= lo && keyCol <= hi)
-        .groupBy(shiftright(keyCol, shift).as("b")).count()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .sortBy(_._1)(Ordering[Long].reverse)
-      var i = 0
-      var narrowed = false
-      while (i < counts.length && !narrowed) {
-        val (b, c) = counts(i)
-        if (kRem > c) { kRem -= c; i += 1 }
-        else { // boundary bucket: narrow to its aligned key range
-          if (shift == 0) res = Some((b, kRem, c))
-          else { lo = b << shift; hi = lo + ((1L << shift) - 1) }
-          narrowed = true
-        }
-      }
-      if (!narrowed) selectAll = true // fewer rows than k in range
-      s += 1
-    }
-    if (selectAll) None else res
-  }
-
   /** Exact top-`k` boundary of (`__kb` DESC, `__id` ASC) over a persisted
     * (__id, __kb) projection: None = fewer than k rows (select all), else
     * Some((T, B)) with selected ⇔ kb > T || (kb == T && id <= B).
     *
-    * Walks 16-bit prefix histograms like [[walkBoundaryDesc]], but
-    * switches to ONE bounded collect as soon as the narrowed range is
+    * Walks 16-bit-prefix histograms of the signed key in DESCENDING
+    * order (each round one bounded aggregate, ≤ 2^16 bucket counts to the
+    * driver), switching to ONE bounded collect as soon as the narrowed range is
     * KNOWN to hold ≤ `collectMax` rows — after round 1 the boundary
     * bucket's histogram count bounds the range, so typical keys finish in
     * two jobs instead of four histogram rounds plus a tie job. A tie
@@ -386,14 +223,14 @@ object Sampling {
               java.util.Arrays.sort(ids)
               ids(kRem.toInt - 1)
             } else {
-              // huge tie class (coarse keys at corpus scale): refine over
-              // ~id — bitwise NOT is an exact order reversal on signed
-              // longs, so the descending walk finds the kRem-th SMALLEST
-              // id; ids are unique, so it terminates at an exact boundary
-              ~walkBoundaryDesc(
-                proj.filter(col("__kb") === t)
-                  .select(bitwise_not(col("__id")).as("__nid")),
-                col("__nid"), kRem).get._1
+              // huge tie class (coarse keys at corpus scale): the same
+              // walk over the tie rows keyed by ~id — bitwise NOT is an
+              // exact order reversal on signed longs, so its boundary is
+              // the kRem-th SMALLEST id; ids are unique, so that walk never
+              // reaches a tie class of its own (one level deep, never None)
+              ~topBoundary(proj.filter(col("__kb") === t)
+                  .select(col("__id"), bitwise_not(col("__id")).as("__kb")),
+                kRem, collectMax).get._1
             }
           return Some((t, bId))
         } else {
@@ -413,8 +250,8 @@ object Sampling {
     * of `orderBy(key.desc, id).limit(k)` over the non-null-key rows,
     * computed without O(k) state anywhere: no TakeOrdered (whose per-task bounded priority queue and
     * driver merge are both O(k)), no k-row broadcast, and (round 7) no
-    * window of ANY kind. This is the [[tokenBudgetKeepFlags]] two-level
-    * boundary cut applied to a DOUBLE key (round-5 verdict top item —
+    * window of ANY kind. A two-level boundary cut over a DOUBLE key —
+    * prefix-histogram buckets locate the boundary (round-5 verdict top item —
     * DSIR's published selections are k ≈ 10^8, where O(k)-per-task top-k
     * is a ~GB heap in every task):
     *
@@ -433,10 +270,9 @@ object Sampling {
     *     class — ~5·10^7 rows for a coarse key like doc length at corpus
     *     scale — into ONE task) is itself distributed when the walk does
     *     reach an over-budget tie class at shift 0: the r-th smallest tie
-    *     id B comes from the SAME 16-bit refinement walk over the tie
-    *     rows' bit-flipped ids (~id descending == id ascending; ids are
-    *     unique, so the walk terminates at an exact boundary) — never a
-    *     single-task sort;
+    *     id B comes from the SAME walk over the tie rows keyed by their
+    *     bit-flipped ids (~id descending == id ascending; ids are unique,
+    *     so that walk ends at an exact boundary) — never a single-task sort;
     *  4. flags are then PURE per-row comparisons
     *     (`bits > T || (bits == T && id <= B)`) in one pass over the
     *     input — no union, no window, no join (SamplingSpec pins the plan).

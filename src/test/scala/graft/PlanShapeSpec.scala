@@ -263,14 +263,30 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(shuffles == 1, s"expected the final agg shuffle only:\n$plan")
   }
 
-  test("tokenBudget: single Sort/Window confined to the boundary branch of a Union") {
-    val plan = formatted(SparkQueries.tokenBudgetStats(spark, dir))
-    assert(plan.contains("Union"), plan)
-    // exactly one sort and one window in the whole plan — the wholesale
-    // branch is decided by broadcast joins alone
-    assert("\\+- Sort\\b".r.findAllIn(plan).length == 1, s"one Sort expected:\n$plan")
-    assert("\\+- Window\\b".r.findAllIn(plan).length == 1, s"one Window expected:\n$plan")
-    assert("BroadcastExchange".r.findAllIn(plan).length >= 3, plan)
+  test("tokenBudget: no Union; each priority-ordered Window partitions by (lang, __bkt)") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = SparkQueries.tokenBudgetStats(spark, dir).queryExecution.executedPlan
+    assert(helper.collectWithSubqueries(plan) { case u: UnionExec => u }.isEmpty,
+      s"one running-sum plan, no branches:\n$plan")
+    // every window that sorts DATA rows (order key: the priority __p) is
+    // scoped to one (lang, bucket) partition — a whole-lang sort would
+    // partition by lang alone; the bucket-offset window only ever sees
+    // <= 256 aggregated rows per lang
+    val dataWindows = helper.collectWithSubqueries(plan) {
+      case w: WindowExec if w.orderSpec.headOption.exists(_.child match {
+        case a: Attribute => a.name == "__p"
+        case _ => false
+      }) => w
+    }
+    assert(dataWindows.nonEmpty, s"expected a priority-ordered window in:\n$plan")
+    dataWindows.foreach { w =>
+      assert(w.partitionSpec.collect { case a: Attribute => a.name } == Seq("lang", "__bkt"),
+        s"data window must partition by (lang, __bkt), got: ${w.partitionSpec}")
+    }
   }
 
   test("sketch-cube rollup: per-lang merge reads the stored cube, never parquet") {

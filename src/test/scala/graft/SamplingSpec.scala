@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.spark.sample.Sampling
 
-/** Data-mixing operators: the two-level token-budget cut must equal the
-  * naive windowed-prefix-sum definition exactly, for any data. */
+/** Data-mixing operators: the bucketed running sums behind the cap, the
+  * token budget and the prefix sums must equal the naive windows exactly,
+  * for any data. */
 class SamplingSpec extends AnyFunSuite {
   private lazy val spark = SparkSession.builder()
     .master("local[4]").appName("sampling")
@@ -345,23 +346,53 @@ class SamplingSpec extends AnyFunSuite {
     assert(fast(df, 10L) == Map(1L -> true, 2L -> false))
   }
 
-  test("the per-(group, bucket) totals collects fail loudly past a lowered bound") {
-    // 3 groups x up to 256 buckets: far more than 8 totals
-    val df = mkDf((0L until 300L).map(id => (s"g${id % 3}", id, 1L)))
-    val budget = intercept[IllegalStateException] {
-      Sampling.driverTotalsLimit.withValue(8L) {
-        Sampling.tokenBudgetKeepFlags(df, "g", "toks", "p", "id", 100L)
-      }
+  test("budget keeps null-group rows and sums negative counts as the naive window does") {
+    import spark.implicits._
+    // two null-group rows of 3 tokens: the naive window keeps both
+    val nullGroups = Seq((Option.empty[String], 1L, 3L, "aa"), (None, 2L, 3L, "bb"),
+      (Some("g"), 3L, 3L, "cc")).toDF("g", "id", "toks", "p")
+    assert(fast(nullGroups, 10L) == naive(nullGroups, 10L))
+    assert(fast(nullGroups, 10L) == Map(1L -> true, 2L -> true, 3L -> true))
+    // a negative count inside the third bucket: running sums 8, 13, 18, -2
+    val negative = Seq(("g", 1L, 8L, "aa1"), ("g", 2L, 5L, "bb1"), ("g", 3L, 5L, "cc1"),
+      ("g", 4L, -20L, "cc2")).toDF("g", "id", "toks", "p")
+    assert(fast(negative, 10L) == naive(negative, 10L))
+    assert(fast(negative, 10L) == Map(1L -> true, 2L -> false, 3L -> false, 4L -> true))
+  }
+
+  test("budget and prefix sums order a null priority first, as the naive window does") {
+    import spark.implicits._
+    val df = Seq(("g", 1L, 4L, Some("aa")), ("g", 2L, 6L, None), ("g", 3L, 5L, Some("")),
+      ("g", 4L, 2L, Option.empty[String]), ("h", 5L, 9L, None), ("g", 6L, 1L, Some("b")))
+      .toDF("g", "id", "toks", "p")
+    for (budget <- Seq(0L, 6L, 8L, 13L, 100L)) {
+      assert(fast(df, budget) == naive(df, budget), s"budget=$budget")
     }
-    assert(budget.getMessage.contains("Sampling.tokenBudgetKeepFlags") &&
-      budget.getMessage.contains("limit 8"), budget.getMessage)
-    val prefix = intercept[IllegalStateException] {
-      Sampling.driverTotalsLimit.withValue(8L)(Sampling.groupPrefixSums(df, "g", "toks", "p", "id"))
+    val w = Window.partitionBy(col("g")).orderBy(col("p"), col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def cumExcl(d: DataFrame): Map[Long, Long] =
+      d.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cum_excl")).toMap
+    val expect = cumExcl(df.withColumn("cum_excl", sum(col("toks")).over(w) - col("toks")))
+    assert(cumExcl(Sampling.groupPrefixSums(df, "g", "toks", "p", "id")) == expect)
+    assert(expect == Map(2L -> 0L, 4L -> 6L, 3L -> 8L, 1L -> 13L, 6L -> 17L, 5L -> 0L))
+  }
+
+  test("building the cap, budget and prefix-sum operators starts no Spark job") {
+    val sc = spark.sparkContext
+    val df = mkDf((0L until 300L).map(id => (s"g${id % 3}", id, id % 7)))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
-    assert(prefix.getMessage.contains("Sampling.groupPrefixSums") &&
-      prefix.getMessage.contains("limit 8"), prefix.getMessage)
-    // at the default bound both run
-    assert(fast(df, 100L) == naive(df, 100L))
+    sc.addSparkListener(listener)
+    try {
+      Sampling.tokenBudgetKeepFlags(df, "g", "toks", "p", "id", 100L)
+      Sampling.groupPrefixSums(df, "g", "toks", "p", "id")
+      Sampling.groupCapFlags(df, Seq("g"), col("p"), col("id"), 5)
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs started while building the operators")
   }
 
   // ---- capThenBudgetKeep: the driver kernel vs the distributed pair ----
@@ -390,7 +421,8 @@ class SamplingSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(13)
     // digests share 2-char prefixes (one bucket), repeat across distinct
     // doc_ids, and mix U+FF21 with a surrogate pair (UTF-16 and UTF-8
-    // orders differ); a quarter of the docs carry zero tokens
+    // orders differ); a quarter of the docs carry zero tokens and about
+    // one in seven a negative count
     val prefixes = Seq("", "a", "aa", "ab", "b7", "\uFF21", "\uFF21x", "\uD83D\uDE00", "\u00e9")
     val pool = (0 until 40).map(i => prefixes(i % prefixes.size) + rnd.nextInt(50).toString)
     for (round <- 0 until 2) {
@@ -399,7 +431,7 @@ class SamplingSpec extends AnyFunSuite {
         Row(id, s"l${rnd.nextInt(3)}", s"s${rnd.nextInt(4)}",
           if (rnd.nextInt(3) == 0) pool(rnd.nextInt(pool.size))
           else prefixes(rnd.nextInt(prefixes.size)) + rnd.nextInt(1000000).toString,
-          if (rnd.nextInt(4) == 0) 0L else rnd.nextInt(30).toLong)
+          if (rnd.nextInt(4) == 0) 0L else rnd.nextInt(40).toLong - 8L)
       }
       val df = capBudgetDf(rows).repartition(3).localCheckpoint(true)
       for (cap <- Seq(0, 20, 1000); budget <- Seq(0L, 50L, 400L, 1L << 20)) {
@@ -424,14 +456,12 @@ class SamplingSpec extends AnyFunSuite {
     assert(kernelKept(rows, 40, 0L).isEmpty) // the first doc already spends 7
   }
 
-
-  test("capThenBudgetKeep declines a null in any column, a negative token count, another layout") {
+  test("capThenBudgetKeep declines a null in any column or another layout") {
     val ok = Row(1L, "en", "a.com", "ab", 3L)
     for (c <- 0 until 5) {
       val withNull = Row.fromSeq(ok.toSeq.updated(c, null))
       assert(Sampling.capThenBudgetKeep(Array(ok, withNull), 5, 100L).isEmpty, s"null in column $c")
     }
-    assert(Sampling.capThenBudgetKeep(Array(ok, Row(2L, "en", "a.com", "cd", -1L)), 5, 100L).isEmpty)
     for (odd <- Seq(Row(2, "en", "a.com", "cd", 1L), Row(2L, 7, "a.com", "cd", 1L),
                     Row(2L, "en", 7, "cd", 1L), Row(2L, "en", "a.com", "cd", 1))) {
       assert(Sampling.capThenBudgetKeep(Array(ok, odd), 5, 100L).isEmpty, odd)
